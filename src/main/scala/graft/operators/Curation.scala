@@ -619,17 +619,10 @@ object Curation {
                                budget: Long = 512, shards: Int = 4,
                                triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintenanceStep(batch, id, stateDir, outDir, lineMinDf, minJaccard,
-          benchMod, decontamN, targetSources, budget, shards)
-        ()
-      }
-      .start()
+    MicroBatches.start(source, checkpointDir, triggerMs) { (batch, id) =>
+      maintenanceStep(batch, id, stateDir, outDir, lineMinDf, minJaccard,
+        benchMod, decontamN, targetSources, budget, shards)
+    }
 
   /** One curation-maintenance micro-batch: curate against the replay-
     * correct state version, publish the product at `outDir/batch-<id>`
@@ -743,91 +736,84 @@ object Curation {
                              compactMaxRecordsPerFile: Long = 0L,
                              triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val productPath = maintenanceStep(batch, id, stateDir, outDir,
-          lineMinDf, minJaccard, benchMod, decontamN, targetSources,
-          budget, shards)
-        val product = spark.read.parquet(productPath)
-        // featurization is a pure function of the published product
-        // bytes, so the frame is pinned once and feeds every index
-        // leg; an external encoder rides the same (vec_id, embedding)
-        // contract — replay determinism is the CALLER's obligation
-        // for a custom featurizer (a nondeterministic encoder breaks
-        // the replay-re-encodes-identically story the committed
-        // appends rely on)
-        val encode = featurizer.getOrElse((df: DataFrame) =>
-          graft.operators.TextOps.hashEmbedVectors(df, embedDim))
-        val feats = encode(product)
-          .select(col("vec_id"), col("embedding"))
-          .localCheckpoint(true)
-        graft.operators.Similarity.appendToIvfIndexCommitted(
-          spark, indexDir, feats, id, maxDriftRatio)
-        // sidecar + lexical legs ride their own committed appends
-        // under the same batch id — each index dir carries its own
-        // marker set, so a replay that crashed between legs re-runs
-        // only the legs whose markers are missing
-        sq8Dir.foreach(sd => graft.operators.Similarity
-          .appendToSq8IndexCommitted(spark, sd, feats, id))
-        bqDir.foreach(bd => graft.operators.Similarity
-          .appendToBqIndexCommitted(spark, bd, feats, id))
-        prefixDir.foreach(pd => graft.operators.Similarity
-          .appendToPrefixIndexCommitted(spark, pd, feats, id))
-        prefixIvfDir.foreach(pd => graft.operators.Similarity
-          .appendToPrefixIvfIndexCommitted(spark, pd, feats, id,
-            maxDriftRatio))
-        bm25Dir.foreach(bm => graft.operators.TextOps
-          .appendToBm25IndexCommitted(spark, bm, product, id))
-        // the decontam gram index tracks the CURATED corpus too, so
-        // tomorrow's new benchmark screens against today's product
-        // without a corpus scan — same batch id, own marker set. The
-        // gram hash family resolves from the INDEX META (persisted at
-        // build time), so this leg hashes under whatever family the
-        // index was built with — no hashFn plumbing to mismatch
-        gramDir.foreach(gd => graft.operators.TextOps
-          .appendToGramIndexCommitted(spark, gd, product, id))
-        // IN-STREAM COMPACTION (`compactEvery` > 0, every Nth batch):
-        // small-files decay is this job's own exhaust — every
-        // committed append lands a file per touched partition — so
-        // the job that causes it repairs it. Safe against its own
-        // serving consumers BY CONSTRUCTION now: every compaction is
-        // a generation advance behind an atomic pointer flip
-        // ([[IndexGen]]), so a concurrently-probing stream reads the
-        // prior generation intact — no quiescing, which is exactly
-        // why this could not be automated before round 11. A crash
-        // replay that re-runs the compaction just advances another
-        // (content-identical) generation; the committed appends
-        // short-circuit on their markers as always.
-        // `compactMaxRecordsPerFile` (0 = single file per sublayout/
-        // partition) bounds the rewrite's output files: the flat
-        // sidecars (SQ8 codes, BQ bits, prefix full vectors) coalesce
-        // to ONE writer task by default — fine at test scale, a
-        // single-task corpus rewrite inside the stream at warehouse
-        // scale. Production callers size this so each rewrite file
-        // stays a healthy parquet size and the rewrite parallelizes.
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-          val mrpf = compactMaxRecordsPerFile
-          graft.operators.Similarity.compactIvfIndex(spark, indexDir,
-            mrpf)
-          sq8Dir.foreach(graft.operators.Similarity
-            .compactSidecar(spark, _, "codes", mrpf))
-          bqDir.foreach(graft.operators.Similarity
-            .compactSidecar(spark, _, "bits", mrpf))
-          prefixDir.foreach(graft.operators.Similarity
-            .compactPrefixIndex(spark, _, mrpf))
-          prefixIvfDir.foreach(graft.operators.Similarity
-            .compactPrefixIvfIndex(spark, _, mrpf))
-          bm25Dir.foreach(graft.operators.TextOps
-            .compactBm25Index(spark, _, mrpf))
-          gramDir.foreach(graft.operators.TextOps
-            .compactGramIndex(spark, _, mrpf))
-        }
-        ()
+    MicroBatches.start(source, checkpointDir, triggerMs) { (batch, id) =>
+      val spark = batch.sparkSession
+      val productPath = maintenanceStep(batch, id, stateDir, outDir,
+        lineMinDf, minJaccard, benchMod, decontamN, targetSources,
+        budget, shards)
+      val product = spark.read.parquet(productPath)
+      // featurization is a pure function of the published product
+      // bytes, so the frame is pinned once and feeds every index
+      // leg; an external encoder rides the same (vec_id, embedding)
+      // contract — replay determinism is the CALLER's obligation
+      // for a custom featurizer (a nondeterministic encoder breaks
+      // the replay-re-encodes-identically story the committed
+      // appends rely on)
+      val encode = featurizer.getOrElse((df: DataFrame) =>
+        graft.operators.TextOps.hashEmbedVectors(df, embedDim))
+      val feats = encode(product)
+        .select(col("vec_id"), col("embedding"))
+        .localCheckpoint(true)
+      graft.operators.Similarity.appendToIvfIndexCommitted(
+        spark, indexDir, feats, id, maxDriftRatio)
+      // sidecar + lexical legs ride their own committed appends
+      // under the same batch id — each index dir carries its own
+      // marker set, so a replay that crashed between legs re-runs
+      // only the legs whose markers are missing
+      sq8Dir.foreach(sd => graft.operators.Similarity
+        .appendToSq8IndexCommitted(spark, sd, feats, id))
+      bqDir.foreach(bd => graft.operators.Similarity
+        .appendToBqIndexCommitted(spark, bd, feats, id))
+      prefixDir.foreach(pd => graft.operators.Similarity
+        .appendToPrefixIndexCommitted(spark, pd, feats, id))
+      prefixIvfDir.foreach(pd => graft.operators.Similarity
+        .appendToPrefixIvfIndexCommitted(spark, pd, feats, id,
+          maxDriftRatio))
+      bm25Dir.foreach(bm => graft.operators.TextOps
+        .appendToBm25IndexCommitted(spark, bm, product, id))
+      // the decontam gram index tracks the CURATED corpus too, so
+      // tomorrow's new benchmark screens against today's product
+      // without a corpus scan — same batch id, own marker set. The
+      // gram hash family resolves from the INDEX META (persisted at
+      // build time), so this leg hashes under whatever family the
+      // index was built with — no hashFn plumbing to mismatch
+      gramDir.foreach(gd => graft.operators.TextOps
+        .appendToGramIndexCommitted(spark, gd, product, id))
+      // IN-STREAM COMPACTION (`compactEvery` > 0, every Nth batch):
+      // small-files decay is this job's own exhaust — every
+      // committed append lands a file per touched partition — so
+      // the job that causes it repairs it. Safe against its own
+      // serving consumers BY CONSTRUCTION now: every compaction is
+      // a generation advance behind an atomic pointer flip
+      // ([[IndexGen]]), so a concurrently-probing stream reads the
+      // prior generation intact — no quiescing, which is exactly
+      // why this could not be automated before round 11. A crash
+      // replay that re-runs the compaction just advances another
+      // (content-identical) generation; the committed appends
+      // short-circuit on their markers as always.
+      // `compactMaxRecordsPerFile` (0 = single file per sublayout/
+      // partition) bounds the rewrite's output files: the flat
+      // sidecars (SQ8 codes, BQ bits, prefix full vectors) coalesce
+      // to ONE writer task by default — fine at test scale, a
+      // single-task corpus rewrite inside the stream at warehouse
+      // scale. Production callers size this so each rewrite file
+      // stays a healthy parquet size and the rewrite parallelizes.
+      if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
+        val mrpf = compactMaxRecordsPerFile
+        graft.operators.Similarity.compactIvfIndex(spark, indexDir,
+          mrpf)
+        sq8Dir.foreach(graft.operators.Similarity
+          .compactSidecar(spark, _, "codes", mrpf))
+        bqDir.foreach(graft.operators.Similarity
+          .compactSidecar(spark, _, "bits", mrpf))
+        prefixDir.foreach(graft.operators.Similarity
+          .compactPrefixIndex(spark, _, mrpf))
+        prefixIvfDir.foreach(graft.operators.Similarity
+          .compactPrefixIvfIndex(spark, _, mrpf))
+        bm25Dir.foreach(graft.operators.TextOps
+          .compactBm25Index(spark, _, mrpf))
+        gramDir.foreach(graft.operators.TextOps
+          .compactGramIndex(spark, _, mrpf))
       }
-      .start()
+    }
 }

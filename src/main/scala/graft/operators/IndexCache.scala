@@ -21,10 +21,10 @@ import org.apache.spark.sql.SparkSession
   *    dirs — a bounded listStatus walk, no Spark job). An append
   *    lands new `b<id>-*` files (new names in the stamp — visible
   *    even where partition-dir mtimes never change, e.g. S3A
-  *    synthetic dirs), a dim swap changes the resolved `<sub>_v<k>`
-  *    path, a compaction or rebuild changes the generation root —
-  *    each changes the stamp and the next read reloads.
-  *  - EXPLICIT (in-JVM): every append/swap/publish also invalidates
+  *    synthetic dirs) and a new commit marker, a compaction or
+  *    rebuild changes the generation root — each changes the stamp
+  *    and the next read reloads.
+  *  - EXPLICIT (in-JVM): every append/publish also invalidates
   *    its directory's entries directly, closing the sub-millisecond
   *    window where an FS mtime stamp could tie. A writer in ANOTHER
   *    process is covered by the stamp layer alone — bounded by mtime

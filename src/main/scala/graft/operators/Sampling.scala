@@ -349,15 +349,8 @@ object Sampling {
                             stratumCol: String, keyCol: String, k: Int,
                             seed: Int = 0, triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        stratifiedSampleBatch(batch.sparkSession, stateDir, batch, id,
-          outDir, stratumCol, keyCol, k, seed)
-        ()
-      }
-      .start()
+    MicroBatches.start(docs, checkpointDir, triggerMs) { (batch, id) =>
+      stratifiedSampleBatch(batch.sparkSession, stateDir, batch, id,
+        outDir, stratumCol, keyCol, k, seed)
+    }
 }

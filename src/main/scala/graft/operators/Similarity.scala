@@ -222,99 +222,58 @@ object Similarity {
     }
   }
 
-  /** Append a batch to a [[writePrefixIndex]] layout WITHOUT a
-    * rebuild — slicing is a pure per-row function (no trained state,
-    * hence no drift guard: appended rows are bit-identical to a full
-    * rebuild's, the SQ8/BQ append stance). The batch lands in BOTH
-    * sublayouts — its prefix slice into `prefix/`, the full vectors
-    * into `full/` — under the dimension guard from the index meta.
-    * For anything that can replay, use
-    * [[appendToPrefixIndexCommitted]].
+  /** The dimension guard every vector append shares: `embedding`
+    * passes through unchanged when its length equals the index's
+    * recorded `dim`, and the row fails at the seam otherwise, naming
+    * the format (`label`), both dims and the offending vec_id.
     */
-  def appendToPrefixIndex(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, batch: DataFrame,
-                          sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val (prefixDim, guarded0) = prefixEncodeGuarded(spark, root, batch)
-    // pinned ONCE before either write: a nondeterministic batch source
-    // evaluated twice could land different row sets in the two
-    // sublayouts, dropping coarse candidates from the rerank join —
-    // the exact invariant the ordering below protects
-    val guarded = guarded0.localCheckpoint(true)
-    // full lands FIRST: a reader between the two appends then sees at
-    // worst a complete full/ with the batch not yet coarse-visible
-    // (one batch of staleness) — the reverse order would surface
-    // coarse candidates whose rerank rows don't exist yet (they'd
-    // silently drop from the join for the window)
-    guarded.select(col("vec_id"), col("embedding"))
-      .write.mode("append").parquet(s"$root/full")
-    guarded.select(col("vec_id"),
-        slice(col("embedding"), 1, prefixDim).as("pvec"))
-      .write.mode("append").parquet(s"$root/prefix")
-    IndexCache.invalidate(root)
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
+  private def dimGuarded(dim: Int, label: String): Column =
+    when(assert_true(size(col("embedding")) === lit(dim),
+      concat(lit(s"$label: vector dim "),
+        size(col("embedding")).cast("string"),
+        lit(s" != index dim $dim for vec_id "),
+        col("vec_id").cast("string"))).isNull,
+      col("embedding"))
 
-  /** [[appendToPrefixIndex]]'s dimension guard, shared with the
-    * committed form: batch vectors must match the index's recorded
-    * full dimension (meta), failing at the seam with both dims and
-    * the offending vec_id named.
+  /** The prefix layouts' append guard: batch vectors must match the
+    * index's recorded full dimension (meta). Returns (prefixDim,
+    * guarded batch).
     */
   private def prefixEncodeGuarded(spark: org.apache.spark.sql.SparkSession,
                                   root: String, batch: DataFrame)
       : (Int, DataFrame) = {
     val meta = spark.read.parquet(s"$root/meta").head()
-    val prefixDim = meta.getAs[Int]("prefix_dim")
-    val dim = meta.getAs[Int]("dim")
-    val guarded = batch.withColumn("embedding",
-      when(assert_true(size(col("embedding")) === lit(dim),
-        concat(lit(s"prefix append: vector dim "),
-          size(col("embedding")).cast("string"),
-          lit(s" != index dim $dim for vec_id "),
-          col("vec_id").cast("string"))).isNull,
-        col("embedding")))
-    (prefixDim, guarded)
+    (meta.getAs[Int]("prefix_dim"),
+      batch.withColumn("embedding",
+        dimGuarded(meta.getAs[Int]("dim"), "prefix append")))
   }
 
-  /** EXACTLY-ONCE [[appendToPrefixIndex]], keyed by batch id: both
-    * sublayouts stage, sweep-and-move under deterministic `b<id>-*`
-    * names, marker last — the two-sublayout form of the committed
-    * sidecar appends (the gram index's postings+docdim landing). A
-    * crash between the two moves replays cleanly: the marker is
-    * absent, so the replay re-stages both and the sweep drops any
-    * half-landed files of either sublayout.
+  /** EXACTLY-ONCE append to a [[writePrefixIndex]] layout, keyed by
+    * batch id ([[IndexGen.commitBatch]]) — slicing is a pure per-row
+    * function (no trained state, hence no drift guard: appended rows
+    * are bit-identical to a full rebuild's). The batch is pinned ONCE
+    * so both sublayouts land the same row set, and `full/` lands
+    * FIRST: a reader between the two landings sees at worst a
+    * complete full/ with the batch not yet coarse-visible — the
+    * reverse order would surface coarse candidates whose rerank rows
+    * don't exist yet. A crash between the two replays cleanly (no
+    * marker; the landing sweeps half-moved files of either
+    * sublayout). Marker: the batch row count.
     */
   def appendToPrefixIndexCommitted(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame, batchId: Long,
-      sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val d = new org.apache.hadoop.fs.Path(root)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, s"_commits/batch-$batchId")
-    if (!fs.exists(marker)) {
-      val (prefixDim, guarded0) = prefixEncodeGuarded(spark, root, batch)
+      sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      val (prefixDim, guarded0) = prefixEncodeGuarded(spark, c.root, batch)
       val guarded = guarded0.localCheckpoint(true)
-      // full lands first — see [[appendToPrefixIndex]]'s ordering note
-      val stagingF = new org.apache.hadoop.fs.Path(d,
-        s".staging-batch-$batchId-full")
-      guarded.select(col("vec_id"), col("embedding"))
-        .write.mode("overwrite").parquet(stagingF.toString)
-      sweepAndMoveStaged(fs, stagingF,
-        new org.apache.hadoop.fs.Path(d, "full"), batchId)
-      val stagingP = new org.apache.hadoop.fs.Path(d,
-        s".staging-batch-$batchId-prefix")
-      guarded.select(col("vec_id"),
+      c.land("full")(guarded.select(col("vec_id"), col("embedding"))
+        .write.mode("overwrite").parquet(_))
+      c.land("prefix")(guarded.select(col("vec_id"),
           slice(col("embedding"), 1, prefixDim).as("pvec"))
-        .write.mode("overwrite").parquet(stagingP.toString)
-      sweepAndMoveStaged(fs, stagingP,
-        new org.apache.hadoop.fs.Path(d, "prefix"), batchId)
-      writeCommitMarker(fs, marker,
-        guarded.agg(count(lit(1))).head().getLong(0).toString)
-      IndexCache.invalidate(root)
+        .write.mode("overwrite").parquet(_))
+      Seq(guarded.count().toDouble)
     }
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
 
   /** Probe the durable matryoshka layout with caller-supplied FULL
     * query vectors: the coarse cosine pass reads ONLY the stored
@@ -496,36 +455,24 @@ object Similarity {
     }
   }
 
-  /** EXACTLY-ONCE append to a [[writePrefixIvfIndex]] layout — the
-    * daily-ingest form for the IVF-pruned matryoshka index, composing
-    * the two committed-append contracts it derives from: batch
-    * prefixes are assigned to the STORED prefix centroids under the
-    * [[appendToIvfIndex]] drift guard (mean squared nearest-centroid
-    * distance IN PREFIX SPACE vs the recorded baseline — stale
-    * centroids silently strand new vectors in far lists), and both
-    * sublayouts land staged under deterministic `b<id>-*` names with
-    * the marker last ([[appendToPrefixIndexCommitted]]'s two-sublayout
-    * crash story; `full/` lands FIRST for the same
-    * coarse-candidates-must-rerank ordering reason). The marker
-    * carries the stats contribution, so [[readIvfStats]] composes
-    * baseline + markers exactly as on the dense IVF layout.
-    *
-    * Deliberately NO plain (non-committed) variant: this layout
-    * exists for serving pipelines, and every maintenance path that
-    * feeds it can replay (the composed nightly job, any
-    * foreachBatch) — a bare append that double-counts stats on
-    * replay would be a trap with no caller here. One-off rebuilds
-    * go through [[writePrefixIvfIndex]].
+  /** EXACTLY-ONCE append to a [[writePrefixIvfIndex]] layout
+    * ([[IndexGen.commitBatch]]), composing the two append contracts it
+    * derives from: batch prefixes are assigned to the STORED prefix
+    * centroids under the [[appendToIvfIndexCommitted]] drift guard
+    * (mean squared nearest-centroid distance IN PREFIX SPACE vs the
+    * recorded baseline — stale centroids silently strand new vectors
+    * in far lists), and both sublayouts land with `full/` FIRST for
+    * [[appendToPrefixIndexCommitted]]'s
+    * coarse-candidates-must-rerank ordering reason. The marker
+    * carries the stats contribution (`n sumSq`), so [[readIvfStats]]
+    * composes baseline + markers exactly as on the dense IVF layout.
     */
   def appendToPrefixIvfIndexCommitted(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame, batchId: Long, maxDriftRatio: Double = 4.0,
-      sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val d = new org.apache.hadoop.fs.Path(root)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, s"_commits/batch-$batchId")
-    if (!fs.exists(marker)) {
+      sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      val root = c.root
       val (prefixDim, guarded) = prefixEncodeGuarded(spark, root, batch)
       val cents = readCentroids(spark, root)
       val (n0, s0) = readIvfStats(spark, root)
@@ -549,14 +496,8 @@ object Similarity {
               f"${sb / nb}%.4f exceeds $maxDriftRatio× the index " +
               f"baseline ${s0 / n0}%.4f — rebuild (writePrefixIvfIndex) " +
               "instead of appending")
-        val stagingF = new org.apache.hadoop.fs.Path(d,
-          s".staging-batch-$batchId-full")
-        assigned.select(col("vec_id"), col("embedding"))
-          .write.mode("overwrite").parquet(stagingF.toString)
-        sweepAndMoveStaged(fs, stagingF,
-          new org.apache.hadoop.fs.Path(d, "full"), batchId)
-        val stagingP = new org.apache.hadoop.fs.Path(d,
-          s".staging-batch-$batchId-prefix")
+        c.land("full")(assigned.select(col("vec_id"), col("embedding"))
+          .write.mode("overwrite").parquet(_))
         // a CARRYING layout's appended rows must carry the same
         // metadata columns, or filtered probes would read nulls for
         // them and silently exclude every appended row — the carried
@@ -565,24 +506,15 @@ object Similarity {
         val carried = spark.read.parquet(s"$root/prefix")
           .schema.fieldNames
           .filterNot(Set("vec_id", "pvec", "cid")).toSeq
-        assigned
+        c.land("prefix")(assigned
           .select((Seq(col("vec_id"),
             slice(col("embedding"), 1, prefixDim).as("pvec")) ++
             carried.map(col) :+ col("cid")): _*)
           .repartition(col("cid"))
-          .write.mode("overwrite").partitionBy("cid")
-          .parquet(stagingP.toString)
-        sweepAndMoveStaged(fs, stagingP,
-          new org.apache.hadoop.fs.Path(d, "prefix"), batchId)
-        writeCommitMarker(fs, marker, s"$nb $sb")
-        IndexCache.invalidate(root)
-      } else {
-        writeCommitMarker(fs, marker, s"0 0.0")
-        ()
+          .write.mode("overwrite").partitionBy("cid").parquet(_))
       }
+      Seq(nb.toDouble, sb)
     }
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
 
   /** (prefix_dim, full dim) of a [[writePrefixIvfIndex]] layout,
     * cached per generation root. */
@@ -796,17 +728,10 @@ object Similarity {
                             k: Int = 10, nprobe: Int = 4,
                             cand: Int = 50, triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        servePrefixIvfBatch(batch.sparkSession, dir, batch, id, outDir,
-          k, nprobe, cand)
-        ()
-      }
-      .start()
+    MicroBatches.start(queries, checkpointDir, triggerMs) { (batch, id) =>
+      servePrefixIvfBatch(batch.sparkSession, dir, batch, id, outDir,
+        k, nprobe, cand)
+    }
 
   /** [[ensureIvfIndex]]'s build-once contract for the IVF-pruned
     * matryoshka layout. `carryCols` is part of the layout tag: a
@@ -1090,8 +1015,8 @@ object Similarity {
       cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
         .toDF("cid", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
-      // quantization-quality baseline for [[appendToIvfIndex]]'s drift
-      // guard: (count, Σ squared nearest-centroid distance) of the
+      // quantization-quality baseline for the append drift guard:
+      // (count, Σ squared nearest-centroid distance) of the
       // indexed corpus — distributive, so appends merge it. Decimal
       // summation keeps the recorded baseline partition-order-exact
       // (SCALE.md §7).
@@ -1112,8 +1037,8 @@ object Similarity {
 
   /** Row count of a durable IVF/IVF-PQ index, from its stats sidecar —
     * one tiny-file read instead of a full corpus pass. Appends keep
-    * the figure current ([[appendToIvfIndex]] merges its batch count
-    * into the stats distributively), so this is the `corpusCount` /
+    * the figure current (each commit marker carries its batch count),
+    * so this is the `corpusCount` /
     * `totalCount` feed for [[knnJoin]] / [[mineTriplets]] /
     * [[embeddingNovel]]'s GeometryLadder sizing: the rung lookup only
     * needs the ORDER OF MAGNITUDE of n (rungs are 4× apart), so a
@@ -1124,9 +1049,8 @@ object Similarity {
     readIvfStats(spark, dir)._1
 
   /** Initial stats write, build-time only (into a private staging
-    * root — no reader can see it). The APPEND path merges through
-    * [[IndexGen.swapSub]] instead: an in-place overwrite of a LIVE
-    * stats dir would tear under a concurrent reader.
+    * root — no reader can see it). Appends never rewrite it: their
+    * contributions ride their commit markers ([[readIvfStats]]).
     */
   private def writeIvfStats(spark: org.apache.spark.sql.SparkSession,
                             root: String, n: Long, sumSq: Double): Unit = {
@@ -1135,68 +1059,7 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
   }
 
-  /** Append a new batch to a materialized IVF index WITHOUT
-    * retraining: batch vectors are assigned to the EXISTING centroids
-    * (read from the index's tiny centroid dim) and appended to their
-    * list partitions — the daily-ingest form of index maintenance.
-    * One scan of the batch; the indexed corpus is never touched.
-    * Works on both index layouts: when the index carries PQ codebooks
-    * ([[writeIvfPqIndex]]), appended rows are PQ-encoded with the
-    * STORED books — residual-aware via the coding marker — so the ADC
-    * probe scores old and new rows identically. Stale centroids under
-    * residual coding also degrade code quality (residuals grow), so
-    * the drift guard below protects the PQ layout doubly.
-    *
-    * DRIFT GUARD (fail-fast, round-7 verdict #5): appending under
-    * stale centroids silently degrades recall — new vectors land in
-    * lists far from their true neighborhoods and probes miss them —
-    * so the append compares the batch's mean squared nearest-centroid
-    * distance against the index's recorded build-time baseline and
-    * REFUSES (IllegalStateException) when it exceeds `maxDriftRatio ×
-    * baseline`: the signal that the coarse quantizer no longer
-    * represents the incoming data and the index needs a rebuild
-    * ([[writeIvfIndex]] / [[ensureIvfIndex]]). In-distribution appends
-    * merge their (count, Σ sqdist) into the baseline distributively,
-    * so the guard tracks the index's true content across appends. A
-    * zero baseline (every indexed vector ON its centroid) treats any
-    * off-centroid batch as drift — the strictest reading, documented
-    * rather than special-cased.
-    *
-    * Durability note: the list append is a plain parquet file append —
-    * a crash between the list write and the stats rewrite leaves the
-    * baseline slightly stale (conservative: the guard only tightens).
-    * A production deployment would stage-and-rename like
-    * [[graft.sources.Mutations]].
-    */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, batch: DataFrame,
-                       maxDriftRatio: Double = 4.0,
-                       sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    encodeBatchForIndex(spark, root, batch, maxDriftRatio).foreach {
-      case (out, nb, sb) =>
-        out.repartition(col("cid"))
-          .write.mode("append").partitionBy("cid").parquet(s"$root/lists")
-        IndexCache.invalidate(root)
-        // the BASE dim carries only baseline + plain appends; committed
-        // appends contribute through their markers (readIvfStats sums
-        // both) — merging the composite total back would double-count
-        // every marker. The merge publishes as a new stats VERSION
-        // ([[IndexGen.swapSub]]): reader-atomic, no overwrite window.
-        val f = spark.read
-          .parquet(IndexGen.subPath(spark, root, "stats")).head()
-        import spark.implicits._
-        IndexGen.swapSub(spark, root, "stats",
-          Seq((f.getAs[Long]("n") + nb,
-            f.getAs[Double]("sum_sqdist") + sb))
-            .toDF("n", "sum_sqdist").coalesce(1))
-    }
-    // the marker advances even for an empty batch: the caller is
-    // asserting the index now reflects the source as it stands
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
-
-  /** Shared encode + drift-guard stage of the IVF append paths:
+  /** Encode + drift-guard stage of [[appendToIvfIndexCommitted]]:
     * assign the batch to the STORED centroids, PQ-encode when the
     * index carries codebooks, and fail fast when the batch's mean
     * squared nearest-centroid distance exceeds `maxDriftRatio` × the
@@ -1256,139 +1119,49 @@ object Similarity {
     }
   }
 
-  /** EXACTLY-ONCE index append, keyed by a caller-supplied batch id —
-    * the form a crash-replaying maintenance pipeline needs
-    * ([[graft.operators.Curation]]'s composed nightly job). The plain
-    * [[appendToIvfIndex]] is a bare parquet append: replaying a batch
-    * that already committed double-appends its rows and re-merges its
-    * stats. Here the append is transactional per batch id:
+  /** Append a new batch to a materialized IVF or IVF-PQ index WITHOUT
+    * retraining, EXACTLY ONCE per caller-supplied batch id
+    * ([[IndexGen.commitBatch]] — the form a crash-replaying pipeline
+    * such as [[graft.operators.Curation]]'s composed nightly job
+    * needs): batch vectors are assigned to the EXISTING centroids
+    * (read from the index's tiny centroid dim) and land in their list
+    * partitions under deterministic `b<id>-*` names — the daily-ingest
+    * form of index maintenance. One scan of the batch; the indexed
+    * corpus is never touched. When the index carries PQ codebooks
+    * ([[writeIvfPqIndex]]), appended rows are PQ-encoded with the
+    * STORED books — residual-aware via the coding marker — so the ADC
+    * probe scores old and new rows identically.
     *
-    *  1. a committed batch is detected by its marker
-    *     (`_commits/batch-<id>`) and the whole call is a no-op;
-    *  2. rows are staged (`.staging-batch-<id>`, overwrite-safe),
-    *     then moved into the list partitions under DETERMINISTIC
-    *     names (`b<id>-p<n>.parquet`) — a replay of a half-moved
-    *     batch first deletes every `b<id>-*` file, so the move is
-    *     idempotent;
-    *  3. the stats contribution is the marker's CONTENT (`n sumSq`),
-    *     written last via create-then-rename: [[readIvfStats]] sums
-    *     the build-time baseline file plus every marker, so a crash
-    *     anywhere before the marker leaves stats exactly consistent
-    *     with a replay re-running the batch.
-    *
-    * The drift guard and the PQ-aware encode are [[appendToIvfIndex]]'s
-    * (shared stage). Probes read the lists directory unchanged —
+    * DRIFT GUARD (fail-fast, round-7 verdict #5): appending under
+    * stale centroids silently degrades recall — new vectors land in
+    * lists far from their true neighborhoods and probes miss them —
+    * so the append compares the batch's mean squared nearest-centroid
+    * distance against the index's baseline and REFUSES
+    * (IllegalStateException, nothing landed) when it exceeds
+    * `maxDriftRatio × baseline`: the signal that the index needs a
+    * rebuild ([[writeIvfIndex]] / [[ensureIvfIndex]]). The marker
+    * content is the batch's (count, Σ sqdist) contribution, which
+    * [[readIvfStats]] adds to the build-time baseline, so the guard
+    * tracks the index's true content across appends. A zero baseline
+    * (every indexed vector ON its centroid) treats any off-centroid
+    * batch as drift — the strictest reading, documented rather than
+    * special-cased. Probes read the lists directory unchanged —
     * deterministic file names are invisible to partition discovery.
     */
   def appendToIvfIndexCommitted(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, batch: DataFrame,
                                 batchId: Long,
                                 maxDriftRatio: Double = 4.0,
-                                sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val d = new org.apache.hadoop.fs.Path(root)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, s"_commits/batch-$batchId")
-    if (!fs.exists(marker)) {
-      encodeBatchForIndex(spark, root, batch, maxDriftRatio).foreach {
-        case (out, nb, sb) =>
-          val staging = new org.apache.hadoop.fs.Path(d,
-            s".staging-batch-$batchId")
-          out.repartition(col("cid"))
-            .write.mode("overwrite").partitionBy("cid")
-            .parquet(staging.toString)
-          sweepAndMoveStaged(fs, staging,
-            new org.apache.hadoop.fs.Path(d, "lists"), batchId)
-          // marker last, atomically: content is the stats contribution
-          writeCommitMarker(fs, marker, s"$nb $sb")
-          IndexCache.invalidate(root)
+                                sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      encodeBatchForIndex(spark, c.root, batch, maxDriftRatio) match {
+        case Some((out, nb, sb)) =>
+          c.land("lists")(out.repartition(col("cid"))
+            .write.mode("overwrite").partitionBy("cid").parquet(_))
+          Seq(nb.toDouble, sb)
+        case None => Seq(0.0, 0.0)
       }
     }
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
-
-  /** The idempotent file-landing step shared by every committed index
-    * append ([[appendToIvfIndexCommitted]], the SQ8/BQ committed
-    * sidecars, [[graft.operators.TextOps.appendToBm25IndexCommitted]]):
-    * sweep any half-moved `b<id>-*` files of a crashed prior attempt
-    * from `target`, then move the staged parquet files in under
-    * DETERMINISTIC names (`b<id>-p<n>.parquet`) — partition
-    * subdirectories (`col=value/`) are preserved, flat staging lands
-    * at the target root. Replaying a half-landed batch first deletes
-    * every `b<id>-*` file, so the move is idempotent.
-    */
-  private[graft] def sweepAndMoveStaged(fs: org.apache.hadoop.fs.FileSystem,
-                                        staging: org.apache.hadoop.fs.Path,
-                                        target: org.apache.hadoop.fs.Path,
-                                        batchId: Long): Unit = {
-    def glob(p: org.apache.hadoop.fs.Path) = {
-      val g = fs.globStatus(p)
-      if (g == null) Array.empty[org.apache.hadoop.fs.FileStatus] else g
-    }
-    (glob(new org.apache.hadoop.fs.Path(target, s"*/b$batchId-*.parquet")) ++
-      glob(new org.apache.hadoop.fs.Path(target, s"b$batchId-*.parquet")))
-      .foreach(f => fs.delete(f.getPath, false))
-    val parts =
-      glob(new org.apache.hadoop.fs.Path(staging, "*=*/*.parquet")) ++
-        glob(new org.apache.hadoop.fs.Path(staging, "*.parquet"))
-    parts.sortBy(_.getPath.toString).zipWithIndex.foreach { case (f, i) =>
-      val destDir =
-        if (f.getPath.getParent.getName.contains("="))
-          new org.apache.hadoop.fs.Path(target, f.getPath.getParent.getName)
-        else target
-      fs.mkdirs(destDir)
-      val dest = new org.apache.hadoop.fs.Path(destDir,
-        s"b$batchId-p$i.parquet")
-      require(fs.rename(f.getPath, dest),
-        s"index commit: failed to move ${f.getPath} to $dest")
-    }
-    fs.delete(staging, true)
-    ()
-  }
-
-  /** Publish a commit marker atomically (create-then-rename); the
-    * content is the batch's stats contribution, read back by the
-    * composite stats readers ([[readIvfStats]],
-    * [[graft.operators.TextOps.readBm25Stats]]).
-    */
-  private[graft] def writeCommitMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                       marker: org.apache.hadoop.fs.Path,
-                                       content: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(marker.getParent,
-      s".${marker.getName}.tmp")
-    fs.mkdirs(marker.getParent)
-    val os = fs.create(tmp, true)
-    try os.write(content.getBytes("UTF-8")) finally os.close()
-    fs.delete(marker, false)
-    require(fs.rename(tmp, marker),
-      s"index commit: failed to publish $marker")
-    ()
-  }
-
-  /** Sum the `batch-<id>` commit-marker contributions under
-    * `dir/_commits`: each marker's content is whitespace-separated
-    * numerics, summed column-wise. Shared by [[readIvfStats]] and
-    * [[graft.operators.TextOps.readBm25Stats]].
-    */
-  private[graft] def sumCommitMarkers(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      width: Int): Array[Double] = {
-    val acc = Array.fill(width)(0.0)
-    val d = new org.apache.hadoop.fs.Path(dir, "_commits")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(d)) fs.listStatus(d).foreach { st =>
-      if (st.getPath.getName.startsWith("batch-")) {
-        val in = fs.open(st.getPath)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        txt.trim.split("\\s+").take(width).zipWithIndex.foreach {
-          case (v, i) => acc(i) += v.toDouble
-        }
-      }
-    }
-    acc
-  }
 
   /** Compact an IVF/IVF-PQ index's list partitions: every daily
     * append adds a file per touched list, and a year of appends makes
@@ -1484,20 +1257,17 @@ object Similarity {
     shaped.write.mode("overwrite").parquet(s"$staging/$sub")
   }
 
-  /** Composite stats of an IVF index: the build-time baseline (merged
-    * forward by plain appends as stats VERSIONS — [[IndexGen
-    * .subPath]] resolves the newest) PLUS every committed-append
-    * marker's contribution. The single read point for the drift
-    * guard and [[indexedCorpusCount]].
+  /** Composite stats of an IVF index: the build-time baseline PLUS
+    * every committed-append marker's contribution. The single read
+    * point for the drift guard and [[indexedCorpusCount]].
     */
   def readIvfStats(spark: org.apache.spark.sql.SparkSession,
                    dir: String): (Long, Double) = {
     val root = IndexGen.root(spark, dir)
-    val sp = IndexGen.subPath(spark, root, "stats")
     IndexCache.cached(s"$root#ivfstats",
-      sp + "|" + IndexCache.dirStamp(spark, s"$root/_commits")) {
-      val f = spark.read.parquet(sp).head()
-      val m = sumCommitMarkers(spark, root, 2)
+      IndexCache.dirStamp(spark, s"$root/_commits")) {
+      val f = spark.read.parquet(s"$root/stats").head()
+      val m = IndexGen.sumCommitMarkers(spark, root, 2)
       (f.getAs[Long]("n") + m(0).toLong,
         f.getAs[Double]("sum_sqdist") + m(1))
     }
@@ -1505,7 +1275,7 @@ object Similarity {
 
   /** STREAMING index maintenance: append every micro-batch of a
     * streaming (vec_id, embedding) source to a durable IVF / IVF-PQ
-    * index through [[appendToIvfIndex]] — the daily-ingest append
+    * index through [[appendToIvfIndexCommitted]] — the daily-ingest append
     * automated at the stream boundary, with the same PQ-aware encode
     * path and the same fail-fast drift guard. A drifted batch THROWS
     * inside foreachBatch and fails the stream: a feed whose
@@ -1515,29 +1285,20 @@ object Similarity {
     * with [[graft.streaming.Ingest.streamDedup]] upstream when the
     * feed is at-least-once.
     *
-    * Durability: each micro-batch lands through
-    * [[appendToIvfIndexCommitted]] keyed by the STREAM's batch id —
+    * Durability: each micro-batch is keyed by the STREAM's batch id —
     * a post-crash replay of a committed batch is a marker-detected
     * no-op, and a half-landed batch is swept and re-moved under its
-    * deterministic file names (the round-8 caveat, where a replay
-    * double-appended through the plain parquet append, is closed).
+    * deterministic file names.
     */
   def startIndexMaintenance(source: DataFrame, dir: String,
                             checkpointDir: String,
                             maxDriftRatio: Double = 4.0,
                             triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendToIvfIndexCommitted(batch.sparkSession, dir, batch, id,
-          maxDriftRatio)
-        ()
-      }
-      .start()
+    MicroBatches.start(source, checkpointDir, triggerMs) { (batch, id) =>
+      appendToIvfIndexCommitted(batch.sparkSession, dir, batch, id,
+        maxDriftRatio)
+    }
 
   /** Serve ONE micro-batch of ANN queries against the durable index —
     * the replayable unit of [[startAnnServing]]: the batch runs the
@@ -1584,16 +1345,9 @@ object Similarity {
                       checkpointDir: String, k: Int = 10, nprobe: Int = 2,
                       triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        serveAnnBatch(batch.sparkSession, dir, batch, id, outDir, k, nprobe)
-        ()
-      }
-      .start()
+    MicroBatches.start(queries, checkpointDir, triggerMs) { (batch, id) =>
+      serveAnnBatch(batch.sparkSession, dir, batch, id, outDir, k, nprobe)
+    }
 
   /** Durable IVF-PQ index — [[writeIvfIndex]]'s layout (lists
     * partitioned by coarse-list id + centroid dim + drift-guard
@@ -1605,7 +1359,7 @@ object Similarity {
     * probe path touches nprobe/nlist of a corpus that is itself 64×
     * smaller than the floats. The layout is a superset of the plain
     * IVF index: [[ivfSearchIndexed]] reads it unchanged, and
-    * [[appendToIvfIndex]] detects the codebooks and PQ-encodes
+    * [[appendToIvfIndexCommitted]] detects the codebooks and PQ-encodes
     * appended rows with the stored books.
     */
   def writeIvfPqIndex(embeddings: DataFrame, dir: String, nlist: Int = 16,
@@ -2049,9 +1803,9 @@ object Similarity {
   }
 
   /** Advance an index directory's build-once marker to the CURRENT
-    * fingerprint of its source. The append paths
-    * ([[appendToIvfIndex]]/[[appendToSq8Index]]/[[appendToBqIndex]])
-    * incorporate a batch the source has also received — without this,
+    * fingerprint of its source. The committed appends
+    * ([[IndexGen.commitBatch]], `sourcePath`) incorporate a batch the
+    * source has also received — without this,
     * the marker written at build time goes stale the moment the source
     * grows, and the next `ensure*` call rebuilds the very index the
     * append just maintained. Call it only AFTER the source contains
@@ -2301,165 +2055,63 @@ object Similarity {
     }
   }
 
-  /** Append a batch to a [[writeSq8Index]] sidecar WITHOUT a rebuild.
-    * SQ8 encoding is a pure per-row function (per-vector symmetric
-    * scale, [[quantizeInt8]]) — no trained state, hence no drift
-    * concern and no guard: the appended rows are encoded exactly as a
-    * full rebuild would encode them, scan-local over the batch only.
-    * Before this, the sidecar was build-once: any primary-index append
-    * left its source fingerprint stale and the next
-    * [[ensureSq8Index]] re-encoded the WHOLE corpus — a daily append
-    * pipeline rebuilding its cheapest-rung index every day. A
-    * wrong-dimension batch fails fast inside the scan (meta dim,
-    * when present — pre-meta layouts skip the check). Pass
-    * `sourcePath` once the source itself contains the batch rows and
-    * the build-once marker advances too ([[refreshIndexMarker]]).
-    */
-  def appendToSq8Index(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, batch: DataFrame,
-                       sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    sq8EncodeGuarded(spark, root, batch)
-      .write.mode("append").parquet(s"$root/codes")
-    IndexCache.invalidate(root)
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
-
-  /** [[appendToSq8Index]]'s encode + dimension guard, shared with the
-    * committed form. */
-  private def sq8EncodeGuarded(spark: org.apache.spark.sql.SparkSession,
-                               root: String, batch: DataFrame): DataFrame = {
-    // pre-meta layouts (built before the dim file existed) legally
-    // have no `meta` — that surfaces as an AnalysisException
-    // (PATH_NOT_FOUND / unable-to-infer-schema) and skips the guard.
-    // Anything else (transient IO, permissions) RETHROWS: silently
-    // disabling the guard would let a wrong-dim batch append and null
-    // probe scores downstream.
-    val metaDim: Option[Int] =
-      try Some(spark.read.parquet(s"$root/meta").head().getInt(0))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
-    val guarded = metaDim match {
-      case Some(dim) => batch.withColumn("embedding",
-        when(assert_true(size(col("embedding")) === lit(dim),
-          concat(lit(s"SQ8 append: vector dim "),
-            size(col("embedding")).cast("string"),
-            lit(s" != index dim $dim for vec_id "),
-            col("vec_id").cast("string"))).isNull,
-          col("embedding")))
-      case None => batch
-    }
-    quantizeInt8(guarded)
-      .select(col("vec_id"), col("codes"), col("scale"))
-  }
-
-  /** EXACTLY-ONCE [[appendToSq8Index]], keyed by batch id — the
-    * sidecar leg of a crash-replaying maintenance pipeline
-    * ([[appendToIvfIndexCommitted]]'s contract on the flat sidecar
-    * layout: marker short-circuit, staged write, deterministic file
-    * names, replay sweeps half-moved files).
+  /** EXACTLY-ONCE append to a [[writeSq8Index]] sidecar
+    * ([[IndexGen.commitBatch]]), WITHOUT a rebuild. SQ8 encoding is a
+    * pure per-row function (per-vector symmetric scale,
+    * [[quantizeInt8]]) — no trained state, hence no drift guard: the
+    * appended rows are encoded exactly as a full rebuild would encode
+    * them, scan-local over the batch only. A wrong-dimension batch
+    * fails fast inside the scan (meta dim, when present — pre-meta
+    * layouts skip the check). Pass `sourcePath` once the source itself
+    * contains the batch rows and the build-once marker advances too,
+    * so the next [[ensureSq8Index]] keeps the appended sidecar instead
+    * of re-encoding the whole corpus. Marker: the batch row count.
     */
   def appendToSq8IndexCommitted(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, batch: DataFrame,
                                 batchId: Long,
-                                sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    commitFlatBatch(spark, root, "codes", batchId)(staging =>
-      sq8EncodeGuarded(spark, root, batch)
-        .write.mode("overwrite").parquet(staging))
-    IndexCache.invalidate(root)
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
+                                sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      // pre-meta layouts (built before the dim file existed) legally
+      // have no `meta` — that surfaces as an AnalysisException
+      // (PATH_NOT_FOUND / unable-to-infer-schema) and skips the guard.
+      // Anything else (transient IO, permissions) RETHROWS: silently
+      // disabling the guard would let a wrong-dim batch append and
+      // null probe scores downstream.
+      val metaDim: Option[Int] =
+        try Some(spark.read.parquet(s"${c.root}/meta").head().getInt(0))
+        catch {
+          case _: org.apache.spark.sql.AnalysisException => None
+        }
+      val guarded = metaDim.fold(batch)(dim =>
+        batch.withColumn("embedding", dimGuarded(dim, "SQ8 append")))
+      c.land("codes")(quantizeInt8(guarded)
+        .select(col("vec_id"), col("codes"), col("scale"))
+        .write.mode("overwrite").parquet(_))
+      Seq(batch.count().toDouble)
+    }
 
-  /** EXACTLY-ONCE [[appendToBqIndex]], keyed by batch id — see
-    * [[appendToSq8IndexCommitted]]. */
+  /** EXACTLY-ONCE append to a [[writeBqIndex]] sidecar — the SQ8
+    * contract one rung down the quality ladder: sign-bit packing is
+    * stateless per-row math, so appended rows are bit-identical to
+    * what a full rebuild would store. The index's recorded dimension
+    * gates the batch (the angular score divides by d — a
+    * d-mismatched append would silently corrupt every probe that
+    * touches its rows). Marker: the batch row count.
+    */
   def appendToBqIndexCommitted(spark: org.apache.spark.sql.SparkSession,
                                dir: String, batch: DataFrame,
                                batchId: Long,
-                               sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    commitFlatBatch(spark, root, "bits", batchId)(staging =>
-      bqEncodeGuarded(spark, root, batch)
-        .write.mode("overwrite").parquet(staging))
-    IndexCache.invalidate(root)
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
-
-  /** Shared exactly-once landing for the FLAT (unpartitioned) sidecar
-    * layouts: stage the batch under `.staging-batch-<id>`, sweep any
-    * `b<id>-*` files a crashed prior attempt half-moved into
-    * `dir/sub`, move the staged part files in under deterministic
-    * names, then publish the `_commits/batch-<id>` marker by
-    * create-then-rename. A marker present short-circuits the whole
-    * call.
-    */
-  private def commitFlatBatch(spark: org.apache.spark.sql.SparkSession,
-                              root: String, sub: String, batchId: Long)
-                             (stage: String => Unit): Unit = {
-    val d = new org.apache.hadoop.fs.Path(root)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, s"_commits/batch-$batchId")
-    if (fs.exists(marker)) return
-    val staging = new org.apache.hadoop.fs.Path(d, s".staging-batch-$batchId")
-    stage(staging.toString)
-    val target = new org.apache.hadoop.fs.Path(d, sub)
-    fs.mkdirs(target)
-    val stale = fs.globStatus(new org.apache.hadoop.fs.Path(target,
-      s"b$batchId-*.parquet"))
-    if (stale != null) stale.foreach(f => fs.delete(f.getPath, false))
-    val parts = fs.globStatus(new org.apache.hadoop.fs.Path(staging,
-      "*.parquet"))
-    (if (parts == null) Array.empty[org.apache.hadoop.fs.FileStatus]
-     else parts)
-      .sortBy(_.getPath.toString).zipWithIndex.foreach { case (f, i) =>
-        val dest = new org.apache.hadoop.fs.Path(target,
-          s"b$batchId-p$i.parquet")
-        require(fs.rename(f.getPath, dest),
-          s"sidecar commit: failed to move ${f.getPath} to $dest")
-      }
-    fs.delete(staging, true)
-    val tmp = new org.apache.hadoop.fs.Path(d, s"_commits/.batch-$batchId.tmp")
-    fs.mkdirs(marker.getParent)
-    val os = fs.create(tmp, true)
-    try os.write("committed".getBytes("UTF-8")) finally os.close()
-    fs.delete(marker, false)
-    require(fs.rename(tmp, marker),
-      s"sidecar commit: failed to publish $marker")
-    ()
-  }
-
-  /** Append a batch to a [[writeBqIndex]] sidecar WITHOUT a rebuild —
-    * [[appendToSq8Index]]'s contract one rung down the quality
-    * ladder: sign-bit packing is stateless per-row math, so appended
-    * rows are bit-identical to what a full rebuild would store. The
-    * index's recorded dimension gates the batch (the angular score
-    * divides by d — a d-mismatched append would silently corrupt
-    * every probe that touches its rows).
-    */
-  def appendToBqIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, batch: DataFrame,
-                      sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    bqEncodeGuarded(spark, root, batch)
-      .write.mode("append").parquet(s"$root/bits")
-    IndexCache.invalidate(root)
-    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
-  }
-
-  /** [[appendToBqIndex]]'s encode + dimension guard, shared with the
-    * committed form. */
-  private def bqEncodeGuarded(spark: org.apache.spark.sql.SparkSession,
-                              root: String, batch: DataFrame): DataFrame = {
-    val dim = spark.read.parquet(s"$root/meta").head().getInt(0)
-    batch.select(col("vec_id"),
-      when(assert_true(size(col("embedding")) === lit(dim),
-        concat(lit(s"BQ append: vector dim "),
-          size(col("embedding")).cast("string"),
-          lit(s" != index dim $dim for vec_id "),
-          col("vec_id").cast("string"))).isNull,
-        signPackWords(col("embedding"), dim)).as("bits"))
-  }
+                               sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      val dim = spark.read.parquet(s"${c.root}/meta").head().getInt(0)
+      c.land("bits")(batch
+        .withColumn("embedding", dimGuarded(dim, "BQ append"))
+        .select(col("vec_id"),
+          signPackWords(col("embedding"), dim).as("bits"))
+        .write.mode("overwrite").parquet(_))
+      Seq(batch.count().toDouble)
+    }
 
   /** [[ensureIvfIndex]]'s build-once contract for the SQ8 sidecar. */
   def ensureSq8Index(spark: org.apache.spark.sql.SparkSession,
@@ -3832,9 +3484,10 @@ object Similarity {
     * snapshots — the per-class monitoring row a nightly pipeline
     * reads before trusting an append: for every label, the cosine
     * between the base and batch centroids and both mean vector
-    * norms. The index drift guard ([[appendToIvfIndex]]) answers
-    * "may this batch enter the index" with one global ratio; this
-    * answers the analyst's question — WHICH class moved, and how far.
+    * norms. The index drift guard ([[appendToIvfIndexCommitted]])
+    * answers "may this batch enter the index" with one global ratio;
+    * this answers the analyst's question — WHICH class moved, and how
+    * far.
     * Labels present on only one side surface with n=0 and null
     * metrics: appearance/disappearance IS drift, not an error.
     *

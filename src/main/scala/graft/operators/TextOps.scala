@@ -657,16 +657,13 @@ object TextOps {
   }
 
   /** EXACTLY-ONCE gram-index append, keyed by a caller-supplied
-    * batch id — new corpus docs shingle scan-locally into their
-    * bucket partitions and their docdim rows land beside them, both
-    * via the idempotent staged-move
-    * ([[graft.operators.Similarity.sweepAndMoveStaged]]), marker
-    * last. Nothing here merges — postings and docdim rows are
-    * per-doc facts of IMMUTABLE documents (the index append model
-    * shared with IVF/BM25: batches carry NEW doc_ids), so unlike
-    * BM25 there is no df/stats swap window at all and committed
-    * appends compose with live probing unconditionally. The marker
-    * content records the batch's doc count for accounting.
+    * batch id ([[IndexGen.commitBatch]]) — new corpus docs shingle
+    * scan-locally into their bucket partitions and their docdim rows
+    * land beside them. Nothing here merges — postings and docdim rows
+    * are per-doc facts of IMMUTABLE documents (the index append model
+    * shared with IVF/BM25: batches carry NEW doc_ids), so committed
+    * appends compose with live probing unconditionally. Marker: the
+    * batch's doc count.
     *
     * The hash function is RESOLVED from the index meta — not a
     * parameter: an append hashing under a different family than the
@@ -677,13 +674,9 @@ object TextOps {
   def appendToGramIndexCommitted(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, batch: DataFrame,
                                  batchId: Long,
-                                 sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val d = new org.apache.hadoop.fs.Path(root)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, s"_commits/batch-$batchId")
-    if (!fs.exists(marker)) {
-      val (n, nBuckets, hashFn) = gramMeta(spark, root)
+                                 sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      val (n, nBuckets, hashFn) = gramMeta(spark, c.root)
       val posted = batch
         .select(col("doc_id"),
           explode(Dedup.windowHashes(col("text"), n, 0,
@@ -691,28 +684,15 @@ object TextOps {
             .as("h"))
         .withColumn("bucket", pmod(col("h"), lit(nBuckets)))
         .localCheckpoint(true)
-      val stagingP = new org.apache.hadoop.fs.Path(d,
-        s".staging-batch-$batchId-postings")
       // one staged file per touched bucket (the build's layout
       // discipline) — a batch otherwise lands tasks × buckets files
-      posted.repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(stagingP.toString)
-      Similarity.sweepAndMoveStaged(fs, stagingP,
-        new org.apache.hadoop.fs.Path(d, "postings"), batchId)
-      val stagingD = new org.apache.hadoop.fs.Path(d,
-        s".staging-batch-$batchId-docdim")
-      posted.groupBy(col("doc_id")).agg(count(lit(1)).as("n_ngrams"))
-        .write.mode("overwrite").parquet(stagingD.toString)
-      Similarity.sweepAndMoveStaged(fs, stagingD,
-        new org.apache.hadoop.fs.Path(d, "docdim"), batchId)
-      val nDocs = batch.agg(count(lit(1))).head().getLong(0)
-      Similarity.writeCommitMarker(fs, marker, s"$nDocs")
-      IndexCache.invalidate(root)
+      c.land("postings")(posted.repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(_))
+      c.land("docdim")(posted.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_ngrams"))
+        .write.mode("overwrite").parquet(_))
+      Seq(batch.count().toDouble)
     }
-    sourcePath.foreach(
-      Similarity.refreshIndexMarker(spark, dir, _))
-  }
 
   /** Compact a gram index: postings rewrite to one file per bucket
     * partition and the docdim to one file, published together as ONE
@@ -1051,17 +1031,10 @@ object TextOps {
                      hashFn: (Int, Column) => Column = Dedup.xxSeeded,
                      triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        spanDedupBatch(batch.sparkSession, dimDir, batch, id, outDir,
-          n, minCount, hashFn)
-        ()
-      }
-      .start()
+    MicroBatches.start(docs, checkpointDir, triggerMs) { (batch, id) =>
+      spanDedupBatch(batch.sparkSession, dimDir, batch, id, outDir,
+        n, minCount, hashFn)
+    }
 
   /** [[removeDuplicateSpans]] against a PRE-AGGREGATED [[windowDim]]
     * — the incremental form: the dim decides which windows are
@@ -1352,7 +1325,7 @@ object TextOps {
     * postings PARTITIONS to its term buckets, and ranks through the
     * shared [[bm25Rank]] tail; results land batch_id-partitioned and
     * replay-idempotent. Because every batch re-reads the index
-    * directory, [[appendToBm25Index]] appends are visible to the
+    * directory, [[appendToBm25IndexCommitted]] appends are visible to the
     * NEXT serving batch with no restart — maintenance and serving
     * compose on the same at-rest layout, exactly as the dense pair
     * does. Together the two serving streams are the production
@@ -1360,11 +1333,8 @@ object TextOps {
     * fused downstream by RRF when both are wanted.
     *
     * Maintenance composes with live serving across the board:
-    * committed appends ([[appendToBm25IndexCommitted]]) only ADD
-    * files and markers; plain-append df/stats merges publish as dim
-    * VERSIONS ([[IndexGen.swapSub]] — reader-atomic; at worst one
-    * batch of one-sided idf staleness, never a torn read); compaction
-    * publishes a whole new GENERATION behind one atomic pointer flip.
+    * appends only ADD files and markers; compaction publishes a whole
+    * new GENERATION behind one atomic pointer flip.
     * A serving batch resolves the pointer once and reads a complete
     * snapshot either way — no quiescing, no failed reads.
     */
@@ -1372,16 +1342,9 @@ object TextOps {
                        checkpointDir: String, k: Int = 5,
                        triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        serveBm25Batch(batch.sparkSession, dir, batch, id, outDir, k)
-        ()
-      }
-      .start()
+    MicroBatches.start(queries, checkpointDir, triggerMs) { (batch, id) =>
+      serveBm25Batch(batch.sparkSession, dir, batch, id, outDir, k)
+    }
 
   /** Drift rows for ONE micro-batch against the persisted baseline
     * dim — the replayable unit of [[startDriftMonitor]]: results land
@@ -1419,17 +1382,10 @@ object TextOps {
                         outDir: String, checkpointDir: String,
                         triggerMs: Long = 3000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        serveDriftBatch(batch.sparkSession, baselineDimPath, batch, id,
-          outDir)
-        ()
-      }
-      .start()
+    MicroBatches.start(docs, checkpointDir, triggerMs) { (batch, id) =>
+      serveDriftBatch(batch.sparkSession, baselineDimPath, batch, id,
+        outDir)
+    }
 
   /** Corpus-familiarity score per document — the head/middle/tail
     * corpus-fit dial of CCNet-style curation (Wenzek et al. 2020
@@ -2378,15 +2334,7 @@ object TextOps {
                      nBuckets: Int = 64): Unit = {
     val spark = docs.sparkSession
     IndexGen.buildFresh(spark, dir) { root =>
-      docs
-        .select(col("doc_id"),
-          size(tokens(col("text"))).cast("long").as("dl"),
-          explode(tokens(col("text"))).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .withColumn("bucket",
-          pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
+      bm25Postings(docs, nBuckets.toLong)
         // one file per bucket partition from day one (the GramProf
         // lesson: a multi-task write lands tasks × buckets files and
         // the probe pays the open-file soup compaction exists to
@@ -2399,8 +2347,7 @@ object TextOps {
       spark.read.parquet(s"$root/postings")
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(s"$root/df")
-      docs.agg(count(lit(1)).as("n_docs"),
-          sum(size(tokens(col("text"))).cast("long")).as("n_toks"))
+      bm25CorpusStats(docs)
         .withColumn("n_buckets", lit(nBuckets.toLong))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
     }
@@ -2417,37 +2364,13 @@ object TextOps {
     Similarity.ensureIndexDir(spark, sourcePath, "bm25", indexRoot)(
       dir => writeBm25Index(docs, dir, nBuckets))
 
-  /** Append a batch of documents to a durable BM25 index WITHOUT a
-    * rebuild — everything stored is an integer count, so append ≡
-    * rebuild EXACTLY: batch postings land in their bucket partitions
-    * (scan-local tokenize, same bucketing), the df dim merges by sum
-    * (a doc contains a term in exactly one snapshot, so
-    * df(a ∪ b) = df(a) + df(b)), and the 1-row stats add. df and
-    * stats publish as new sublayout VERSIONS ([[IndexGen.swapSub]] —
-    * reader-atomic, one prior retained; no overwrite window), and
-    * `sourcePath` advances the build-once fingerprint so the next
-    * [[ensureBm25Index]] keeps the appended index (the SQ8/BQ append
-    * contract — a daily pipeline must not rebuild its cheapest index
-    * every day). Crash seams, stated plainly: a failure between the
-    * postings append and the dim swaps leaves idf marginally stale
-    * until the next append or rebuild, and REPLAYING A COMPLETED
-    * APPEND double-appends the batch's (doc, term) postings and
-    * double-merges its df/stats — silent score corruption, not mere
-    * staleness. This plain form is for a caller with its own
-    * exactly-once batch boundary (the
-    * [[graft.operators.Similarity.appendToIvfIndex]] stance);
-    * anything that can replay — streams, crash-restarted nightly
-    * jobs — must ride [[appendToBm25IndexCommitted]], whose batch-id
-    * markers make a replay a no-op.
+  /** The BM25 postings of `docs` — tokenize, per-(doc, term) tf and
+    * doc length, term-hash bucket: the one chain the build and the
+    * committed append share, so appended postings are exactly what a
+    * rebuild would store.
     */
-  def appendToBm25Index(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, batch: DataFrame,
-                        sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val statsRow = spark.read
-      .parquet(IndexGen.subPath(spark, root, "stats")).head()
-    val nBuckets = statsRow.getAs[Long]("n_buckets")
-    val posted = batch
+  private def bm25Postings(docs: DataFrame, nBuckets: Long): DataFrame =
+    docs
       .select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("dl"),
         explode(tokens(col("text"))).as("term"))
@@ -2455,104 +2378,52 @@ object TextOps {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
-      .localCheckpoint(true)
-    posted.repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$root/postings")
-    val merged = spark.read
-      .parquet(IndexGen.subPath(spark, root, "df"))
-      .union(posted.groupBy(col("term")).agg(count(lit(1)).as("df")))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    IndexGen.swapSub(spark, root, "df", merged)
-    val bs = batch.agg(count(lit(1)).as("n_docs"),
-      sum(size(tokens(col("text"))).cast("long")).as("n_toks")).head()
-    val batchToks = if (bs.isNullAt(1)) 0L else bs.getLong(1)
-    import spark.implicits._
-    IndexGen.swapSub(spark, root, "stats",
-      Seq((statsRow.getAs[Long]("n_docs") + bs.getLong(0),
-        statsRow.getAs[Long]("n_toks") + batchToks,
-        nBuckets)).toDF("n_docs", "n_toks", "n_buckets").coalesce(1))
-    IndexCache.invalidate(root)
-    sourcePath.foreach(
-      Similarity.refreshIndexMarker(spark, dir, _))
-  }
 
-  /** EXACTLY-ONCE BM25 index append, keyed by a caller-supplied batch
-    * id — the lexical sibling of
-    * [[graft.operators.Similarity.appendToIvfIndexCommitted]], for
-    * crash-replaying pipelines (streams, restarted nightly jobs)
-    * where the plain [[appendToBm25Index]] would double-append
-    * postings and double-merge df on a replay:
+  /** (n_docs, n_toks) of `docs` — the one-shot's corpus aggregate
+    * (postings alone would under-count empty-token documents). */
+  private def bm25CorpusStats(docs: DataFrame): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"),
+      sum(size(tokens(col("text"))).cast("long")).as("n_toks"))
+
+  /** Append a batch of documents to a durable BM25 index WITHOUT a
+    * rebuild, EXACTLY ONCE per caller-supplied batch id
+    * ([[IndexGen.commitBatch]]) — everything stored is an integer
+    * count, so append ≡ rebuild EXACTLY (a doc contains a term in
+    * exactly one batch, so df(a ∪ b) = df(a) + df(b)):
     *
-    *  1. a committed batch is detected by its marker
-    *     (`_commits/batch-<id>`) and the whole call is a no-op;
-    *  2. the batch's postings stage (`.staging-batch-<id>-postings`,
-    *     overwrite-safe) then move into the bucket partitions under
-    *     DETERMINISTIC names (`b<id>-p<n>.parquet`), sweeping any
-    *     half-moved files of a crashed prior attempt first
-    *     ([[graft.operators.Similarity.sweepAndMoveStaged]]);
-    *  3. the batch's df contribution lands the same way as DELTA
-    *     ROWS under `df_deltas/` — the base df dim is never
-    *     rewritten, so there is no swap to half-apply; probes sum
+    *  1. the batch's postings land in their bucket partitions
+    *     (scan-local tokenize, same bucketing as the build);
+    *  2. its df contribution lands the same way as DELTA ROWS under
+    *     `df_deltas/` — the base df dim is never rewritten; probes sum
     *     base + deltas per query term ([[bm25DfRows]]) and
     *     [[compactBm25Index]] folds deltas back into the base;
-    *  4. the stats contribution is the marker's CONTENT
-    *     (`n_docs n_toks`), published last by create-then-rename:
-    *     [[readBm25Stats]] sums the base stats plus every marker, so
-    *     a crash anywhere before the marker leaves stats exactly
-    *     consistent with a replay re-running the batch.
+    *  3. the stats contribution is the marker's CONTENT
+    *     (`n_docs n_toks`): [[readBm25Stats]] sums the base stats plus
+    *     every marker.
     *
-    * Mixing forms is safe: the plain append advances the BASE df/
-    * stats in place and never reads markers or deltas, so composite
-    * reads stay exact either way.
+    * `sourcePath` advances the build-once fingerprint so the next
+    * [[ensureBm25Index]] keeps the appended index — a daily pipeline
+    * must not rebuild its postings every day.
     */
   def appendToBm25IndexCommitted(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, batch: DataFrame,
                                  batchId: Long,
-                                 sourcePath: Option[String] = None): Unit = {
-    val root = IndexGen.root(spark, dir)
-    val d = new org.apache.hadoop.fs.Path(root)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, s"_commits/batch-$batchId")
-    if (!fs.exists(marker)) {
-      val nBuckets = spark.read
-        .parquet(IndexGen.subPath(spark, root, "stats")).head()
+                                 sourcePath: Option[String] = None): Unit =
+    IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
+      val nBuckets = spark.read.parquet(s"${c.root}/stats").head()
         .getAs[Long]("n_buckets")
-      val posted = batch
-        .select(col("doc_id"),
-          size(tokens(col("text"))).cast("long").as("dl"),
-          explode(tokens(col("text"))).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
-        .localCheckpoint(true)
-      val stagingP = new org.apache.hadoop.fs.Path(d,
-        s".staging-batch-$batchId-postings")
+      val posted = bm25Postings(batch, nBuckets).localCheckpoint(true)
       // one staged file per touched bucket (the build's layout
       // discipline)
-      posted.repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(stagingP.toString)
-      Similarity.sweepAndMoveStaged(fs, stagingP,
-        new org.apache.hadoop.fs.Path(d, "postings"), batchId)
-      val stagingD = new org.apache.hadoop.fs.Path(d,
-        s".staging-batch-$batchId-df")
-      posted.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(stagingD.toString)
-      Similarity.sweepAndMoveStaged(fs, stagingD,
-        new org.apache.hadoop.fs.Path(d, "df_deltas"), batchId)
-      val bs = batch.agg(count(lit(1)).as("n_docs"),
-        sum(size(tokens(col("text"))).cast("long")).as("n_toks")).head()
-      val batchToks = if (bs.isNullAt(1)) 0L else bs.getLong(1)
-      // marker last, atomically: content is the stats contribution
-      Similarity.writeCommitMarker(fs, marker,
-        s"${bs.getLong(0)} $batchToks")
-      IndexCache.invalidate(root)
+      c.land("postings")(posted.repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(_))
+      c.land("df_deltas")(posted.groupBy(col("term"))
+        .agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(_))
+      val bs = bm25CorpusStats(batch).head()
+      Seq(bs.getLong(0).toDouble,
+        if (bs.isNullAt(1)) 0.0 else bs.getLong(1).toDouble)
     }
-    sourcePath.foreach(
-      Similarity.refreshIndexMarker(spark, dir, _))
-  }
 
   /** Compact a durable BM25 index: every append adds a postings file
     * per touched bucket (and, for committed appends, a df delta
@@ -2563,13 +2434,12 @@ object TextOps {
     * ([[IndexGen.advance]]), content untouched, probe results
     * identical before and after:
     *
-    *  1. the df dim FOLDS: base (newest swap version) ∪ committed
-    *     deltas, summed per term, lands as the new generation's plain
-    *     `df`, and its `df_deltas` is written EMPTY — the single
-    *     pointer flip publishes fold and delta-retirement together,
-    *     so no reader state ever counts a delta twice OR misses one
-    *     (the old two-rename ordering could under-count for a
-    *     concurrent reader; a generation cannot);
+    *  1. the df dim FOLDS: base ∪ committed deltas, summed per term,
+    *     lands as the new generation's `df`, and its `df_deltas` is
+    *     written EMPTY — the single pointer flip publishes fold and
+    *     delta-retirement together, so no reader state ever counts a
+    *     delta twice OR misses one (the old two-rename ordering could
+    *     under-count for a concurrent reader; a generation cannot);
     *  2. the postings rewrite to one file per bucket partition
     *     (`maxRecordsPerFile` re-splits oversized buckets);
     *  3. stats and the `_commits` markers copy forward — the markers
@@ -2596,22 +2466,21 @@ object TextOps {
         "bucket", maxRecordsPerFile)
     }
 
-  /** Composite corpus stats of a durable BM25 index: the base stats
-    * file (merged forward by plain [[appendToBm25Index]]) PLUS every
-    * [[appendToBm25IndexCommitted]] marker's `n_docs n_toks`
-    * contribution — the [[graft.operators.Similarity.readIvfStats]]
-    * contract on the lexical side. Returns (n_docs, n_toks,
+  /** Composite corpus stats of a durable BM25 index: the build-time
+    * stats file PLUS every [[appendToBm25IndexCommitted]] marker's
+    * `n_docs n_toks` contribution — the
+    * [[graft.operators.Similarity.readIvfStats]] contract on the
+    * lexical side. Returns (n_docs, n_toks,
     * n_buckets); n_buckets is fixed at build time and never carried
     * by markers.
     */
   def readBm25Stats(spark: org.apache.spark.sql.SparkSession,
                     dir: String): (Long, Long, Long) = {
     val root = IndexGen.root(spark, dir)
-    val sp = IndexGen.subPath(spark, root, "stats")
     IndexCache.cached(s"$root#bm25stats",
-      sp + "|" + IndexCache.dirStamp(spark, s"$root/_commits")) {
-      val f = spark.read.parquet(sp).head()
-      val m = Similarity.sumCommitMarkers(spark, root, 2)
+      IndexCache.dirStamp(spark, s"$root/_commits")) {
+      val f = spark.read.parquet(s"$root/stats").head()
+      val m = IndexGen.sumCommitMarkers(spark, root, 2)
       (f.getAs[Long]("n_docs") + m(0).toLong,
         f.getAs[Long]("n_toks") + m(1).toLong,
         f.getAs[Long]("n_buckets"))
@@ -2626,10 +2495,9 @@ object TextOps {
     */
   private def bm25DfRows(spark: org.apache.spark.sql.SparkSession,
                          root: String): (DataFrame, Boolean) = {
-    val sp = IndexGen.subPath(spark, root, "df")
     IndexCache.cached(s"$root#df-rows",
-      sp + "|" + IndexCache.dirStamp(spark, s"$root/df_deltas")) {
-      val base = spark.read.parquet(sp)
+      IndexCache.dirStamp(spark, s"$root/df_deltas")) {
+      val base = spark.read.parquet(s"$root/df")
       val deltas = new org.apache.hadoop.fs.Path(root, "df_deltas")
       val fs = deltas.getFileSystem(spark.sessionState.newHadoopConf())
       val hasDeltas = fs.exists(deltas) && {

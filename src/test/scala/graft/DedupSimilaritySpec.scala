@@ -1133,19 +1133,17 @@ class DedupSimilaritySpec extends SparkSpecBase {
         Seq((902L, "durian")).toDF("query_id", "text"), b1, outDir, k = 3)
       assert(snap() == face, "replayed batch must not change results")
       // an appended doc is retrievable by the NEXT batch, no restart
-      TextOps.appendToBm25Index(spark, dir,
+      TextOps.appendToBm25IndexCommitted(spark, dir,
         Seq((4L, "honeydew honeydew honeydew", "s"))
-          .toDF("doc_id", "text", "source"))
+          .toDF("doc_id", "text", "source"), batchId = 76L)
       mem.addData((903L, "honeydew"))
       q.processAllAvailable()
       val hit = spark.read.parquet(outDir)
         .filter($"query_id" === 903L && $"rank" === 1L)
         .select($"doc_id").as[Long].head()
       assert(hit == 4L, s"appended doc not served: $hit")
-      // a COMMITTED append composes with the LIVE stream too — it
-      // never rewrites the base dims, so there is no swap window at
-      // all (the docstring's "streams ride the committed form" claim,
-      // exercised against a running query)
+      // a second append composes with the LIVE stream too — appends
+      // never rewrite the base dims, so there is no swap window at all
       TextOps.appendToBm25IndexCommitted(spark, dir,
         Seq((5L, "kiwi kiwi lime", "s")).toDF("doc_id", "text", "source"),
         batchId = 77L)
@@ -1158,7 +1156,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     } finally { if (q.isActive) q.stop() }
   }
 
-  test("appendToBm25Index: append equals a full rebuild exactly; the fingerprint advances so ensure keeps the appended index") {
+  test("BM25 committed append equals a full rebuild exactly") {
     val base = Seq(
       (0L, "apple banana cherry", "s"),
       (1L, "apple apple durian", "s"),
@@ -1175,7 +1173,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val dirA = java.nio.file.Files
       .createTempDirectory("bm25-app").toString
     TextOps.writeBm25Index(base, dirA, nBuckets = 8)
-    TextOps.appendToBm25Index(spark, dirA, batch)
+    TextOps.appendToBm25IndexCommitted(spark, dirA, batch, batchId = 1L)
     val dirB = java.nio.file.Files
       .createTempDirectory("bm25-reb").toString
     val union = base.union(batch)
@@ -1185,13 +1183,15 @@ class DedupSimilaritySpec extends SparkSpecBase {
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
     val appended = probe(dirA)
     assert(appended == probe(dirB), "append diverged from rebuild")
+    assert(TextOps.readBm25Stats(spark, dirA) ==
+      TextOps.readBm25Stats(spark, dirB), "stats diverged from rebuild")
     assert(appended == TextOps.bm25TopK(union, Seq(0L, 1L), k = 4)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq,
       "append diverged from the one-shot")
     // appended doc is retrievable (doc 5 shares apple/cherry with 0)
     assert(appended.filter(_._1 == 0L).map(_._3).contains(5L))
-    // fingerprint leg: append to the SOURCE, appendToBm25Index with
-    // sourcePath advances the marker, so ensure does NOT rebuild
+    // fingerprint leg: append to the SOURCE, then the committed append
+    // with sourcePath advances the marker, so ensure does NOT rebuild
     val srcDir = java.nio.file.Files
       .createTempDirectory("bm25-app-src").toString + "/documents.parquet"
     base.write.parquet(srcDir)
@@ -1200,7 +1200,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val idx = TextOps.ensureBm25Index(spark, srcDir,
       spark.read.parquet(srcDir), nBuckets = 8, indexRoot = Some(root))
     batch.write.mode("append").parquet(srcDir)
-    TextOps.appendToBm25Index(spark, idx, batch, Some(srcDir))
+    TextOps.appendToBm25IndexCommitted(spark, idx, batch, 1L, Some(srcDir))
     val marker = new java.io.File(idx, "_source_fingerprint")
     val stamp = marker.lastModified()
     val again = TextOps.ensureBm25Index(spark, srcDir,
@@ -2831,15 +2831,14 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivf-append").toString
     Similarity.writeIvfIndex(corpus, dir, nlist = 4, iters = 3)
-    val stats0 = spark.read.parquet(isub(dir, "stats")).head()
-    assert(stats0.getAs[Long]("n") == 40L)
+    assert(Similarity.readIvfStats(spark, dir)._1 == 40L)
 
     // in-distribution batch: 10 fresh blob vectors — append succeeds,
     // stats merge distributively
     val batch = (100L until 110L).map(i => (i, blobVec((i % 2).toInt)))
       .toDF("vec_id", "embedding")
-    Similarity.appendToIvfIndex(spark, dir, batch)
-    assert(spark.read.parquet(isub(dir, "stats")).head().getAs[Long]("n") == 50L)
+    Similarity.appendToIvfIndexCommitted(spark, dir, batch, 1L)
+    assert(Similarity.readIvfStats(spark, dir)._1 == 50L)
 
     // append-then-search: probing with an appended vector's own
     // embedding must return it at cosine 1.0 (its list is probed by
@@ -2857,16 +2856,17 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .map(i => (i, Array.fill(64)(100.0f + rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val ex = intercept[IllegalStateException] {
-      Similarity.appendToIvfIndex(spark, dir, far)
+      Similarity.appendToIvfIndexCommitted(spark, dir, far, 2L)
     }
     assert(ex.getMessage.contains("drift guard"))
     // the refused batch left neither rows nor stats behind
-    assert(spark.read.parquet(isub(dir, "stats")).head().getAs[Long]("n") == 50L)
+    assert(Similarity.readIvfStats(spark, dir)._1 == 50L)
     assert(spark.read.parquet(s"${iroot(dir)}/lists")
       .filter($"vec_id" >= 200L).count() == 0L)
-    // an empty append is a no-op
-    Similarity.appendToIvfIndex(spark, dir, batch.filter(lit(false)))
-    assert(spark.read.parquet(isub(dir, "stats")).head().getAs[Long]("n") == 50L)
+    // an empty append lands nothing
+    Similarity.appendToIvfIndexCommitted(spark, dir, batch.filter(lit(false)),
+      3L)
+    assert(Similarity.readIvfStats(spark, dir)._1 == 50L)
   }
 
   test("IVF-PQ append: appended rows are PQ-encoded with the stored books (both codings) and probe-visible") {
@@ -2891,7 +2891,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
       // encoding is a pure function of the vector)
       val batch = ((100L until 106L).map(i => (i, blobVec((i % 2).toInt)))
         :+ (999L, rows(7)._2)).toDF("vec_id", "embedding")
-      Similarity.appendToIvfIndex(spark, dir, batch)
+      Similarity.appendToIvfIndexCommitted(spark, dir, batch, 1L)
       val lists = spark.read.parquet(s"${iroot(dir)}/lists")
       val stored = lists.filter($"vec_id".isin(7L, 999L))
         .select($"vec_id", $"cid", $"codes")
@@ -3040,8 +3040,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
       // maintenance append is visible to the NEXT serving batch with
       // no restart: serve a query identical to the appended vector
       val nv = blobVec(0)
-      Similarity.appendToIvfIndex(spark, dir,
-        Seq((500L, nv)).toDF("vec_id", "embedding"))
+      Similarity.appendToIvfIndexCommitted(spark, dir,
+        Seq((500L, nv)).toDF("vec_id", "embedding"), 1L)
       mem.addData((903L, nv))
       q.processAllAvailable()
       val top = spark.read.parquet(outDir)
@@ -3153,8 +3153,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("ivf-count").toString
     Similarity.writeIvfIndex(emb, dir, nlist = 4, iters = 2)
     assert(Similarity.indexedCorpusCount(spark, dir) == 300L)
-    Similarity.appendToIvfIndex(spark, dir,
-      (500L until 510L).map(i => (i, megaVec())).toDF("vec_id", "embedding"))
+    Similarity.appendToIvfIndexCommitted(spark, dir,
+      (500L until 510L).map(i => (i, megaVec())).toDF("vec_id", "embedding"),
+      1L)
     assert(Similarity.indexedCorpusCount(spark, dir) == 310L)
   }
 
@@ -3180,7 +3181,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val batch = batchRows.toDF("vec_id", "embedding")
     // the source receives the batch, then the sidecar appends it
     batch.write.mode("append").parquet(src)
-    Similarity.appendToSq8Index(spark, sq8, batch, sourcePath = Some(src))
+    Similarity.appendToSq8IndexCommitted(spark, sq8, batch, 1L,
+      sourcePath = Some(src))
     val sq8Files = listing(s"${iroot(sq8)}/codes")
     // appended codes are byte-identical to what a rebuild would store
     // (encoding is a pure per-row function)
@@ -3214,7 +3216,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
         .exists(e => Option(e.getMessage).exists(_.contains(s)))
     val exS = intercept[Exception] {
-      Similarity.appendToSq8Index(spark, sq8, badDim)
+      Similarity.appendToSq8IndexCommitted(spark, sq8, badDim, 2L)
     }
     assert(chainHas(exS, "SQ8 append"), s"unexpected failure: $exS")
 
@@ -3222,8 +3224,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val bq = Similarity.ensureBqIndex(spark, src, full, indexRoot = Some(root))
     val batch2 = (200L until 206L).map(i => (i, vec()))
     batch2.toDF("vec_id", "embedding").write.mode("append").parquet(src)
-    Similarity.appendToBqIndex(spark, bq,
-      batch2.toDF("vec_id", "embedding"), sourcePath = Some(src))
+    Similarity.appendToBqIndexCommitted(spark, bq,
+      batch2.toDF("vec_id", "embedding"), 1L, sourcePath = Some(src))
     val bqFiles = listing(s"${iroot(bq)}/bits")
     // appended bits = a rebuild's bits for the same vectors
     val storedBits = spark.read.parquet(s"${iroot(bq)}/bits")
@@ -3245,7 +3247,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(bqAgain == bq && listing(s"${iroot(bq)}/bits") == bqFiles,
       "append left the fingerprint stale: ensureBqIndex rebuilt")
     val exB = intercept[Exception] {
-      Similarity.appendToBqIndex(spark, bq, badDim)
+      Similarity.appendToBqIndexCommitted(spark, bq, badDim, 2L)
     }
     assert(chainHas(exB, "BQ append"), s"unexpected failure: $exB")
   }
@@ -3858,9 +3860,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("ivf-compact").toString
     Similarity.writeIvfIndex(corpus.toDF("vec_id", "embedding"), dir,
       nlist = 4, iters = 2)
-    // a plain append and two committed appends — the daily decay
-    Similarity.appendToIvfIndex(spark, dir,
-      (100L until 105L).map(i => (i, vec())).toDF("vec_id", "embedding"))
+    // three committed appends — the daily decay
+    Similarity.appendToIvfIndexCommitted(spark, dir,
+      (100L until 105L).map(i => (i, vec())).toDF("vec_id", "embedding"), 0L)
     Similarity.appendToIvfIndexCommitted(spark, dir,
       (200L until 205L).map(i => (i, vec())).toDF("vec_id", "embedding"), 1L)
     Similarity.appendToIvfIndexCommitted(spark, dir,
@@ -3943,8 +3945,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val rnd = new scala.util.Random(29)
     val nv = emb.select($"embedding").as[Array[Float]].head()
       .map(x => x + rnd.nextGaussian().toFloat * 0.001f)
-    Similarity.appendToIvfIndex(spark, tmpIdx,
-      Seq((7777L, nv)).toDF("vec_id", "embedding"))
+    Similarity.appendToIvfIndexCommitted(spark, tmpIdx,
+      Seq((7777L, nv)).toDF("vec_id", "embedding"), 1L)
     // k = 2: the appended row ties its source vector at rounded cos
     // 1.0 and the id tie-break ranks the original first
     val hits = Similarity.knnJoinIndexed(spark, tmpIdx,
@@ -4185,7 +4187,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
         .exists(e => Option(e.getMessage).exists(_.contains(m)))
     val e = intercept[Exception] {
-      Similarity.appendToPrefixIndex(spark, dir, bad)
+      Similarity.appendToPrefixIndexCommitted(spark, dir, bad, 2L)
     }
     assert(chainHas(e, "!= index dim 64"), e.getMessage)
   }
@@ -4372,14 +4374,14 @@ class DedupSimilaritySpec extends SparkSpecBase {
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
         == afterCommit,
       "committed append must invalidate the cached probe state")
-    // plain append (df/stats swap) → visible too
+    // a second committed append → visible too
     val b2 = Seq((4L, "alpha alpha", "s")).toDF("doc_id", "text", "source")
-    TextOps.appendToBm25Index(spark, dir, b2)
+    TextOps.appendToBm25IndexCommitted(spark, dir, b2, batchId = 2L)
     val u2 = docs.union(b1).union(b2)
     assert(probe(u2) ==
       TextOps.bm25TopK(u2, Seq(0L), k = 3)
         .as[(Long, Long, Long, Long, Double)].collect().toSeq,
-      "plain append must invalidate the cached df/stats")
+      "a second append must invalidate the cached df/stats")
     // compaction (generation advance) → identical results, new root
     val before = probe(u2)
     TextOps.compactBm25Index(spark, dir)
@@ -4538,25 +4540,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .filter(_.getName.startsWith("gen-")).map(_.getName).sorted
     assert(gens.length == 2, s"retention must keep 2 gens: ${gens.toSeq}")
     assert(probeAt(dir) == expected)
-    // dim-ladder: a PLAIN append swaps df/stats as new VERSIONS
-    // inside the generation — reader-atomic, old version retained
-    val rootNow = iroot(dir)
-    val statsBefore = isub(dir, "stats")
-    TextOps.appendToBm25Index(spark, dir,
-      Seq((5L, "fig grape", "s")).toDF("doc_id", "text", "source"))
-    assert(isub(dir, "stats") != statsBefore,
-      "plain append must publish a new stats version")
-    assert(new java.io.File(statsBefore).exists,
-      "the prior stats version must be retained for in-flight readers")
-    assert(iroot(dir) == rootNow,
-      "a plain append must not advance the generation")
-    assert(TextOps.readBm25Stats(spark, dir)._1 == 6L)
-    // a post-append compaction folds the versioned dims back to the
-    // plain layout in the fresh generation
-    TextOps.compactBm25Index(spark, dir)
-    assert(isub(dir, "stats") == s"${iroot(dir)}/stats",
-      "compaction must normalize swapped dims back to plain subs")
-    assert(TextOps.readBm25Stats(spark, dir)._1 == 6L)
     // REBUILD drops stale commit markers (buildFresh): under the flat
     // layout a rebuild left old `_commits` inflating composite stats
     val emb = (0L until 20L)
@@ -4572,6 +4555,150 @@ class DedupSimilaritySpec extends SparkSpecBase {
     Similarity.writeIvfIndex(emb, ivfDir, nlist = 2, iters = 1)
     assert(Similarity.indexedCorpusCount(spark, ivfDir) == 20L,
       "a rebuild must not inherit the old generation's commit markers")
+  }
+
+  test("committed append over every durable index format: a replayed id is a no-op, a half-landed file is swept, the marker is the batch contribution, sourcePath advances the fingerprint") {
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(53)
+    // two well-separated blobs: batches stay in-distribution for the
+    // IVF drift guards
+    def vec(i: Long): Array[Float] = {
+      val v = Array.fill(16)(rnd.nextGaussian().toFloat * 0.1f)
+      v((i % 2).toInt) += (if (i % 2 == 0) 3.0f else -3.0f)
+      v
+    }
+    def vecs(ids: Seq[Long]): DataFrame =
+      ids.map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    val words = Seq("apple", "banana", "cherry", "durian", "elder", "fig",
+      "grape", "honeydew", "kiwi", "lime")
+    def docs(ids: Seq[Long]): DataFrame = ids.map { i =>
+      (i, (0 until 12).map(j => words(((i * 7 + j * 3) % 10).toInt))
+        .mkString(" "), "s")
+    }.toDF("doc_id", "text", "source")
+    def ivfStats(d: String): Seq[Double] = {
+      val (n, s) = Similarity.readIvfStats(spark, d); Seq(n.toDouble, s)
+    }
+    def bm25Stats(d: String): Seq[Double] = {
+      val (n, t, _) = TextOps.readBm25Stats(spark, d)
+      Seq(n.toDouble, t.toDouble)
+    }
+    // (format, vector data?, build, append, row sublayout, its key
+    // columns, composite stats reader summing the markers)
+    type Append = (String, DataFrame, Long, Option[String]) => Unit
+    val formats: Seq[(String, Boolean, String => Unit, Append, String,
+        Seq[String], Option[String => Seq[Double]])] = Seq(
+      ("IVF", true,
+        Similarity.writeIvfIndex(vecs(0L until 40L), _, nlist = 2,
+          iters = 2),
+        (d, b, id, sp) => Similarity.appendToIvfIndexCommitted(spark, d, b,
+          id, maxDriftRatio = 1e9, sourcePath = sp),
+        "lists", Seq("vec_id"), Some(ivfStats _)),
+      ("IVF-PQ", true,
+        Similarity.writeIvfPqIndex(vecs(0L until 40L), _, nlist = 2,
+          itersIvf = 2, m = 4, ksub = 4, itersPq = 1),
+        (d, b, id, sp) => Similarity.appendToIvfIndexCommitted(spark, d, b,
+          id, maxDriftRatio = 1e9, sourcePath = sp),
+        "lists", Seq("vec_id"), Some(ivfStats _)),
+      ("prefix", true,
+        Similarity.writePrefixIndex(vecs(0L until 40L), _, prefixDim = 4),
+        (d, b, id, sp) => Similarity.appendToPrefixIndexCommitted(spark, d,
+          b, id, sp),
+        "full", Seq("vec_id"), None),
+      ("prefix-IVF", true,
+        Similarity.writePrefixIvfIndex(vecs(0L until 40L), _,
+          prefixDim = 4, nlist = 2, iters = 2),
+        (d, b, id, sp) => Similarity.appendToPrefixIvfIndexCommitted(spark,
+          d, b, id, maxDriftRatio = 1e9, sourcePath = sp),
+        "prefix", Seq("vec_id"), Some(ivfStats _)),
+      ("SQ8", true, Similarity.writeSq8Index(vecs(0L until 40L), _),
+        (d, b, id, sp) => Similarity.appendToSq8IndexCommitted(spark, d, b,
+          id, sp),
+        "codes", Seq("vec_id"), None),
+      ("BQ", true, Similarity.writeBqIndex(vecs(0L until 40L), _),
+        (d, b, id, sp) => Similarity.appendToBqIndexCommitted(spark, d, b,
+          id, sp),
+        "bits", Seq("vec_id"), None),
+      ("BM25", false,
+        TextOps.writeBm25Index(docs(0L until 6L), _, nBuckets = 4),
+        (d, b, id, sp) => TextOps.appendToBm25IndexCommitted(spark, d, b,
+          id, sp),
+        "postings", Seq("doc_id", "term"), Some(bm25Stats _)),
+      ("gram", false,
+        TextOps.writeGramIndex(docs(0L until 6L), _, nBuckets = 4),
+        (d, b, id, sp) => TextOps.appendToGramIndexCommitted(spark, d, b,
+          id, sp),
+        "docdim", Seq("doc_id"), None))
+    for ((name, isVec, build, append, sub, keys, stats) <- formats) {
+      val base = java.nio.file.Files
+        .createTempDirectory(s"commit-$name").toString
+      val (dir, src) = (s"$base/idx", s"$base/src")
+      build(dir)
+      def batch(from: Long): DataFrame = {
+        val ids = from until from + 4L
+        (if (isVec) vecs(ids) else docs(ids)).localCheckpoint()
+      }
+      val (b1, b2) = (batch(100L), batch(200L))
+      b1.write.parquet(src)
+      def subDf(): DataFrame = spark.read.parquet(s"${iroot(dir)}/$sub")
+      def markerFile(id: Long) =
+        new java.io.File(s"${iroot(dir)}/_commits/batch-$id")
+      def marker(id: Long): Seq[Double] =
+        new String(java.nio.file.Files.readAllBytes(markerFile(id).toPath),
+          "UTF-8").trim.split("\\s+").map(_.toDouble).toSeq
+      val fpFile = new java.io.File(dir, "_source_fingerprint")
+      def fp(): String =
+        new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8")
+      def close(a: Double, b: Double) =
+        math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+      val statsBefore = stats.map(_(dir))
+
+      // the marker content is the batch contribution: row count first,
+      // then exactly what the composite stats reader adds
+      append(dir, b1, 1L, Some(src))
+      val m1 = marker(1L)
+      assert(m1.head == 4.0, s"$name: marker $m1 must lead with the row count")
+      stats.foreach { read =>
+        val delta = read(dir).zip(statsBefore.get).map { case (a, b) => a - b }
+        assert(delta.zip(m1).forall { case (d, m) => close(d, m) } &&
+          m1.size == delta.size, s"$name: stats moved by $delta, marker $m1")
+      }
+      assert(fpFile.exists, s"$name: sourcePath must write the fingerprint")
+      val fp1 = fp()
+
+      // replaying a committed id is a no-op: rows and marker unchanged
+      val rows1 = subDf().count()
+      val stamp = markerFile(1L).lastModified()
+      append(dir, b1, 1L, None)
+      assert(subDf().count() == rows1 && marker(1L) == m1 &&
+        markerFile(1L).lastModified() == stamp,
+        s"$name: a replayed batch must not land rows or touch its marker")
+
+      // a half-landed `b2-p0.parquet` (a crashed attempt's copy of a
+      // landed file) is swept before batch 2 lands
+      def parquetFiles(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
+        else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+      val victim = parquetFiles(new java.io.File(iroot(dir), sub))
+        .maxBy(_.length())
+      java.nio.file.Files.copy(victim.toPath,
+        new java.io.File(victim.getParentFile, "b2-p0.parquet").toPath)
+      assert(subDf().count() > rows1, s"$name: the planted file must be live")
+      b2.write.mode("append").parquet(src)
+      append(dir, b2, 2L, Some(src))
+      val keyed = subDf().select(keys.map(col): _*)
+      assert(keyed.count() == keyed.distinct().count(),
+        s"$name: the half-landed file was not swept")
+      assert(subDf().filter(col(keys.head) >= 200L)
+        .select(col(keys.head)).distinct().count() == 4L,
+        s"$name: batch 2 must land in full")
+      assert(fp() != fp1, s"$name: sourcePath must advance the fingerprint")
+
+      // an empty batch commits too: a zero-count marker, no rows
+      val rows2 = subDf().count()
+      append(dir, b2.limit(0), 3L, None)
+      assert(marker(3L).head == 0.0 && subDf().count() == rows2,
+        s"$name: an empty batch must publish a zero marker and land nothing")
+    }
   }
 
   test("single-writer lease: a second interleaved maintenance writer fails loudly with the named error, index intact; publish CAS stops a stale-lease loser from clobbering") {

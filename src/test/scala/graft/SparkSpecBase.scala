@@ -16,12 +16,6 @@ trait SparkSpecBase extends AnyFunSuite {
     */
   def iroot(dir: String): String =
     graft.operators.IndexGen.root(spark, dir)
-
-  /** Resolve a sublayout inside the current generation (newest
-    * swapped version of df/stats, else the plain build layout).
-    */
-  def isub(dir: String, sub: String): String =
-    graft.operators.IndexGen.subPath(spark, iroot(dir), sub)
 }
 
 object SparkSpecBase {
