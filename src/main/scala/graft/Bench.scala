@@ -146,7 +146,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "1.0").toDouble
     val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAIT_SEC", "600").toInt
@@ -158,15 +157,7 @@ object Bench {
     // contention — a deep-idle box measured 1.5 purely from JVM/Spark
     // startup, self-contaminating every capture.
     val load0 = waitForIdle(maxLoad, maxWaitSec)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     if (load0 > maxLoad)
       System.err.println(s"[bench] WARNING: load average $load0 at start " +
         s"exceeds gate $maxLoad — run marked contaminated; the committed " +

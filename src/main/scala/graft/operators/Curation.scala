@@ -197,10 +197,11 @@ object Curation {
     val st = stages(docs, lineMinDf, minJaccard, benchMod, decontamN,
       targetSources, budget, shards)
     // Round-14 orchestration (guide §3.3 plan truncation, measured in
-    // DecompProf): force the s3→mem→s4→s5 lazy-checkpoint chain with
-    // ONE cheap action BEFORE building the 6-way attribution join —
-    // the single-action form planned the whole self-referential stage
-    // tree (every join input a full pipeline lineage) and paid ~3 s
+    // OPTIMIZATION_r14.md): force the s3→mem→s4→s5 lazy-checkpoint
+    // chain with ONE cheap action BEFORE building the 6-way
+    // attribution join — the single-action form planned the whole
+    // self-referential stage tree (every join input a full pipeline
+    // lineage) and paid ~3 s
     // of optimizer/orchestration time at sf0.1 (5.08 → 2.12 s
     // min-of-3); after the pre-materialization the attribution plan
     // sees four checkpointed RDD scans. Same frames, same output —
@@ -214,7 +215,7 @@ object Curation {
   /** The attribution tail of [[rejectReasons]] over an existing
     * [[Stages]] lineage — split out so orchestration (what to
     * materialize before building the 6-way join plan) can be
-    * measured and chosen per evidence (DecompProf).
+    * measured and chosen per evidence (OPTIMIZATION_r14.md).
     */
   private[graft] def rejectReasonsOf(st: Stages): DataFrame = {
     def flag(df: DataFrame, name: String): DataFrame =
@@ -293,7 +294,7 @@ object Curation {
       sum(col("tmass").cast(d38)).cast(d38).as("st"),
       sum(col("rmass").cast(d38)).cast(d38).as("sr"))
     // the KB-scale state pieces stay LAZY: an eager pin per dim was
-    // measured (CurationProf, round 12) to ADD net serial jobs —
+    // measured (round 12) to ADD net serial jobs —
     // each localCheckpoint costs its own AQE stage chain (stateOf
     // 10→25 jobs, +2 s warm) while the funnel's branch sharing is
     // already handled by the b4/b5/b6 persists in
@@ -477,75 +478,34 @@ object Curation {
   private val StateParts =
     Seq("corpus_text", "line_dim", "bench_grams", "dsir_dim", "dsir_glob")
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-
   private def partFrames(state: CorpusState): Seq[(String, DataFrame)] =
     StateParts.zip(Seq(state.corpusText, state.lineDim, state.benchGrams,
       state.dsirDim, state.dsirGlob))
 
-  /** Publish `state` as version `v` of the state dir, atomically:
-    * components land in a dot-prefixed staging dir (invisible to
-    * [[latestVersion]]'s v-prefix scan), then ONE rename exposes the
-    * finished version. `batchId` rides in the dir name — replay
-    * detection needs to know which batch produced a version without
-    * opening it.
-    */
-  private def publishVersion(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, state: CorpusState,
-                             v: Long, batchId: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".staging-v$v")
-    fs.delete(tmp, true)
-    partFrames(state).foreach { case (name, df) =>
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(new org.apache.hadoop.fs.Path(tmp, name).toString)
-    }
-    val fin = new org.apache.hadoop.fs.Path(dir, s"v${v}_b$batchId")
-    fs.delete(fin, true)
-    require(fs.rename(tmp, fin),
-      s"curation state: failed to publish $fin")
-    ()
-  }
-
-  /** All published (version, batchId) pairs, ascending by version. */
-  private def versions(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Seq[(Long, Long)] = {
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .flatMap { n =>
-        "^v(\\d+)_b(-?\\d+)$".r.findFirstMatchIn(n)
-          .map(m => (m.group(1).toLong, m.group(2).toLong))
-      }.sortBy(_._1)
-  }
-
-  private def loadVersion(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, v: Long, b: Long): CorpusState = {
-    def part(name: String) = spark.read.parquet(
-      new org.apache.hadoop.fs.Path(dir, s"v${v}_b$b/$name").toString)
-    CorpusState(part("corpus_text"), part("line_dim"), part("bench_grams"),
-      part("dsir_dim"), part("dsir_glob"))
+  /** The state published as version `v` by batch `b`. */
+  private def stateAt(spark: org.apache.spark.sql.SparkSession,
+                      dir: String, v: Int, b: Long): CorpusState = {
+    val Seq(text, line, bench, dsir, glob) =
+      StateParts.map(VersionedState.read(spark, dir, v, b, _))
+    CorpusState(text, line, bench, dsir, glob)
   }
 
   /** Bootstrap a state dir from a prior full run (version 0, no
-    * producing batch). */
+    * producing batch; [[VersionedState]] holds the version ladder). */
   def writeState(state: CorpusState, dir: String): Unit = {
     val spark = state.corpusText.sparkSession
-    require(versions(spark, dir).isEmpty,
-      s"curation state: $dir already initialized")
-    publishVersion(spark, dir, state, 0L, -1L)
+    require(VersionedState.versions(VersionedState.fsOf(spark, dir), dir)
+      .isEmpty, s"curation state: $dir already initialized")
+    VersionedState.init(spark, dir, partFrames(state))
   }
 
   /** The latest published state (a maintenance stream's read point). */
   def readState(spark: org.apache.spark.sql.SparkSession,
                 dir: String): CorpusState = {
-    val vs = versions(spark, dir)
+    val vs = VersionedState.versions(VersionedState.fsOf(spark, dir), dir)
     require(vs.nonEmpty, s"curation state: $dir has no published version")
     val (v, b) = vs.last
-    loadVersion(spark, dir, v, b)
+    stateAt(spark, dir, v, b)
   }
 
   /** Advance the persisted state by one admitted batch — the
@@ -638,37 +598,19 @@ object Curation {
       targetSources: Seq[String], budget: Long, shards: Int): String = {
     val spark = batch.sparkSession
     val pinned = batch.localCheckpoint(true)
-    val vs = versions(spark, stateDir)
-    require(vs.nonEmpty,
-      s"curation maintenance: $stateDir not bootstrapped (writeState)")
-    val already = vs.last._2 >= id
-    val (v, b) =
-      if (already) {
-        val prior = vs.filter(_._2 < id)
-        require(prior.nonEmpty,
-          s"curation maintenance: batch $id replayed but no prior " +
-            "state version survives — cannot reproduce its input")
-        prior.last
-      } else vs.last
-    val st = loadVersion(spark, stateDir, v, b)
+    val fs = VersionedState.fsOf(spark, stateDir)
+    val (v, b, already) = VersionedState.resolve(fs, stateDir, id)
+    val st = stateAt(spark, stateDir, v, b)
     val productPath =
       new org.apache.hadoop.fs.Path(outDir, s"batch-$id").toString
     curateIncremental(pinned, st, lineMinDf, minJaccard, benchMod,
         decontamN, targetSources, budget, shards)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(productPath)
-    if (!already) {
-      publishVersion(spark, stateDir,
-        advanceState(st, pinned, lineMinDf, benchMod, decontamN,
-          targetSources),
-        v + 1, id)
-      // retain one prior version for replay; prune older ones
-      versions(spark, stateDir).dropRight(2).foreach { case (ov, ob) =>
-        fsOf(spark, stateDir).delete(
-          new org.apache.hadoop.fs.Path(stateDir, s"v${ov}_b$ob"), true)
-        ()
-      }
-    }
+    if (!already)
+      VersionedState.publish(spark, fs, stateDir,
+        partFrames(advanceState(st, pinned, lineMinDf, benchMod, decontamN,
+          targetSources)), v + 1, id)
     productPath
   }
 

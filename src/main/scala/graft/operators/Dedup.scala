@@ -682,7 +682,7 @@ object Dedup {
       // Round shape ADJUDICATED BY MEASUREMENT (round-13 verdict #4
       // asked for relabel-join fusion — "one join per round"): three
       // variants were timed at sf0.1 under the bench discipline
-      // (CcProf min-of-3, full doc_cluster_dedup row):
+      // (min-of-3, full doc_cluster_dedup row; OPTIMIZATION_r14.md):
       //   3-join round (this form)                       6.25 s, 6 rounds
       //   2-join (neighbor-min fused into one request-
       //     union join, jump on updated labels)          8.02 s, 6 rounds
@@ -705,7 +705,7 @@ object Dedup {
       // the convergence check below is a shuffle-free scan of the
       // just-materialized blocks — the former next⋈labels check was
       // its own join + AQE stage chain EVERY round, and at bench SF
-      // the loop is job-count-bound (CcProf: 84 of the row's 90 jobs
+      // the loop is job-count-bound (84 of the row's 90 jobs
       // were loop rounds), the doc_curation_novel amplifier again
       val prop = labels.join(viaNeighbors, Seq("id"), "left")
         .select(col("id"),

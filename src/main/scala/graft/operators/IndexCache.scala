@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Per-JVM cache of IMMUTABLE-between-maintenance index state — the
-  * serving fixed-cost floor fix (round-10 verdict #3): ServeProf
+  * serving fixed-cost floor fix (round-10 verdict #3): profiling
   * showed the per-micro-batch cost of the durable-index serving
   * streams dominated by re-reading state that only changes on
   * append/compaction — the centroid dim collect, the stats head(),

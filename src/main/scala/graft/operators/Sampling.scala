@@ -298,8 +298,8 @@ object Sampling {
                           stratumCol: String, keyCol: String, k: Int,
                           seed: Int = 0): Unit =
     VersionedState.init(spark, stateDir,
-      stratifiedK(df, stratumCol, keyCol, k, seed)
-        .select(col(stratumCol), col(keyCol)))
+      Seq("" -> stratifiedK(df, stratumCol, keyCol, k, seed)
+        .select(col(stratumCol), col(keyCol))))
 
   /** One micro-batch of the streaming sample — the replayable unit of
     * [[startStratifiedSample]]: the updated picks land under
@@ -326,7 +326,8 @@ object Sampling {
       .parquet(outDir)
     if (!already)
       VersionedState.publish(spark, fs, stateDir,
-        merged.select(col(stratumCol), col(keyCol)), v + 1, batchId)
+        Seq("" -> merged.select(col(stratumCol), col(keyCol))), v + 1,
+        batchId)
   }
 
   /** STREAMING exact k-per-stratum sample — [[stratifiedK]] at the

@@ -819,7 +819,7 @@ object Similarity {
     * nlist and blows the 64 KB JVM method / codegen limits somewhere
     * in the hundreds — round-4 verdict #6). The native
     * [[graft.functions.CentroidSqDists]] expression now serves EVERY
-    * nlist: AssignProf measured it 14×/22×/49× faster than the
+    * nlist: round 13 measured it 14×/22×/49× faster than the
     * unrolled form at k = 8/16/64 (the unrolled tree's per-centroid
     * [[sqDistTo]] is itself an interpreted zip_with + aggregate fold,
     * so "unrolled = codegen'd arithmetic" was never true), and the
@@ -1445,10 +1445,12 @@ object Similarity {
   private def readPqBooksUncached(spark: org.apache.spark.sql.SparkSession,
                                   root: String)
       : Option[(Array[Array[Array[Double]]], Boolean)] = {
-    val booksDfOpt =
-      try Some(spark.read.parquet(s"$root/pq_books"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    booksDfOpt.map { booksDf =>
+    // a plain IVF index has no codebooks: test for the dir rather
+    // than let the read fail (Spark logs that failure with a trace)
+    val dir = new org.apache.hadoop.fs.Path(root, "pq_books")
+    val present = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      .exists(dir)
+    Option.when(present)(spark.read.parquet(dir.toString)).map { booksDf =>
       val bookRows = booksDf
         .orderBy(col("subspace"), col("code"))
         .select(col("subspace"), col("cent"))
@@ -2751,9 +2753,9 @@ object Similarity {
     * (≥ 0.997 at the planted 0.97) by pairing each +2-bit band-width
     * step with the recall-restoring bands count, so candidates stay
     * ≈ constant-occupancy LINEAR per rung instead of the fixed-width
-    * quadratic (round-5 verdict #1; measured sweep in NearDupProf and
-    * SCALE.md §12). The round-4 single-bucket blocker (ALL 8 planes
-    * must agree, no OR) found ≈ p^8 of true pairs — ~2% at the old
+    * quadratic (round-5 verdict #1; measured sweep in SCALE.md
+    * §12). The round-4 single-bucket blocker (ALL 8 planes must
+    * agree, no OR) found ≈ p^8 of true pairs — ~2% at the old
     * 0.35 threshold — with no way to trade candidates for recall;
     * `bands` (at fixed r) buys recall linearly in candidate volume.
     * Measured recall: [[nearDupPairRecall]] (the production dial) and
@@ -2854,7 +2856,7 @@ object Similarity {
 
   /** Candidate-pair count at a geometry (0 = auto) — the measured side
     * of the GeometryLadder's sub-quadratic candidate-volume claim
-    * (NearDupProf prints the sweep; SCALE.md records it).
+    * (SCALE.md records the sweep).
     */
   def nearDupCandidateCount(embeddings: DataFrame, planes: Int = 0,
                             bands: Int = 0, maxBandDf: Int = 0): Long =

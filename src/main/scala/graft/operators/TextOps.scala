@@ -577,7 +577,7 @@ object TextOps {
         // write would land every scan task's slice in every bucket —
         // tasks × buckets files, the small-files decay compaction
         // exists to undo, here avoided from day one). Deliberately
-        // NOT row-sorted: GramFootprint measured a (h, doc_id) sort
+        // NOT row-sorted: SCALE.md measured a (h, doc_id) sort
         // at 1.00x — 8-gram hashes have df≈1, so there are no runs
         // for dictionary/RLE to exploit and 10.8 B/token is already
         // the entropy floor (SCALE.md footprint row, r10 verdict #8)
@@ -969,16 +969,17 @@ object TextOps {
                     dimDir: String, docs: DataFrame, n: Int = 10,
                     hashFn: (Int, Column) => Column = Dedup.xxSeeded)
       : Unit =
-    VersionedState.init(spark, dimDir, windowDim(docs, n, hashFn))
+    VersionedState.init(spark, dimDir, Seq("" -> windowDim(docs, n, hashFn)))
 
   /** Rewrite ONE micro-batch against the advancing corpus window dim
     * — the replayable unit of [[startSpanDedup]], carrying the
     * [[graft.operators.Curation.maintenanceStep]] replay contract on
     * the dim state:
     *
-    *  1. a version stamped with THIS batch id means the advance
-    *     already committed — the rewrite re-runs against the PRIOR
-    *     version (the input the original run saw) and the advance is
+    *  1. a version stamped with THIS batch id or a later one means
+    *     the advance already committed ([[VersionedState.resolve]]) —
+    *     the rewrite re-runs against the version produced before it
+    *     (the input the original run saw) and the advance is
     *     skipped;
     *  2. the merged dim (prior ∪ batch window counts — exact, counts
     *     are distributive) is pinned once and feeds the rewrite AND
@@ -1010,7 +1011,8 @@ object TextOps {
       .partitionBy("batch_id")
       .parquet(outDir)
     if (!already)
-      VersionedState.publish(spark, fs, dimDir, merged, useV + 1, batchId)
+      VersionedState.publish(spark, fs, dimDir, Seq("" -> merged), useV + 1,
+        batchId)
   }
 
   /** STREAMING exact-substring span cut — the ingest-boundary form of
@@ -1109,7 +1111,7 @@ object TextOps {
     * consume — window hashing is scan-local, and so is the COUNTING:
     * the former `groupBy(doc_id, split, h)` shuffled the whole
     * exploded window stream to aggregate keys that are unique per doc
-    * anyway (TextProf: that exchange+aggregate was ~4.5 s of the
+    * anyway (round 14: that exchange+aggregate was ~4.5 s of the
     * 6.8 s row at sf0.1, and at 100 TB it is a full corpus-scale
     * shuffle whose partial aggregation buys nothing on near-unique
     * keys). Every window of a doc lives in the doc's own row, so the
@@ -1119,10 +1121,13 @@ object TextOps {
     * layers per doc and still built the window strings first).
     * Identical (doc_id, split, h, c, n_windows) rows, ZERO shuffles.
     * The frame still pins ONCE (localCheckpoint) for its consumers.
-    * PRECONDITIONS (r13 advice): doc_ids must be unique (duplicate
-    * ids would no longer merge counts across rows — both callers
-    * pass split corpora keyed by doc_id), and per-task memory is
-    * O(doc windows) for the sort (the token array already was).
+    * PRECONDITIONS: `doc_id` must be unique in `docs`. Counts fold
+    * per input ROW, so two rows sharing a doc_id yield two partial
+    * counts per hash instead of one merged count, and the report's
+    * per-doc min(n_windows) then differs from the one-row answer
+    * (both callers pass split corpora keyed by doc_id). Per-task
+    * memory is O(doc windows) for the sort (the token array already
+    * was).
     */
   private def splitWindowHashes(docs: DataFrame, n: Int,
                                 hashFn: (Int, Column) => Column)
@@ -1969,7 +1974,7 @@ object TextOps {
     * [[trainBpe]] drives one count job + one vocab rewrite per merge
     * — fine for 8 rules, but a real vocab needs 10⁴–10⁵ merges and
     * that many driver-sequenced Spark jobs is job-scheduling-bound
-    * (BpeProf measures the per-merge floor). This form picks the TOP
+    * (SCALE.md records the per-merge floor). This form picks the TOP
     * `batchTopM` PAIRWISE-INDEPENDENT pairs per iteration (greedy
     * down the exact (count desc, pair) order; independence = no
     * shared symbol and no fused-string collision) and applies them in
@@ -2335,7 +2340,7 @@ object TextOps {
     val spark = docs.sparkSession
     IndexGen.buildFresh(spark, dir) { root =>
       bm25Postings(docs, nBuckets.toLong)
-        // one file per bucket partition from day one (the GramProf
+        // one file per bucket partition from day one (the gram-index
         // lesson: a multi-task write lands tasks × buckets files and
         // the probe pays the open-file soup compaction exists to
         // undo). NOT row-sorted: parquet's dictionary page already

@@ -7,10 +7,10 @@ import org.apache.spark.sql.DataFrame
   * under `v<version>_b<producingBatchId>` directories, a replayed
   * batch resolves to the version BEFORE the one it produced (the
   * input its original run saw) and skips the advance, and one prior
-  * version is retained for exactly that replay. The contract of
-  * [[Curation.maintenanceStep]]'s corpus-state versions, factored
-  * for the dim-state streams ([[TextOps.startSpanDedup]],
-  * [[Sampling.startStratifiedSample]]).
+  * version is retained for exactly that replay. Shared by the corpus
+  * state of [[Curation.maintenanceStep]] (five named frames per
+  * version) and the dim-state streams ([[TextOps.startSpanDedup]],
+  * [[Sampling.startStratifiedSample]]; one frame at the version dir).
   *
   * Crash seams: publish is staged-then-renamed, so a half-written
   * snapshot is never resolvable; whichever prefix of {results write,
@@ -37,17 +37,20 @@ private[graft] object VersionedState {
       }).sortBy(_._1)
   }
 
-  /** Bootstrap: publish `df` as version 0, producing batch -1 (no
+  /** Bootstrap: publish `frames` as version 0, producing batch -1 (no
     * stream batch may claim it). */
   def init(spark: org.apache.spark.sql.SparkSession, dir: String,
-           df: DataFrame): Unit =
-    publish(spark, fsOf(spark, dir), dir, df, 0, -1L, keep = 1)
+           frames: Seq[(String, DataFrame)]): Unit =
+    publish(spark, fsOf(spark, dir), dir, frames, 0, -1L, keep = 1)
 
   /** Replay-aware resolution for `batchId`: (version to read, its
-    * producing batch, alreadyCommitted). A version stamped with this
-    * batch id means the advance committed — resolve to the PRIOR
-    * version; a replay with no surviving prior version cannot
-    * reproduce its input and fails fast.
+    * producing batch, alreadyCommitted). Stream batch ids only grow,
+    * so a `batchId` at or below the newest version's producing batch
+    * is a replay of a batch whose advance committed: it resolves to
+    * the newest version produced BEFORE it (the input its original
+    * run saw), and when none survives the replay cannot reproduce
+    * its input and fails fast. A newer `batchId` reads the newest
+    * version and advances it.
     */
   def resolve(fs: FileSystem, dir: String,
               batchId: Long): (Int, Long, Boolean) = {
@@ -55,31 +58,39 @@ private[graft] object VersionedState {
     require(vs.nonEmpty,
       s"versioned state: nothing published under $dir — bootstrap " +
         "with init first")
-    vs.find(_._2 == batchId) match {
-      case Some((k, _)) =>
-        val prior = vs.filter(_._1 < k)
-        require(prior.nonEmpty,
-          s"versioned state: replay of batch $batchId under $dir but " +
-            "no prior version survives — cannot reproduce its input")
-        (prior.last._1, prior.last._2, true)
-      case None => (vs.last._1, vs.last._2, false)
+    if (vs.last._2 < batchId) (vs.last._1, vs.last._2, false)
+    else {
+      val prior = vs.filter(_._2 < batchId)
+      require(prior.nonEmpty,
+        s"versioned state: replay of batch $batchId under $dir but " +
+          "no prior version survives — cannot reproduce its input")
+      (prior.last._1, prior.last._2, true)
     }
   }
 
+  /** Frame `name` of version `v` (produced by batch `b`); the frame
+    * named "" is the version dir itself. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String,
-           v: Int, b: Long): DataFrame =
-    spark.read.parquet(new Path(dir, s"v${v}_b$b").toString)
+           v: Int, b: Long, name: String = ""): DataFrame =
+    spark.read.parquet(frameDir(new Path(dir, s"v${v}_b$b"), name).toString)
+
+  private def frameDir(version: Path, name: String): Path =
+    if (name.isEmpty) version else new Path(version, name)
 
   /** Staged publish of version `v` stamped with `batchId`, then prune
-    * to the newest `keep` versions. */
+    * to the newest `keep` versions. Each named frame lands in its own
+    * subdir of the version, the frame named "" at the version dir
+    * itself; one rename exposes them all together. */
   def publish(spark: org.apache.spark.sql.SparkSession, fs: FileSystem,
-              dir: String, df: DataFrame, v: Int, batchId: Long,
-              keep: Int = 2): Unit = {
+              dir: String, frames: Seq[(String, DataFrame)], v: Int,
+              batchId: Long, keep: Int = 2): Unit = {
     val d = new Path(dir)
     fs.mkdirs(d)
     val staging = new Path(d, s".staging-v$v")
     fs.delete(staging, true)
-    df.write.mode("overwrite").parquet(staging.toString)
+    frames.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(frameDir(staging, name).toString)
+    }
     val target = new Path(d, s"v${v}_b$batchId")
     fs.delete(target, true)
     require(fs.rename(staging, target),

@@ -44,7 +44,7 @@ object Tables {
     * stage/localCheckpoint would inherit that width. On the shipped
     * single-row-group testdata the behavior is unchanged (1 split <
     * cores → repartition to core count — the dial that makes the
-    * CPU-dense scan pipelines use the box; AntiScaleProf prices its
+    * CPU-dense scan pipelines use the box; OPTIMIZATION_r14.md prices its
     * per-task overhead share at kilobyte SF).
     */
   private def spread(s: SparkSession, df: DataFrame): DataFrame = {

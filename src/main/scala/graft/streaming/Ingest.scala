@@ -327,21 +327,6 @@ object Ingest {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // steady-state phase instrument (round-14, guide §1): when
-        // spark.graft.stream.phaseLog is set, each phase of the batch
-        // body logs its wall time to stderr — the decomposition the
-        // sink-commit work needs before any cut. Off (default) it is
-        // a no-op closure.
-        val phaseLog = batch0.sparkSession.conf
-          .getOption("spark.graft.stream.phaseLog").contains("true")
-        def phase[A](name: String)(f: => A): A =
-          if (!phaseLog) f
-          else {
-            val t0 = System.nanoTime()
-            val a = f
-            System.err.println(f"[ingest-phase] batch=$batchId $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-            a
-          }
         // Pin the micro-batch EAGERLY before anything probes it:
         // RocksDB state stores are exclusively owned per partition, and
         // a foreachBatch body that runs several actions — or isEmpty's
@@ -350,7 +335,7 @@ object Ingest {
         // the instance lock (CANNOT_LOAD_STATE_STORE). One full eager
         // pass consumes and releases every state partition exactly
         // once; everything downstream reads the checkpointed blocks.
-        val batch = phase("pin (localCheckpoint)") { batch0.localCheckpoint(true) }
+        val batch = batch0.localCheckpoint(true)
         try {
         // no-data micro-batches (Spark runs them to advance the
         // watermark and evict state) gate nothing: skip the rules
@@ -358,7 +343,7 @@ object Ingest {
         // watermark-advance batches would burn fallback budget, and
         // rule staleness would be bounded in wall-clock ticks instead
         // of gated data
-        if (phase("isEmpty probe") { batch.isEmpty }) () else {
+        if (batch.isEmpty) () else {
         // the enriched micro-batch is consumed by THREE lineages (the
         // firewall match, the block anti-join, and classify's rate
         // branch reading the admitted frame twice) — without a pin each
@@ -394,9 +379,7 @@ object Ingest {
         // micro-batch volume, and overlap hides all but the slowest
         // commit. The fill costs no extra work — it is exactly the
         // compute the first sink write used to pay serially.
-        phase("pipeline compute") {
-          classified.write.format("noop").mode("overwrite").save()
-        }
+        classified.write.format("noop").mode("overwrite").save()
         // sink file sizing (guide §6): a micro-batch is KB–MB scale,
         // so each sink defaults to ONE output file per batch instead
         // of one per shuffle partition (the logs sink's event_date
@@ -420,23 +403,20 @@ object Ingest {
           // username, ip, 500-char snippet, blocked_at; same per-batch
           // dynamic-overwrite idempotence as the main sinks
           val writeBlocks = cfg.blocksDir.map { bd => () =>
-            phase("blocks sink") {
-              sized(fw.select(col("rule_id"), col("username"),
-                col("ip_address"), col("query_snippet"),
-                col("matched_at").as("blocked_at")))
-                .withColumn("ingest_batch", lit(batchId))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch").parquet(bd)
-            }
+            sized(fw.select(col("rule_id"), col("username"),
+              col("ip_address"), col("query_snippet"),
+              col("matched_at").as("blocked_at")))
+              .withColumn("ingest_batch", lit(batchId))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("ingest_batch").parquet(bd)
           }
-          val writeLogs = () => phase("logs sink") {
+          val writeLogs = () =>
             sized(classified).withColumn("ingest_batch", lit(batchId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("event_date", "ingest_batch").parquet(cfg.logsDir)
-          }
-          val writeAlerts = () => phase("alerts sink") {
+          val writeAlerts = () =>
             sized(Detect.deriveAlerts(classified)
               .select(col("activity_id"), col("alert_type"),
                 col("severity_level").as("severity"),
@@ -447,10 +427,7 @@ object Ingest {
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("ingest_batch").parquet(cfg.alertsDir)
-          }
-          phase("sink commits (concurrent)") {
-            runConcurrently(writeBlocks.toSeq ++ Seq(writeLogs, writeAlerts))
-          }
+          runConcurrently(writeBlocks.toSeq ++ Seq(writeLogs, writeAlerts))
           // webhook fan-out for this batch's High/Critical alerts,
           // on the executors (round-7 verdict #7); after the alert
           // sink commit is AWAITED above, so a delivery never

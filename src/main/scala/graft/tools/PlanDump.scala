@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Writes `explain("formatted")` for the named `SparkEntry.queries`
   * rows straight to `plans/<tag>/<name>_<suffix>.txt` (the round's
@@ -10,22 +8,16 @@ import graft.SparkEntry
   * query on stdout. Usage:
   *   runMain graft.tools.PlanDump <tag> <suffix> <query> [query ...]
   * e.g. `runMain graft.tools.PlanDump r14 before doc_cluster_dedup`.
-  * Runs at sf0.01 like ExplainAudit (plan SHAPE is SF-invariant; the
-  * r13 files were captured the same way).
+  * Runs on `local[8]` at `SPARK_GRAFT_SF_DIR`, default sf0.01 (plan
+  * SHAPE is SF-invariant; the r13 files were captured the same way).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query>...")
     val tag = args(0); val suffix = args(1); val names = args.drop(2).toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = LocalSession("8")
     spark.sparkContext.setLogLevel("ERROR")
-    val d = sys.env.getOrElse("SPARK_GRAFT_PLAN_SF_DIR", "/root/testdata/sf0.01")
+    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>

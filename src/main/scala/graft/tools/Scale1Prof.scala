@@ -2,6 +2,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
+
 /** sf0.1 → sf1 scaling checkpoint (round-10 verdict #7): every 100 TB
   * claim so far is argued from plan shape + sf0.1 Prof sweeps; this
   * runs the heaviest batch rows once at BOTH scales in one JVM and
@@ -77,14 +79,7 @@ object Scale1Prof {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("32")
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1")
 
@@ -189,8 +184,8 @@ object Scale1Prof {
           .write.mode("overwrite").parquet(s"$sf10/documents.parquet")
         println(s"[scale1-sf10] built $sf10")
       }
-      // 100× embeddings (id-shifted copies, the IndexBuildProf sf1
-      // trick): the r13 follow-up decade for emb_semdedup's
+      // 100× embeddings (id-shifted copies, as for the sf1
+      // index-build measurement): the r13 follow-up decade for emb_semdedup's
       // auto-sized rung — at 100× the rung ladder selects nlist=4096
       // and the Lloyd-assignment FLOP term (n·nlist, scan-local) is
       // no longer dwarfed by the pair stage it bounds; this measures

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.sources.Tables
 import graft.streaming.Ingest
 
@@ -15,13 +15,8 @@ import graft.streaming.Ingest
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("4")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val dir = Files.createTempDirectory("stream_demo").toString
     val srcDir = s"$dir/src"

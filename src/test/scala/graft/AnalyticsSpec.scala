@@ -7,6 +7,10 @@ import graft.operators.Analytics
 /** A1-A9 / W1-W2 analytics unit tests (SURVEY §2.4-§2.5). */
 class AnalyticsSpec extends SparkSpecBase {
 
+  test("SparkEntry.entry: the smoke query returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("bench load gate: contaminated runs never replace a cleaner artifact") {
     // round-6 verdict #1: the end-of-round failure mode (a load-7.26
     // re-bench overwriting the clean min-of-5 record) must be

@@ -1715,6 +1715,34 @@ class DedupSimilaritySpec extends SparkSpecBase {
       s"incremental diverged: $inc")
   }
 
+  test("versioned state: a batch id at or below the newest version's producing batch resolves as a replay") {
+    import graft.operators.VersionedState
+    val dir = java.nio.file.Files.createTempDirectory("vstate").toString
+    val fs = VersionedState.fsOf(spark, dir)
+    def frame(i: Int) = Seq("" -> Seq(i).toDF("x"))
+    VersionedState.init(spark, dir, frame(0))
+    VersionedState.publish(spark, fs, dir, frame(1), 1, 3L)
+    VersionedState.publish(spark, fs, dir, frame(2), 2, 5L)
+    // one prior version retained: v0 pruned
+    assert(VersionedState.versions(fs, dir) == Seq((1, 3L), (2, 5L)))
+    assert(VersionedState.resolve(fs, dir, 6L) == ((2, 5L, false)))
+    assert(VersionedState.resolve(fs, dir, 5L) == ((1, 3L, true)))
+    // older than the newest version and stamped on none: still a
+    // replay, of the version produced before it
+    assert(VersionedState.resolve(fs, dir, 4L) == ((1, 3L, true)))
+    assert(VersionedState.read(spark, dir, 1, 3L).as[Int].collect().toSeq
+      == Seq(1))
+    val e = intercept[IllegalArgumentException](
+      VersionedState.resolve(fs, dir, 3L))
+    assert(e.getMessage.contains("no prior version survives"))
+    // named frames land side by side under one version
+    val multi = s"$dir-multi"
+    VersionedState.init(spark, multi,
+      Seq("a" -> Seq(7).toDF("x"), "b" -> Seq(8).toDF("x")))
+    assert(Seq("a", "b").map(n => VersionedState.read(spark, multi, 0, -1L, n)
+      .as[Int].head()) == Seq(7, 8))
+  }
+
   test("streaming span dedup: batches cut against the advancing window dim; replay never double-merges the state") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
