@@ -1248,12 +1248,18 @@ FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= $k ORDER BY query_id, rank"
                            residual: Boolean = false): String = {
     require(!residual || ivf.isDefined, "residual coding needs the IVF chain")
     val dsub = dim / m
-    // residual mode (Similarity.ivfPqResidualTopK): the PQ subspace
+    // the residual chain inlined per reference re-runs the coarse and
+    // subspace Lloyd chains combinatorially (DuckDB inlines CTEs), so
+    // it materializes each of its CTEs once; the raw chains' SQL is
+    // left as it was
+    def cte(name: String): String =
+      if (residual) s"$name AS MATERIALIZED (" else s"$name AS ("
+    // residual mode (Similarity.ivfPqTopK(residual = true)): the PQ subspace
     // slices come from the residual frame x − c(x), so the Lloyd
     // chains train on residuals exactly as the engine does
     val pqSrc = if (residual) "resid" else "embeddings"
     val subs = (0 until m).map { j =>
-      s"""sub$j AS (
+      s"""${cte(s"sub$j")}
   SELECT vec_id, array_slice(embedding, ${j * dsub + 1}, ${(j + 1) * dsub}) AS embedding
   FROM $pqSrc
 )"""
@@ -1266,7 +1272,7 @@ FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= $k ORDER BY query_id, rank"
     val coarse = ivf.map { case (nlist, _, itersIvf) =>
       kmeansAssignCtes("embeddings", nlist, itersIvf, dim, "_cq") + ",\n" +
         (if (residual)
-          s"""resid AS (
+          s"""${cte("resid")}
   SELECT e.vec_id, a.cid, list_transform(list_zip(e.embedding, c.cent),
     s -> CAST(s[1] AS DOUBLE) - s[2]) AS embedding
   FROM embeddings e JOIN af_cq a ON a.vec_id = e.vec_id
@@ -1276,7 +1282,7 @@ FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= $k ORDER BY query_id, rank"
         else "")
     }.getOrElse("")
     val qp = ivf.map { case (_, nprobe, itersIvf) =>
-      s""", qp AS (
+      s""", ${cte("qp")}
   SELECT query_id, cid FROM (
     SELECT q.query_id, c.cid,
       row_number() OVER (PARTITION BY q.query_id
@@ -1333,26 +1339,26 @@ FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= $k ORDER BY query_id, rank"
     val qIn = queryIds.mkString(", ")
     s"""WITH $coarse$subs,
 $kms,
-nn AS (
+${cte("nn")}
   SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM embeddings
-), enc AS (
+), ${cte("enc")}
   SELECT e.vec_id, $encCols,
     sqrt($pqnorm) AS pqnorm
   $encFrom
-), q AS (
+), ${cte("q")}
   SELECT vec_id AS query_id, embedding, norm AS qnorm
   FROM nn WHERE vec_id IN ($qIn)
-)$qp, adc AS (
+)$qp, ${cte("adc")}
   SELECT q.query_id, e.vec_id,
     round(($adcSum) / (e.pqnorm * q.qnorm), 4) AS cos_sim
   $adcFrom
-), pqcand AS (
+), ${cte("pqcand")}
   SELECT query_id, vec_id FROM (
     SELECT query_id, vec_id,
       row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rn
     FROM adc WHERE NOT isnan(cos_sim)
   ) WHERE rn <= $cand
-), scored AS (
+), ${cte("scored")}
   SELECT c.query_id, c.vec_id,
     round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4) AS cos_sim
   FROM pqcand c JOIN nn ON nn.vec_id = c.vec_id
@@ -4189,13 +4195,13 @@ FROM stats s LEFT JOIN kt k USING (doc_id) $finalWhere ORDER BY doc_id"""
     // true IVFADC: PQ codes encode residuals x − c(x) (FAISS default);
     // same probe cost, strictly tighter quantization cells
     "emb_ivfpq_res_ann" -> ((s, d) =>
-      Similarity.ivfPqResidualTopK(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L))),
+      Similarity.ivfPqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L),
+        residual = true)),
     // quality dial: residual coding's recall@10 vs brute force
     "emb_ivfpq_res_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.recallAtK(
-        Similarity.ivfPqResidualTopK(emb, Seq(0L, 1L, 2L)),
+        Similarity.ivfPqTopK(emb, Seq(0L, 1L, 2L), residual = true),
         Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
     }),
     // quality dial for the PQ code budget: recall@10 vs brute force

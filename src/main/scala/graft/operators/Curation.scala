@@ -493,10 +493,8 @@ object Curation {
   /** Bootstrap a state dir from a prior full run (version 0, no
     * producing batch; [[VersionedState]] holds the version ladder). */
   def writeState(state: CorpusState, dir: String): Unit = {
-    val spark = state.corpusText.sparkSession
-    require(VersionedState.versions(VersionedState.fsOf(spark, dir), dir)
-      .isEmpty, s"curation state: $dir already initialized")
-    VersionedState.init(spark, dir, partFrames(state))
+    VersionedState.init(state.corpusText.sparkSession, dir,
+      partFrames(state))
   }
 
   /** The latest published state (a maintenance stream's read point). */
@@ -742,20 +740,10 @@ object Curation {
       // stays a healthy parquet size and the rewrite parallelizes.
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
         val mrpf = compactMaxRecordsPerFile
-        graft.operators.Similarity.compactIvfIndex(spark, indexDir,
-          mrpf)
-        sq8Dir.foreach(graft.operators.Similarity
-          .compactSidecar(spark, _, "codes", mrpf))
-        bqDir.foreach(graft.operators.Similarity
-          .compactSidecar(spark, _, "bits", mrpf))
-        prefixDir.foreach(graft.operators.Similarity
-          .compactPrefixIndex(spark, _, mrpf))
-        prefixIvfDir.foreach(graft.operators.Similarity
-          .compactPrefixIvfIndex(spark, _, mrpf))
+        (Seq(indexDir) ++ sq8Dir ++ bqDir ++ prefixDir ++ prefixIvfDir ++
+          gramDir).foreach(IndexGen.compact(spark, _, mrpf))
         bm25Dir.foreach(graft.operators.TextOps
           .compactBm25Index(spark, _, mrpf))
-        gramDir.foreach(graft.operators.TextOps
-          .compactGramIndex(spark, _, mrpf))
       }
     }
 }

@@ -5,7 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Reader-safe publication for the durable index directories (IVF /
   * IVF-PQ lists, SQ8/BQ sidecars, BM25 postings, decontamination gram
   * postings) — the round-10 verdict #1 machinery that retires every
-  * "QUIESCE SERVING FIRST" constraint.
+  * "QUIESCE SERVING FIRST" constraint. It owns the rest of the
+  * format-independent index lifecycle too: the build-once guard
+  * ([[ensureIndexDir]]), the exactly-once append ([[commitBatch]]),
+  * the cached sublayout readers ([[sub]], [[meta]]) and compaction
+  * ([[compact]]); the formats keep their encoders and scoring.
   *
   * WHOLE-INDEX GENERATIONS for every multi-sublayout swap (builds,
   * compactions, delta folds). A generation is a complete internal
@@ -340,7 +344,7 @@ private[graft] object IndexGen {
   }
 
   private def internalName(name: String): Boolean =
-    name == "_gen" || name == "_source_fingerprint" ||
+    name == "_gen" || name == Fingerprint ||
       name.startsWith("gen-") || name.startsWith(".")
 
   private def copyMissing(spark: SparkSession, oldRoot: String,
@@ -416,7 +420,7 @@ private[graft] object IndexGen {
     *     before it leaves a batch a replay re-runs in full, and stats
     *     read as baseline + markers stay exact;
     *  5. `sourcePath`, when given, advances the build-once fingerprint
-    *     ([[Similarity.refreshIndexMarker]]) — also on a replay, since
+    *     ([[refreshIndexMarker]]) — also on a replay, since
     *     the caller asserts the index reflects the source as it
     *     stands.
     *
@@ -443,7 +447,7 @@ private[graft] object IndexGen {
         s"index commit: failed to publish $marker")
       IndexCache.invalidate(root)
     }
-    sourcePath.foreach(Similarity.refreshIndexMarker(spark, dir, _))
+    sourcePath.foreach(refreshIndexMarker(spark, dir, _))
   }
 
   /** Column-wise sum of the first `width` numbers of every commit
@@ -468,5 +472,235 @@ private[graft] object IndexGen {
       }
     }
     acc
+  }
+
+  // ----------------------------------------------------------------
+  // Build-once guard: one directory per (source, index kind), rebuilt
+  // only when the source files' fingerprint changes
+  // ----------------------------------------------------------------
+
+  private val Fingerprint = "_source_fingerprint"
+
+  /** The fingerprint-guarded build-once machinery behind every
+    * `ensure*Index`: the index directory carries a fingerprint of the
+    * source files (name, length, mtime), and `build` runs only when it
+    * changes. Explicit freshness — no in-process cache to serve stale
+    * centroids after the source is rewritten. One directory per
+    * (source path, `kind`) under the index root, so different index
+    * structures over the same source coexist.
+    *
+    * The index root is `indexRoot` when given, else the
+    * `spark.graft.ivf.indexRoot` session conf, else
+    * `<spark.sql.warehouse.dir>/graft-ivf-index` — a production index
+    * is warehouse data, not a tmpdir artifact, and all marker I/O goes
+    * through the Hadoop FileSystem so the root may be any warehouse
+    * scheme (HDFS/S3/local).
+    */
+  def ensureIndexDir(spark: SparkSession, sourcePath: String, kind: String,
+                     indexRoot: Option[String])
+                    (build: String => Unit): String = synchronized {
+    val fp = sourceFingerprint(spark, sourcePath)
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$sourcePath:$kind".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val base = indexRoot
+      .orElse(spark.conf.getOption("spark.graft.ivf.indexRoot"))
+      .getOrElse(
+        s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-ivf-index")
+    val dir = new Path(new Path(base), key)
+    val fs = fsOf(spark, dir.toString)
+    val marker = new Path(dir, Fingerprint)
+    val fresh = fs.exists(marker) && {
+      val in = fs.open(marker)
+      val s =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      s.trim == fp
+    }
+    if (!fresh) {
+      build(dir.toString)
+      writeFingerprint(fs, marker, fp)
+    }
+    dir.toString
+  }
+
+  /** Advance an index directory's build-once marker to the CURRENT
+    * fingerprint of its source. The committed appends ([[commitBatch]],
+    * `sourcePath`) incorporate a batch the source has also received —
+    * without this, the marker written at build time goes stale the
+    * moment the source grows, and the next `ensure*` call rebuilds the
+    * very index the append just maintained. Call it only AFTER the
+    * source contains the appended rows (the fingerprint is read from
+    * the source, so a premature refresh just records the pre-append
+    * state and the next ensure rebuilds as before — stale-safe, never
+    * wrong-safe).
+    */
+  def refreshIndexMarker(spark: SparkSession, dir: String,
+                         sourcePath: String): Unit =
+    writeFingerprint(fsOf(spark, dir), new Path(dir, Fingerprint),
+      sourceFingerprint(spark, sourcePath))
+
+  private def writeFingerprint(fs: FileSystem, marker: Path,
+                               fp: String): Unit = {
+    val out = fs.create(marker, true)
+    try out.write(fp.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def sourceFingerprint(spark: SparkSession,
+                                sourcePath: String): String = {
+    val p = new Path(sourcePath)
+    val fs = fsOf(spark, sourcePath)
+    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      parts += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
+    }
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(parts.sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  // ----------------------------------------------------------------
+  // Sublayouts: cached reads, the decay gauge, and compaction
+  // ----------------------------------------------------------------
+
+  /** Sublayout `name` of a resolved generation root as a CACHED
+    * DataFrame: `spark.read.parquet` re-walks the file tree and
+    * re-infers schema per call — a fixed per-serving-batch cost at
+    * steady state. The cached frame's file index is pinned at stamp
+    * time; an append perturbs the sublayout's stamp (and invalidates
+    * in-JVM), so the NEXT probe reloads and sees the new rows —
+    * reload-on-change instead of reload-always.
+    */
+  def sub(spark: SparkSession, root: String, name: String)
+      : org.apache.spark.sql.DataFrame =
+    IndexCache.cached(s"$root#$name-df",
+      IndexCache.dirStamp(spark, s"$root/$name")) {
+      spark.read.parquet(s"$root/$name")
+    }
+
+  /** The one-row `meta` dim of a resolved generation root (the
+    * dimensions and build parameters a format records at build time),
+    * cached per root. A layout without `meta/` fails here by name
+    * instead of skipping the guards that read it.
+    */
+  def meta(spark: SparkSession, root: String): org.apache.spark.sql.Row =
+    IndexCache.cached(s"$root#meta", IndexCache.dirStamp(spark, s"$root/meta")) {
+      val p = new Path(root, "meta")
+      if (!fsOf(spark, root).exists(p))
+        throw new IllegalStateException(
+          s"index at $root has no meta/ sublayout (its recorded " +
+            "dimensions are unknown) — rebuild it")
+      spark.read.parquet(p.toString).head()
+    }
+
+  /** Small-files decay gauge: max parquet-file count over the
+    * sublayout's partitions (or the flat dir itself) — the signal an
+    * automated maintenance policy compacts on
+    * ([[Curation.startCorpusMaintenance]]'s `compactEvery` is
+    * cadence-based; this is the state-based dial for callers that
+    * prefer thresholds).
+    */
+  def maxFilesPerPartition(spark: SparkSession, dir: String,
+                           sub: String): Int = {
+    val root = new Path(IndexGen.root(spark, dir), sub)
+    val fs = fsOf(spark, dir)
+    if (!fs.exists(root)) return 0
+    def filesIn(p: Path): Int = {
+      val g = fs.globStatus(new Path(p, "*.parquet"))
+      if (g == null) 0 else g.length
+    }
+    val parts = partitionDirs(fs, root)
+    if (parts.isEmpty) filesIn(root)
+    else parts.map(st => filesIn(st.getPath)).max
+  }
+
+  private def partitionDirs(fs: FileSystem, sub: Path): Array[FileStatus] =
+    fs.listStatus(sub).filter(st =>
+      st.isDirectory && st.getPath.getName.contains("="))
+
+  /** Compact a durable index: every committed append adds a file per
+    * touched partition, and a year of appends makes a probe open
+    * hundreds of small files — the lakehouse small-files decay. One
+    * generation advance ([[advance]]) rewrites every sublayout — one
+    * holding `col=v/` subdirectories partitioned by `col`, any other
+    * flat (a one-row dim rewrites to itself) — and copies the
+    * `_commits` markers forward. Content is untouched (rows, codes,
+    * stats), so probe results are identical before and after, and
+    * compaction composes with live serving: a reader that
+    * resolved the prior generation reads it intact (one prior is
+    * retained), one resolving after the flip reads the compacted
+    * layout.
+    *
+    * The `_commits` markers are deliberately CARRIED FORWARD: they are
+    * the replay guards of [[commitBatch]] and the stats contributions
+    * the composite readers sum (folding them into the baseline instead
+    * would let a post-compaction replay of a committed batch
+    * double-append). The deterministic `b<id>-*` file names vanish
+    * with the rewrite, which is fine: a replay stops at its marker.
+    *
+    * Serves every format except BM25, whose df deltas must FOLD rather
+    * than rewrite ([[TextOps.compactBm25Index]]).
+    */
+  def compact(spark: SparkSession, dir: String,
+              maxRecordsPerFile: Long = 0L): Unit =
+    advance(spark, dir) { (oldRoot, staging) =>
+      val fs = fsOf(spark, oldRoot)
+      fs.listStatus(new Path(oldRoot))
+        .filter(st => st.isDirectory &&
+          !internalName(st.getPath.getName) &&
+          !st.getPath.getName.startsWith("_"))
+        .foreach { st =>
+          val name = st.getPath.getName
+          partitionDirs(fs, st.getPath).headOption
+            .map(_.getPath.getName.takeWhile(_ != '=')) match {
+            case Some(partCol) => rewritePartitioned(spark, oldRoot,
+              staging, name, partCol, maxRecordsPerFile)
+            case None => rewriteFlat(spark, oldRoot, staging, name,
+              maxRecordsPerFile)
+          }
+        }
+    }
+
+  /** Partitioned-sublayout rewrite into a staged generation:
+    * hash-repartition by the partition column → each partition's rows
+    * land in ONE task → one file per partition (`maxRecordsPerFile`
+    * re-splits oversized partitions at the writer, the dial for huge
+    * lists at warehouse scale). Reads the OLD generation, writes into
+    * the STAGED one — publication is the caller's single pointer
+    * flip, so there is no swap window at all.
+    */
+  private[graft] def rewritePartitioned(spark: SparkSession,
+      oldRoot: String, staging: String, sub: String, partCol: String,
+      maxRecordsPerFile: Long): Unit = {
+    val w = spark.read.parquet(s"$oldRoot/$sub")
+      .repartition(org.apache.spark.sql.functions.col(partCol))
+      .write.mode("overwrite").partitionBy(partCol)
+    (if (maxRecordsPerFile > 0)
+       w.option("maxRecordsPerFile", maxRecordsPerFile)
+     else w)
+      .parquet(s"$staging/$sub")
+  }
+
+  /** Flat-sublayout rewrite into a staged generation.
+    * `maxRecordsPerFile` = 0 keeps the one-file rewrite (coalesce(1) —
+    * fine for small sidecars); > 0 repartitions to
+    * ceil(rows / maxRecordsPerFile) tasks so a corpus-scale sublayout
+    * rewrites in PARALLEL with bounded file sizes, not through one
+    * writer task.
+    */
+  private def rewriteFlat(spark: SparkSession, oldRoot: String,
+                          staging: String, sub: String,
+                          maxRecordsPerFile: Long): Unit = {
+    val src = spark.read.parquet(s"$oldRoot/$sub")
+    val shaped =
+      if (maxRecordsPerFile > 0) {
+        val n = src.count()
+        src.repartition(
+          math.max(1L, (n + maxRecordsPerFile - 1) / maxRecordsPerFile)
+            .toInt)
+      } else src.coalesce(1)
+    shaped.write.mode("overwrite").parquet(s"$staging/$sub")
   }
 }

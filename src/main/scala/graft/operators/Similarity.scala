@@ -164,14 +164,7 @@ object Similarity {
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         l2norm(col("embedding")).as("qnorm"))
-    val scored = embeddings
-      .withColumn("norm", l2norm(col("embedding")))
-      .join(broadcast(cut), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("embedding"), col("qvec")) /
-          (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    topKPerQuery(scored, k)
+    exactRerank(broadcast(cut), embeddings, broadcast(queries), k)
   }
 
   /** Durable MATRYOSHKA PREFIX layout — the stored form that makes
@@ -242,7 +235,7 @@ object Similarity {
   private def prefixEncodeGuarded(spark: org.apache.spark.sql.SparkSession,
                                   root: String, batch: DataFrame)
       : (Int, DataFrame) = {
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = IndexGen.meta(spark, root)
     (meta.getAs[Int]("prefix_dim"),
       batch.withColumn("embedding",
         dimGuarded(meta.getAs[Int]("dim"), "prefix append")))
@@ -289,10 +282,7 @@ object Similarity {
                           cand: Int = 50, k: Int = 10): DataFrame = {
     import spark.implicits._
     val root = IndexGen.root(spark, dir)
-    val prefixDim = IndexCache.cached(s"$root#prefix-dim",
-      IndexCache.dirStamp(spark, s"$root/meta")) {
-      spark.read.parquet(s"$root/meta").head().getAs[Int]("prefix_dim")
-    }
+    val prefixDim = IndexGen.meta(spark, root).getAs[Int]("prefix_dim")
     def pre(c: Column): Column = slice(c, 1, prefixDim)
     val qfull = queries.sortBy(_._1)
       .map { case (qid, qv) => (qid, qv.toSeq) }
@@ -301,66 +291,18 @@ object Similarity {
     // one-shot applies, so coarse scores agree bit-for-bit
     val qpre = qfull.select(col("query_id"),
       pre(col("qfull")).as("qvec"), l2norm(pre(col("qfull"))).as("qnorm"))
-    val prefix = IndexCache.cached(s"$root#prefix-df",
-      IndexCache.dirStamp(spark, s"$root/prefix")) {
-      spark.read.parquet(s"$root/prefix")
-    }
-    val coarse = prefix
+    val coarse = IndexGen.sub(spark, root, "prefix")
       .withColumn("norm", l2norm(col("pvec")))
       .crossJoin(broadcast(qpre))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("pvec"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    val cut = topKPerQuery(coarse, cand)
-      .select(col("query_id"), col("vec_id"))
-    val full = IndexCache.cached(s"$root#full-df",
-      IndexCache.dirStamp(spark, s"$root/full")) {
-      spark.read.parquet(s"$root/full")
-    }
-    val qexact = qfull.select(col("query_id"),
-      col("qfull").as("qvec"), l2norm(col("qfull")).as("qnorm"))
-    val scored = full
-      .withColumn("norm", l2norm(col("embedding")))
-      .join(broadcast(cut), Seq("vec_id"))
-      .join(broadcast(qexact), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("embedding"), col("qvec")) /
-          (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** Compact BOTH sublayouts of a [[writePrefixIndex]] layout in ONE
-    * generation advance (prefix + full each rewrite to
-    * `maxRecordsPerFile`-bounded files; meta and `_commits` markers
-    * copy forward; one pointer flip publishes). */
-  def compactPrefixIndex(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, maxRecordsPerFile: Long = 0L): Unit =
-    IndexGen.advance(spark, dir) { (oldRoot, staging) =>
-      rewriteFlat(spark, oldRoot, staging, "prefix", maxRecordsPerFile)
-      rewriteFlat(spark, oldRoot, staging, "full", maxRecordsPerFile)
-    }
-
-  /** Small-files decay gauge: max parquet-file count over the
-    * sublayout's partitions (or the flat dir itself) — the signal an
-    * automated maintenance policy compacts on
-    * ([[graft.operators.Curation.startCorpusMaintenance]]'s
-    * `compactEvery` is cadence-based; this is the state-based dial
-    * for callers that prefer thresholds).
-    */
-  def maxFilesPerPartition(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, sub: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(IndexGen.root(spark, dir), sub)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0
-    def filesIn(p: org.apache.hadoop.fs.Path): Int = {
-      val g = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*.parquet"))
-      if (g == null) 0 else g.length
-    }
-    val parts = fs.listStatus(root).filter(st =>
-      st.isDirectory && st.getPath.getName.contains("="))
-    if (parts.isEmpty) filesIn(root)
-    else parts.map(st => filesIn(st.getPath)).max
+    exactRerank(broadcast(topKPerQuery(coarse, cand)
+        .select(col("query_id"), col("vec_id"))),
+      IndexGen.sub(spark, root, "full"),
+      broadcast(qfull.select(col("query_id"), col("qfull").as("qvec"),
+        l2norm(col("qfull")).as("qnorm"))), k)
   }
 
   /** [[ensureIvfIndex]]'s build-once contract for the matryoshka
@@ -369,7 +311,8 @@ object Similarity {
                         sourcePath: String, embeddings: DataFrame,
                         prefixDim: Int,
                         indexRoot: Option[String] = None): String =
-    ensureIndexDir(spark, sourcePath, s"prefix$prefixDim", indexRoot)(
+    IndexGen.ensureIndexDir(spark, sourcePath, s"prefix$prefixDim",
+      indexRoot)(
       dir => writePrefixIndex(embeddings, dir, prefixDim))
 
   /** IVF-PRUNED MATRYOSHKA layout — the sub-linear form of
@@ -434,24 +377,12 @@ object Similarity {
         .parquet(s"$root/prefix")
       embeddings.select(col("vec_id"), col("embedding"))
         .write.mode("overwrite").parquet(s"$root/full")
-      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cid", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
       Seq((prefixDim, dim)).toDF("prefix_dim", "dim")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
       // drift-guard baseline over PREFIX distances (the geometry the
-      // coarse quantizer ranks in) — the [[writeIvfIndex]] stats
-      // contract, so [[readIvfStats]] and the committed-append
-      // markers compose unchanged
-      val base = embeddings
-        .select(array_min(centroidDistArray(
-          slice(col("embedding"), 1, prefixDim), cents))
-          .getField("d").as("d"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          dsumD(col("d")).as("sum_sqdist"))
-        .head()
-      writeIvfStats(spark, root, base.getAs[Long]("n"),
-        base.getAs[Double]("sum_sqdist"))
+      // coarse quantizer ranks in)
+      writeCoarseQuantizer(embeddings, slice(col("embedding"), 1, prefixDim),
+        cents, root)
     }
   }
 
@@ -474,28 +405,10 @@ object Similarity {
     IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
       val root = c.root
       val (prefixDim, guarded) = prefixEncodeGuarded(spark, root, batch)
-      val cents = readCentroids(spark, root)
-      val (n0, s0) = readIvfStats(spark, root)
-      require(n0 > 0, s"index at $root has an empty baseline — rebuild it")
-      val best = array_min(centroidDistArray(
-        slice(col("embedding"), 1, prefixDim), cents))
-      val assigned = guarded
-        .withColumn("cid", best.getField("cid"))
-        .withColumn("__d", best.getField("d"))
-        .localCheckpoint(true)
-      val agg = assigned
-        .agg(count(lit(1)).cast("long").as("n"),
-          dsumD(col("__d")).as("sum_sqdist"))
-        .head()
-      val nb = agg.getAs[Long]("n")
-      val sb = agg.getAs[Double]("sum_sqdist")
+      val (assigned, nb, sb) = assignGuarded(spark, root, guarded,
+        slice(col("embedding"), 1, prefixDim), maxDriftRatio,
+        "prefix-IVF", "writePrefixIvfIndex")
       if (nb > 0) {
-        if (sb / nb > maxDriftRatio * (s0 / n0))
-          throw new IllegalStateException(
-            f"prefix-IVF append drift guard: batch mean sq-dist " +
-              f"${sb / nb}%.4f exceeds $maxDriftRatio× the index " +
-              f"baseline ${s0 / n0}%.4f — rebuild (writePrefixIvfIndex) " +
-              "instead of appending")
         c.land("full")(assigned.select(col("vec_id"), col("embedding"))
           .write.mode("overwrite").parquet(_))
         // a CARRYING layout's appended rows must carry the same
@@ -503,7 +416,7 @@ object Similarity {
         // them and silently exclude every appended row — the carried
         // set is discovered from the stored schema, and a batch
         // missing one fails loudly at the select
-        val carried = spark.read.parquet(s"$root/prefix")
+        val carried = IndexGen.sub(spark, root, "prefix")
           .schema.fieldNames
           .filterNot(Set("vec_id", "pvec", "cid")).toSeq
         c.land("prefix")(assigned
@@ -519,12 +432,10 @@ object Similarity {
   /** (prefix_dim, full dim) of a [[writePrefixIvfIndex]] layout,
     * cached per generation root. */
   private def prefixIvfMeta(spark: org.apache.spark.sql.SparkSession,
-                            root: String): (Int, Int) =
-    IndexCache.cached(s"$root#pivf-meta",
-      IndexCache.dirStamp(spark, s"$root/meta")) {
-      val r = spark.read.parquet(s"$root/meta").head()
-      (r.getAs[Int]("prefix_dim"), r.getAs[Int]("dim"))
-    }
+                            root: String): (Int, Int) = {
+    val r = IndexGen.meta(spark, root)
+    (r.getAs[Int]("prefix_dim"), r.getAs[Int]("dim"))
+  }
 
   /** Probe the IVF-pruned matryoshka layout: the query PREFIX picks
     * its `nprobe` nearest stored centroids driver-side (nlist×
@@ -561,19 +472,9 @@ object Similarity {
     val cents = readCentroids(spark, root)
     def pre(c: Column): Column = slice(c, 1, prefixDim)
     // probe-list selection runs on the query PREFIX against the
-    // prefixDim-dim centroids — same sequential-fold distance and
-    // smaller-cid tie as the oracle's rn ordering
+    // prefixDim-dim centroids
     val probes: Seq[(Long, Int)] = queries.flatMap { case (qid, v) =>
-      cents.zipWithIndex.map { case (c, i) =>
-        var d = 0.0
-        var j = 0
-        while (j < prefixDim) {
-          val dl = v(j).toDouble - c(j)
-          d += dl * dl
-          j += 1
-        }
-        (d, i)
-      }.sortBy(identity).take(nprobe).map { case (_, cid) => (qid, cid) }
+      nearestLists(v, cents, nprobe).map(cid => (qid, cid))
     }
     val probeCids = probes.map(_._2).distinct.sorted
     val qfull = queries.sortBy(_._1)
@@ -585,10 +486,7 @@ object Similarity {
         pre(col("qfull")).as("qvec"),
         l2norm(pre(col("qfull"))).as("qnorm"))
       .join(probes.toDF("query_id", "cid"), Seq("query_id"))
-    val prefix = IndexCache.cached(s"$root#pivf-prefix-df",
-      IndexCache.dirStamp(spark, s"$root/prefix")) {
-      spark.read.parquet(s"$root/prefix")
-    }
+    val prefix = IndexGen.sub(spark, root, "prefix")
     // literal IN on the partition column → pruned scan (the plan
     // lock). A FILTERED search's metadata predicate restricts the
     // CORPUS side here, BEFORE scoring — on a layout built with
@@ -603,37 +501,12 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("pvec"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    val cut = topKPerQuery(coarse, cand)
-      .select(col("query_id"), col("vec_id"))
-    val full = IndexCache.cached(s"$root#pivf-full-df",
-      IndexCache.dirStamp(spark, s"$root/full")) {
-      spark.read.parquet(s"$root/full")
-    }
-    val qexact = qfull.select(col("query_id"),
-      col("qfull").as("qvec"), l2norm(col("qfull")).as("qnorm"))
-    val scored = full
-      .withColumn("norm", l2norm(col("embedding")))
-      .join(broadcast(cut), Seq("vec_id"))
-      .join(broadcast(qexact), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("embedding"), col("qvec")) /
-          (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    topKPerQuery(scored, k)
+    exactRerank(broadcast(topKPerQuery(coarse, cand)
+        .select(col("query_id"), col("vec_id"))),
+      IndexGen.sub(spark, root, "full"),
+      broadcast(qfull.select(col("query_id"), col("qfull").as("qvec"),
+        l2norm(col("qfull")).as("qnorm"))), k)
   }
-
-  /** Compact BOTH sublayouts of a [[writePrefixIvfIndex]] layout in
-    * one generation advance: the cid-partitioned prefix lists rewrite
-    * to one file per list ([[compactIvfIndex]]'s shape), `full/`
-    * rewrites flat; centroids/meta copy forward; one pointer flip
-    * publishes. */
-  def compactPrefixIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                            dir: String,
-                            maxRecordsPerFile: Long = 0L): Unit =
-    IndexGen.advance(spark, dir) { (oldRoot, staging) =>
-      rewritePartitioned(spark, oldRoot, staging, "prefix", "cid",
-        maxRecordsPerFile)
-      rewriteFlat(spark, oldRoot, staging, "full", maxRecordsPerFile)
-    }
 
   /** Approximate kNN JOIN against the IVF-pruned matryoshka layout —
     * the table-vs-index form of [[prefixIvfSearchIndexed]] (the
@@ -669,37 +542,21 @@ object Similarity {
       .select(col("vec_id").as("query_id"),
         pre(col("embedding")).as("qvec"),
         l2norm(pre(col("embedding"))).as("qnorm"),
-        explode(transform(
-          slice(array_sort(centroidDistArray(pre(col("embedding")),
-            cents)), 1, nprobe),
-          p => p.getField("cid"))).as("cid"))
-    val prefix = IndexCache.cached(s"$root#pivf-prefix-df",
-      IndexCache.dirStamp(spark, s"$root/prefix")) {
-      spark.read.parquet(s"$root/prefix")
-    }
-    val coarse = prefix
+        probedLists(pre(col("embedding")), cents, nprobe).as("cid"))
+    val coarse = IndexGen.sub(spark, root, "prefix")
       .join(assigned, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("norm", l2norm(col("pvec")))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("pvec"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    val cut = topKPerQuery(coarse, cand)
-      .select(col("query_id"), col("vec_id"))
-    val full = IndexCache.cached(s"$root#pivf-full-df",
-      IndexCache.dirStamp(spark, s"$root/full")) {
-      spark.read.parquet(s"$root/full")
-    }
-    val qexact = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qfull"), l2norm(col("embedding")).as("qn"))
-    val scored = full
-      .withColumn("norm", l2norm(col("embedding")))
-      .join(cut, Seq("vec_id"))
-      .join(qexact, Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("embedding"), col("qfull")) /
-          (col("norm") * col("qn")), 4).as("cos_sim"))
-    topKPerQuery(scored, k)
+    // queries may be corpus-sized: neither rerank side is broadcast
+    exactRerank(topKPerQuery(coarse, cand)
+        .select(col("query_id"), col("vec_id")),
+      IndexGen.sub(spark, root, "full"),
+      queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("qvec"), l2norm(col("embedding")).as("qnorm")),
+      k)
   }
 
   /** [[serveAnnBatch]] on the matryoshka layout: one query
@@ -745,7 +602,7 @@ object Similarity {
                            indexRoot: Option[String] = None): String = {
     val tag = s"prefixivf$prefixDim-$nlist" +
       (if (carryCols.isEmpty) "" else carryCols.mkString("+", "+", ""))
-    ensureIndexDir(spark, sourcePath, tag, indexRoot)(dir =>
+    IndexGen.ensureIndexDir(spark, sourcePath, tag, indexRoot)(dir =>
       writePrefixIvfIndex(embeddings, dir, prefixDim, nlist, iters,
         carryCols))
   }
@@ -866,55 +723,82 @@ object Similarity {
   def assignCentroid(vec: Column, cents: Array[Array[Double]]): Column =
     nearestCentroid(vec, cents)
 
+  /** Driver-side probe planner: the `nprobe` nearest centroids of one
+    * query vector over its first `c.length` components (the prefix
+    * layouts probe on the query prefix), by a plain double left fold —
+    * the same IEEE op sequence as the oracle's sqDist list_reduce —
+    * ties to the smaller cid (the oracle's rn order).
+    */
+  private def nearestLists(q: Array[Float], cents: Array[Array[Double]],
+                           nprobe: Int): Seq[Int] =
+    cents.zipWithIndex.map { case (c, i) =>
+      var d = 0.0
+      var j = 0
+      while (j < c.length) {
+        val dl = q(j).toDouble - c(j)
+        d += dl * dl
+        j += 1
+      }
+      (d, i)
+    }.sortBy(identity).take(nprobe).map(_._2).toSeq
+
+  /** Scan-local twin of [[nearestLists]] for a query COLUMN: the sorted
+    * (d, cid) struct array against the broadcast centroid literal,
+    * exploded to one row per probed cid. */
+  private def probedLists(vec: Column, cents: Array[Array[Double]],
+                          nprobe: Int): Column =
+    explode(transform(
+      slice(array_sort(centroidDistArray(vec, cents)), 1, nprobe),
+      p => p.getField("cid")))
+
+  /** Run `body` over `df` pinned for its duration (each Lloyd or
+    * codebook iteration is a full pass over it) instead of re-running
+    * its lineage per pass. Spark caching is keyed by logical plan, so
+    * a frame the caller already cached is neither re-persisted nor
+    * unpersisted (that would evict THEIR cache).
+    */
+  private def withPinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    val alreadyCached =
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val pinned =
+      if (alreadyCached) df
+      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(pinned)
+    finally { if (!alreadyCached) { pinned.unpersist(); () } }
+  }
+
   /** Deterministic k-means training: init = the k lowest vec_ids,
     * fixed Lloyd iterations, decimal-exact means (bit-reproducible
     * across runs/partitionings). Centroids are driver-side — k×dim
     * doubles, broadcast into the assignment expression.
     */
   def trainCentroids(embeddings: DataFrame, k: Int = 16,
-                     iters: Int = 3): Array[Array[Double]] = {
-    // each Lloyd iteration is a full corpus pass — pin the input for
-    // the duration of training instead of re-running its lineage
-    // (scan + repartition) iters+1 times. Spark caching is keyed by
-    // logical plan, so if the caller already cached this frame we must
-    // neither re-persist nor unpersist (that would evict THEIR cache).
-    val alreadyCached =
-      embeddings.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned =
-      if (alreadyCached) embeddings
-      else embeddings
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainCentroidsPinned(pinned, k, iters)
-    finally { if (!alreadyCached) { pinned.unpersist(); () } }
-  }
-
-  private def trainCentroidsPinned(embeddings: DataFrame, k: Int,
-                                   iters: Int): Array[Array[Double]] = {
-    var cents: Array[Array[Double]] = embeddings
-      .orderBy(col("vec_id")).limit(k)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    for (_ <- 0 until iters) {
-      val dim = cents(0).length
-      val acc = org.apache.spark.sql.types.DecimalType(38, 15)
-      val updated = embeddings
-        .withColumn("cid", nearestCentroid(col("embedding"), cents))
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg((sum(col("x").cast("double").cast(
-          org.apache.spark.sql.types.DecimalType(30, 15))).cast("double") /
-          count(lit(1))).as("m"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          val arr = new Array[Double](dim)
-          rows.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-          cid -> arr
-        }
-      cents = cents.indices.map(i => updated.getOrElse(i, cents(i))).toArray
+                     iters: Int = 3): Array[Array[Double]] =
+    withPinned(embeddings) { pinned =>
+      var cents: Array[Array[Double]] = pinned
+        .orderBy(col("vec_id")).limit(k)
+        .select(col("embedding")).collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      for (_ <- 0 until iters) {
+        val dim = cents(0).length
+        val updated = pinned
+          .withColumn("cid", nearestCentroid(col("embedding"), cents))
+          .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
+          .groupBy(col("cid"), col("pos"))
+          .agg((sum(col("x").cast("double").cast(
+            org.apache.spark.sql.types.DecimalType(30, 15))).cast("double") /
+            count(lit(1))).as("m"))
+          .collect()
+          .groupBy(_.getInt(0))
+          .map { case (cid, rows) =>
+            val arr = new Array[Double](dim)
+            rows.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
+            cid -> arr
+          }
+        cents = cents.indices.map(i => updated.getOrElse(i, cents(i))).toArray
+      }
+      cents
     }
-    cents
-  }
 
   /** IVF ANN search: corpus assigned once to inverted lists; each
     * query probes its `nprobe` nearest lists and re-ranks by exact
@@ -996,7 +880,6 @@ object Similarity {
                                      trainOn: DataFrame, dir: String,
                                      nlist: Int, iters: Int): Unit = {
     val spark = embeddings.sparkSession
-    import spark.implicits._
     // ladder-native build ([[IndexGen]]): the complete layout lands
     // as a fresh generation and one atomic pointer flip publishes it
     // — a rebuild over a live index never disturbs in-flight readers
@@ -1012,23 +895,71 @@ object Similarity {
         // probe-side partition grain anyway
         .repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$root/lists")
-      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cid", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
-      // quantization-quality baseline for the append drift guard:
-      // (count, Σ squared nearest-centroid distance) of the
-      // indexed corpus — distributive, so appends merge it. Decimal
-      // summation keeps the recorded baseline partition-order-exact
-      // (SCALE.md §7).
-      val base = embeddings
-        .select(array_min(centroidDistArray(col("embedding"), cents))
-          .getField("d").as("d"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          dsumD(col("d")).as("sum_sqdist"))
-        .head()
-      writeIvfStats(spark, root, base.getAs[Long]("n"),
-        base.getAs[Double]("sum_sqdist"))
+      writeCoarseQuantizer(embeddings, col("embedding"), cents, root)
     }
+  }
+
+  /** The coarse quantizer's at-rest half, shared by every IVF build:
+    * the centroid dim, and the append drift guard's baseline —
+    * (count, Σ squared nearest-centroid distance of `vec`) over the
+    * indexed `corpus`, distributive so committed appends add to it
+    * through their markers ([[readIvfStats]]). Decimal summation keeps
+    * the recorded baseline partition-order-exact (SCALE.md §7). Build
+    * time only, into a private staging root no reader can see.
+    */
+  private def writeCoarseQuantizer(corpus: DataFrame, vec: Column,
+                                   cents: Array[Array[Double]],
+                                   root: String): Unit = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
+      .toDF("cid", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
+    val base = corpus
+      .select(array_min(centroidDistArray(vec, cents)).getField("d").as("d"))
+      .agg(count(lit(1)).cast("long").as("n"),
+        dsumD(col("d")).as("sum_sqdist"))
+      .head()
+    Seq((base.getAs[Long]("n"), base.getAs[Double]("sum_sqdist")))
+      .toDF("n", "sum_sqdist")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
+  }
+
+  /** The coarse quantizer's append half, shared by every IVF append:
+    * assign `batch` (by its `vec` column) to the STORED centroids,
+    * pinned so one batch pass feeds the guard aggregate AND the
+    * landing, and fail fast when the batch's mean squared
+    * nearest-centroid distance exceeds `maxDriftRatio` × the index
+    * baseline ([[readIvfStats]] — baseline plus every committed
+    * contribution): stale centroids silently strand new vectors in
+    * far lists. Returns (batch with `cid`, n, Σ sq-dist) — the
+    * marker contribution.
+    */
+  private def assignGuarded(spark: org.apache.spark.sql.SparkSession,
+                            root: String, batch: DataFrame, vec: Column,
+                            maxDriftRatio: Double, label: String,
+                            rebuild: String): (DataFrame, Long, Double) = {
+    val cents = readCentroids(spark, root)
+    val (n0, s0) = readIvfStats(spark, root)
+    require(n0 > 0, s"index at $root has an empty baseline — rebuild it")
+    val best = array_min(centroidDistArray(vec, cents))
+    val assigned = batch
+      .withColumn("cid", best.getField("cid"))
+      .withColumn("__d", best.getField("d"))
+      .localCheckpoint(true)
+    val agg = assigned
+      .agg(count(lit(1)).cast("long").as("n"),
+        dsumD(col("__d")).as("sum_sqdist"))
+      .head()
+    val nb = agg.getAs[Long]("n")
+    val sb = agg.getAs[Double]("sum_sqdist")
+    if (nb > 0 && sb / nb > maxDriftRatio * (s0 / n0))
+      throw new IllegalStateException(
+        f"$label append drift guard: batch mean sq-dist ${sb / nb}%.4f " +
+          f"exceeds $maxDriftRatio× the index baseline ${s0 / n0}%.4f " +
+          "— the centroids no longer represent the data; rebuild the " +
+          s"index ($rebuild) instead of appending")
+    (assigned, nb, sb)
   }
 
   private def dsumD(c: Column): Column =
@@ -1047,77 +978,6 @@ object Similarity {
   def indexedCorpusCount(spark: org.apache.spark.sql.SparkSession,
                          dir: String): Long =
     readIvfStats(spark, dir)._1
-
-  /** Initial stats write, build-time only (into a private staging
-    * root — no reader can see it). Appends never rewrite it: their
-    * contributions ride their commit markers ([[readIvfStats]]).
-    */
-  private def writeIvfStats(spark: org.apache.spark.sql.SparkSession,
-                            root: String, n: Long, sumSq: Double): Unit = {
-    import spark.implicits._
-    Seq((n, sumSq)).toDF("n", "sum_sqdist")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
-  }
-
-  /** Encode + drift-guard stage of [[appendToIvfIndexCommitted]]:
-    * assign the batch to the STORED centroids, PQ-encode when the
-    * index carries codebooks, and fail fast when the batch's mean
-    * squared nearest-centroid distance exceeds `maxDriftRatio` × the
-    * index baseline ([[readIvfStats]] — baseline plus every committed
-    * contribution). None for an empty batch.
-    */
-  private def encodeBatchForIndex(spark: org.apache.spark.sql.SparkSession,
-                                  root: String, batch: DataFrame,
-                                  maxDriftRatio: Double)
-      : Option[(DataFrame, Long, Double)] = {
-    val cents = spark.read.parquet(s"$root/centroids")
-      .orderBy(col("cid")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val (n0, s0) = readIvfStats(spark, root)
-    require(n0 > 0, s"index at $root has an empty baseline — rebuild it")
-    val best = array_min(centroidDistArray(col("embedding"), cents))
-    // pinned: one batch pass feeds the guard aggregate AND the append
-    val assigned = batch
-      .withColumn("cid", best.getField("cid"))
-      .withColumn("__d", best.getField("d"))
-      .withColumn("norm", l2norm(col("embedding")))
-      .localCheckpoint(true)
-    val agg = assigned
-      .agg(count(lit(1)).cast("long").as("n"), dsumD(col("__d")).as("sum_sqdist"))
-      .head()
-    val nb = agg.getAs[Long]("n")
-    val sb = agg.getAs[Double]("sum_sqdist")
-    if (nb == 0) None
-    else {
-      val baseline = s0 / n0
-      val batchMean = sb / nb
-      if (batchMean > maxDriftRatio * baseline)
-        throw new IllegalStateException(
-          f"IVF append drift guard: batch mean sq-dist $batchMean%.4f " +
-            f"exceeds $maxDriftRatio× the index baseline $baseline%.4f " +
-            "— the centroids no longer represent the data; rebuild the " +
-            "index (writeIvfIndex) instead of appending")
-      // PQ-aware: an IVF-PQ index's lists carry a codes column the
-      // ADC probe scores — appended rows must carry it too (encoded
-      // with the STORED books, residual-aware), or the probe would
-      // read nulls for the new vectors and silently drop them
-      val out = readPqBooks(spark, root) match {
-        case Some((books, residual)) =>
-          val centsLit = typedlit(cents.map(_.toSeq).toSeq)
-          val residCol = zip_with(col("embedding"),
-            element_at(centsLit, col("cid") + 1),
-            (x, c) => x.cast("double") - c)
-          assigned.withColumn("codes",
-              pqCodes(if (residual) residCol else col("embedding"), books))
-            .select(col("vec_id"), col("embedding"), col("norm"),
-              col("codes"), col("cid"))
-        case None =>
-          assigned
-            .select(col("vec_id"), col("embedding"), col("norm"), col("cid"))
-      }
-      Some((out, nb, sb))
-    }
-  }
 
   /** Append a new batch to a materialized IVF or IVF-PQ index WITHOUT
     * retraining, EXACTLY ONCE per caller-supplied batch id
@@ -1154,108 +1014,24 @@ object Similarity {
                                 maxDriftRatio: Double = 4.0,
                                 sourcePath: Option[String] = None): Unit =
     IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
-      encodeBatchForIndex(spark, c.root, batch, maxDriftRatio) match {
-        case Some((out, nb, sb)) =>
-          c.land("lists")(out.repartition(col("cid"))
-            .write.mode("overwrite").partitionBy("cid").parquet(_))
-          Seq(nb.toDouble, sb)
-        case None => Seq(0.0, 0.0)
+      val (assigned, nb, sb) = assignGuarded(spark, c.root,
+        batch.withColumn("norm", l2norm(col("embedding"))),
+        col("embedding"), maxDriftRatio, "IVF", "writeIvfIndex")
+      // an IVF-PQ index's lists carry the codes its ADC probe scores:
+      // appended rows are encoded with the STORED books,
+      // residual-aware, or the probe would read nulls for them
+      val codes = readPqBooks(spark, c.root).map { case (books, residual) =>
+        pqCodes(if (residual) residualOf(readCentroids(spark, c.root))
+          else col("embedding"), books).as("codes")
       }
+      if (nb > 0)
+        c.land("lists")(assigned
+          .select((Seq(col("vec_id"), col("embedding"), col("norm")) ++
+            codes :+ col("cid")): _*)
+          .repartition(col("cid"))
+          .write.mode("overwrite").partitionBy("cid").parquet(_))
+      Seq(nb.toDouble, sb)
     }
-
-  /** Compact an IVF/IVF-PQ index's list partitions: every daily
-    * append adds a file per touched list, and a year of appends makes
-    * a probe open hundreds of small files per pruned list — the
-    * standard lakehouse small-files decay. The compaction publishes a
-    * NEW GENERATION ([[IndexGen.advance]]): the lists rewrite into
-    * the staged generation (one coalesced file per cid partition),
-    * every other sublayout copies forward unchanged, and one atomic
-    * pointer flip publishes the whole snapshot. CONTENT is untouched
-    * (rows, codes, stats), so probe results are identical before and
-    * after — and compaction COMPOSES WITH LIVE SERVING: a concurrent
-    * [[startAnnServing]] micro-batch that resolved the prior
-    * generation reads it intact (one prior is retained), one
-    * resolving after the flip reads the compacted layout; no reader
-    * ever fails or mixes the two.
-    *
-    * Replay safety: the `_commits` markers are deliberately CARRIED
-    * FORWARD — they are the replay guards of
-    * [[appendToIvfIndexCommitted]] and [[readIvfStats]]'s stats
-    * contributions, both still correct after the rewrite (a replayed
-    * batch short-circuits on its marker; folding markers into the
-    * baseline instead would let a post-compaction replay of an
-    * already-committed batch double-append). The deterministic
-    * `b<id>-*` names vanish with the rewrite, which is fine: a replay
-    * that reaches the file-sweep stage finds nothing to sweep and its
-    * marker stops it earlier anyway.
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, maxRecordsPerFile: Long = 0L): Unit =
-    IndexGen.advance(spark, dir) { (oldRoot, staging) =>
-      rewritePartitioned(spark, oldRoot, staging, "lists", "cid",
-        maxRecordsPerFile)
-    }
-
-  /** The shared partitioned-sublayout rewrite behind
-    * [[compactIvfIndex]] and [[graft.operators.TextOps
-    * .compactBm25Index]]: hash-repartition by the partition column →
-    * each partition's rows land in ONE task → one file per partition
-    * (maxRecordsPerFile re-splits oversized partitions at the writer,
-    * the dial for huge lists at warehouse scale). Reads the OLD
-    * generation, writes into the STAGED one — publication is the
-    * caller's single pointer flip, so there is no swap window at all.
-    */
-  private[graft] def rewritePartitioned(
-      spark: org.apache.spark.sql.SparkSession, oldRoot: String,
-      staging: String, sub: String, partCol: String,
-      maxRecordsPerFile: Long): Unit = {
-    val w = spark.read.parquet(s"$oldRoot/$sub")
-      .repartition(col(partCol))
-      .write.mode("overwrite").partitionBy(partCol)
-    (if (maxRecordsPerFile > 0)
-       w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w)
-      .parquet(s"$staging/$sub")
-  }
-
-  /** [[compactIvfIndex]] for the FLAT sidecar layouts (`codes` /
-    * `bits` / the gram index's `docdim`): the sublayout rewrites into
-    * one file (or `maxRecordsPerFile`-bounded files) in a staged
-    * generation, everything else (meta, `_commits` markers) copies
-    * forward, and the pointer flip publishes — same
-    * serving-composable discipline as [[compactIvfIndex]], no
-    * partition column. `sub` by layout: "codes" for SQ8, "bits" for
-    * BQ.
-    */
-  def compactSidecar(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, sub: String,
-                     maxRecordsPerFile: Long = 0L): Unit =
-    IndexGen.advance(spark, dir) { (oldRoot, staging) =>
-      rewriteFlat(spark, oldRoot, staging, sub, maxRecordsPerFile)
-    }
-
-  /** Flat-sublayout rewrite into a staged generation (the sidecar
-    * form of [[rewritePartitioned]]). `maxRecordsPerFile` = 0 keeps
-    * the historical one-file rewrite (coalesce(1) — fine for small
-    * sidecars); > 0 repartitions to ceil(rows / maxRecordsPerFile)
-    * tasks so a corpus-scale sublayout rewrites in PARALLEL with
-    * bounded file sizes, not through one writer task (the
-    * maxRecordsPerFile writer option alone would bound the files but
-    * still serialize the work through coalesce(1)'s single task).
-    */
-  private[graft] def rewriteFlat(
-      spark: org.apache.spark.sql.SparkSession, oldRoot: String,
-      staging: String, sub: String, maxRecordsPerFile: Long): Unit = {
-    val src = spark.read.parquet(s"$oldRoot/$sub")
-    val shaped =
-      if (maxRecordsPerFile > 0) {
-        val n = src.count()
-        src.repartition(
-          math.max(1L, (n + maxRecordsPerFile - 1) / maxRecordsPerFile)
-            .toInt)
-      } else src.coalesce(1)
-    shaped.write.mode("overwrite").parquet(s"$staging/$sub")
-  }
 
   /** Composite stats of an IVF index: the build-time baseline PLUS
     * every committed-append marker's contribution. The single read
@@ -1367,41 +1143,26 @@ object Similarity {
                       itersPq: Int = 2, residual: Boolean = false): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val alreadyCached =
-      embeddings.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned =
-      if (alreadyCached) embeddings
-      else embeddings
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try IndexGen.buildFresh(spark, dir) { root =>
+    withPinned(embeddings)(pinned => IndexGen.buildFresh(spark, dir) { root =>
       val cents = trainCentroids(pinned, nlist, itersIvf)
-      val centsLit = typedlit(cents.map(_.toSeq).toSeq)
       val assigned = pinned
         .withColumn("cid", nearestCentroid(col("embedding"), cents))
-      // residual coding ([[ivfPqResidualTopK]]): train AND encode on
-      // x − c(x); the stored layout is identical apart from the codes'
-      // meaning, recorded as a coding column inside pq_books so
-      // the probe auto-adapts (marker and books travel in one write)
-      val residCol = zip_with(col("embedding"),
-        element_at(centsLit, col("cid") + 1),
-        (x, c) => x.cast("double") - c)
+      // residual coding ([[ivfPqTopK]]`(residual = true)`): train AND
+      // encode on x − c(x); the stored layout is identical apart from
+      // the codes' meaning, recorded as a coding column inside
+      // pq_books so the probe auto-adapts (marker and books travel in
+      // one write)
       val books =
-        if (residual) {
-          val resid = assigned
-            .select(col("vec_id"), residCol.as("embedding"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try pqCodebooks(resid, m, ksub, itersPq)
-          finally { resid.unpersist(); () }
-        } else pqCodebooks(pinned, m, ksub, itersPq)
+        if (residual) withPinned(assigned
+            .select(col("vec_id"), residualOf(cents).as("embedding")))(
+          pqCodebooks(_, m, ksub, itersPq))
+        else pqCodebooks(pinned, m, ksub, itersPq)
       assigned
         .withColumn("norm", l2norm(col("embedding")))
-        .withColumn("codes",
-          pqCodes(if (residual) residCol else col("embedding"), books))
+        .withColumn("codes", pqCodes(
+          if (residual) residualOf(cents) else col("embedding"), books))
         .repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$root/lists")
-      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cid", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
       // the coding marker rides IN pq_books — one atomic parquet
       // write carries both the codebooks and the algebra that decodes
       // them, so no crash window can separate residual books from
@@ -1413,16 +1174,16 @@ object Similarity {
         .toDF("subspace", "code", "cent")
         .withColumn("coding", lit(if (residual) "residual" else "raw"))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/pq_books")
-      val base = pinned
-        .select(array_min(centroidDistArray(col("embedding"), cents))
-          .getField("d").as("d"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          dsumD(col("d")).as("sum_sqdist"))
-        .head()
-      writeIvfStats(spark, root, base.getAs[Long]("n"),
-        base.getAs[Double]("sum_sqdist"))
-    } finally { if (!alreadyCached) { pinned.unpersist(); () } }
+      writeCoarseQuantizer(pinned, col("embedding"), cents, root)
+    })
   }
+
+  /** The IVFADC residual x − c(x) of `embedding` against the centroid
+    * its `cid` names (double-typed). */
+  private def residualOf(cents: Array[Array[Double]]): Column =
+    zip_with(col("embedding"),
+      element_at(typedlit(cents.map(_.toSeq).toSeq), col("cid") + 1),
+      (x, c) => x.cast("double") - c)
 
   /** Load a durable index's PQ codebooks and coding marker
     * ([[writeIvfPqIndex]]'s pq_books file), or None for a plain IVF
@@ -1485,30 +1246,11 @@ object Similarity {
       throw new IllegalStateException(
         s"no pq_books at $root — a plain IVF index; probe it with " +
           "ivfSearchIndexed, or rebuild with writeIvfPqIndex"))
-    val m = books.length
-    val dsub = books(0)(0).length
-    val normSq = books.map(_.map(c => dotExactLocal(c, c)))
-    val qdf = queries.sortBy(_._1).flatMap { case (qid, qv) =>
-      val qd = qv.map(_.toDouble)
-      val qnorm = math.sqrt(dotExactLocal(qd, qd))
-      val dott = (0 until m).map { j =>
-        val qs = java.util.Arrays.copyOfRange(qd, j * dsub, (j + 1) * dsub)
-        books(j).map(c => dotExactLocal(qs, c)).toSeq
-      }
-      val probes = cents.zipWithIndex.map { case (c, i) =>
-        var d = 0.0
-        var j2 = 0
-        while (j2 < c.length) { val dl = qd(j2) - c(j2); d += dl * dl; j2 += 1 }
-        (d, i)
-      }.sortBy(identity).take(nprobe).map(_._2).toSeq
-      probes.map(cid =>
-        (qid, qnorm, dott,
-          if (residual) dotExactLocal(qd, cents(cid)) else 0.0, cid))
-    }.toDF("query_id", "qnorm", "dott", "qc", "cid")
+    val qdf = adcQueries(spark, queries, books, Some((cents, nprobe, residual)))
     val probeCids = qdf.select(col("cid")).as[Int].collect().distinct.sorted
-    val lists = listsDf(spark, root)
+    val lists = IndexGen.sub(spark, root, "lists")
     val (pqnormCol, adcNum) =
-      adcCols(books, normSq, if (residual) Some(cents) else None)
+      adcCols(books, if (residual) Some(cents) else None)
     // ADC over codes alone — the float column stays unread here
     val adc = lists.select(col("vec_id"), col("cid"), col("codes"))
       .filter(col("cid").isin(probeCids.map(Integer.valueOf).toSeq: _*))
@@ -1521,41 +1263,34 @@ object Similarity {
     // partition-pruned on the same lists
     val candidates = topKPerQuery(adc, cand)
       .select(col("query_id"), col("vec_id"), col("cid"))
-    // qnorm via dotExactLocal (scale-15-rounded products), the same
-    // arithmetic as the engine's l2norm = sqrt(dot_exact) that
-    // ivfPqTopK applies — NOT normOf's unrounded products, whose
-    // last-bit drift could flip the 4-decimal rounding
-    val qexact = queries.sortBy(_._1)
-      .map { case (qid, qv) =>
-        val qd = qv.map(_.toDouble)
-        (qid, qv.toSeq, math.sqrt(dotExactLocal(qd, qd)))
-      }
-      .toDF("query_id", "qvec", "qnorm")
     val exact = lists
       .filter(col("cid").isin(probeCids.map(Integer.valueOf).toSeq: _*))
       .select(col("cid"), col("vec_id"), col("embedding"), col("norm"))
       .join(candidates, Seq("cid", "vec_id"))
-      .join(broadcast(qexact), Seq("query_id"))
+      .join(broadcast(exactQueries(spark, queries)), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("embedding"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
     topKPerQuery(exact, k)
   }
 
-  /** Exact L2 norm of a query vector, driver-side: the SAME arithmetic
-    * as `l2norm` (=sqrt of DotExact) — products accumulate as exact
-    * BigDecimals, so the value is bit-identical to the engine's
-    * regardless of summation order.
+  /** Exact L2 norm of a query vector, driver-side: sqrt of
+    * [[dotExactLocal]] — the engine's [[l2norm]] (sqrt of DotExact)
+    * bit for bit, per-product rounding included.
     */
-  private[graft] def normOf(v: Array[Float]): Double = {
-    var acc = java.math.BigDecimal.ZERO
-    var i = 0
-    while (i < v.length) {
-      val x = v(i).toDouble
-      acc = acc.add(new java.math.BigDecimal(x * x))
-      i += 1
-    }
-    math.sqrt(acc.doubleValue())
+  private[graft] def queryNorm(v: Array[Float]): Double = {
+    val d = v.map(_.toDouble)
+    math.sqrt(dotExactLocal(d, d))
+  }
+
+  /** Caller-supplied query vectors as the (query_id, qvec, qnorm)
+    * frame the exact rerank joins, in query-id order. */
+  private def exactQueries(spark: org.apache.spark.sql.SparkSession,
+                           queries: Seq[(Long, Array[Float])]): DataFrame = {
+    import spark.implicits._
+    queries.sortBy(_._1)
+      .map { case (qid, qv) => (qid, qv.toSeq, queryNorm(qv)) }
+      .toDF("query_id", "qvec", "qnorm")
   }
 
   /** Probe a materialized IVF index with CALLER-SUPPLIED query vectors
@@ -1573,23 +1308,11 @@ object Similarity {
                        pred: Option[Column] = None): DataFrame = {
     val root = IndexGen.root(spark, dir)
     val cents = readCentroids(spark, root)
-    val lists = listsDf(spark, root)
+    val lists = IndexGen.sub(spark, root, "lists")
     val probes: Seq[(Long, Array[Float], Double, Int)] = queries.flatMap {
       case (qid, v) =>
-        val nearest = cents.zipWithIndex
-          .map { case (c, i) =>
-            var d = 0.0
-            var j = 0
-            while (j < v.length) {
-              val dl = v(j).toDouble - c(j)
-              d += dl * dl
-              j += 1
-            }
-            (d, i)
-          }
-          .sortBy(identity).take(nprobe).map(_._2).toSeq
-        val n = normOf(v)
-        nearest.map(cid => (qid, v, n, cid))
+        val n = queryNorm(v)
+        nearestLists(v, cents, nprobe).map(cid => (qid, v, n, cid))
     }
     val probeCids = probes.map(_._4).distinct.sorted
     val queriesDf = {
@@ -1652,22 +1375,6 @@ object Similarity {
     * (e.g. [[graft.operators.TextOps.hybridRrfIndexed]], which also
     * needs the index dim for its featurization) collects it once.
     */
-  /** The lists sublayout as a CACHED DataFrame: `spark.read.parquet`
-    * re-walks the file tree and re-infers schema per call — a fixed
-    * per-serving-batch cost at steady state. The cached frame's file
-    * index is pinned at stamp time; an append perturbs the partition
-    * dirs' stamp (and invalidates in-JVM), so the NEXT batch reloads
-    * and sees the new rows — the composition contract of
-    * [[startIndexMaintenance]] + [[startAnnServing]], now at
-    * reload-on-change cost instead of reload-always.
-    */
-  private[graft] def listsDf(spark: org.apache.spark.sql.SparkSession,
-                             root: String): DataFrame =
-    IndexCache.cached(s"$root#lists-df",
-      IndexCache.dirStamp(spark, s"$root/lists")) {
-      spark.read.parquet(s"$root/lists")
-    }
-
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
                                    dir: String): Array[Array[Double]] = {
     val root = IndexGen.root(spark, dir)
@@ -1698,11 +1405,8 @@ object Similarity {
     val assigned = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         l2norm(col("embedding")).as("qnorm"),
-        explode(transform(
-          slice(array_sort(centroidDistArray(col("embedding"), cents)),
-            1, nprobe),
-          p => p.getField("cid"))).as("cid"))
-    val scored = listsDf(spark, root)
+        probedLists(col("embedding"), cents, nprobe).as("cid"))
+    val scored = IndexGen.sub(spark, root, "lists")
       .join(assigned, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1712,24 +1416,15 @@ object Similarity {
   }
 
   /** Build-once guard for a durable IVF index over a parquet source:
-    * the index directory carries a fingerprint of the source files
-    * (name, length, mtime), and the index is rebuilt only when the
-    * fingerprint changes. Explicit freshness — no in-process cache to
-    * serve stale centroids after the source is rewritten (the reason
-    * round 2 dropped the plan-keyed memoization).
-    *
-    * The index lives under `indexRoot` when given, else the
-    * `spark.graft.ivf.indexRoot` session conf, else
-    * `<spark.sql.warehouse.dir>/graft-ivf-index` — a production index
-    * is warehouse data, not a tmpdir artifact (round-3 verdict), and
-    * all marker I/O goes through the Hadoop FileSystem so the root may
-    * be any warehouse scheme (HDFS/S3/local).
+    * rebuilt only when the source files' fingerprint changes
+    * ([[IndexGen.ensureIndexDir]], which also says where the index
+    * directory lives).
     */
   def ensureIvfIndex(spark: org.apache.spark.sql.SparkSession,
                      sourcePath: String, embeddings: DataFrame,
                      nlist: Int = 16, iters: Int = 3,
                      indexRoot: Option[String] = None): String =
-    ensureIndexDir(spark, sourcePath, "ivf", indexRoot)(
+    IndexGen.ensureIndexDir(spark, sourcePath, "ivf", indexRoot)(
       dir => writeIvfIndex(embeddings, dir, nlist, iters))
 
   /** [[ensureIvfIndex]]'s build-once contract for the sampled-training
@@ -1742,7 +1437,8 @@ object Similarity {
                             sampleMod: Long = 4, nlist: Int = 16,
                             iters: Int = 3,
                             indexRoot: Option[String] = None): String =
-    ensureIndexDir(spark, sourcePath, s"ivfs-$sampleMod-$nlist", indexRoot)(
+    IndexGen.ensureIndexDir(spark, sourcePath, s"ivfs-$sampleMod-$nlist",
+      indexRoot)(
       dir => writeIvfIndexSampled(embeddings, dir, sampleMod, nlist, iters))
 
   /** [[ensureIvfIndex]]'s build-once contract for the IVF-PQ layout
@@ -1753,7 +1449,7 @@ object Similarity {
                        ksub: Int = 16, itersPq: Int = 2,
                        residual: Boolean = false,
                        indexRoot: Option[String] = None): String =
-    ensureIndexDir(spark, sourcePath,
+    IndexGen.ensureIndexDir(spark, sourcePath,
       if (residual) "ivfpqr" else "ivfpq", indexRoot)(
       dir => writeIvfPqIndex(embeddings, dir, nlist, itersIvf, m, ksub,
         itersPq, residual))
@@ -1764,81 +1460,8 @@ object Similarity {
   def ensureBqIndex(spark: org.apache.spark.sql.SparkSession,
                     sourcePath: String, embeddings: DataFrame,
                     indexRoot: Option[String] = None): String =
-    ensureIndexDir(spark, sourcePath, "bq", indexRoot)(
+    IndexGen.ensureIndexDir(spark, sourcePath, "bq", indexRoot)(
       dir => writeBqIndex(embeddings, dir))
-
-  /** The shared fingerprint-guarded build-once machinery behind
-    * [[ensureIvfIndex]]/[[ensureBqIndex]]: one directory per (source
-    * path, index kind) under the index root, rebuilt only when the
-    * source-file fingerprint changes. `kind` keys the directory so
-    * different index structures over the same source coexist.
-    */
-  private[graft] def ensureIndexDir(spark: org.apache.spark.sql.SparkSession,
-                                    sourcePath: String, kind: String,
-                                    indexRoot: Option[String])
-                                   (build: String => Unit): String = synchronized {
-    val fp = sourceFingerprint(spark, sourcePath)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sourcePath:$kind".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = indexRoot
-      .orElse(spark.conf.getOption("spark.graft.ivf.indexRoot"))
-      .getOrElse(
-        s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-ivf-index")
-    val dir = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root), key)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(dir, "_source_fingerprint")
-    val fresh = fs.exists(marker) && {
-      val in = fs.open(marker)
-      val s =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      s.trim == fp
-    }
-    if (!fresh) {
-      build(dir.toString)
-      val out = fs.create(marker, true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
-    }
-    dir.toString
-  }
-
-  /** Advance an index directory's build-once marker to the CURRENT
-    * fingerprint of its source. The committed appends
-    * ([[IndexGen.commitBatch]], `sourcePath`) incorporate a batch the
-    * source has also received — without this,
-    * the marker written at build time goes stale the moment the source
-    * grows, and the next `ensure*` call rebuilds the very index the
-    * append just maintained. Call it only AFTER the source contains
-    * the appended rows (the fingerprint is read from the source, so a
-    * premature refresh just records the pre-append state and the next
-    * ensure rebuilds as before — stale-safe, never wrong-safe).
-    */
-  def refreshIndexMarker(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, sourcePath: String): Unit = {
-    val fp = sourceFingerprint(spark, sourcePath)
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(d, "_source_fingerprint")
-    val out = fs.create(marker, true)
-    try out.write(fp.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def sourceFingerprint(spark: org.apache.spark.sql.SparkSession,
-                                sourcePath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      parts += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
 
   // ----------------------------------------------------------------
   // Scalar (int8) quantization: the standard 4× compression step for
@@ -1911,18 +1534,28 @@ object Similarity {
     val queries = embeddings.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         l2norm(col("embedding")).as("qnorm"))
-    val corpus = quantizeInt8(embeddings)
+    sq8Funnel(quantizeInt8(embeddings), embeddings, queries, k, cand)
+  }
+
+  /** SQ8's two stages over a (vec_id, codes, scale) frame: exact cosine
+    * against the dequantized vector (`code_i · scale`, reconstructed
+    * per row inside the scan) cuts `cand` per query, the float rerank
+    * cuts `k`. Shared by the one-shot and the sidecar probe, so the two
+    * cannot drift.
+    */
+  private def sq8Funnel(codes: DataFrame, corpus: DataFrame,
+                        queries: DataFrame, k: Int, cand: Int): DataFrame = {
+    val approx = codes
       .withColumn("rvec",
         transform(col("codes"), c => c.cast("double") * col("scale")))
       .select(col("vec_id"), col("rvec"), l2norm(col("rvec")).as("rnorm"))
-    val approx = corpus.crossJoin(broadcast(queries))
+      .crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("rvec"), col("qvec")) /
           (col("rnorm") * col("qnorm")), 4).as("cos_sim"))
-    val candidates = topKPerQuery(approx, cand)
-      .select(col("query_id"), col("vec_id"))
-    exactRerank(candidates, embeddings, queries, k)
+    exactRerank(topKPerQuery(approx, cand)
+      .select(col("query_id"), col("vec_id")), corpus, broadcast(queries), k)
   }
 
   /** Per-dimension sign bits packed into 64-bit words — the storage
@@ -1955,18 +1588,32 @@ object Similarity {
       acc
     }
 
-  /** The monotone angular score 1 − h/d over a row carrying packed
-    * `bits` joined to a query row carrying `qbits`: Hamming = XOR +
-    * popcount per word, one exact IEEE division — shared by the
-    * one-shot [[bqTopK]] and the durable-index probe
-    * [[bqSearchIndexed]] so the two cannot drift.
+  /** BQ's two stages over a (vec_id, bits) frame: the monotone
+    * angular score 1 − h/d (Hamming = XOR + popcount per word, one
+    * exact IEEE division) cuts `cand` per query, the float rerank cuts
+    * `k`. Shared by the one-shot [[bqTopK]] and the durable-index
+    * probe [[bqSearchIndexed]] so the two cannot drift.
     */
-  private def bqAngularScore(dim: Int): Column =
-    (lit(1.0) -
-      aggregate(zip_with(col("bits"), col("qbits"),
-          (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
-        lit(0L), (acc, x) => acc + x).cast("double") /
-      lit(dim.toDouble)).as("cos_sim")
+  private def bqFunnel(bits: DataFrame, dim: Int, corpus: DataFrame,
+                       queries: Seq[(Long, Array[Float])], k: Int,
+                       cand: Int): DataFrame = {
+    val spark = bits.sparkSession
+    import spark.implicits._
+    val qbits = queries.sortBy(_._1)
+      .map { case (qid, qv) => (qid, packWordsLocal(qv, dim)) }
+      .toDF("query_id", "qbits")
+    val approx = bits.crossJoin(broadcast(qbits))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        (lit(1.0) -
+          aggregate(zip_with(col("bits"), col("qbits"),
+              (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
+            lit(0L), (acc, x) => acc + x).cast("double") /
+          lit(dim.toDouble)).as("cos_sim"))
+    exactRerank(topKPerQuery(approx, cand)
+        .select(col("query_id"), col("vec_id")),
+      corpus, broadcast(exactQueries(spark, queries)), k)
+  }
 
   /** Binary (sign-bit) quantization ANN — the cheapest rung of the
     * compression ladder (float32 → SQ8 (4×) → PQ (64×) → binary,
@@ -1993,40 +1640,29 @@ object Similarity {
     import spark.implicits._
     val dim = embeddings.select(size(col("embedding")).as("d"))
       .head().getInt(0)
-    val packed = embeddings.select(col("vec_id"),
-      signPackWords(col("embedding"), dim).as("bits"))
     val qrows = embeddings.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect().sortBy(_._1)
-    val qdf = qrows.toSeq
-      .map { case (qid, qv) => (qid, packWordsLocal(qv, dim)) }
-      .toDF("query_id", "qbits")
-    val approx = packed.crossJoin(broadcast(qdf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), bqAngularScore(dim))
-    val candidates = topKPerQuery(approx, cand)
-      .select(col("query_id"), col("vec_id"))
-    val queries = embeddings.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        l2norm(col("embedding")).as("qnorm"))
-    exactRerank(candidates, embeddings, queries, k)
+      .collect().toSeq
+    bqFunnel(embeddings.select(col("vec_id"),
+        signPackWords(col("embedding"), dim).as("bits")),
+      dim, embeddings, qrows, k, cand)
   }
 
-  /** The shared exact-cosine re-rank tail of the compression-ladder
-    * funnels: candidate (query_id, vec_id) pairs join the corpus
-    * floats (point-lookup of survivors only) and the broadcast query
-    * rows (query_id, qvec, qnorm), score at exact cosine, and rank
-    * through the bounded top-k. One definition serves the bq/sq8
-    * one-shots and both sidecar probes, so the re-rank semantics
-    * cannot drift between a rung and its at-rest form.
+  /** The shared exact-cosine re-rank tail of every two-stage funnel:
+    * candidate (query_id, vec_id) pairs join the corpus floats
+    * (point-lookup of survivors only) and the query rows (query_id,
+    * qvec, qnorm), score at exact cosine, and rank through the bounded
+    * top-k. One definition serves the SQ8/BQ/PQ one-shots, the sidecar
+    * probes and the prefix funnels, so the re-rank semantics cannot
+    * drift between a rung and its at-rest form. Broadcast hints are
+    * the caller's: a kNN join's query side may be corpus-sized.
     */
   private def exactRerank(candidates: DataFrame, corpus: DataFrame,
                           queries: DataFrame, k: Int): DataFrame = {
     val nn = corpus.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("norm"))
     val exact = candidates.join(nn, Seq("vec_id"))
-      .join(broadcast(queries.select(col("query_id"), col("qvec"),
-        col("qnorm"))), Seq("query_id"))
+      .join(queries, Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("embedding"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
@@ -2063,8 +1699,8 @@ object Similarity {
     * [[quantizeInt8]]) — no trained state, hence no drift guard: the
     * appended rows are encoded exactly as a full rebuild would encode
     * them, scan-local over the batch only. A wrong-dimension batch
-    * fails fast inside the scan (meta dim, when present — pre-meta
-    * layouts skip the check). Pass `sourcePath` once the source itself
+    * fails fast inside the scan against the recorded meta dim (a
+    * layout without meta fails by name). Pass `sourcePath` once the source itself
     * contains the batch rows and the build-once marker advances too,
     * so the next [[ensureSq8Index]] keeps the appended sidecar instead
     * of re-encoding the whole corpus. Marker: the batch row count.
@@ -2074,19 +1710,9 @@ object Similarity {
                                 batchId: Long,
                                 sourcePath: Option[String] = None): Unit =
     IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
-      // pre-meta layouts (built before the dim file existed) legally
-      // have no `meta` — that surfaces as an AnalysisException
-      // (PATH_NOT_FOUND / unable-to-infer-schema) and skips the guard.
-      // Anything else (transient IO, permissions) RETHROWS: silently
-      // disabling the guard would let a wrong-dim batch append and
-      // null probe scores downstream.
-      val metaDim: Option[Int] =
-        try Some(spark.read.parquet(s"${c.root}/meta").head().getInt(0))
-        catch {
-          case _: org.apache.spark.sql.AnalysisException => None
-        }
-      val guarded = metaDim.fold(batch)(dim =>
-        batch.withColumn("embedding", dimGuarded(dim, "SQ8 append")))
+      val dim = IndexGen.meta(spark, c.root).getInt(0)
+      val guarded =
+        batch.withColumn("embedding", dimGuarded(dim, "SQ8 append"))
       c.land("codes")(quantizeInt8(guarded)
         .select(col("vec_id"), col("codes"), col("scale"))
         .write.mode("overwrite").parquet(_))
@@ -2106,7 +1732,7 @@ object Similarity {
                                batchId: Long,
                                sourcePath: Option[String] = None): Unit =
     IndexGen.commitBatch(spark, dir, batchId, sourcePath) { c =>
-      val dim = spark.read.parquet(s"${c.root}/meta").head().getInt(0)
+      val dim = IndexGen.meta(spark, c.root).getInt(0)
       c.land("bits")(batch
         .withColumn("embedding", dimGuarded(dim, "BQ append"))
         .select(col("vec_id"),
@@ -2119,7 +1745,7 @@ object Similarity {
   def ensureSq8Index(spark: org.apache.spark.sql.SparkSession,
                      sourcePath: String, embeddings: DataFrame,
                      indexRoot: Option[String] = None): String =
-    ensureIndexDir(spark, sourcePath, "sq8", indexRoot)(
+    IndexGen.ensureIndexDir(spark, sourcePath, "sq8", indexRoot)(
       dir => writeSq8Index(embeddings, dir))
 
   /** Probe a [[writeSq8Index]] sidecar: the approximate-cosine scan
@@ -2135,27 +1761,8 @@ object Similarity {
                        dir: String, corpus: DataFrame,
                        queries: Seq[(Long, Array[Float])],
                        k: Int = 10, cand: Int = 50): DataFrame = {
-    import spark.implicits._
-    val qdf = queries.sortBy(_._1).map { case (qid, qv) =>
-      val qd = qv.map(_.toDouble)
-      (qid, qv.toSeq, math.sqrt(dotExactLocal(qd, qd)))
-    }.toDF("query_id", "qvec", "qnorm")
-    val sq8Root = IndexGen.root(spark, dir)
-    val rec = IndexCache.cached(s"$sq8Root#codes-df",
-      IndexCache.dirStamp(spark, s"$sq8Root/codes")) {
-      spark.read.parquet(s"$sq8Root/codes")
-    }
-      .withColumn("rvec",
-        transform(col("codes"), c => c.cast("double") * col("scale")))
-      .select(col("vec_id"), col("rvec"), l2norm(col("rvec")).as("rnorm"))
-    val approx = rec.crossJoin(broadcast(qdf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("rvec"), col("qvec")) /
-          (col("rnorm") * col("qnorm")), 4).as("cos_sim"))
-    val candidates = topKPerQuery(approx, cand)
-      .select(col("query_id"), col("vec_id"))
-    exactRerank(candidates, corpus, qdf, k)
+    sq8Funnel(IndexGen.sub(spark, IndexGen.root(spark, dir), "codes"),
+      corpus, exactQueries(spark, queries), k, cand)
   }
 
   /** Durable binary-quantization sidecar: (vec_id, packed sign words)
@@ -2195,30 +1802,13 @@ object Similarity {
                       dir: String, corpus: DataFrame,
                       queries: Seq[(Long, Array[Float])],
                       k: Int = 10, cand: Int = 50): DataFrame = {
-    import spark.implicits._
     val root = IndexGen.root(spark, dir)
-    val dim = IndexCache.cached(s"$root#bq-dim",
-      IndexCache.dirStamp(spark, s"$root/meta")) {
-      spark.read.parquet(s"$root/meta").head().getInt(0)
-    }
+    val dim = IndexGen.meta(spark, root).getInt(0)
     queries.foreach { case (qid, qv) =>
       require(qv.length == dim,
         s"query $qid dimension ${qv.length} != index dimension $dim") }
-    val qdf = queries.sortBy(_._1).map { case (qid, qv) =>
-      val qd = qv.map(_.toDouble)
-      (qid, packWordsLocal(qv, dim), qv.toSeq,
-        math.sqrt(dotExactLocal(qd, qd)))
-    }.toDF("query_id", "qbits", "qvec", "qnorm")
-    val approx = IndexCache.cached(s"$root#bits-df",
-      IndexCache.dirStamp(spark, s"$root/bits")) {
-      spark.read.parquet(s"$root/bits")
-    }
-      .crossJoin(broadcast(qdf.select(col("query_id"), col("qbits"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), bqAngularScore(dim))
-    val candidates = topKPerQuery(approx, cand)
-      .select(col("query_id"), col("vec_id"))
-    exactRerank(candidates, corpus, qdf, k)
+    bqFunnel(IndexGen.sub(spark, root, "bits"), dim, corpus, queries, k,
+      cand)
   }
 
   // ----------------------------------------------------------------
@@ -2271,13 +1861,7 @@ object Similarity {
     val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
     require(dim % m == 0, s"pq: dim $dim not divisible by m=$m")
     val dsub = dim / m
-    val alreadyCached =
-      embeddings.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned =
-      if (alreadyCached) embeddings
-      else embeddings
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPinned(embeddings) { pinned =>
       var books: Array[Array[Array[Double]]] = {
         // cast-to-double so the same trainer serves float corpora AND
         // the double-typed residual frame of the IVFADC path (float →
@@ -2315,27 +1899,26 @@ object Similarity {
           updated.getOrElse((j, c), books(j)(c)))
       }
       books
-    } finally { if (!alreadyCached) { pinned.unpersist(); () } }
+    }
   }
 
-  /** Per-subspace nearest-codeword ids (the PQ code) — a scan-local
-    * argmin per subspace over the broadcast codebooks, no shuffle.
-    */
   /** The ADC scoring pair (pqnorm, numerator) over an encoded frame
     * carrying `codes` (and `cid` under residual coding) joined to a
     * query row carrying the `dott` lookup tables (and `qc`). ONE
-    * definition serves every ADC consumer — [[pqTopK]], [[ivfPqTopK]],
-    * [[ivfPqResidualTopK]], and the durable-index probe
+    * definition serves every ADC consumer — [[pqTopK]], [[ivfPqTopK]]
+    * (raw and residual), and the durable-index probe
     * [[ivfPqSearchIndexed]] — so the algebra cannot drift between them
     * (a round-8 review found byte-identical inline copies). The
     * residual lookup tables (‖c‖² and the
     * c⟨j⟩·bookⱼ[k] cross terms) are built only under residual coding;
-    * a raw-coded probe pays nothing for them.
+    * a raw-coded probe pays nothing for them. The PQ approximation of
+    * a corpus vector's norm is √Σ_j ‖codeword_j‖² (plus the residual
+    * terms).
     */
   private def adcCols(books: Array[Array[Array[Double]]],
-                      normSq: Array[Array[Double]],
                       cents: Option[Array[Array[Double]]])
       : (Column, Column) = {
+    val normSq = books.map(_.map(c => dotExactLocal(c, c)))
     val codeAt = (j: Int) => element_at(col("codes"), j + 1)
     val adcTerms = books.indices.map(j =>
       element_at(element_at(col("dott"), j + 1), codeAt(j) + 1))
@@ -2369,6 +1952,44 @@ object Similarity {
     }
   }
 
+  /** The per-query ADC lookup rows every PQ probe broadcasts:
+    * (query_id, qnorm, dott) — `dott` the m×ksub subspace dot
+    * products against every codeword — and, under a coarse quantizer
+    * `(cents, nprobe, residual)`, one row per probed list carrying its
+    * `cid` and `qc` = q·c (the residual coding's per-list term; 0
+    * under raw coding).
+    */
+  private def adcQueries(spark: org.apache.spark.sql.SparkSession,
+                         queries: Seq[(Long, Array[Float])],
+                         books: Array[Array[Array[Double]]],
+                         coarse: Option[(Array[Array[Double]], Int, Boolean)])
+      : DataFrame = {
+    import spark.implicits._
+    val dsub = books(0)(0).length
+    val rows = queries.sortBy(_._1).map { case (qid, qv) =>
+      val qd = qv.map(_.toDouble)
+      val dott = books.indices.map { j =>
+        val qs = java.util.Arrays.copyOfRange(qd, j * dsub, (j + 1) * dsub)
+        books(j).map(c => dotExactLocal(qs, c)).toSeq
+      }
+      (qid, queryNorm(qv), dott, qv)
+    }
+    coarse match {
+      case None =>
+        rows.map { case (qid, n, dott, _) => (qid, n, dott) }
+          .toDF("query_id", "qnorm", "dott")
+      case Some((cents, nprobe, residual)) =>
+        rows.flatMap { case (qid, n, dott, qv) =>
+          nearestLists(qv, cents, nprobe).map(cid => (qid, n, dott,
+            if (residual) dotExactLocal(qv.map(_.toDouble), cents(cid))
+            else 0.0, cid))
+        }.toDF("query_id", "qnorm", "dott", "qc", "cid")
+    }
+  }
+
+  /** Per-subspace nearest-codeword ids (the PQ code) — a scan-local
+    * argmin per subspace over the broadcast codebooks, no shuffle.
+    */
   private def pqCodes(vec: Column,
                       books: Array[Array[Array[Double]]]): Column = {
     val dsub = books(0)(0).length
@@ -2397,23 +2018,11 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val books = pqCodebooks(embeddings, m, ksub, iters)
-    val dsub = books(0)(0).length
-    // ‖codeword‖² per (subspace, code): the PQ approximation of the
-    // corpus vector norm is √Σ_j ‖c_j‖²
-    val normSq = books.map(_.map(c => dotExactLocal(c, c)))
     val qrows = embeddings.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect().sortBy(_._1)
-    val qdf = qrows.toSeq.map { case (qid, qv) =>
-      val qd = qv.map(_.toDouble)
-      val qnorm = math.sqrt(dotExactLocal(qd, qd))
-      val dott = (0 until m).map { j =>
-        val qs = java.util.Arrays.copyOfRange(qd, j * dsub, (j + 1) * dsub)
-        books(j).map(c => dotExactLocal(qs, c)).toSeq
-      }
-      (qid, qnorm, dott)
-    }.toDF("query_id", "qnorm", "dott")
-    val (pqnormCol, adcNum) = adcCols(books, normSq, None)
+      .collect().toSeq
+    val qdf = adcQueries(spark, qrows, books, None)
+    val (pqnormCol, adcNum) = adcCols(books, None)
     val enc = embeddings
       .select(col("vec_id"), pqCodes(col("embedding"), books).as("codes"))
       .withColumn("pqnorm", pqnormCol)
@@ -2421,18 +2030,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
-    val candidates = topKPerQuery(adc, cand)
-      .select(col("query_id"), col("vec_id"))
-    val nn = embeddings.select(col("vec_id"), col("embedding"),
-      l2norm(col("embedding")).as("norm"))
-    val qexact = qrows.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
-      .toDF("query_id", "qvec")
-    val exact = candidates.join(nn, Seq("vec_id"))
-      .join(broadcast(qexact), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("embedding"), col("qvec")) /
-          (col("norm") * l2norm(col("qvec"))), 4).as("cos_sim"))
-    topKPerQuery(exact, k)
+    exactRerank(topKPerQuery(adc, cand).select(col("query_id"), col("vec_id")),
+      embeddings, broadcast(exactQueries(spark, qrows)), k)
   }
 
   /** The full FAISS-style IVF-PQ probe path: a coarse quantizer
@@ -2444,78 +2043,14 @@ object Similarity {
     * float math, no full scan — and with the corpus written
     * partitioned by list id ([[writeIvfIndex]]) each probe is a
     * partition-pruned read of code columns alone.
-    */
-  def ivfPqTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 10,
-                nlist: Int = 16, nprobe: Int = 4, itersIvf: Int = 3,
-                m: Int = 4, ksub: Int = 16, itersPq: Int = 2,
-                cand: Int = 50): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val alreadyCached =
-      embeddings.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned =
-      if (alreadyCached) embeddings
-      else embeddings
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cents = trainCentroids(pinned, nlist, itersIvf)
-      val books = pqCodebooks(pinned, m, ksub, itersPq)
-      val dsub = books(0)(0).length
-      val normSq = books.map(_.map(c => dotExactLocal(c, c)))
-      val qrows = pinned.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().sortBy(_._1)
-      val qdf = qrows.toSeq.flatMap { case (qid, qv) =>
-        val qd = qv.map(_.toDouble)
-        val qnorm = math.sqrt(dotExactLocal(qd, qd))
-        val dott = (0 until m).map { j =>
-          val qs = java.util.Arrays.copyOfRange(qd, j * dsub, (j + 1) * dsub)
-          books(j).map(c => dotExactLocal(qs, c)).toSeq
-        }
-        // nprobe nearest coarse lists: plain double left fold — the
-        // same IEEE op sequence as the oracle's sqDist list_reduce
-        val probes = cents.zipWithIndex.map { case (c, i) =>
-          var d = 0.0
-          var j2 = 0
-          while (j2 < c.length) {
-            val dl = qd(j2) - c(j2); d += dl * dl; j2 += 1
-          }
-          (d, i)
-        }.sortBy(identity).take(nprobe).map(_._2).toSeq
-        probes.map(cid => (qid, qnorm, dott, cid))
-      }.toDF("query_id", "qnorm", "dott", "cid")
-      val (pqnormCol, adcNum) = adcCols(books, normSq, None)
-      val enc = pinned
-        .select(col("vec_id"),
-          nearestCentroid(col("embedding"), cents).as("cid"),
-          pqCodes(col("embedding"), books).as("codes"))
-        .withColumn("pqnorm", pqnormCol)
-      val adc = enc.join(broadcast(qdf), Seq("cid"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
-      val candidates = topKPerQuery(adc, cand)
-        .select(col("query_id"), col("vec_id"))
-      val nn = pinned.select(col("vec_id"), col("embedding"),
-        l2norm(col("embedding")).as("norm"))
-      val qexact = qrows.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
-        .toDF("query_id", "qvec")
-      val exact = candidates.join(nn, Seq("vec_id"))
-        .join(broadcast(qexact), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(dot(col("embedding"), col("qvec")) /
-            (col("norm") * l2norm(col("qvec"))), 4).as("cos_sim"))
-      topKPerQuery(exact, k)
-    } finally { if (!alreadyCached) { pinned.unpersist(); () } }
-  }
-
-  /** RESIDUAL IVF-PQ — the actual IVFADC formulation (Jégou et al.
+    *
+    * `residual = true` — the actual IVFADC formulation (Jégou et al.
     * 2011 §IV): PQ codes encode the residual `x − c(x)` of each vector
     * against its coarse centroid, not the raw vector. Residuals have a
     * fraction of the raw vectors' energy (the coarse quantizer has
     * already explained the list structure), so the same 4-byte code
     * budget quantizes a much smaller cell — recall at equal budget is
-    * strictly better than raw-coding [[ivfPqTopK]], which is why FAISS
+    * strictly better than raw coding, which is why FAISS
     * defaults to residual encoding.
     *
     * ADC algebra: with x̂ = c + r̂ (r̂ the decoded residual),
@@ -2532,83 +2067,48 @@ object Similarity {
     * fixed association order, so the DuckDB oracle replays the whole
     * chain bit-for-bit.
     */
-  def ivfPqResidualTopK(embeddings: DataFrame, queryIds: Seq[Long],
-                        k: Int = 10, nlist: Int = 16, nprobe: Int = 4,
-                        itersIvf: Int = 3, m: Int = 4, ksub: Int = 16,
-                        itersPq: Int = 2, cand: Int = 50): DataFrame = {
+  def ivfPqTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 10,
+                nlist: Int = 16, nprobe: Int = 4, itersIvf: Int = 3,
+                m: Int = 4, ksub: Int = 16, itersPq: Int = 2,
+                cand: Int = 50, residual: Boolean = false): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val alreadyCached =
-      embeddings.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned =
-      if (alreadyCached) embeddings
-      else embeddings
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPinned(embeddings) { pinned =>
       val cents = trainCentroids(pinned, nlist, itersIvf)
-      val centsLit = typedlit(cents.map(_.toSeq).toSeq)
-      // residual frame (double-typed): x − c(x); PQ trains on THIS
-      val resid = pinned
-        .select(col("vec_id"),
-          nearestCentroid(col("embedding"), cents).as("cid"),
-          col("embedding"))
-        .select(col("vec_id"), col("cid"),
-          zip_with(col("embedding"), element_at(centsLit, col("cid") + 1),
-            (x, c) => x.cast("double") - c).as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // resid is passed AS the cached frame (not a derived select):
-        // pqCodebooks detects the existing persist and trains over it
-        // instead of re-caching a second copy of the residuals
-        val books = pqCodebooks(resid, m, ksub, itersPq)
-        val dsub = books(0)(0).length
-        val normSq = books.map(_.map(c => dotExactLocal(c, c)))
+      // PQ trains and encodes on the corpus itself under raw coding,
+      // on the double-typed residual frame x − c(x) under residual
+      // coding (pinned for the codebook passes)
+      val coded =
+        if (residual) pinned
+          .select(col("vec_id"),
+            nearestCentroid(col("embedding"), cents).as("cid"),
+            col("embedding"))
+          .select(col("vec_id"), col("cid"), residualOf(cents).as("embedding"))
+        else pinned
+      withPinned(coded) { src =>
+        val books = pqCodebooks(src, m, ksub, itersPq)
         val qrows = pinned.filter(col("vec_id").isin(queryIds: _*))
           .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-          .collect().sortBy(_._1)
-        val qdf = qrows.toSeq.flatMap { case (qid, qv) =>
-          val qd = qv.map(_.toDouble)
-          val qnorm = math.sqrt(dotExactLocal(qd, qd))
-          val dott = (0 until m).map { j =>
-            val qs =
-              java.util.Arrays.copyOfRange(qd, j * dsub, (j + 1) * dsub)
-            books(j).map(c => dotExactLocal(qs, c)).toSeq
-          }
-          val probes = cents.zipWithIndex.map { case (c, i) =>
-            var d = 0.0
-            var j2 = 0
-            while (j2 < c.length) {
-              val dl = qd(j2) - c(j2); d += dl * dl; j2 += 1
-            }
-            (d, i)
-          }.sortBy(identity).take(nprobe).map(_._2).toSeq
-          // q·c per probed list rides along with the lookup tables
-          probes.map(cid =>
-            (qid, qnorm, dott, dotExactLocal(qd, cents(cid)), cid))
-        }.toDF("query_id", "qnorm", "dott", "qc", "cid")
-        val (pqnormCol, adcNum) = adcCols(books, normSq, Some(cents))
-        val enc = resid
-          .select(col("vec_id"), col("cid"),
+          .collect().toSeq
+        val qdf = adcQueries(spark, qrows, books,
+          Some((cents, nprobe, residual)))
+        val (pqnormCol, adcNum) =
+          adcCols(books, if (residual) Some(cents) else None)
+        val enc = src
+          .select(col("vec_id"),
+            (if (residual) col("cid")
+             else nearestCentroid(col("embedding"), cents)).as("cid"),
             pqCodes(col("embedding"), books).as("codes"))
           .withColumn("pqnorm", pqnormCol)
         val adc = enc.join(broadcast(qdf), Seq("cid"))
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"),
             round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
-        val candidates = topKPerQuery(adc, cand)
-          .select(col("query_id"), col("vec_id"))
-        val nn = pinned.select(col("vec_id"), col("embedding"),
-          l2norm(col("embedding")).as("norm"))
-        val qexact = qrows.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
-          .toDF("query_id", "qvec")
-        val exact = candidates.join(nn, Seq("vec_id"))
-          .join(broadcast(qexact), Seq("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            round(dot(col("embedding"), col("qvec")) /
-              (col("norm") * l2norm(col("qvec"))), 4).as("cos_sim"))
-        topKPerQuery(exact, k)
-      } finally { resid.unpersist(); () }
-    } finally { if (!alreadyCached) { pinned.unpersist(); () } }
+        exactRerank(
+          topKPerQuery(adc, cand).select(col("query_id"), col("vec_id")),
+          pinned, broadcast(exactQueries(spark, qrows)), k)
+      }
+    }
   }
 
   /** Recall@k of an approximate kNN result against the exact one —
@@ -3427,7 +2927,7 @@ object Similarity {
         val dlt = x.cast("double") - w
         dlt * dlt
       }), lit(0.0d), (acc, v) => acc + v)
-    val scored = listsDf(spark, root)
+    val scored = IndexGen.sub(spark, root, "lists")
       .select(col("cid").cast("long").as("query_id"), col("vec_id"),
         (-dist).as("cos_sim"))
     topKPerQuery(scored, perCell)

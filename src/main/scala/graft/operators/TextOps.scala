@@ -594,19 +594,6 @@ object TextOps {
     }
   }
 
-  /** The postings sublayout as a CACHED DataFrame — the lexical
-    * sibling of [[graft.operators.Similarity.listsDf]]: per-probe
-    * `spark.read.parquet` re-walks the bucket tree and re-infers
-    * schema; the cached frame reloads only when an append perturbs
-    * the partition dirs' stamp (or maintenance invalidates in-JVM).
-    */
-  private def postingsDf(spark: org.apache.spark.sql.SparkSession,
-                         root: String): DataFrame =
-    IndexCache.cached(s"$root#postings-df",
-      IndexCache.dirStamp(spark, s"$root/postings")) {
-      spark.read.parquet(s"$root/postings")
-    }
-
   /** The gram index's persisted build parameters: (n, n_buckets,
     * hash function resolved from its recorded family tag). The single
     * read point of every probe/append — the function that screens is
@@ -616,16 +603,8 @@ object TextOps {
     */
   private def gramMeta(spark: org.apache.spark.sql.SparkSession,
                        root: String)
-      : (Int, Long, (Int, Column) => Column) =
-    IndexCache.cached(s"$root#gram-meta",
-      IndexCache.dirStamp(spark, s"$root/meta")) {
-      gramMetaUncached(spark, root)
-    }
-
-  private def gramMetaUncached(spark: org.apache.spark.sql.SparkSession,
-                               root: String)
       : (Int, Long, (Int, Column) => Column) = {
-    val meta = spark.read.parquet(s"$root/meta").head()
+    val meta = IndexGen.meta(spark, root)
     require(meta.schema.fieldNames.contains("hash_family"),
       s"gram index at $root predates the persisted hash-family tag — " +
         "its build family is unknowable; rebuild with writeGramIndex")
@@ -651,7 +630,7 @@ object TextOps {
       throw new IllegalArgumentException(
         "ensureGramIndex: hashFn is not a registered hash family — " +
           "use Dedup.xxSeeded / Dedup.md5Seeded"))
-    Similarity.ensureIndexDir(spark, sourcePath,
+    IndexGen.ensureIndexDir(spark, sourcePath,
       s"$kind-n$n-b$nBuckets-$tag", indexRoot)(
       dir => writeGramIndex(docs, dir, n, nBuckets, hashFn))
   }
@@ -694,23 +673,6 @@ object TextOps {
       Seq(batch.count().toDouble)
     }
 
-  /** Compact a gram index: postings rewrite to one file per bucket
-    * partition and the docdim to one file, published together as ONE
-    * new generation ([[IndexGen.advance]] — meta and the `_commits`
-    * replay guards copy forward, one pointer flip). Probe results are
-    * identical before and after, and a concurrent probe that resolved
-    * the prior generation reads it intact: compaction composes with
-    * live screening.
-    */
-  def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, maxRecordsPerFile: Long = 0L): Unit =
-    IndexGen.advance(spark, dir) { (oldRoot, staging) =>
-      Similarity.rewritePartitioned(spark, oldRoot, staging, "postings",
-        "bucket", maxRecordsPerFile)
-      Similarity.rewriteFlat(spark, oldRoot, staging, "docdim",
-        maxRecordsPerFile)
-    }
-
   /** [[contaminationMatrix]] against the durable gram index — the
     * whole (possibly new) eval battery screens WITHOUT a corpus
     * scan: suite gram dims build from the KB–MB benchmark side
@@ -739,15 +701,12 @@ object TextOps {
     val buckets = dim
       .select(pmod(col("h"), lit(nBuckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
-    postingsDf(spark, root)
+    IndexGen.sub(spark, root, "postings")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(dim), Seq("h"))
       .groupBy(col("doc_id"), col("bench"))
       .agg(count(lit(1)).as("matched_ngrams"))
-      .join(IndexCache.cached(s"$root#docdim-df",
-        IndexCache.dirStamp(spark, s"$root/docdim")) {
-        spark.read.parquet(s"$root/docdim")
-      }, Seq("doc_id"))
+      .join(IndexGen.sub(spark, root, "docdim"), Seq("doc_id"))
       .select(col("doc_id"), col("bench"), col("matched_ngrams"),
         col("n_ngrams"),
         round(col("matched_ngrams").cast("double") /
@@ -815,7 +774,7 @@ object TextOps {
       .select(pmod(col("h"), lit(nBuckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
     val nW = hs.count()
-    val candidates = postingsDf(spark, root)
+    val candidates = IndexGen.sub(spark, root, "postings")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(hs), Seq("h"))
       .groupBy(col("doc_id"))
@@ -2366,7 +2325,7 @@ object TextOps {
                       sourcePath: String, docs: DataFrame,
                       nBuckets: Int = 64,
                       indexRoot: Option[String] = None): String =
-    Similarity.ensureIndexDir(spark, sourcePath, "bm25", indexRoot)(
+    IndexGen.ensureIndexDir(spark, sourcePath, "bm25", indexRoot)(
       dir => writeBm25Index(docs, dir, nBuckets))
 
   /** The BM25 postings of `docs` — tokenize, per-(doc, term) tf and
@@ -2434,8 +2393,8 @@ object TextOps {
     * per touched bucket (and, for committed appends, a df delta
     * file), and a year of daily appends makes a probe open hundreds
     * of small files per pruned bucket — the same lakehouse
-    * small-files decay [[graft.operators.Similarity.compactIvfIndex]]
-    * closes on the ANN side. One generation advance
+    * small-files decay [[IndexGen.compact]] closes for every other
+    * format — but df must FOLD, not rewrite. One generation advance
     * ([[IndexGen.advance]]), content untouched, probe results
     * identical before and after:
     *
@@ -2467,7 +2426,7 @@ object TextOps {
       val fs = new org.apache.hadoop.fs.Path(staging)
         .getFileSystem(spark.sessionState.newHadoopConf())
       fs.mkdirs(new org.apache.hadoop.fs.Path(staging, "df_deltas"))
-      Similarity.rewritePartitioned(spark, oldRoot, staging, "postings",
+      IndexGen.rewritePartitioned(spark, oldRoot, staging, "postings",
         "bucket", maxRecordsPerFile)
     }
 
@@ -2556,7 +2515,7 @@ object TextOps {
         "the broadcast term dim would not stay KB-scale; batch the " +
         "query side")
     val buckets = guard.getSeq[Long](1)
-    val tf = postingsDf(spark, root)
+    val tf = IndexGen.sub(spark, root, "postings")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(distinctTerms), Seq("term"))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))

@@ -38,10 +38,16 @@ private[graft] object VersionedState {
   }
 
   /** Bootstrap: publish `frames` as version 0, producing batch -1 (no
-    * stream batch may claim it). */
+    * stream batch may claim it). Refuses a dir that already holds a
+    * version: version 0 publishes with `keep = 1`, which would prune a
+    * live stream's state. */
   def init(spark: org.apache.spark.sql.SparkSession, dir: String,
-           frames: Seq[(String, DataFrame)]): Unit =
-    publish(spark, fsOf(spark, dir), dir, frames, 0, -1L, keep = 1)
+           frames: Seq[(String, DataFrame)]): Unit = {
+    val fs = fsOf(spark, dir)
+    require(versions(fs, dir).isEmpty,
+      s"versioned state: $dir already initialized")
+    publish(spark, fs, dir, frames, 0, -1L, keep = 1)
+  }
 
   /** Replay-aware resolution for `batchId`: (version to read, its
     * producing batch, alreadyCommitted). Stream batch ids only grow,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup, Similarity, TextOps}
+import graft.operators.{Curation, Dedup, IndexGen, Similarity, TextOps}
 
 /** Dedup / similarity / text-op unit tests. */
 class DedupSimilaritySpec extends SparkSpecBase {
@@ -489,16 +489,18 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .select($"vec_id", $"cos_sim", $"rank").as[(Long, Double, Long)]
       .collect().toSeq
     // probing every list with the full corpus as candidates = brute force
-    val wide = Similarity.ivfPqResidualTopK(vecs, Seq(0L), k = 5, nlist = 4,
-      nprobe = 4, itersIvf = 2, m = 2, ksub = 4, itersPq = 2, cand = 100)
+    val wide = Similarity.ivfPqTopK(vecs, Seq(0L), k = 5, nlist = 4,
+      nprobe = 4, itersIvf = 2, m = 2, ksub = 4, itersPq = 2, cand = 100,
+      residual = true)
       .select($"vec_id", $"cos_sim", $"rank").as[(Long, Double, Long)]
       .collect().toSeq
     assert(wide == exact)
     // narrow probe: a restriction, so scores must still be exact ones
     val brute = Similarity.bruteForceTopK(vecs, Seq(0L), k = 59)
       .select($"vec_id", $"cos_sim").as[(Long, Double)].collect().toMap
-    val narrow = Similarity.ivfPqResidualTopK(vecs, Seq(0L), k = 5, nlist = 4,
-      nprobe = 1, itersIvf = 2, m = 2, ksub = 4, itersPq = 2, cand = 8)
+    val narrow = Similarity.ivfPqTopK(vecs, Seq(0L), k = 5, nlist = 4,
+      nprobe = 1, itersIvf = 2, m = 2, ksub = 4, itersPq = 2, cand = 8,
+      residual = true)
       .select($"vec_id", $"cos_sim").as[(Long, Double)].collect()
     assert(narrow.nonEmpty)
     narrow.foreach { case (id, sim) => assert(brute(id) == sim) }
@@ -510,9 +512,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     def recallSum(df: org.apache.spark.sql.DataFrame): Double =
       Similarity.recallAtK(df, Similarity.bruteForceTopK(vecs, ids, k = 5))
         .select(sum($"recall")).as[Double].head()
-    val res = recallSum(Similarity.ivfPqResidualTopK(vecs, ids, k = 5,
+    val res = recallSum(Similarity.ivfPqTopK(vecs, ids, k = 5,
       nlist = 4, nprobe = 4, itersIvf = 2, m = 2, ksub = 4, itersPq = 2,
-      cand = 10))
+      cand = 10, residual = true))
     val raw = recallSum(Similarity.ivfPqTopK(vecs, ids, k = 5,
       nlist = 4, nprobe = 4, itersIvf = 2, m = 2, ksub = 4, itersPq = 2,
       cand = 10))
@@ -752,7 +754,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val viaResIndex = Similarity.ivfPqSearchIndexed(spark, rdir, qvecs)
       .select($"query_id", $"vec_id", $"cos_sim", $"rank")
       .as[(Long, Long, Double, Long)].collect().toSeq
-    val resOneShot = Similarity.ivfPqResidualTopK(emb, Seq(0L, 1L, 2L))
+    val resOneShot = Similarity.ivfPqTopK(emb, Seq(0L, 1L, 2L), residual = true)
       .select($"query_id", $"vec_id", $"cos_sim", $"rank")
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(viaResIndex == resOneShot && viaResIndex.nonEmpty)
@@ -1519,7 +1521,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(probeA() == unionShot)
     // compaction: probe identical, docdim to one file, postings to
     // one per bucket partition, the replay-guard marker retained
-    TextOps.compactGramIndex(spark, dir)
+    IndexGen.compact(spark, dir)
     assert(probeA() == unionShot, "compaction changed probe results")
     assert(files("docdim").size == 1)
     val buckets = new java.io.File(iroot(dir), "postings").listFiles()
@@ -1735,6 +1737,15 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException](
       VersionedState.resolve(fs, dir, 3L))
     assert(e.getMessage.contains("no prior version survives"))
+    // a second init on a live dir fails by name and prunes nothing
+    // (version 0 publishes with keep = 1)
+    val reinit = intercept[IllegalArgumentException](
+      VersionedState.init(spark, dir, frame(9)))
+    assert(reinit.getMessage.contains(s"$dir already initialized"),
+      reinit.getMessage)
+    assert(VersionedState.versions(fs, dir) == Seq((1, 3L), (2, 5L)))
+    assert(VersionedState.read(spark, dir, 2, 5L).as[Int].collect().toSeq
+      == Seq(2))
     // named frames land side by side under one version
     val multi = s"$dir-multi"
     VersionedState.init(spark, multi,
@@ -3906,7 +3917,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
       k = 5, nprobe = 4).collect().toSeq
     val nBefore = Similarity.indexedCorpusCount(spark, dir)
 
-    Similarity.compactIvfIndex(spark, dir)
+    IndexGen.compact(spark, dir)
     assert(filesPerList().values.forall(_ == 1),
       s"compaction must leave one file per list: ${filesPerList()}")
     val after = Similarity.ivfSearchIndexed(spark, dir, Seq((900L, qv)),
@@ -3936,7 +3947,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(codeFiles() > 1)
     val codesBefore = spark.read.parquet(s"${iroot(sq8)}/codes")
       .orderBy($"vec_id").collect().toSeq
-    Similarity.compactSidecar(spark, sq8, "codes")
+    IndexGen.compact(spark, sq8)
     assert(codeFiles() == 1, s"expected one file, got ${codeFiles()}")
     assert(spark.read.parquet(s"${iroot(sq8)}/codes").orderBy($"vec_id")
       .collect().toSeq == codesBefore, "sidecar compaction changed content")
@@ -4270,7 +4281,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
         s"pruned probe rescored ($q,$v): $s vs exhaustive $es"))
     }
     // compaction (generation advance) preserves both probe forms
-    Similarity.compactPrefixIvfIndex(spark, dir)
+    IndexGen.compact(spark, dir)
     assert(Similarity.prefixIvfSearchIndexed(spark, dir, qvecs,
       nprobe = 8, cand = 10, k = 5)
       .as[(Long, Long, Double, Long)].collect().toSeq == exhaustive,
@@ -4473,8 +4484,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
         Similarity.appendToPrefixIndexCommitted(batch.sparkSession,
           pfxDir, batch, id)
         if (id > 0 && id % 2 == 0) {
-          Similarity.compactIvfIndex(batch.sparkSession, idxDir)
-          Similarity.compactPrefixIndex(batch.sparkSession, pfxDir)
+          IndexGen.compact(batch.sparkSession, idxDir)
+          IndexGen.compact(batch.sparkSession, pfxDir)
         }
         ()
       }
@@ -4487,11 +4498,11 @@ class DedupSimilaritySpec extends SparkSpecBase {
     } finally { if (q.isActive) q.stop() }
     // batch 2's compaction ran AFTER its own append: one file per
     // partition remains despite 3 committed appends' decay
-    assert(Similarity.maxFilesPerPartition(spark, idxDir, "lists") == 1,
+    assert(IndexGen.maxFilesPerPartition(spark, idxDir, "lists") == 1,
       s"lists decay not repaired: " +
-        s"${Similarity.maxFilesPerPartition(spark, idxDir, "lists")}")
-    assert(Similarity.maxFilesPerPartition(spark, pfxDir, "prefix") == 1 &&
-      Similarity.maxFilesPerPartition(spark, pfxDir, "full") == 1)
+        s"${IndexGen.maxFilesPerPartition(spark, idxDir, "lists")}")
+    assert(IndexGen.maxFilesPerPartition(spark, pfxDir, "prefix") == 1 &&
+      IndexGen.maxFilesPerPartition(spark, pfxDir, "full") == 1)
     // content intact: every appended row probe-visible, stats exact
     assert(Similarity.indexedCorpusCount(spark, idxDir) == 26L)
     val qv = spark.read
@@ -4727,6 +4738,166 @@ class DedupSimilaritySpec extends SparkSpecBase {
       assert(marker(3L).head == 0.0 && subDf().count() == rows2,
         s"$name: an empty batch must publish a zero marker and land nothing")
     }
+  }
+
+  test("IndexGen.compact over every durable index format: probes identical, one file per rewritten partition, markers and composite stats unchanged") {
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(59)
+    // two well-separated blobs: batches stay in-distribution for the
+    // IVF drift guards
+    def vec(i: Long): Array[Float] = {
+      val v = Array.fill(16)(rnd.nextGaussian().toFloat * 0.1f)
+      v((i % 2).toInt) += (if (i % 2 == 0) 3.0f else -3.0f)
+      v
+    }
+    val vecRows = (0L until 48L).map(i => (i, vec(i)))
+    def vecs(ids: Seq[Long]): DataFrame =
+      vecRows.filter(r => ids.contains(r._1)).toDF("vec_id", "embedding")
+    val corpus = vecs(0L until 48L)
+    val queries = Seq(3L, 10L).map(i => (900L + i, vecRows(i.toInt)._2))
+    val words = Seq("apple", "banana", "cherry", "durian", "elder", "fig",
+      "grape", "honeydew", "kiwi", "lime")
+    def docs(ids: Seq[Long]): DataFrame = ids.map { i =>
+      (i, (0 until 12).map(j => words(((i * 7 + j * 3) % 10).toInt))
+        .mkString(" "), "s")
+    }.toDF("doc_id", "text", "source")
+    val queryDocs = docs(Seq(2L, 5L)).select($"doc_id".as("query_id"),
+      $"text")
+    def ivfStats(d: String): Seq[Double] = {
+      val (n, s) = Similarity.readIvfStats(spark, d); Seq(n.toDouble, s)
+    }
+    def bm25Stats(d: String): Seq[Double] = {
+      val (n, t, _) = TextOps.readBm25Stats(spark, d)
+      Seq(n.toDouble, t.toDouble)
+    }
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    type Append = (String, DataFrame, Long) => Unit
+    // (format, vector data?, build, committed append, probe, compaction,
+    // rewritten sublayouts, composite stats reader)
+    val formats: Seq[(String, Boolean, String => Unit, Append,
+        String => DataFrame, String => Unit, Seq[String],
+        Option[String => Seq[Double]])] = Seq(
+      ("IVF", true,
+        Similarity.writeIvfIndex(vecs(0L until 40L), _, nlist = 2,
+          iters = 2),
+        (d, b, id) => Similarity.appendToIvfIndexCommitted(spark, d, b, id,
+          maxDriftRatio = 1e9),
+        d => Similarity.ivfSearchIndexed(spark, d, queries, k = 5,
+          nprobe = 2),
+        IndexGen.compact(spark, _), Seq("lists"), Some(ivfStats _)),
+      ("IVF-PQ", true,
+        Similarity.writeIvfPqIndex(vecs(0L until 40L), _, nlist = 2,
+          itersIvf = 2, m = 4, ksub = 4, itersPq = 1),
+        (d, b, id) => Similarity.appendToIvfIndexCommitted(spark, d, b, id,
+          maxDriftRatio = 1e9),
+        d => Similarity.ivfPqSearchIndexed(spark, d, queries, k = 5,
+          nprobe = 2, cand = 20),
+        IndexGen.compact(spark, _), Seq("lists"), Some(ivfStats _)),
+      ("prefix", true,
+        Similarity.writePrefixIndex(vecs(0L until 40L), _, prefixDim = 4),
+        (d, b, id) => Similarity.appendToPrefixIndexCommitted(spark, d, b,
+          id),
+        d => Similarity.prefixSearchIndexed(spark, d, queries, cand = 20,
+          k = 5),
+        IndexGen.compact(spark, _), Seq("prefix", "full"), None),
+      ("prefix-IVF", true,
+        Similarity.writePrefixIvfIndex(vecs(0L until 40L), _,
+          prefixDim = 4, nlist = 2, iters = 2),
+        (d, b, id) => Similarity.appendToPrefixIvfIndexCommitted(spark, d,
+          b, id, maxDriftRatio = 1e9),
+        d => Similarity.prefixIvfSearchIndexed(spark, d, queries,
+          nprobe = 2, cand = 20, k = 5),
+        IndexGen.compact(spark, _), Seq("prefix", "full"),
+        Some(ivfStats _)),
+      ("SQ8", true, Similarity.writeSq8Index(vecs(0L until 40L), _),
+        (d, b, id) => Similarity.appendToSq8IndexCommitted(spark, d, b, id),
+        d => Similarity.sq8SearchIndexed(spark, d, corpus, queries, k = 5,
+          cand = 20),
+        IndexGen.compact(spark, _), Seq("codes"), None),
+      ("BQ", true, Similarity.writeBqIndex(vecs(0L until 40L), _),
+        (d, b, id) => Similarity.appendToBqIndexCommitted(spark, d, b, id),
+        d => Similarity.bqSearchIndexed(spark, d, corpus, queries, k = 5,
+          cand = 20),
+        IndexGen.compact(spark, _), Seq("bits"), None),
+      ("BM25", false,
+        TextOps.writeBm25Index(docs(0L until 6L), _, nBuckets = 4),
+        (d, b, id) => TextOps.appendToBm25IndexCommitted(spark, d, b, id),
+        d => TextOps.bm25SearchIndexed(spark, d, queryDocs, k = 5),
+        TextOps.compactBm25Index(spark, _), Seq("postings"),
+        Some(bm25Stats _)),
+      ("gram", false,
+        TextOps.writeGramIndex(docs(0L until 6L), _, nBuckets = 4),
+        (d, b, id) => TextOps.appendToGramIndexCommitted(spark, d, b, id),
+        d => TextOps.contaminationIndexed(spark, d, docs(Seq(2L))),
+        IndexGen.compact(spark, _), Seq("postings", "docdim"), None))
+    for ((name, isVec, build, append, probe, compact, subs, stats) <-
+           formats) {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"compact-$name").toString
+      build(dir)
+      def batch(ids: Seq[Long]): DataFrame =
+        if (isVec) vecs(ids) else docs(ids)
+      append(dir, batch(40L until 44L), 1L)
+      append(dir, batch(44L until 48L), 2L)
+      def commits(): Map[String, String] =
+        new java.io.File(s"${iroot(dir)}/_commits").listFiles().toSeq
+          .filter(_.getName.startsWith("batch-"))
+          .map(f => f.getName -> new String(
+            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toMap
+      val probeBefore = rows(probe(dir))
+      val commitsBefore = commits()
+      val statsBefore = stats.map(_(dir))
+      assert(probeBefore.nonEmpty, s"$name: the probe must return rows")
+      assert(commitsBefore.keySet == Set("batch-1", "batch-2"))
+      assert(subs.exists(IndexGen.maxFilesPerPartition(spark, dir, _) > 1),
+        s"$name: two appends must show file decay")
+
+      compact(dir)
+      subs.foreach { sub =>
+        assert(IndexGen.maxFilesPerPartition(spark, dir, sub) == 1,
+          s"$name: $sub must hold one file per partition after compaction")
+      }
+      assert(rows(probe(dir)) == probeBefore,
+        s"$name: compaction changed the probe results")
+      assert(commits() == commitsBefore,
+        s"$name: compaction must carry the _commits markers forward")
+      assert(stats.map(_(dir)) == statsBefore,
+        s"$name: compaction moved the composite stats")
+    }
+  }
+
+  test("driver-side query norm equals the engine's l2norm bit for bit") {
+    // the probes score a driver-computed query norm against corpus
+    // norms computed by l2norm: any last-bit difference can flip the
+    // 4-decimal rounding of a cosine
+    val rnd = new scala.util.Random(2024)
+    val vs = (0 until 2000).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat)))
+    val engine = vs.toDF("vec_id", "embedding")
+      .select($"vec_id", Similarity.l2norm($"embedding"))
+      .as[(Long, Double)].collect().toMap
+    val off = vs.count { case (id, v) =>
+      java.lang.Double.doubleToLongBits(Similarity.queryNorm(v)) !=
+        java.lang.Double.doubleToLongBits(engine(id))
+    }
+    assert(off == 0, s"$off of ${vs.size} norms differ")
+  }
+
+  test("SQ8 committed append fails by name on a layout without meta") {
+    val dir = java.nio.file.Files.createTempDirectory("sq8-nometa").toString
+    val v = (0L until 8L).map(i => (i, Array.fill(8)(i.toFloat + 1f)))
+      .toDF("vec_id", "embedding")
+    Similarity.writeSq8Index(v, dir)
+    val meta = new java.io.File(s"${iroot(dir)}/meta")
+    org.apache.commons.io.FileUtils.deleteDirectory(meta)
+    val e = intercept[IllegalStateException](
+      Similarity.appendToSq8IndexCommitted(spark, dir,
+        (100L until 102L).map(i => (i, Array.fill(8)(1f)))
+          .toDF("vec_id", "embedding"), 1L))
+    assert(e.getMessage.contains("has no meta/"), e.getMessage)
+    assert(!new java.io.File(s"${iroot(dir)}/_commits/batch-1").exists,
+      "a refused batch must not commit")
   }
 
   test("single-writer lease: a second interleaved maintenance writer fails loudly with the named error, index intact; publish CAS stops a stale-lease loser from clobbering") {
