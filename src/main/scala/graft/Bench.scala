@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.rows.DamRows
+
 /** Benchmark main: one JSON line with per-query seconds.
   *
   * Measurement hygiene (the round-2 BENCH file was invalidated by
@@ -226,7 +228,7 @@ object Bench {
     def floorOf(batched: Boolean): Double = {
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        try { SparkEntry.streamReplayFloor(spark, sfDir, batched)
+        try { DamRows.streamReplayFloor(spark, sfDir, batched)
           .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>

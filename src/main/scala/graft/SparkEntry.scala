@@ -1,19 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Tables
-import graft.operators.{Analytics, Dedup, Detect, Layout, Relational, Sampling, Similarity, TextOps}
+import graft.rows.Registry
 
 /** Driver contract — one entry per implemented operator from SURVEY §2
   * plus the training-data-pipeline surface, each with an equivalent
-  * DuckDB oracle SQL over the same parquet tables.
+  * DuckDB oracle SQL over the same parquet tables. Each row is declared
+  * once, with its oracle, in its family's file under `graft.rows`.
   *
   * Parity conventions (both sides):
   *  - every query has a deterministic total ORDER BY;
   *  - double aggregates go through exact decimal summation (see
-  *    [[Relational.dsum]] / [[Similarity.dot]]) then round(…, n);
+  *    [[graft.operators.Relational.dsum]] /
+  *    [[graft.operators.Similarity.dot]]) then round(…, n);
   *  - computed integers are BIGINT on both sides;
   *  - raw event timestamps are emitted as formatted strings.
   */
@@ -23,6919 +23,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("dam_severity")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- //
-  // Shared oracle prelude: the DuckDB replica of Tables.activity     //
-  // (events → activity_logs-shaped view). Must stay in lockstep with //
-  // Tables.sqlTextFromEvent / Tables.activity / Classify.*           //
-  // ---------------------------------------------------------------- //
-
-  private val tableNamePatterns = Seq("from", "into", "update", "table", "join")
-    .map(kw => s"(?i)\\b$kw\\s+([a-zA-Z_][a-zA-Z0-9_]*)")
-
-  private def sqlRe(p: String): String = p.replace("'", "''")
-
-  /** DuckDB replica of Classify.operationType over column `c`. */
-  private def opCaseSql(c: String): String = {
-    val prefixes = Seq("SELECT" -> "SELECT", "INSERT" -> "INSERT",
-      "UPDATE" -> "UPDATE", "DELETE" -> "DELETE", "CREATE" -> "CREATE",
-      "DROP" -> "DROP", "ALTER" -> "ALTER", "TRUNCATE" -> "TRUNCATE",
-      "GRANT" -> "GRANT", "REVOKE" -> "REVOKE", "CALL" -> "PROCEDURE",
-      "EXEC" -> "PROCEDURE")
-    prefixes.map { case (p, label) =>
-      s"WHEN upper(ltrim($c)) LIKE '$p%' THEN '$label'"
-    }.mkString("CASE ", "\n         ", " ELSE 'OTHER' END")
-  }
-
-  /** DuckDB replica of Classify.tableNameOf over column `c`. */
-  private def tblExtractSql(c: String): String = tableNamePatterns
-    .map(p => s"NULLIF(regexp_extract($c, '${sqlRe(p)}', 1), '')")
-    .mkString("COALESCE(", ", ", ", 'unknown')")
-
-  /** DuckDB replica of Classify.usernameOf over column `c`. */
-  private def usernameSql(c: String): String =
-    s"""COALESCE(NULLIF(trim(regexp_extract($c, '^([^\\[]+)\\[', 1)), ''),
-      NULLIF(trim(regexp_extract($c, '^([^@\\[]+)@', 1)), ''), 'SYSTEM')"""
-
-  /** DuckDB replica of Tables.sqlTextFromEvent — the deterministic
-    * event→statement synthesis incl. the % 199 attack/compliance
-    * fixture battery. Shared by ActivityPrelude and dam_agent_parse.
-    */
-  private val SqlTextCaseSql: String = """CASE
-    WHEN event_id % 199 = 0 THEN 'TRUNCATE TABLE audit_log'
-    WHEN event_id % 199 = 1 THEN 'ALTER TABLE schema_migrations ADD COLUMN patched INT'
-    WHEN event_id % 199 = 2 THEN 'CREATE USER intruder IDENTIFIED BY ''p4ss'''
-    WHEN event_id % 199 = 3 THEN 'GRANT ALL PRIVILEGES ON secrets TO intruder'
-    WHEN event_id % 199 = 4 THEN 'SELECT id FROM sessions WHERE 1=1; WAITFOR DELAY ''0:0:5'''
-    WHEN event_id % 199 = 5 THEN 'SELECT 0x4445414442454546303132 AS payload'
-    WHEN event_id % 199 = 6 THEN 'SELECT table_name FROM information_schema.tables'
-    WHEN event_id % 199 = 7 THEN 'SELECT pg_sleep(5)'
-    WHEN event_id % 199 = 8 THEN 'SELECT benchmark(500000, md5(''x''))'
-    WHEN event_id % 199 = 9 THEN 'SELECT bank_account, salary FROM employees WHERE emp_id = ' || event_id
-    WHEN event_id % 199 = 10 THEN 'SELECT credit_card FROM payments WHERE order_id = ' || event_id
-    WHEN event_id % 199 = 11 THEN 'SELECT ssn FROM customers WHERE customer_id = ' || event_id
-    WHEN event_id % 199 = 12 THEN 'DROP TABLE temp_sessions'
-    WHEN event_id % 199 = 13 THEN 'EXEC xp_cmdshell ''dir'''
-    WHEN event_id % 199 = 14 THEN 'SELECT * FROM orders INTO OUTFILE ''/tmp/exfil.csv'''
-    WHEN event_id % 199 = 15 THEN 'UPDATE transactions SET status = ''void'' WHERE tx_id = ' || event_id
-    WHEN event_id % 199 = 16 THEN 'DELETE FROM financial WHERE fiscal_year = 1999'
-    WHEN event_type = 'click' THEN 'SELECT * FROM products WHERE id = ' || event_id
-    WHEN event_type = 'view' THEN 'SELECT name, price FROM products WHERE id = ' || event_id
-    WHEN event_type = 'signup' THEN 'INSERT INTO users (name, email) VALUES (''u' || user_id || ''', ''u' || user_id || '@example.com'')'
-    WHEN event_type = 'purchase' AND value > 190 THEN 'SELECT * FROM accounts WHERE 1=1 UNION SELECT password FROM users'
-    WHEN event_type = 'purchase' THEN 'UPDATE accounts SET balance = balance - 1 WHERE user_id = ' || user_id
-    ELSE 'DELETE FROM sessions WHERE token = ''' || md5(props) || '''' END"""
-
-  /** Mixture rates for the stratified-sampling fixture — shared by the
-    * Spark query and the generated oracle SQL.
-    */
-  private val SampleRates: Map[String, Double] =
-    Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1)
-
-  /** Token budgets for the budget-mix fixture (tokens per source,
-    * divisible by the 4 shard streams); unlisted sources get mixture
-    * weight 0. Sized so every listed source is genuinely cut at
-    * sf ≥ 0.01 (each source carries ≳1.1k tokens there).
-    */
-  private val TokenBudgets: Map[String, Long] =
-    Map("src0" -> 1200L, "src1" -> 800L, "src2" -> 400L, "src4" -> 100000L)
-
-  /** Epoch recipe for the data-mixing fixture (epochs per source):
-    * a >1 fractional source, a <1 fractional source, an exact-integer
-    * source, and an unlisted-source drop — the four recipe shapes.
-    */
-  private val EpochRecipe: Map[String, Double] =
-    Map("src0" -> 2.5, "src1" -> 0.25, "src3" -> 1.0)
-
-  private val ActivityPrelude: String = {
-    val tblExtract = tblExtractSql("sql_text")
-    s"""WITH ev AS (
-  SELECT *, $SqlTextCaseSql AS sql_text
-  FROM events
-), activity AS (
-  SELECT
-    event_id AS activity_id,
-    user_id,
-    'user_' || user_id AS username,
-    CASE WHEN user_id % 7 = 0 THEN 'Admin'
-         WHEN user_id % 3 = 0 THEN 'Guest'
-         ELSE 'User' END AS role,
-    ${opCaseSql("sql_text")} AS operation_type,
-    $tblExtract AS table_name,
-    CASE WHEN event_type = 'error' THEN 'Failed' ELSE 'Success' END AS operation_status,
-    sql_text AS operation_details,
-    '10.0.' || (user_id % 50) || '.' || (event_id % 250) AS ip_address,
-    ts AS access_timestamp,
-    CAST(floor(value) AS BIGINT) AS rows_affected,
-    md5(sql_text) AS query_hash
-  FROM ev
-)"""
-  }
-
-  private def sqlQuote(s: String) = "'" + s.replace("'", "''") + "'"
-
-  /** Dotted-quad IPv4 column → uint32 BIGINT (DuckDB twin of
-    * Analytics.ipToLong). */
-  private def ipIntSql(c: String): String =
-    s"""(CAST(split_part($c, '.', 1) AS BIGINT) * 16777216 +
-  CAST(split_part($c, '.', 2) AS BIGINT) * 65536 +
-  CAST(split_part($c, '.', 3) AS BIGINT) * 256 +
-  CAST(split_part($c, '.', 4) AS BIGINT))"""
-
-  /** Blacklist dim + temporal-validity filter (Detect.ipBlacklist /
-    * Detect.activeBlacklist), generated from the same seed seq as the
-    * Spark fixture. `abl` holds the ACTIVE entries (expires_at anchored
-    * to the newest activity timestamp, app.py:334).
-    */
-  /** `src` = the activity-shaped relation the expiry filter anchors on
-    * (Detect.activeBlacklist anchors on the frame classify receives —
-    * `activity` for the batch oracles, the admitted micro-batch for
-    * the stream replay).
-    */
-  /** `batchCol`: when set, the blacklist expiry anchor is the max
-    * timestamp of the row's OWN micro-batch (the streaming engine
-    * anchors Detect.activeBlacklist per foreachBatch frame), not the
-    * global max — `banchor` carries one anchor per batch for the
-    * severity CTE to join.
-    */
-  private def blacklistCtesOver(src: String,
-                                batchCol: Option[String] = None): String = {
-    val rows = Detect.BlacklistSeed.map { case (ip, _, exp) =>
-      s"(${sqlQuote(ip)}, TIMESTAMP '$exp')"
-    }.mkString(",\n  ")
-    val anchor = batchCol match {
-      case Some(bc) =>
-        s""", banchor AS (
-  SELECT $bc AS __bb, max(access_timestamp) AS mx FROM $src GROUP BY $bc
-)"""
-      case None =>
-        s""", abl AS (
-  SELECT ip_address FROM bl
-  WHERE expires_at > (SELECT max(access_timestamp) FROM $src)
-)"""
-    }
-    s""", bl(ip_address, expires_at) AS (VALUES
-  $rows
-)$anchor"""
-  }
-
-  private val BlacklistCtes: String = blacklistCtesOver("activity")
-
-  /** Firewall rule dim + the reference match/scope/first-match
-    * semantics (Detect.firewallMatch), generated from the seed seqs in
-    * Detect so the two sides cannot drift. `fw` holds the first-match
-    * row per activity in (priority, rule_id) order.
-    */
-  private def rulesCteOf(seed: Seq[Detect.RuleSeed]): String = {
-    val rows = seed.map {
-      case (id, pat, desc, mt, action, pri, u, ip, active) =>
-        def opt(v: Option[String]) =
-          v.map(sqlQuote).getOrElse("CAST(NULL AS VARCHAR)")
-        s"($id, ${sqlQuote(pat)}, ${sqlQuote(desc)}, ${sqlQuote(mt)}, " +
-          s"${sqlQuote(action)}, $pri, ${opt(u)}, ${opt(ip)}, $active)"
-    }.mkString(",\n  ")
-    s"""rules(rule_id, pattern, description, match_type, action, priority, applies_to_user, applies_to_ip, is_active) AS (VALUES
-  $rows
-)"""
-  }
-
-  private val FirewallRulesCte: String = rulesCteOf(Detect.FirewallRuleSeed)
-  private val ReferenceRulesCte: String =
-    rulesCteOf(Detect.ReferenceFirewallSeed)
-
-  /** `src`/`idCol`: the activity-shaped relation and its per-row key
-    * (the stream replay has no cross-engine activity_id — xxhash64 is
-    * engine-internal — so it partitions first-match on a synthesized
-    * row id instead).
-    */
-  private def matchedCteOf(rulesCte: String, src: String = "activity",
-                           idCol: String = "activity_id"): String = {
-    s""", $rulesCte, fw AS (
-  SELECT activity_id, username, ip_address, rule_id, description, action,
-    priority, substr(operation_details, 1, 500) AS query_snippet,
-    access_timestamp AS matched_at
-  FROM (
-    SELECT a.$idCol AS activity_id, a.username, a.ip_address, a.operation_details,
-      a.access_timestamp, r.rule_id, r.description, r.action, r.priority,
-      row_number() OVER (PARTITION BY a.$idCol
-        ORDER BY r.priority, r.rule_id) AS rn
-    FROM $src a JOIN rules r ON r.is_active
-      AND (NULLIF(r.applies_to_user, '') IS NULL OR r.applies_to_user = a.username)
-      AND (NULLIF(r.applies_to_ip, '') IS NULL OR r.applies_to_ip = a.ip_address)
-      AND (
-        (r.match_type = 'contains' AND contains(lower(a.operation_details), lower(r.pattern))) OR
-        (r.match_type = 'starts_with' AND starts_with(lower(a.operation_details), lower(r.pattern))) OR
-        (r.match_type = 'regex' AND regexp_matches(lower(a.operation_details),
-          CASE WHEN r.match_type = 'regex' THEN r.pattern ELSE 'a^' END, 'i')))
-  ) WHERE rn = 1
-)"""
-  }
-
-  private val FirewallMatchedCte: String = matchedCteOf(FirewallRulesCte)
-  private val ReferenceMatchedCte: String = matchedCteOf(ReferenceRulesCte)
-
-  /** Severity-rule CTE shared by dam_severity / dam_alerts oracles.
-    * Mirrors Detect.classify exactly: the fused injection alternation
-    * gate + first-matching pattern label (generated from the same
-    * InjectionPatterns seq, so the two sides cannot drift), one reason
-    * per matched sensitive column, the truthy-user_id rate guard, the
-    * expiry-filtered blacklist, and the flattened sequential severity
-    * fold (Detect.severityOrdinal — proven ≡ app.py:339-403's loop in
-    * DetectSpec). Non-suspicious rows carry NULL reasons (DDL default).
-    */
-  /** `src` = the activity-shaped input relation; `rateKey` = the
-    * rate-limit window/truthiness key (user_id for the batch view;
-    * username for the ingest pipeline — Ingest.start rate-keys on
-    * username so unknown users don't pool into one NULL bucket).
-    */
-  private def severityCtesOver(src: String, rateKey: String,
-                               batchCol: Option[String] = None): String = {
-    val inj = s"regexp_matches(ql, '${sqlRe(Detect.InjectionAlternation)}')"
-    val injLabel = Detect.InjectionPatterns.map { case (p, l) =>
-      s"WHEN regexp_matches(ql, '${sqlRe(p)}') THEN '${l.replace("'", "''")}'"
-    }.mkString("CASE ", "\n      ", " END")
-    val sensHit = Detect.SensitiveColumns
-      .map(c => s"contains(ql, '$c')").mkString("(", " OR ", ")")
-    val sensReasons = Detect.SensitiveColumns.map(c =>
-      s"CASE WHEN contains(ql, '$c') THEN 'Access to sensitive column: $c' END")
-      .mkString(",\n      ")
-    val sensTables = Detect.SensitiveTables.map(t => s"'$t'").mkString(", ")
-    // per-batch parameterization (multi-batch stream replay): the rate
-    // window partitions by (batch, key, minute) — a minute straddling a
-    // batch boundary counts each side separately, exactly what the
-    // per-micro-batch formulation computes — and the blacklist anchor
-    // joins the row's own batch
-    val ratePart = batchCol.map(bc => s"$bc, ").getOrElse("") +
-      s"$rateKey, date_trunc('minute', access_timestamp)"
-    val enFrom = batchCol match {
-      case Some(bc) => s"FROM $src a JOIN banchor ba ON ba.__bb = a.$bc"
-      case None => s"FROM $src a"
-    }
-    val r1Sql = batchCol match {
-      case Some(_) =>
-        "EXISTS (SELECT 1 FROM bl WHERE bl.ip_address = a.ip_address AND bl.expires_at > ba.mx)"
-      case None => "(ip_address IN (SELECT ip_address FROM abl))"
-    }
-    s"""${blacklistCtesOver(src, batchCol)}, en AS (
-  SELECT a.*, lower(operation_details) AS ql,
-    count(*) OVER (PARTITION BY $ratePart) AS events_per_minute,
-    $r1Sql AS r1,
-    (role = 'Guest' AND operation_type IN ('INSERT','UPDATE','DELETE','DROP','ALTER')) AS r2,
-    (role = 'User' AND table_name IN ($sensTables) AND operation_type IN ('SELECT','INSERT','UPDATE')) AS r3,
-    (hour(access_timestamp) < ${Detect.WorkingHoursStart} OR hour(access_timestamp) >= ${Detect.WorkingHoursEnd}) AS r4,
-    (COALESCE(rows_affected, 0) > 1000) AS r7
-  $enFrom
-), en2 AS (
-  SELECT *, $inj AS r5,
-    $sensHit AS r6,
-    ($rateKey IS NOT NULL AND CAST($rateKey AS VARCHAR) <> '0'
-      AND CAST($rateKey AS VARCHAR) <> ''
-      AND events_per_minute > 100) AS r8,
-    $injLabel AS inj_label
-  FROM en
-), sev AS (
-  SELECT *,
-    CASE WHEN r5 OR (r1 AND NOT r2) THEN 3
-         WHEN r6 THEN 2
-         WHEN r2 THEN 2
-         WHEN r3 OR r4 THEN 1
-         WHEN r7 THEN 2
-         WHEN r8 THEN 1
-         ELSE 0 END AS ord,
-    (COALESCE(r1, false) OR COALESCE(r2, false) OR COALESCE(r3, false)
-      OR COALESCE(r4, false) OR COALESCE(r5, false) OR COALESCE(r6, false)
-      OR COALESCE(r7, false) OR COALESCE(r8, false)) AS fired
-  FROM en2
-), classified AS (
-  SELECT *, CAST(ord AS BIGINT) AS severity_ord,
-    CASE WHEN ord >= 3 THEN 'Critical' WHEN ord = 2 THEN 'High'
-         WHEN ord = 1 THEN 'Medium' ELSE 'Low' END AS severity_level,
-    fired AS is_suspicious,
-    CASE WHEN fired THEN concat_ws('; ',
-      CASE WHEN r1 THEN 'IP address is blacklisted' END,
-      CASE WHEN r2 THEN 'Guest attempting write operation' END,
-      CASE WHEN r3 THEN 'User accessing sensitive table: ' || table_name END,
-      CASE WHEN r4 THEN 'Access outside working hours' END,
-      CASE WHEN r5 THEN 'Suspicious pattern: ' || inj_label END,
-      $sensReasons,
-      CASE WHEN r7 THEN 'Large data extraction: ' || rows_affected || ' rows' END,
-      CASE WHEN r8 THEN 'Rate limit exceeded: ' || events_per_minute || ' queries/min' END)
-    END AS suspicious_reasons
-  FROM sev
-)"""
-  }
-
-  private val SeverityCte: String = severityCtesOver("activity", "user_id")
-
-  /** Batch replay of the full E1 streaming pipeline (dam_stream_replay):
-    * feed synthesis → skip filter → DISTINCT-triple dedup (≡ the
-    * stream's activity_id dedup — the id is xxhash64 of the triple) →
-    * hex decode → classifiers → user-dim enrichment → firewall
-    * first-match gate (fixture rules; block-action hits excluded from
-    * logs/alerts, ALL hits in the blocks sink) → severity lattice
-    * rate-keyed on USERNAME (Ingest.start's key) → the three sinks as
-    * one normalized union. First-match needs a per-row key and
-    * xxhash64 is engine-internal, so a synthesized row_number stands
-    * in (never emitted).
-    */
-  /** The stream-replay oracle. `batched = false` replays the
-    * single-spool run (one micro-batch: global dedup, one rate window,
-    * one blacklist anchor). `batched = true` replays the 3-file spool
-    * (dam_stream_replay_batched): the feed splits into event-time
-    * tertiles (integer epoch-second arithmetic, identical in both
-    * engines), every 101st row from an earlier tertile arrives LATE in
-    * the final batch, and every 97th tertile-0 row is DUPLICATED into
-    * batch 1 — so the oracle must model the cross-batch semantics:
-    *
-    *  - LATE-EVENT filtering uses the watermark of the PREVIOUS
-    *    micro-batch (Spark's two-watermark semantics, SPARK-24634:
-    *    operators receive eventTimeWatermarkForLateEvents = the batch
-    *    k−1 value, which itself derives from stats through batch k−2),
-    *    so batch 2's late filter is the max PARSED event time of
-    *    batch 0, floored to milliseconds (EventTimeStats tracks
-    *    millis) — verified empirically: tertile-0 stragglers are
-    *    dropped, tertile-1 stragglers pass;
-    *  - duplicate arrivals collapse to their EARLIEST surviving batch:
-    *    a batch-1 copy of a batch-0 row finds the original's dedup
-    *    state still alive (eviction runs at the END of the batch, and
-    *    its eviction watermark derives from batch-0 stats), so it is
-    *    dropped — the fixture plants no third-arrival duplicates, so
-    *    post-eviction re-emission never occurs;
-    *  - rate windows and the blacklist expiry anchor are PER BATCH
-    *    (severityCtesOver(batchCol = Some)).
-    */
-  private def streamReplayOracleSql(batched: Boolean): String = {
-    val skipRe = sqlRe(graft.functions.Classify.SkipPattern)
-    val fmt = "%Y-%m-%d %H:%M:%S"
-    val feedCtes =
-      if (!batched)
-        s""", kept AS (
-  SELECT DISTINCT event_time, user_host, argument, 0 AS batch FROM raw
-  WHERE argument IS NOT NULL AND NOT regexp_matches(argument, '$skipRe')
-)"""
-      else
-        s""", bounds AS (
-  SELECT CAST(floor(epoch(min(event_time))) AS BIGINT) AS mn,
-    CAST(floor(epoch(max(event_time))) AS BIGINT) AS mx
-  FROM raw
-), rawb AS (
-  SELECT r.*,
-    CASE WHEN r.event_id % 101 = 0 AND bb < 2 THEN 2 ELSE bb END AS b,
-    (r.event_id % 97 = 0 AND bb = 0 AND r.event_id % 101 <> 0) AS dup_src
-  FROM (
-    SELECT raw.*,
-      least(2, CAST((CAST(floor(epoch(event_time)) AS BIGINT) - b.mn) * 3
-        // (b.mx - b.mn + 1) AS INTEGER)) AS bb
-    FROM raw, bounds b
-  ) r
-), feedb AS (
-  SELECT event_time, user_host, argument, b AS batch FROM rawb
-  UNION ALL
-  SELECT event_time, user_host, argument, 1 AS batch FROM rawb WHERE dup_src
-), arr AS (
-  SELECT * FROM feedb
-  WHERE argument IS NOT NULL AND NOT regexp_matches(argument, '$skipRe')
-), wmv AS (
-  -- the late filter of batch k uses the watermark PUBLISHED for batch
-  -- k-1, i.e. stats through batch k-2: batches 0 and 1 filter against
-  -- the initial 0 watermark (everything passes), batch 2 against
-  -- batch 0's max (millisecond-floored)
-  SELECT (SELECT (max(epoch_us(event_time)) // 1000) * 1000
-          FROM arr WHERE batch <= 0) AS w2
-), arrf AS (
-  SELECT a.* FROM arr a, wmv
-  WHERE a.batch <= 1
-     OR (a.batch = 2 AND epoch_us(a.event_time) >= wmv.w2)
-), kept AS (
-  SELECT event_time, user_host, argument, min(batch) AS batch
-  FROM arrf GROUP BY event_time, user_host, argument
-)"""
-    s"""WITH ev AS (
-  SELECT *, $SqlTextCaseSql AS sql_text
-  FROM events
-), raw AS (
-  SELECT event_id, CAST(ts AS TIMESTAMP) AS event_time,
-    'user_' || user_id || '[user_' || user_id || '] @ 10.0.' || (user_id % 50) || '.99 []' AS user_host,
-    CASE WHEN event_id % 7 = 0 THEN 'SET GLOBAL slow_query_log = 1'
-         WHEN event_id % 5 = 0 THEN '0x' || hex(sql_text)
-         ELSE sql_text END AS argument
-  FROM ev
-)$feedCtes, decoded AS (
-  SELECT row_number() OVER (ORDER BY event_time, user_host, argument) AS rid,
-    event_time, user_host, batch,
-    substr(CASE WHEN regexp_matches(argument, '^0x(?:[0-9a-fA-F]{2})+$$')
-                THEN decode(unhex(substr(argument, 3)))
-                ELSE argument END, 1, 1000) AS operation_details
-  FROM kept
-), udim AS (
-  SELECT DISTINCT user_id, 'user_' || user_id AS username,
-    CASE WHEN user_id % 7 = 0 THEN 'Admin'
-         WHEN user_id % 3 = 0 THEN 'Guest'
-         ELSE 'User' END AS role
-  FROM events
-), parsed AS (
-  SELECT rid, batch,
-    ${usernameSql("user_host")} AS username,
-    ${opCaseSql("operation_details")} AS operation_type,
-    ${tblExtractSql("operation_details")} AS table_name,
-    CASE WHEN contains(lower(operation_details), 'error')
-           OR contains(lower(operation_details), 'failed')
-         THEN 'Failed' ELSE 'Success' END AS operation_status,
-    operation_details,
-    COALESCE(NULLIF(regexp_extract(user_host, '@\\s*([0-9a-fA-F:.]+)', 1), ''), '127.0.0.1') AS ip_address,
-    event_time AS access_timestamp,
-    md5(operation_details) AS query_hash
-  FROM decoded
-), sen AS (
-  SELECT p.*, u.user_id, COALESCE(u.role, 'Guest') AS role,
-    CAST(NULL AS BIGINT) AS rows_affected
-  FROM parsed p LEFT JOIN udim u USING (username)
-)${matchedCteOf(FirewallRulesCte, "sen", "rid")}, admitted AS (
-  SELECT s.* FROM sen s
-  WHERE NOT EXISTS (SELECT 1 FROM fw
-    WHERE fw.activity_id = s.rid AND fw.action = 'block')
-)${severityCtesOver("admitted", "username",
-        if (batched) Some("batch") else None)}
-SELECT 'log' AS sink, username, ip_address, role, operation_type,
-  table_name, operation_status, operation_details AS detail, query_hash,
-  severity_ord, severity_level, is_suspicious, suspicious_reasons,
-  CAST(events_per_minute AS BIGINT) AS events_per_minute,
-  '' AS alert_type, '' AS alert_status, CAST(-1 AS BIGINT) AS rule_id,
-  strftime(access_timestamp, '$fmt') AS ts
-FROM classified
-UNION ALL
-SELECT 'alert', '', '', '', '', '', '', suspicious_reasons, '',
-  CAST(-1 AS BIGINT), severity_level, FALSE, '', CAST(-1 AS BIGINT),
-  CASE WHEN contains(suspicious_reasons, 'SQL Injection') THEN 'SQL Injection'
-       WHEN contains(suspicious_reasons, 'sensitive') THEN 'Data Leakage'
-       WHEN contains(suspicious_reasons, 'rate limit') THEN 'DoS Attempt'
-       ELSE 'Security Violation' END,
-  'New', CAST(-1 AS BIGINT), strftime(access_timestamp, '$fmt')
-FROM classified WHERE severity_ord >= 2
-UNION ALL
-SELECT 'block', username, ip_address, '', '', '', '', query_snippet, '',
-  CAST(-1 AS BIGINT), '', FALSE, '', CAST(-1 AS BIGINT), '', '',
-  CAST(rule_id AS BIGINT), strftime(matched_at, '$fmt')
-FROM fw
-ORDER BY sink, ts, username, detail"""
-  }
-
-  private val StreamReplayOracle: String = streamReplayOracleSql(false)
-  private val StreamReplayBatchedOracle: String = streamReplayOracleSql(true)
-
-  /** DuckDB replica of the document-profile column formulas. */
-  private val DocProfileCte: String =
-    s""", prof AS (
-  SELECT doc_id, lang, n_chars,
-    len(string_split_regex(trim(text), '\\s+')) AS ntok_i,
-    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpeish_tokens,
-    length(text) AS chars_i,
-    len(list_filter(string_split_regex(trim(text), '\\s+'),
-      t -> t IN ('the','a','of','and'))) AS stop_i,
-    len(list_filter(string_split_regex(trim(text), '\\s+'),
-      t -> t IN ('the','a'))) AS stop2_i,
-    length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS punct_i,
-    length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS cjk,
-    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fingerprint
-  FROM documents
-), profq AS (
-  SELECT *,
-    least(10000, (ntok_i * 10000) // 64) AS q_t1,
-    least(10000, (stop_i * 100000) // greatest(ntok_i, 1)) AS q_t2,
-    10000 - least(10000, (punct_i * 50000) // greatest(chars_i, 1)) AS q_t3
-  FROM prof
-)"""
-
-  private def act(sql: String): String = ActivityPrelude + "\n" + sql
-  private def sev(sql: String): String = ActivityPrelude + SeverityCte + "\n" + sql
-
-  /** Latest-event-per-user snapshot compaction: packed-struct max
-    * AGGREGATE (map-side partial, no window) keyed on (ts, event_id) —
-    * unique, so ≡ the oracle's row_number(ts DESC, event_id DESC).
-    */
-  private def eventSnapshot(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-        col("value"))).as("m"))
-      .select(col("user_id"), col("m.event_id").as("last_event_id"),
-        date_format(col("m.ts"), "yyyy-MM-dd HH:mm:ss").as("last_ts"),
-        col("m.event_type").as("last_type"),
-        round(col("m.value"), 4).as("last_value"))
-
-  /** Full-recompute SCD-2 replay (Analytics.scd2): shared by the
-    * batch row and the incremental-merge row — the merge leg's oracle
-    * is the full recompute itself.
-    */
-  private val Scd2FullSql: String =
-    """WITH o AS (
-  SELECT user_id, event_type, ts, event_id,
-    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-), ch AS (
-  SELECT user_id, event_type, ts, event_id FROM o
-  WHERE prev IS NULL OR prev <> event_type
-)
-SELECT user_id, event_type,
-  strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-  strftime(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-    '%Y-%m-%d %H:%M:%S') AS valid_to,
-  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-    AS BIGINT) AS version
-FROM ch ORDER BY user_id, version"""
-
-  /** Oracle face of [[eventSnapshot]] over an events predicate. */
-  private def snapshotSql(pred: String): String =
-    s"""SELECT user_id, event_id AS last_event_id,
-    strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_ts,
-    event_type AS last_type, round(value, 4) AS last_value
-  FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-          ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events WHERE $pred)
-  WHERE rn = 1"""
-
-  // ---------------------------------------------------------------- //
-  // ANN oracle building blocks: the LSH hyperplanes are fixed         //
-  // hash-derived constants, so DuckDB replays bucket assignment from  //
-  // the same literals; dot/norm use the decimal-exact product-sum     //
-  // pattern proven by emb_knn_brute. Projections replicate the Spark  //
-  // side's sequential double fold via list_reduce.                    //
-  // ---------------------------------------------------------------- //
-
-  /** Exact-decimal dot product of two DuckDB list expressions. */
-  private def dotSql(a: String, b: String): String =
-    s"""CAST(list_sum(list_transform(list_zip($a, $b),
-      s -> CAST(CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE) AS DECIMAL(30,15)))) AS DOUBLE)"""
-
-  private def normSql(e: String): String =
-    s"""sqrt(CAST(list_sum(list_transform($e,
-      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS DECIMAL(30,15)))) AS DOUBLE))"""
-
-  /** Signed projection of `e` onto fixed hyperplane p (plain double
-    * left fold — the same IEEE op sequence as Similarity.lshBucket's
-    * aggregate()).
-    */
-  private def planeProjSql(p: Int, e: String): String = {
-    val plane = Similarity.hyperplane(p, 64)
-      .map(_.toString).mkString("[", ", ", "]")
-    // COALESCE mirrors lshBucket's zero-fill for vectors shorter than
-    // the plane (list_zip pads with NULL, which would otherwise poison
-    // the whole fold)
-    s"""list_reduce(list_prepend(0.0, list_transform(list_zip($e, $plane),
-      s -> COALESCE(CAST(s[1] AS DOUBLE) * s[2], 0.0))), (a, b) -> a + b)"""
-  }
-
-  /** Sign-LSH bucket id over 8 fixed hyperplanes (Similarity.lshBucket). */
-  private def lshBucketSql(e: String): String =
-    (0 until 8).map { p =>
-      s"(CASE WHEN ${planeProjSql(p, e)} >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString("(", "\n      + ", ")")
-
-  /** Clone-id offset of the planted near-dup corpus (declared BEFORE
-    * [[PlantedNearDupCtes]] — object-init order makes a later val read
-    * as 0 here).
-    */
-  private val PlantedIdBase = 1000000L
-
-  /** Clone-id offsets for the media perturbation-recall fixtures —
-    * each a multiple of every modulus its fixture derives content
-    * from (image/audio: group 40 and delta/gain 5; video: group 16
-    * and window phase 3), so an offset clone keeps its source's
-    * group, pixel delta, gain class, and window start while carrying
-    * the perturbation.
-    */
-  private val MediaPerturbIdBase = 100000L
-  private val VideoPerturbIdBase = 99984L
-
-  /** Oracle for the image/audio perturbation-recall rows: the planted
-    * clones sit within the banded-Hamming radius by construction, so
-    * expected = hits = the arithmetic count of same-group pairs
-    * touching a clone.
-    */
-  private def mediaRecallOracleSql(maxId: Int, groups: Int): String =
-    s"""WITH m AS (
-  SELECT doc_id AS id FROM documents WHERE doc_id < $maxId
-  UNION ALL
-  SELECT doc_id + $MediaPerturbIdBase AS id FROM documents
-  WHERE doc_id < $maxId AND doc_id % 4 = 0
-), t AS (
-  SELECT x.id AS a, y.id AS b
-  FROM m x JOIN m y ON x.id % $groups = y.id % $groups AND x.id < y.id
-  WHERE x.id >= $MediaPerturbIdBase OR y.id >= $MediaPerturbIdBase
-)
-SELECT CAST(count(*) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  CAST(1.0 AS DOUBLE) AS recall
-FROM t"""
-
-
-  /** The E1 stream-replay runner behind dam_stream_replay (single
-    * micro-batch) and dam_stream_replay_batched (three micro-batches).
-    * Batched mode splits the spool into event-time tertiles (integer
-    * epoch-second arithmetic replayed by the oracle), moves every
-    * 101st earlier-tertile row into the LAST batch (a late arrival the
-    * watermark must drop), duplicates every 97th tertile-0 row into
-    * batch 1 (a cross-batch duplicate the watermark dedup must drop),
-    * and feeds the files one per micro-batch via maxFilesPerTrigger
-    * (modification times + lexicographic names force batch order).
-    */
-  /** The stream rows' FIXED-COST FLOOR (round-10 verdict #6): the
-    * IDENTICAL Ingest machinery — session spin-up aside, the same
-    * readStream, trigger cadence, RocksDB state init, checkpoint
-    * commits and three sinks — run over an EMPTY spool (schema-only
-    * parquet files, one per would-be micro-batch), so the measured
-    * time is pure stream startup + per-trigger overhead with zero
-    * pipeline work. [[graft.Bench]] times this beside the real
-    * `dam_stream_replay*` rows and records it as `stream_floor`, so
-    * the record separates the operating-mode fixed cost (13% of the
-    * battery, invariant to pipeline changes) from steady-state work
-    * a regression could actually hide in.
-    */
-  private[graft] def streamReplayFloor(s: SparkSession, d: String,
-                                       batched: Boolean): DataFrame =
-    streamReplayRun(s, d, batched, floorMode = true)
-
-  private def streamReplayRun(s: SparkSession, d: String,
-                              batched: Boolean,
-                              floorMode: Boolean = false): DataFrame = {
-    import graft.streaming.Ingest
-    val tmp = java.nio.file.Files.createTempDirectory("graft-replay")
-      .toString
-    val feedDir = s"$tmp/feed"
-    if (floorMode) {
-      // schema-only spool: one empty file (three, mtime-staggered, in
-      // batched mode) — every trigger fires, no row flows
-      val empty = Tables.generalLogFeed(s, d).limit(0)
-      if (!batched) empty.coalesce(1).write.mode("overwrite").parquet(feedDir)
-      else {
-        new java.io.File(feedDir).mkdirs()
-        for (k <- 0 to 2) {
-          val stage = s"$tmp/stage$k"
-          empty.coalesce(1).write.mode("overwrite").parquet(stage)
-          val pf = new java.io.File(stage).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          val dest = new java.io.File(feedDir, f"batch-$k%02d.parquet")
-          java.nio.file.Files.move(pf.toPath, dest.toPath)
-          dest.setLastModified(1600000000000L + k * 60000L)
-          ()
-        }
-      }
-    } else if (!batched)
-      Tables.generalLogFeed(s, d).coalesce(1)
-        .write.mode("overwrite").parquet(feedDir)
-    else {
-      val keyed = Tables.generalLogFeedKeyed(s, d)
-      val es = col("event_time").cast("long")
-      val bounds = keyed.agg(min(es).as("mn"), max(es).as("mx")).collect()(0)
-      val mn = bounds.getLong(0)
-      val span = bounds.getLong(1) - mn + 1
-      val assigned = keyed
-        .withColumn("__bb", least(lit(2),
-          floor(((es - mn) * 3).cast("double") / span).cast("int")))
-        .withColumn("__b",
-          when(col("event_id") % 101 === 0 && col("__bb") < 2, lit(2))
-            .otherwise(col("__bb")))
-        .persist()
-      new java.io.File(feedDir).mkdirs()
-      val cols = Seq(col("event_time"), col("user_host"), col("argument"))
-      for (k <- 0 to 2) {
-        val part = assigned.filter(col("__b") === k).select(cols: _*)
-        val rows =
-          if (k == 1) part.unionByName(
-            assigned.filter(col("__bb") === 0 && col("event_id") % 97 === 0 &&
-              col("event_id") % 101 =!= 0).select(cols: _*))
-          else part
-        val stage = s"$tmp/stage$k"
-        rows.coalesce(1).write.mode("overwrite").parquet(stage)
-        val pf = new java.io.File(stage).listFiles()
-          .find(_.getName.startsWith("part-")).get
-        val dest = new java.io.File(feedDir, f"batch-$k%02d.parquet")
-        java.nio.file.Files.move(pf.toPath, dest.toPath)
-        dest.setLastModified(1600000000000L + k * 60000L)
-        ()
-      }
-      assigned.unpersist()
-      ()
-    }
-    // Stream-side SESSION CLONE with state/shuffle partitions sized
-    // to the micro-batch volume (round-12 verdict #4): the floor's
-    // dominant per-trigger cost is one state-store lifecycle (RocksDB
-    // open + scan + changelog commit) PER STATE PARTITION per batch,
-    // and the caller's 32 analytic shuffle partitions mean 32 state
-    // stores for a ≤15k-row micro-batch. 8 keeps the same semantics
-    // (dedup results are partition-count-invariant) at a quarter of
-    // the fixed cost; a 100 TB deployment raises
-    // spark.graft.stream.statePartitions with its executor count —
-    // the dial is a conf, not a constant. Cloned so the dial never
-    // leaks into the caller's session.
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.stream.statePartitions")
-        .getOrElse("8"))
-    // forward the caller's sink-file dial into the clone (newSession()
-    // starts from the context defaults, not the caller's runtime conf)
-    s.conf.getOption("spark.graft.stream.sinkFiles")
-      .foreach(v => ss.conf.set("spark.graft.stream.sinkFiles", v))
-    val users = Tables.events(ss, d).select(col("user_id")).distinct()
-      .select(col("user_id"),
-        concat(lit("user_"), col("user_id")).as("username"),
-        when(col("user_id") % 7 === 0, "Admin")
-          .when(col("user_id") % 3 === 0, "Guest")
-          .otherwise("User").as("role"))
-    val reader = ss.readStream.schema(Tables.GeneralLogSchema)
-    val source = (if (batched) reader.option("maxFilesPerTrigger", "1")
-                  else reader).parquet(feedDir)
-    val q = Ingest.start(ss, source, users,
-      Ingest.IngestConfig(s"$tmp/logs", s"$tmp/alerts", s"$tmp/ckpt",
-        triggerMs = 0L, blocksDir = Some(s"$tmp/blocks")))
-    try q.processAllAvailable() finally q.stop()
-    // a zero-row replay (the floor run's empty spool) never creates
-    // the sink dirs at all — materialize them so the schema-explicit
-    // reads below contribute zero rows instead of PATH_NOT_FOUND
-    Seq("logs", "alerts", "blocks").foreach { sub =>
-      new java.io.File(s"$tmp/$sub").mkdirs(); ()
-    }
-      val eS = lit("").cast("string")
-      val eL = lit(-1L)
-      val eB = lit(false)
-      // explicit sink schemas: an empty micro-batch leaves a sink dir
-      // holding only _SUCCESS, and schema INFERENCE would throw there
-      // instead of contributing zero rows
-      import org.apache.spark.sql.types._
-      val logsSchema = StructType(Seq(
-        StructField("username", StringType), StructField("ip_address", StringType),
-        StructField("role", StringType), StructField("operation_type", StringType),
-        StructField("table_name", StringType), StructField("operation_status", StringType),
-        StructField("operation_details", StringType), StructField("query_hash", StringType),
-        StructField("activity_id", LongType), StructField("user_id", LongType),
-        StructField("rows_affected", LongType),
-        StructField("access_timestamp", TimestampType),
-        StructField("events_per_minute", LongType),
-        StructField("severity_ord", LongType), StructField("severity_level", StringType),
-        StructField("suspicious_reasons", StringType),
-        StructField("is_suspicious", BooleanType)))
-      val alertsSchema = StructType(Seq(
-        StructField("activity_id", LongType), StructField("alert_type", StringType),
-        StructField("severity", StringType), StructField("description", StringType),
-        StructField("status", StringType), StructField("created_at", TimestampType)))
-      val blocksSchema = StructType(Seq(
-        StructField("rule_id", IntegerType), StructField("username", StringType),
-        StructField("ip_address", StringType), StructField("query_snippet", StringType),
-        StructField("blocked_at", TimestampType)))
-      val logs = s.read.schema(logsSchema).parquet(s"$tmp/logs").select(
-        lit("log").as("sink"), col("username"), col("ip_address"),
-        col("role"), col("operation_type"), col("table_name"),
-        col("operation_status"), col("operation_details").as("detail"),
-        col("query_hash"), col("severity_ord"), col("severity_level"),
-        col("is_suspicious"), col("suspicious_reasons"),
-        col("events_per_minute").cast("long").as("events_per_minute"),
-        eS.as("alert_type"), eS.as("alert_status"), eL.as("rule_id"),
-        fmtTs(col("access_timestamp")).as("ts"))
-      val alerts = s.read.schema(alertsSchema).parquet(s"$tmp/alerts").select(
-        lit("alert").as("sink"), eS.as("username"), eS.as("ip_address"),
-        eS.as("role"), eS.as("operation_type"), eS.as("table_name"),
-        eS.as("operation_status"), col("description").as("detail"),
-        eS.as("query_hash"), eL.as("severity_ord"),
-        col("severity").as("severity_level"), eB.as("is_suspicious"),
-        eS.as("suspicious_reasons"), eL.as("events_per_minute"),
-        col("alert_type"), col("status").as("alert_status"),
-        eL.as("rule_id"), fmtTs(col("created_at")).as("ts"))
-      val blocks = s.read.schema(blocksSchema).parquet(s"$tmp/blocks").select(
-        lit("block").as("sink"), col("username"), col("ip_address"),
-        eS.as("role"), eS.as("operation_type"), eS.as("table_name"),
-        eS.as("operation_status"), col("query_snippet").as("detail"),
-        eS.as("query_hash"), eL.as("severity_ord"),
-        eS.as("severity_level"), eB.as("is_suspicious"),
-        eS.as("suspicious_reasons"), eL.as("events_per_minute"),
-        eS.as("alert_type"), eS.as("alert_status"),
-        col("rule_id").cast("long").as("rule_id"),
-        fmtTs(col("blocked_at")).as("ts"))
-      // pin the union into the session's block store, then delete the
-      // spool/checkpoint/sink files — a lazily-read temp dir would leak
-      // one full copy of the feed + sinks per invocation (bench runs
-      // each query several times)
-      val pinned = logs.unionByName(alerts).unionByName(blocks)
-        .localCheckpoint(true)
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(deleteRec))
-        f.delete(); ()
-      }
-      deleteRec(new java.io.File(tmp))
-      pinned.orderBy(col("sink"), col("ts"), col("username"), col("detail"))
-  }
-
-  /** One (hits, expected, recall) row: how much of an arithmetic
-    * truth-pair frame `truth(a, b)` the measured pair frame
-    * `found(doc_a, doc_b)` recovered — the media analog of
-    * Similarity.nearDupPairRecall.
-    */
-  private def mediaPairRecall(truth: DataFrame, found: DataFrame): DataFrame =
-    truth.join(found.select(col("doc_a").as("a"), col("doc_b").as("b"),
-        lit(1).as("__hit")), Seq("a", "b"), "left")
-      .agg(count(col("__hit")).as("hits"), count(lit(1)).as("expected"))
-      .select(col("hits"), col("expected"),
-        round(col("hits").cast("double") /
-          greatest(col("expected"), lit(1L)).cast("double"), 4).as("recall"))
-
-  /** The Count-Min contract row behind `ev_cms_counts`: one
-    * distributive pass builds the sketch; the checked surface is the
-    * CMS CONTRACT — est ≥ true (one-sided) and est ≤ true + 2·⌈ε·N⌉.
-    * The doubled slack is deliberate (round-6 advice): the upper bound
-    * holds per point query only with confidence δ = 0.999, so the
-    * single-ε flag could flip spuriously on an unlucky new scale
-    * factor with no code bug; 2ε keeps the gate failing only on real
-    * breakage (seed drift, merge bugs) while remaining far below any
-    * use of the estimate.
-    *
-    * Bounded-enum contract, EXECUTABLE (round-6 verdict #5): reading
-    * per-key estimates off the driver-held sketch is only sane for a
-    * bounded dim, so the domain fetch is LIMIT maxEnum+1 and the query
-    * fails fast past the cap instead of collecting an unbounded domain
-    * to the driver. (The same discipline bounds `Dedup.bloomNovel`'s
-    * `expectedItems`: the serialized sketch is driver-held and
-    * broadcast, sized for the NEW batch — never the corpus.)
-    */
-  private[graft] def cmsCounts(ev: DataFrame, maxEnum: Int = 64): DataFrame = {
-    val head = ev.agg(
-      count_min_sketch(col("event_type"), lit(0.0005d), lit(0.999d),
-        lit(42)).as("cms"),
-      count(lit(1)).as("n")).head()
-    val cms = org.apache.spark.util.sketch.CountMinSketch
-      .readFrom(head.getAs[Array[Byte]]("cms"))
-    val slack = 2L * math.ceil(0.0005d * head.getAs[Long]("n")).toLong
-    val types = boundedEnumDomain(ev, maxEnum)
-    val estMap = map(types.flatMap(t =>
-      Seq(lit(t), lit(cms.estimateCount(t)))): _*)
-    ev.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("exact_count"))
-      .select(col("event_type"), col("exact_count"),
-        (element_at(estMap, col("event_type")) >= col("exact_count"))
-          .as("one_sided"),
-        (element_at(estMap, col("event_type")) <=
-          col("exact_count") + lit(slack)).as("within_eps"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Sorted bounded grouping domain for driver-held estimate maps:
-    * LIMIT maxEnum+1 fetch, fail-fast past the cap or on a null key —
-    * the executable bounded-enum contract shared by [[cmsCounts]] and
-    * [[cmsMergeContract]].
-    */
-  private def boundedEnumDomain(ev: DataFrame, maxEnum: Int): Seq[String] = {
-    val types = ev.select(col("event_type")).distinct()
-      .limit(maxEnum + 1).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getString(0))
-    // a null group would read a MISSING map key downstream and
-    // silently null the contract flags instead of failing them
-    require(!types.contains(null),
-      "cmsCounts: null event_type — the bounded-enum contract needs a " +
-        "non-null grouping column")
-    require(types.length <= maxEnum,
-      s"cmsCounts: grouping domain exceeds the bounded-enum contract " +
-        s"(> $maxEnum distinct values) — driver-held estimate maps are " +
-        "for bounded dims only")
-    types.toIndexedSeq.sorted
-  }
-
-  /** The MERGEABLE-CMS contract row (`ev_cms_merge` — the CMS analog
-    * of `ev_reach_merge` on the same daily-pipeline story): the
-    * corpus/batch split is sketched in ONE pass (two conditional
-    * aggregates; the sketch skips the nulls the `when` leaves on the
-    * other part's rows), the halves merge driver-side via
-    * [[graft.operators.Analytics.mergeCms]], and an INDEPENDENTLY
-    * built full-stream sketch is the yardstick. The merge contract is
-    * the strongest of the sketch family: CMS counters add
-    * element-wise at seed-determined hashes, so every per-key merged
-    * estimate must be BIT-IDENTICAL to the full recompute's (not
-    * merely within bounds) — on top of [[cmsCounts]]'s one-sided and
-    * 2ε flags, now checked on the MERGED estimate.
-    */
-  private[graft] def cmsMergeContract(ev: DataFrame,
-                                      maxEnum: Int = 64): DataFrame = {
-    val eps = 0.0005d
-    val parts = ev.agg(
-      count_min_sketch(when(col("event_id") % 5 =!= 0, col("event_type")),
-        lit(eps), lit(0.999d), lit(42)).as("cms_corpus"),
-      count_min_sketch(when(col("event_id") % 5 === 0, col("event_type")),
-        lit(eps), lit(0.999d), lit(42)).as("cms_batch"),
-      count(lit(1)).as("n")).head()
-    val merged = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      Analytics.mergeCms(
-        parts.getAs[Array[Byte]]("cms_corpus"),
-        parts.getAs[Array[Byte]]("cms_batch")))
-    val full = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      Analytics.cmsSketch(ev).head().getAs[Array[Byte]]("cms"))
-    val slack = 2L * math.ceil(eps * parts.getAs[Long]("n")).toLong
-    val types = boundedEnumDomain(ev, maxEnum)
-    val mergedMap = map(types.flatMap(t =>
-      Seq(lit(t), lit(merged.estimateCount(t)))): _*)
-    val fullMap = map(types.flatMap(t =>
-      Seq(lit(t), lit(full.estimateCount(t)))): _*)
-    ev.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("exact_count"))
-      .select(col("event_type"), col("exact_count"),
-        (element_at(mergedMap, col("event_type")) ===
-          element_at(fullMap, col("event_type"))).as("merge_equals_full"),
-        (element_at(mergedMap, col("event_type")) >= col("exact_count"))
-          .as("one_sided"),
-        (element_at(mergedMap, col("event_type")) <=
-          col("exact_count") + lit(slack)).as("within_eps"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Rungs of Similarity.GeometryLadder the oracle replays. Three
-    * rungs cover corpora to 4,096 vectors — 8× headroom over sf0.1's
-    * planted 480; a larger fixture selects NULL geometry, emptying the
-    * blocking and failing the row LOUDLY rather than silently
-    * replaying the wrong rung. Extending is mechanical: append the
-    * rung and the plane VALUES rows grow to the new r · bands.
-    */
-  private val OracleGeometryRungs: Seq[(Long, Int, Int)] =
-    Seq((256L, 6, 6), (1024L, 8, 9), (4096L, 10, 13))
-
-  /** Shared replay of the planted near-dup corpus + the banded
-    * OR-amplified blocking (plantedEmbeddings +
-    * Similarity.embeddingNearDups at the corpus-size-selected
-    * GeometryLadder rung): ends with `nn(vec_id, embedding, norm)`
-    * and `banded(vec_a, vec_b, cos_sim)` — the verified candidate
-    * pairs. The geometry is data-dependent on BOTH sides from the
-    * same input (the planted corpus count), so the engines cannot
-    * diverge on rung selection; the plane matrix is a VALUES table
-    * joined under `idx < r · bands`, so only the selected rung's
-    * projections are computed.
-    */
-  /** The planted near-dup embedding corpus as a DuckDB CTE — the SQL
-    * twin of [[plantedEmbeddings]], shared by the banded near-dup and
-    * SemDeDup oracles.
-    */
-  private def PlantedCorpusCte: String =
-    s"""pe AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0
-  UNION ALL
-  SELECT a.vec_id + $PlantedIdBase AS vec_id,
-    list_transform(list_zip(a.embedding, b.embedding),
-      s -> CAST(CAST(s[1] AS DOUBLE) + 0.25 * CAST(s[2] AS DOUBLE) AS FLOAT)) AS embedding
-  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-  WHERE a.vec_id % 25 = 0
-)"""
-
-  /** Rungs of Similarity.semDedupNlist the oracle replays (nlist =
-    * smallest power of two with n/k ≤ 64) — enumerated to 4,096
-    * vectors, 8× headroom over sf0.1's planted 480; a larger corpus
-    * selects NULL → empty c0 → the row fails LOUDLY rather than
-    * silently replaying the wrong rung (the OracleGeometryRungs
-    * stance). Extending is mechanical: append rungs.
-    */
-  private val SemDedupOracleRungs: Seq[(Long, Int)] =
-    Seq((64L, 1), (128L, 2), (256L, 4), (512L, 8),
-      (1024L, 16), (2048L, 32), (4096L, 64))
-
-  private def semDedupNlistCaseSql: String =
-    SemDedupOracleRungs
-      .map { case (hi, k) => s"WHEN n <= $hi THEN $k" }
-      .mkString("CASE ", " ", " ELSE NULL END")
-
-  /** The clustered-embedding fixture as a DuckDB CTE — the SQL twin
-    * of [[clusteredEmbeddings]] (same float-cast arithmetic as the
-    * planted-clone CTE, so the engines agree bit-for-bit).
-    */
-  private def ClusteredCorpusCte: String =
-    s"""ce AS MATERIALIZED (
-  SELECT e.vec_id, e.label,
-    list_transform(list_zip(c.embedding, e.embedding),
-      s -> CAST(CAST(s[1] AS DOUBLE) + 0.25 * CAST(s[2] AS DOUBLE) AS FLOAT)) AS embedding
-  FROM embeddings e JOIN embeddings c ON c.vec_id = (e.vec_id % 8) * 50
-)"""
-
-  /** DuckDB replay of [[graft.operators.Similarity.semDedup]] over the
-    * planted corpus: the shared Lloyd k-means chain assigns clusters
-    * (k DATA-DEPENDENT — the semDedupNlist rung derived from the same
-    * corpus count on both engines), then the order-free dominance
-    * prune drops every vector with cosine ≥ minCos to a smaller-id
-    * vector in the same cluster.
-    */
-  private def semDedupOracleSql(iters: Int, dim: Int,
-                                minCos: Double,
-                                sampleMod: Long = 4): String =
-    s"""WITH $PlantedCorpusCte,
-pes AS MATERIALIZED (
-  SELECT vec_id, embedding FROM pe WHERE vec_id % $sampleMod = 0
-),
-${kmeansAssignCtes("pe", 0, iters, dim,
-        nlistCaseSql = Some(semDedupNlistCaseSql),
-        trainSrc = Some("pes"))},
-nn AS (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM pe
-), mm AS MATERIALIZED (
-  SELECT n.vec_id, a.cid, n.embedding, n.norm
-  FROM nn n JOIN af a USING (vec_id)
-), dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM mm a JOIN mm b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE round(${dotSql("a.embedding", "b.embedding")} / (a.norm * b.norm), 4)
-    >= $minCos
-)
-SELECT m.vec_id, CAST(m.cid AS BIGINT) AS cluster_id,
-  (d.vec_id IS NULL) AS keep
-FROM mm m LEFT JOIN dropped d ON d.vec_id = m.vec_id
-ORDER BY m.vec_id"""
-
-  /** The banded-signature replay over an existing CTE `pe(vec_id,
-    * embedding)`: norms `nn`, rung selection `geo` (data-dependent on
-    * |pe|, so the engines cannot diverge), plane matrix `pl`, and the
-    * per-band sign values `bvt(vec_id, band, bv)`. Shared by the
-    * all-pairs near-dup chain and the incremental emb_novel oracle.
-    */
-  private val BandSigCtes: String = {
-    val maxPlanes = OracleGeometryRungs.map { case (_, r, b) => r * b }.max
-    val planeRows = (0 until maxPlanes).map { p =>
-      val w = Similarity.hyperplane(p, 64).map(_.toString)
-        .mkString("[", ", ", "]")
-      s"($p, $w)"
-    }.mkString(",\n    ")
-    def caseOver(pick: ((Long, Int, Int)) => Int): String =
-      OracleGeometryRungs.map { case t @ (hi, _, _) =>
-        s"WHEN n <= $hi THEN ${pick(t)}"
-      }.mkString("CASE ", " ", " ELSE NULL END")
-    // same sequential double fold as planeProjSql, with the plane
-    // carried as a column instead of an inlined literal
-    val proj =
-      """list_reduce(list_prepend(0.0, list_transform(list_zip(p.embedding, pl.w),
-      s -> COALESCE(CAST(s[1] AS DOUBLE) * s[2], 0.0))), (a, b) -> a + b)"""
-    s"""nn AS MATERIALIZED (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM pe
-), geo AS (
-  SELECT ${caseOver(_._2)} AS r,
-         ${caseOver(_._3)} AS bands
-  FROM (SELECT count(*) AS n FROM pe)
-), pl(idx, w) AS (
-  VALUES
-    $planeRows
-), bvt AS MATERIALIZED (
-  SELECT p.vec_id, pl.idx // g.r AS band,
-    sum(CASE WHEN $proj >= 0
-             THEN CAST(1 AS BIGINT) << (pl.idx % g.r) ELSE 0 END) AS bv
-  FROM pe p CROSS JOIN geo g JOIN pl ON pl.idx < g.r * g.bands
-  GROUP BY p.vec_id, pl.idx // g.r
-)"""
-  }
-
-  private val PlantedNearDupCtes: String =
-    s"""$PlantedCorpusCte, $BandSigCtes, cand AS (
-  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-  FROM bvt x JOIN bvt y
-    ON x.band = y.band AND x.bv = y.bv AND x.vec_id < y.vec_id
-), banded AS (
-  SELECT c.vec_a, c.vec_b,
-    round(${dotSql("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm), 4) AS cos_sim
-  FROM cand c
-  JOIN nn ea ON ea.vec_id = c.vec_a
-  JOIN nn eb ON eb.vec_id = c.vec_b
-)"""
-
-  /** Squared L2 between a list expr and a centroid list expr — the
-    * same sequential double fold as Similarity.sqDistTo.
-    */
-  private def sqDistSql(v: String, c: String): String =
-    s"""list_reduce(list_prepend(0.0, list_transform(list_zip($v, $c),
-      s -> (CAST(s[1] AS DOUBLE) - s[2]) * (CAST(s[1] AS DOUBLE) - s[2]))), (a, b) -> a + b)"""
-
-  /** DuckDB replay of Similarity.trainCentroids + ivfTopK: k-means is
-    * fully deterministic (init = the nlist lowest vec_ids, fixed Lloyd
-    * iterations, decimal-exact means), so the oracle re-trains the
-    * same centroids with unrolled iteration CTEs and replays the
-    * nprobe search — nothing about IVF stays engine-specific.
-    */
-  /** The deterministic-k-means IVF replay up to the probe-scored CTE
-    * `scored(query_id, vec_id, cos_sim)`; `nn(vec_id, embedding,
-    * norm)` is also exposed for consumers needing the exact norms
-    * (the recall oracle's brute-force side).
-    */
-  /** Deterministic-k-means replay CTEs over corpus source `src`
-    * (a table or a prior CTE with (vec_id, embedding)): centroid
-    * chain c0..c`iters` + final nearest-centroid assignment
-    * `af(vec_id, cid)` — the shared Lloyd replay of the IVF and
-    * SemDeDup oracles (Similarity.trainCentroids is fully
-    * deterministic: init = the nlist lowest vec_ids, fixed
-    * iterations, decimal-exact means, (dist, cid) tie-break).
-    */
-  private def kmeansAssignCtes(src: String, nlist: Int, iters: Int,
-                               dim: Int, suffix: String = "",
-                               nlistCaseSql: Option[String] = None,
-                               trainSrc: Option[String] = None): String = {
-    // nlistCaseSql: a CASE-over-count rung expression replacing the
-    // fixed nlist — the DATA-DEPENDENT k replay (semDedup auto
-    // sizing): both engines derive k from the same corpus count, so
-    // rung selection cannot diverge; a corpus above the enumerated
-    // rung ceiling selects NULL → c0 empties → the row fails LOUDLY
-    // (the OracleGeometryRungs stance).
-    // trainSrc: the SAMPLED-TRAINING replay (writeIvfIndexSampled) —
-    // the Lloyd chain (init + iteration assignments/means) runs over
-    // the training frame while the final `af` assignment covers the
-    // full `src`, exactly the engine's train-on-sample/assign-all
-    // split.
-    val tsrc = trainSrc.getOrElse(src)
-    val init = nlistCaseSql match {
-      case Some(kase) =>
-        s"""rung$suffix AS (
-  -- the data-dependent rung reads the FULL corpus count (the cell
-  -- bound governs what gets pruned), even when training is sampled
-  SELECT $kase AS k FROM (SELECT count(*) AS n FROM $src)
-), c0$suffix AS (
-  SELECT cid, cent FROM (
-    SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
-      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-    FROM $tsrc
-  ), rung$suffix WHERE cid < rung$suffix.k
-)"""
-      case None =>
-        s"""c0$suffix AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
-    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-  FROM (SELECT vec_id, embedding FROM $tsrc ORDER BY vec_id LIMIT $nlist)
-)"""
-    }
-    val iterCtes = (0 until iters).map { i =>
-      s"""a$i$suffix AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${sqDistSql("e.embedding", "c.cent")}, c.cid) AS rn
-    FROM $tsrc e CROSS JOIN c$i$suffix c
-  ) WHERE rn = 1
-), m$i$suffix AS (
-  SELECT a.cid, t.i AS pos,
-    CAST(sum(CAST(CAST(e.embedding[t.i + 1] AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE)
-      / count(*) AS m
-  FROM $tsrc e JOIN a$i$suffix a USING (vec_id) CROSS JOIN range($dim) t(i)
-  GROUP BY a.cid, t.i
-), c${i + 1}$suffix AS (
-  SELECT c.cid, COALESCE(n.cent, c.cent) AS cent
-  FROM c$i$suffix c LEFT JOIN (
-    SELECT cid, list(m ORDER BY pos) AS cent FROM m$i$suffix GROUP BY cid
-  ) n USING (cid)
-)"""
-    }.mkString(",\n")
-    val af =
-      s"""af$suffix AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${sqDistSql("e.embedding", "c.cent")}, c.cid) AS rn
-    FROM $src e CROSS JOIN c$iters$suffix c
-  ) WHERE rn = 1
-)"""
-    s"$init,\n$iterCtes,\n$af"
-  }
-
-  private def ivfScoredCtes(nlist: Int, nprobe: Int, iters: Int,
-                            dim: Int, queryIds: Seq[Long],
-                            corpusFilter: Option[String] = None,
-                            queryPred: Option[String] = None,
-                            src: String = "embeddings",
-                            prelude: String = "",
-                            trainSrc: Option[String] = None): String = {
-    val qIn = queryIds.mkString(", ")
-    val cf = s"c$iters"
-    val cFil = corpusFilter.map(f => s" AND $f").getOrElse("")
-    // queryPred replaces the driver-side id list — the table-vs-index
-    // (knnJoinIndexed) replay, where the query side is a predicate
-    // over the same table rather than an enumerated list
-    val qSel = queryPred.getOrElse(s"q.vec_id IN ($qIn)")
-    s"""WITH $prelude${kmeansAssignCtes(src, nlist, iters, dim,
-      trainSrc = trainSrc)},
-nn AS (
-  SELECT vec_id, label, embedding, ${normSql("embedding")} AS norm FROM $src
-), qp AS (
-  SELECT query_id, qe, qnorm, cid FROM (
-    SELECT q.vec_id AS query_id, q.embedding AS qe, nq.norm AS qnorm, c.cid,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY ${sqDistSql("q.embedding", "c.cent")}, c.cid) AS rn
-    FROM $src q JOIN nn nq ON nq.vec_id = q.vec_id
-    CROSS JOIN $cf c
-    WHERE $qSel
-  ) WHERE rn <= $nprobe
-), scored AS (
-  SELECT qp.query_id, nn.vec_id,
-    round(${dotSql("nn.embedding", "qp.qe")} / (nn.norm * qp.qnorm), 4) AS cos_sim
-  FROM nn JOIN af ON af.vec_id = nn.vec_id
-  JOIN qp ON qp.cid = af.cid AND nn.vec_id <> qp.query_id$cFil
-)"""
-  }
-
-  private def ivfOracleSql(nlist: Int, nprobe: Int, iters: Int, k: Int,
-                           dim: Int, queryIds: Seq[Long],
-                           corpusFilter: Option[String] = None,
-                           queryPred: Option[String] = None,
-                           prelude: String = "",
-                           trainSrc: Option[String] = None): String =
-    ivfScoredCtes(nlist, nprobe, iters, dim, queryIds, corpusFilter,
-      queryPred, prelude = prelude, trainSrc = trainSrc) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= $k ORDER BY query_id, rank"""
-
-  /** DuckDB replay of Similarity.pqTopK up to the exact-re-ranked
-    * `scored(query_id, vec_id, cos_sim)`: per-subspace sliced sources
-    * → the SAME deterministic-Lloyd codebooks (kmeansAssignCtes per
-    * subspace, suffixed CTE names) → codes + ‖codeword‖² PQ norms →
-    * ADC cosine via subspace dot products against the assigned
-    * codewords → top-`cand` candidates → exact cosine re-rank.
-    * Subspace sums are written as explicit left-associated `+` chains
-    * to match the Spark side's ascending-j fold bit-for-bit.
-    */
-  private def pqScoredCtes(m: Int, ksub: Int, iters: Int, dim: Int,
-                           cand: Int, queryIds: Seq[Long],
-                           ivf: Option[(Int, Int, Int)] = None,
-                           residual: Boolean = false): String = {
-    require(!residual || ivf.isDefined, "residual coding needs the IVF chain")
-    val dsub = dim / m
-    // the residual chain inlined per reference re-runs the coarse and
-    // subspace Lloyd chains combinatorially (DuckDB inlines CTEs), so
-    // it materializes each of its CTEs once; the raw chains' SQL is
-    // left as it was
-    def cte(name: String): String =
-      if (residual) s"$name AS MATERIALIZED (" else s"$name AS ("
-    // residual mode (Similarity.ivfPqTopK(residual = true)): the PQ subspace
-    // slices come from the residual frame x − c(x), so the Lloyd
-    // chains train on residuals exactly as the engine does
-    val pqSrc = if (residual) "resid" else "embeddings"
-    val subs = (0 until m).map { j =>
-      s"""${cte(s"sub$j")}
-  SELECT vec_id, array_slice(embedding, ${j * dsub + 1}, ${(j + 1) * dsub}) AS embedding
-  FROM $pqSrc
-)"""
-    }.mkString(",\n")
-    val kms = (0 until m).map(j =>
-      kmeansAssignCtes(s"sub$j", ksub, iters, dsub, s"_p$j")).mkString(",\n")
-    // coarse quantizer (IVF-PQ): its own suffixed Lloyd chain; qp is
-    // each query's nprobe nearest lists, and ADC only scans rows whose
-    // coarse assignment is probed
-    val coarse = ivf.map { case (nlist, _, itersIvf) =>
-      kmeansAssignCtes("embeddings", nlist, itersIvf, dim, "_cq") + ",\n" +
-        (if (residual)
-          s"""${cte("resid")}
-  SELECT e.vec_id, a.cid, list_transform(list_zip(e.embedding, c.cent),
-    s -> CAST(s[1] AS DOUBLE) - s[2]) AS embedding
-  FROM embeddings e JOIN af_cq a ON a.vec_id = e.vec_id
-  JOIN c${itersIvf}_cq c ON c.cid = a.cid
-),
-"""
-        else "")
-    }.getOrElse("")
-    val qp = ivf.map { case (_, nprobe, itersIvf) =>
-      s""", ${cte("qp")}
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY ${sqDistSql("q.embedding", "c.cent")}, c.cid) AS rn
-    FROM q CROSS JOIN c${itersIvf}_cq c
-  ) WHERE rn <= $nprobe
-)"""
-    }.getOrElse("")
-    val adcFrom =
-      if (residual)
-        // the residual enc already carries its coarse cid
-        """FROM enc e JOIN qp ON qp.cid = e.cid
-  JOIN q ON q.query_id = qp.query_id
-  WHERE e.vec_id <> q.query_id"""
-      else if (ivf.isDefined)
-        """FROM enc e JOIN af_cq v ON v.vec_id = e.vec_id
-  JOIN qp ON qp.cid = v.cid
-  JOIN q ON q.query_id = qp.query_id
-  WHERE e.vec_id <> q.query_id"""
-      else "FROM enc e CROSS JOIN q WHERE e.vec_id <> q.query_id"
-    val codeJoin = (0 until m).map(j =>
-      s"JOIN af_p$j a$j ON a$j.vec_id = e.vec_id " +
-        s"JOIN c${iters}_p$j b$j ON b$j.cid = a$j.cid").mkString("\n  ")
-    // ‖x̂‖²: raw coding sums codeword norms; residual coding is
-    // ‖c‖² + Σⱼ (2·c⟨j⟩·bookⱼ[codeⱼ] + ‖bookⱼ[codeⱼ]‖²), with the
-    // same left-associated addition order as the engine's reduce
-    val pqnorm =
-      if (residual)
-        dotSql("cc.cent", "cc.cent") + " + " + (0 until m).map { j =>
-          val cslice =
-            s"array_slice(cc.cent, ${j * dsub + 1}, ${(j + 1) * dsub})"
-          s"(2 * ${dotSql(cslice, s"b$j.cent")} + ${dotSql(s"b$j.cent", s"b$j.cent")})"
-        }.mkString(" + ")
-      else (0 until m).map(j =>
-        dotSql(s"b$j.cent", s"b$j.cent")).mkString(" + ")
-    // q·x̂: residual coding adds the q·c term ahead of the subspace
-    // lookups (engine: (qc +: terms).reduce(_ + _))
-    val adcSum =
-      (if (residual) dotSql("q.embedding", "e.ccent") + " + " else "") +
-        (0 until m).map(j => dotSql(
-          s"array_slice(q.embedding, ${j * dsub + 1}, ${(j + 1) * dsub})",
-          s"e.cent$j")).mkString(" + ")
-    val encFrom =
-      if (residual) {
-        val itersIvf = ivf.get._3
-        s"""FROM resid e
-  JOIN c${itersIvf}_cq cc ON cc.cid = e.cid
-  $codeJoin"""
-      } else s"""FROM embeddings e
-  $codeJoin"""
-    val encCols =
-      (if (residual) "e.cid, cc.cent AS ccent, " else "") +
-        (0 until m).map(j => s"b$j.cent AS cent$j").mkString(", ")
-    val qIn = queryIds.mkString(", ")
-    s"""WITH $coarse$subs,
-$kms,
-${cte("nn")}
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM embeddings
-), ${cte("enc")}
-  SELECT e.vec_id, $encCols,
-    sqrt($pqnorm) AS pqnorm
-  $encFrom
-), ${cte("q")}
-  SELECT vec_id AS query_id, embedding, norm AS qnorm
-  FROM nn WHERE vec_id IN ($qIn)
-)$qp, ${cte("adc")}
-  SELECT q.query_id, e.vec_id,
-    round(($adcSum) / (e.pqnorm * q.qnorm), 4) AS cos_sim
-  $adcFrom
-), ${cte("pqcand")}
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rn
-    FROM adc WHERE NOT isnan(cos_sim)
-  ) WHERE rn <= $cand
-), ${cte("scored")}
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4) AS cos_sim
-  FROM pqcand c JOIN nn ON nn.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-  }
-
-  /** The shared recall@10 oracle tail over a `scored` CTE (and the
-    * `nn`/`q` CTEs every *ScoredCtes chain defines): approximate
-    * top-10 cut, brute-force top-10, per-query hit ratio. One
-    * definition serves every recall rung (pq / sq8 / residual ivf-pq)
-    * so a tie-break or isnan change cannot diverge between them.
-    */
-  /** The banded kNN-join recall replay over a parameterized corpus
-    * body (`pe` feeds [[BandSigCtes]]' data-dependent rung): shared
-    * by the uniform-noise and clustered-fixture recall rows, so ONE
-    * SQL string locks both regimes.
-    */
-  private def knnJoinRecallOracleSql(peBody: String,
-                                     prelude: String = ""): String =
-    s"""WITH ${prelude}pe AS MATERIALIZED (
-  $peBody
-), $BandSigCtes, cand AS (
-  SELECT DISTINCT x.vec_id AS query_id, y.vec_id
-  FROM bvt x JOIN bvt y ON x.band = y.band AND x.bv = y.bv
-  WHERE x.vec_id % 97 = 0 AND x.vec_id <> y.vec_id
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("eb.embedding", "ea.embedding")} / (eb.norm * ea.norm), 4) AS cos_sim
-  FROM cand c JOIN nn ea ON ea.vec_id = c.query_id
-  JOIN nn eb ON eb.vec_id = c.vec_id
-), q AS (
-  SELECT vec_id AS query_id, embedding, norm AS qnorm
-  FROM nn WHERE vec_id % 97 = 0
-)""" + recallTailSql("knnk")
-
-  private def recallTailSql(approxCte: String): String = s"""
-, $approxCte AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM scored WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= 10
-), bscored AS (
-  SELECT q.query_id, nn.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4) AS cos_sim
-  FROM nn, q WHERE nn.vec_id <> q.query_id
-), brute AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM bscored WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= 10
-)
-SELECT x.query_id,
-  CAST(count(l.vec_id) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  round(CAST(count(l.vec_id) AS DOUBLE) / count(*), 4) AS recall
-FROM brute x LEFT JOIN $approxCte l
-  ON l.query_id = x.query_id AND l.vec_id = x.vec_id
-GROUP BY x.query_id ORDER BY x.query_id"""
-
-  /** The hybrid-RRF replay — shared verbatim by `doc_hybrid_rrf`
-    * (one-shot legs) and `doc_hybrid_indexed` (durable-index legs at
-    * nprobe = nlist, where the IVF probe is exact): both stacks feed
-    * the same fusion, so ONE oracle string locks both. The CTE body
-    * (through the fused frame `f`) is also the exact half of
-    * `doc_hybrid_indexed_recall`'s replay.
-    */
-  private val hybridRrfCtes: String =
-    """WITH q AS (
-  SELECT doc_id AS query_id,
-    unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS term
-  FROM documents WHERE doc_id IN (0, 1, 2)
-), qv AS (SELECT query_id, term FROM q WHERE length(term) > 0),
-qt AS (SELECT DISTINCT term FROM qv),
-stats AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS DOUBLE) AS n_toks
-  FROM documents
-), toks AS (
-  SELECT doc_id, len(string_split_regex(trim(text), '\s+')) AS dl,
-    unnest(string_split_regex(trim(text), '\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-  FROM toks JOIN qt USING (term) GROUP BY 1, 2
-), dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-lscored AS (
-  SELECT qv.query_id, tf.doc_id,
-    round(CAST(sum(CAST(
-      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-      (tf * (CAST(1.2 AS DOUBLE) + 1.0)) /
-      (tf + CAST(1.2 AS DOUBLE) *
-        (1.0 - CAST(0.75 AS DOUBLE) +
-         CAST(0.75 AS DOUBLE) * dl / (n_toks / n_docs)))
-    AS DECIMAL(30,10))) AS DOUBLE), 4) AS score
-  FROM tf JOIN dfq USING (term) JOIN qv USING (term), stats
-  WHERE tf.doc_id != qv.query_id
-  GROUP BY 1, 2
-), lranked AS (
-  SELECT query_id, doc_id,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rank
-  FROM lscored QUALIFY lex_rank <= 5
-), et AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
-  FROM documents
-), ec AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 64 AS bucket,
-    count(*) AS cnt
-  FROM et GROUP BY doc_id, bucket
-), en AS (
-  SELECT doc_id, CAST(sum(cnt * cnt) AS BIGINT) AS norm_sq FROM ec GROUP BY doc_id
-), eq AS (
-  SELECT doc_id, bucket, cnt FROM ec WHERE doc_id IN (0, 1, 2)
-), edotp AS (
-  SELECT eq.doc_id AS query_id, ec.doc_id AS vec_id, sum(eq.cnt * ec.cnt) AS dp
-  FROM eq JOIN ec ON ec.bucket = eq.bucket AND ec.doc_id <> eq.doc_id
-  GROUP BY 1, 2
-), escored AS (
-  SELECT d.query_id, d.vec_id,
-    round(d.dp / (sqrt(CAST(ne.norm_sq AS DOUBLE))
-      * sqrt(CAST(nq.norm_sq AS DOUBLE))), 4) AS cos_sim
-  FROM edotp d
-  JOIN en ne ON ne.doc_id = d.vec_id
-  JOIN en nq ON nq.doc_id = d.query_id
-), eranked AS (
-  SELECT query_id, vec_id AS doc_id,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS drank
-  FROM escored WHERE NOT isnan(cos_sim) QUALIFY drank <= 5
-), f AS (
-  SELECT COALESCE(l.query_id, r.query_id) AS query_id,
-    COALESCE(l.doc_id, r.doc_id) AS doc_id,
-    COALESCE(l.lex_rank, 0) AS lex_rank,
-    COALESCE(r.drank, 0) AS dense_rank,
-    COALESCE(1000000000 // (60 + l.lex_rank), 0) +
-      COALESCE(1000000000 // (60 + r.drank), 0) AS rrf_ppb
-  FROM lranked l FULL OUTER JOIN eranked r
-    ON l.query_id = r.query_id AND l.doc_id = r.doc_id
-)"""
-
-  private val hybridRrfOracleSql: String = hybridRrfCtes + """
-SELECT query_id,
-  CAST(row_number() OVER (PARTITION BY query_id
-    ORDER BY rrf_ppb DESC, doc_id) AS BIGINT) AS rank,
-  doc_id, lex_rank, dense_rank, rrf_ppb
-FROM f QUALIFY rank <= 5 ORDER BY query_id, rank"""
-
-  /** `doc_hybrid_indexed_recall`'s replay: the exact fused top-5
-    * (the shared CTE body's `f`) compared against the INDEXED stack
-    * at its default nprobe = 2 — the dense leg re-derives the
-    * hashed-embedding vectors densely (`hv`), replays the
-    * deterministic-Lloyd training of the durable index
-    * ([[kmeansAssignCtes]] over `hv`, the emb_ivf_* replay), probes
-    * the 2 nearest lists, and fuses with the SAME lexical leg
-    * (`lranked`); recall@5 per query is the semi-join count.
-    */
-  private lazy val hybridRecallOracleSql: String = hybridRrfCtes + s""",
-ex AS (
-  SELECT query_id, doc_id FROM (
-    SELECT query_id, doc_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY rrf_ppb DESC, doc_id) AS rank
-    FROM f) WHERE rank <= 5
-), hvs AS (
-  SELECT d.doc_id, r.b, coalesce(ec.cnt, 0) AS cnt
-  FROM (SELECT DISTINCT doc_id FROM documents) d
-  CROSS JOIN range(64) r(b)
-  LEFT JOIN ec ON ec.doc_id = d.doc_id AND ec.bucket = r.b
-), hv AS (
-  SELECT doc_id AS vec_id, list(CAST(cnt AS DOUBLE) ORDER BY b) AS embedding
-  FROM hvs GROUP BY doc_id
-),
-${kmeansAssignCtes("hv", nlist = 16, iters = 3, dim = 64, suffix = "h")},
-nnh AS (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM hv
-), qph AS (
-  SELECT query_id, qe, qnorm, cid FROM (
-    SELECT q2.vec_id AS query_id, q2.embedding AS qe, nq.norm AS qnorm,
-      c.cid,
-      row_number() OVER (PARTITION BY q2.vec_id
-        ORDER BY ${sqDistSql("q2.embedding", "c.cent")}, c.cid) AS rn
-    FROM hv q2 JOIN nnh nq ON nq.vec_id = q2.vec_id
-    CROSS JOIN c3h c
-    WHERE q2.vec_id IN (0, 1, 2)
-  ) WHERE rn <= 2
-), iscored AS (
-  SELECT qph.query_id, nnh.vec_id,
-    round(${dotSql("nnh.embedding", "qph.qe")} / (nnh.norm * qph.qnorm),
-      4) AS cos_sim
-  FROM nnh JOIN afh ON afh.vec_id = nnh.vec_id
-  JOIN qph ON qph.cid = afh.cid AND nnh.vec_id <> qph.query_id
-), iranked AS (
-  SELECT query_id, vec_id AS doc_id,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS drank
-  FROM iscored WHERE NOT isnan(cos_sim) QUALIFY drank <= 5
-), f2 AS (
-  SELECT COALESCE(l.query_id, r.query_id) AS query_id,
-    COALESCE(l.doc_id, r.doc_id) AS doc_id,
-    COALESCE(1000000000 // (60 + l.lex_rank), 0) +
-      COALESCE(1000000000 // (60 + r.drank), 0) AS rrf_ppb
-  FROM lranked l FULL OUTER JOIN iranked r
-    ON l.query_id = r.query_id AND l.doc_id = r.doc_id
-), ap AS (
-  SELECT query_id, doc_id FROM (
-    SELECT query_id, doc_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY rrf_ppb DESC, doc_id) AS rank
-    FROM f2) WHERE rank <= 5
-)
-SELECT ex.query_id,
-  CAST(count(ap.doc_id) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  round(CAST(count(ap.doc_id) AS DOUBLE) / count(*), 4) AS recall
-FROM ex LEFT JOIN ap
-  ON ap.query_id = ex.query_id AND ap.doc_id = ex.doc_id
-GROUP BY ex.query_id ORDER BY ex.query_id"""
-
-  /** The BM25 ranking replay — shared verbatim by `doc_bm25_topk`
-    * (one-shot) and `doc_bm25_indexed` (durable postings probe): the
-    * stored index is a pure function of the corpus, so ONE oracle
-    * string locks both.
-    */
-  private val bm25TopkOracleSql: String =
-    """WITH q AS (
-  SELECT doc_id AS query_id,
-    unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS term
-  FROM documents WHERE doc_id IN (0, 1, 2)
-), qv AS (SELECT query_id, term FROM q WHERE length(term) > 0),
-qt AS (SELECT DISTINCT term FROM qv),
-stats AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS DOUBLE) AS n_toks
-  FROM documents
-), toks AS (
-  SELECT doc_id, len(string_split_regex(trim(text), '\s+')) AS dl,
-    unnest(string_split_regex(trim(text), '\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-  FROM toks JOIN qt USING (term) GROUP BY 1, 2
-), dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-scored AS (
-  SELECT qv.query_id, tf.doc_id, count(*) AS matched_terms,
-    round(CAST(sum(CAST(
-      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-      (tf * (CAST(1.2 AS DOUBLE) + 1.0)) /
-      (tf + CAST(1.2 AS DOUBLE) *
-        (1.0 - CAST(0.75 AS DOUBLE) +
-         CAST(0.75 AS DOUBLE) * dl / (n_toks / n_docs)))
-    AS DECIMAL(30,10))) AS DOUBLE), 4) AS score
-  FROM tf JOIN dfq USING (term) JOIN qv USING (term), stats
-  WHERE tf.doc_id != qv.query_id
-  GROUP BY 1, 2
-)
-SELECT query_id,
-  CAST(row_number() OVER (PARTITION BY query_id
-    ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
-  doc_id, matched_terms, score
-FROM scored QUALIFY rank <= 5
-ORDER BY query_id, rank"""
-
-  /** Matryoshka truncate-then-rerank replay
-    * (Similarity.prefixRerankTopK): prefix-dim candidate cut over the
-    * 16-component list slices, exact full-dim re-rank of the
-    * survivors — `scored` is the exact-rescored candidate set, as in
-    * [[pqScoredCtes]].
-    */
-  /** DuckDB replay of Similarity.prefixIvfSearchIndexed: the k-means
-    * CTE chain trains on the SLICED source (prefixDim-dim cells —
-    * the geometry the coarse pass ranks in), each query's prefix
-    * probes its nprobe nearest centroids (sqDist ties to the smaller
-    * cid), the coarse prefix cosine ranks only rows whose list is
-    * probed, and the exact full-dim rerank scores the top-`cand`
-    * survivors — the pruning itself is replayed, not approximated by
-    * an exhaustive probe.
-    */
-  private def prefixIvfCtes(prefixDim: Int, nlist: Int, nprobe: Int,
-                            iters: Int, cand: Int,
-                            queryIds: Seq[Long],
-                            corpusFilter: Option[String] = None,
-                            queryPred: Option[String] = None,
-                            src: String = "embeddings",
-                            prelude: String = ""): String = {
-    val qIn = queryIds.mkString(", ")
-    val p = s"[1:$prefixDim]"
-    val cFil = corpusFilter.map(f => s" AND $f").getOrElse("")
-    // queryPred replaces the driver-side id list — the table-vs-index
-    // (prefixIvfKnnJoin) replay, where the query side is a predicate
-    // over the same table rather than an enumerated list
-    val qSel = queryPred.getOrElse(s"vec_id IN ($qIn)")
-    s"""WITH ${prelude}pfxsrc AS (
-  SELECT vec_id, embedding$p AS embedding FROM $src
-),
-${kmeansAssignCtes("pfxsrc", nlist, iters, prefixDim)},
-nn AS (
-  SELECT vec_id, label, embedding, ${normSql("embedding")} AS norm
-  FROM $src
-), q AS (
-  SELECT vec_id AS query_id, embedding, ${normSql("embedding")} AS qnorm
-  FROM $src WHERE $qSel
-), qp AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY ${sqDistSql(s"q.embedding$p", "c.cent")}, c.cid) AS rn
-    FROM q CROSS JOIN c$iters c
-  ) WHERE rn <= $nprobe
-), ps AS (
-  SELECT qp.query_id, nn.vec_id,
-    round(${dotSql(s"nn.embedding$p", s"q.embedding$p")} /
-      (${normSql(s"nn.embedding$p")} * ${normSql(s"q.embedding$p")}), 4)
-      AS cos_sim
-  FROM nn JOIN af ON af.vec_id = nn.vec_id
-  JOIN qp ON qp.cid = af.cid
-  JOIN q ON q.query_id = qp.query_id
-  WHERE nn.vec_id <> qp.query_id$cFil
-), cut AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM ps WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= $cand
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4)
-      AS cos_sim
-  FROM cut c JOIN nn ON nn.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-  }
-
-  private def prefixRerankCtes(cand: Int, queryIds: Seq[Long]): String =
-    s"""WITH nn AS (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding, ${normSql("embedding")} AS qnorm
-  FROM embeddings WHERE vec_id IN (${queryIds.mkString(", ")})
-), ps AS (
-  SELECT q.query_id, nn.vec_id,
-    round(${dotSql("nn.embedding[1:16]", "q.embedding[1:16]")} /
-      (${normSql("nn.embedding[1:16]")} * ${normSql("q.embedding[1:16]")}), 4)
-      AS cos_sim
-  FROM nn, q WHERE nn.vec_id <> q.query_id
-), cut AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM ps WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= $cand
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4)
-      AS cos_sim
-  FROM cut c JOIN nn ON nn.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-
-  /** SQ8 asymmetric-search replay (Similarity.sq8TopK): per-vector
-    * symmetric quantization (the emb_quant_error CTE), dequantized
-    * reconstruction, approximate cosine against the reconstruction,
-    * candidate cut, exact re-rank — `scored` is the exact-rescored
-    * candidate set, as in [[pqScoredCtes]].
-    */
-  private def sq8ScoredCtes(cand: Int, queryIds: Seq[Long]): String = {
-    val ids = queryIds.mkString(", ")
-    s"""WITH q8 AS (
-  SELECT vec_id,
-    list_reduce(list_prepend(0.0, list_transform(embedding,
-      x -> abs(CAST(x AS DOUBLE)))), (a, b) -> greatest(a, b)) / 127.0 AS scale,
-    embedding
-  FROM embeddings
-), rec AS (
-  SELECT vec_id,
-    list_transform(embedding, x ->
-      CASE WHEN scale = 0.0 THEN 0.0
-           ELSE round(CAST(x AS DOUBLE) / scale, 0) * scale END) AS rvec
-  FROM q8
-), nn AS (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding, ${normSql("embedding")} AS qnorm
-  FROM embeddings WHERE vec_id IN ($ids)
-), ascored AS (
-  SELECT q.query_id, r.vec_id,
-    round(${dotSql("r.rvec", "q.embedding")} /
-      (${normSql("r.rvec")} * q.qnorm), 4) AS cos_sim
-  FROM rec r, q WHERE r.vec_id <> q.query_id
-), sqcand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rn
-    FROM ascored WHERE NOT isnan(cos_sim)
-  ) WHERE rn <= $cand
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4) AS cos_sim
-  FROM sqcand c JOIN nn ON nn.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-  }
-
-  /** Binary-quantization search replay (Similarity.bqTopK): per-dim
-    * sign bits, Hamming distance as a per-pair sign-mismatch count
-    * (the semantic statement of the engine's packed-word XOR +
-    * popcount — the oracle replays MEANING, not bit layout), monotone
-    * angular score 1 − h/d (one IEEE division), candidate cut, exact
-    * re-rank into `scored` — the [[sq8ScoredCtes]] contract.
-    */
-  private def bqScoredCtes(cand: Int, queryIds: Seq[Long]): String = {
-    val ids = queryIds.mkString(", ")
-    s"""WITH sgn AS (
-  SELECT vec_id,
-    list_transform(embedding, x -> CAST(x AS DOUBLE) > 0.0) AS sg
-  FROM embeddings
-), nn AS (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding, ${normSql("embedding")} AS qnorm
-  FROM embeddings WHERE vec_id IN ($ids)
-), qs AS (
-  SELECT vec_id AS query_id, sg FROM sgn WHERE vec_id IN ($ids)
-), ascored AS (
-  SELECT qs.query_id, s.vec_id,
-    1.0 - CAST(len(list_filter(range(len(s.sg)),
-      i -> s.sg[i + 1] <> qs.sg[i + 1])) AS DOUBLE) /
-      CAST(len(s.sg) AS DOUBLE) AS cos_sim
-  FROM sgn s, qs WHERE s.vec_id <> qs.query_id
-), bqcand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rn
-    FROM ascored WHERE NOT isnan(cos_sim)
-  ) WHERE rn <= $cand
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4) AS cos_sim
-  FROM bqcand c JOIN nn ON nn.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-  }
-
-  /** DuckDB replay of [[graft.operators.TextOps.trainBpe]]: the
-    * weighted word vocab (`v0`), then per merge step s a weighted
-    * pair count (`p{s}`), the deterministic argmax (`m{s}`: count
-    * desc, lexicographic pair), and the greedy left-to-right
-    * non-overlap rewrite stated POSITIONALLY — marked positions,
-    * runs of consecutive marks (only possible when tok_l = tok_r),
-    * alternate-keep from each run head, then rebuild (`v{s}`).
-    * The engine's fold formulation and this positional one are
-    * brute-force-equivalence-checked in BpeSpec. CTEs materialize
-    * because each step references its predecessor three times —
-    * inlining would re-derive v0 exponentially.
-    */
-  private def bpeOracleSql(k: Int): String =
-    bpeCtes(k) + "\n" +
-      (1 to k).map(s =>
-        s"SELECT CAST($s AS BIGINT) AS step, tok_l, tok_r, c AS pair_count FROM m$s")
-        .mkString("\nUNION ALL\n") + "\nORDER BY step"
-
-  private def bpeStepCte(s: Int): String = {
-    val p = s - 1
-    s"""
-p$s AS (
-  SELECT v.toks[u.i] AS tok_l, v.toks[u.i+1] AS tok_r, sum(wc) AS c
-  FROM v$p v, unnest(range(1, len(v.toks))) AS u(i)
-  GROUP BY 1, 2
-),
-m$s AS MATERIALIZED (
-  SELECT tok_l, tok_r, CAST(c AS BIGINT) AS c FROM p$s
-  ORDER BY c DESC, tok_l, tok_r LIMIT 1),
-mk$s AS (
-  SELECT v.w, u.i
-  FROM v$p v, m$s, unnest(range(1, len(v.toks))) AS u(i)
-  WHERE v.toks[u.i] = m$s.tok_l AND v.toks[u.i+1] = m$s.tok_r
-),
-r$s AS MATERIALIZED (
-  SELECT w, i FROM (
-    SELECT w, i, min(i) OVER (PARTITION BY w, rn) AS rs FROM (
-      SELECT w, i, i - row_number() OVER (PARTITION BY w ORDER BY i) AS rn
-      FROM mk$s))
-  WHERE (i - rs) % 2 = 0
-),
-pos$s AS (
-  SELECT v.w, v.wc, u.i, v.toks[u.i] AS tk
-  FROM v$p v, unnest(range(1, len(v.toks)+1)) AS u(i)
-),
-v$s AS MATERIALIZED (
-  SELECT q.w, q.wc, list(q.t ORDER BY q.i) AS toks FROM (
-    SELECT p.w, p.wc, p.i,
-      CASE WHEN x.i IS NOT NULL THEN (SELECT tok_l || tok_r FROM m$s)
-           ELSE p.tk END AS t,
-      xp.i AS skip
-    FROM pos$s p
-    LEFT JOIN r$s x ON x.w = p.w AND x.i = p.i
-    LEFT JOIN r$s xp ON xp.w = p.w AND xp.i = p.i - 1
-  ) q WHERE q.skip IS NULL
-  GROUP BY q.w, q.wc
-)"""
-  }
-
-  private def bpeCtes(k: Int): String =
-    s"""WITH v0 AS MATERIALIZED (
-  SELECT w, wc, list_transform(range(1, len(w)+1), i -> w[i]) AS toks FROM (
-    SELECT w, CAST(count(*) AS BIGINT) AS wc FROM (
-      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS w
-      FROM documents) t
-    WHERE len(w) > 0 GROUP BY w)
-),""" + (1 to k).map(bpeStepCte).mkString(",")
-
-  /** The [[bpeOracleSql]] chain ending in per-doc subword counts
-    * under the step-`k` vocab (TextOps.bpeTokenCounts): segmentation
-    * is a function of the word, so docs join v{k} on the word.
-    */
-  private def bpeApplyOracleSql(k: Int): String =
-    s"""${bpeCtes(k)}
-SELECT d.doc_id, count(*) AS n_words,
-  CAST(sum(len(v.toks)) AS BIGINT) AS n_subwords
-FROM (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM documents) d
-JOIN v$k v ON v.w = d.w
-WHERE len(d.w) > 0
-GROUP BY d.doc_id ORDER BY d.doc_id"""
-
-  /** The [[bpeOracleSql]] chain ending in per-doc subword-ID
-    * sequences (TextOps.bpeEncodeIds): ids are the binary-order rank
-    * of the step-k symbol set, per-word id lists assemble on the
-    * vocab dim, docs join on the word and flatten by position; the
-    * sequence crosses the compare as an md5 of the space-joined ids.
-    */
-  private def bpeSeqCtes(k: Int): String =
-    s"""${bpeCtes(k)},
-sym AS (
-  SELECT s, CAST(row_number() OVER (ORDER BY s) - 1 AS BIGINT) AS id
-  FROM (SELECT DISTINCT unnest(toks) AS s FROM v$k)
-),
-wid AS MATERIALIZED (
-  SELECT q.w, list(q.id ORDER BY q.i) AS ids FROM (
-    SELECT v.w, u.i, sym.id
-    FROM v$k v, unnest(range(1, len(v.toks)+1)) AS u(i)
-    JOIN sym ON sym.s = v.toks[u.i]) q
-  GROUP BY q.w
-),
-docw AS (
-  SELECT doc_id, source, u.i AS pos, t[u.i] AS w
-  FROM (SELECT doc_id, source, string_split_regex(trim(text), '\\s+') AS t
-        FROM documents) d,
-       unnest(range(1, len(t)+1)) AS u(i)
-  WHERE len(t[u.i]) > 0
-),
-seq AS MATERIALIZED (
-  SELECT doc_id, min(source) AS source,
-    flatten(list(wid.ids ORDER BY docw.pos)) AS ids
-  FROM docw JOIN wid ON wid.w = docw.w
-  GROUP BY doc_id
-)"""
-
-  private def bpeEncodeOracleSql(k: Int): String =
-    s"""${bpeSeqCtes(k)}
-SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_subwords,
-  md5(array_to_string(list_transform(ids, x -> CAST(x AS VARCHAR)), ' '))
-    AS ids_md5
-FROM seq ORDER BY doc_id"""
-
-  /** The [[bpeSeqCtes]] chain through the pack-stream replay
-    * (TextOps.packTokenStream): running subword sums per (source,
-    * shard) stream, docs sliced at exact budget boundaries, per-bin
-    * ordered flatten — the packed id stream crossed as an md5.
-    */
-  private def bpePackOracleSql(k: Int, budget: Long,
-                               shards: Int): String =
-    s"""${bpeSeqCtes(k)},
-nseq AS (
-  SELECT doc_id, source, doc_id % $shards AS shard, ids, len(ids) AS n
-  FROM seq WHERE len(ids) > 0
-),
-str AS (
-  SELECT *, CAST(coalesce(sum(n) OVER (PARTITION BY source, shard
-    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-    0) AS BIGINT) AS before
-  FROM nseq
-),
-pieces AS (
-  SELECT source, shard, u.b AS bin_id, before,
-    ids[CAST(greatest(before, u.b*$budget) - before + 1 AS BIGINT) :
-        CAST(least(before + n, (u.b+1)*$budget) - before AS BIGINT)]
-      AS piece
-  FROM str,
-    unnest(range(before // $budget, (before + n - 1) // $budget + 1))
-      AS u(b)
-),
-packed AS (
-  SELECT source, shard, bin_id, count(*) AS n_docs,
-    flatten(list(piece ORDER BY before)) AS ids,
-    coalesce(array_to_string(
-      list(CAST(before - bin_id * $budget AS VARCHAR) ORDER BY before)
-        FILTER (WHERE before >= bin_id * $budget), ' '), '') AS boundaries
-  FROM pieces GROUP BY 1, 2, 3
-)
-SELECT source, CAST(shard AS BIGINT) AS shard,
-  CAST(bin_id AS BIGINT) AS bin_id, CAST(n_docs AS BIGINT) AS n_docs,
-  CAST(len(ids) AS BIGINT) AS n_ids,
-  md5(array_to_string(list_transform(ids, x -> CAST(x AS VARCHAR)), ' '))
-    AS ids_md5,
-  boundaries
-FROM packed ORDER BY source, shard, bin_id"""
-
-  /** Shared minhash+LSH oracle CTE chain (Dedup.minhashNearDups with
-    * the md5-seeded family) over source table `src`: shingles →
-    * 16-slot signatures → 4-band bucket join → exact-jaccard-verified
-    * pairs in `j`. k=16 slots, 4 bands × 4 rows.
-    */
-  private def minhashPairsCtes(src: String): String = {
-    val sigCols = (0 until 16).map { seed =>
-      s"min(CAST(('0x' || substr(md5('$seed:' || s), 1, 15)) AS BIGINT)) AS h$seed"
-    }.mkString(",\n    ")
-    val bandRows = (0 until 4).map { b =>
-      val slots = (0 until 4).map(r => s"h${b * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, $slots FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""mtok AS MATERIALIZED (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM $src
-), base AS MATERIALIZED (
-  SELECT doc_id, list_distinct(list_transform(range(len(toks) - 2),
-    i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3])) AS sh
-  FROM mtok
-), ex AS (
-  SELECT doc_id, unnest(sh) AS s FROM base
-), sig AS (
-  SELECT doc_id,
-    $sigCols
-  FROM ex GROUP BY doc_id
-), banded(doc_id, band, s1, s2, s3, s4) AS (
-  $bandRows
-), pairs AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM banded x JOIN banded y
-    ON x.band = y.band AND x.s1 = y.s1 AND x.s2 = y.s2
-   AND x.s3 = y.s3 AND x.s4 = y.s4 AND x.doc_id < y.doc_id
-), j AS (
-  SELECT p.doc_a, p.doc_b,
-    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-      greatest(CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 1.0), 4) AS jaccard
-  FROM pairs p JOIN base a ON a.doc_id = p.doc_a JOIN base b ON b.doc_id = p.doc_b
-)"""
-  }
-
-  /** The shared WITH-chain of the full-curation oracles — planted
-    * corpus `pl` through the sampled corpus `s6`. Single-sourced so
-    * the funnel roll-up ([[curationE2eOracleSql]]) and the per-doc
-    * rejection attribution ([[curationRejectOracleSql]]) replay the
-    * SAME stage semantics and cannot drift from each other.
-    */
-  private def curationStageCtes: String = {
-    val g8 = (1 to 8).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-    s"""WITH pl AS MATERIALIZED (
-  SELECT doc_id, source,
-    'NAV MENU HOME' || chr(10) || text || chr(10) ||
-    '(c) site ' || source || chr(10) ||
-    CASE WHEN doc_id % 3 = 0 THEN 'subscribe now'
-         ELSE 'u' || CAST(doc_id AS VARCHAR) END AS text
-  FROM documents WHERE doc_id < 300
-), ${gopherCtesSql("pl")},
-s2 AS MATERIALIZED (
-  SELECT p.doc_id, p.source, p.text
-  FROM pl p JOIN gq USING (doc_id) WHERE gq.gopher_pass
-), lr AS MATERIALIZED (
-  SELECT doc_id, u.pos AS pos, u.line AS line FROM (
-    SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-      i -> {'pos': i, 'line': ls[i]})) AS u
-    FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM s2))
-), hot AS (
-  SELECT line FROM lr GROUP BY line HAVING count(*) >= 5
-), kept AS (
-  SELECT doc_id, pos, line FROM lr
-  WHERE line NOT IN (SELECT line FROM hot)
-), kt AS (
-  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text_deduped
-  FROM kept GROUP BY doc_id
-), s3 AS MATERIALIZED (
-  SELECT s2.doc_id, s2.source, kt.text_deduped AS text
-  FROM s2 JOIN kt USING (doc_id)
-), ${minhashPairsCtes("s3")}${clusterCtesSql(
-      "SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.3")},
-${gopherCtesSql("s3", "gq2")},
-cbest AS (
-  SELECT cluster_id, doc_id AS best_doc FROM (
-    SELECT c.comp AS cluster_id, c.id AS doc_id,
-      row_number() OVER (PARTITION BY c.comp
-        ORDER BY q.gopher_pass DESC, q.n_words DESC, c.id) AS rn
-    FROM ccm c JOIN gq2 q ON q.doc_id = c.id
-  ) WHERE rn = 1
-), s4 AS MATERIALIZED (
-  SELECT s3.* FROM s3 WHERE doc_id NOT IN (
-    SELECT c.id FROM ccm c JOIN cbest b ON b.cluster_id = c.comp
-    WHERE c.id <> b.best_doc)
-), dbh AS (
-  SELECT DISTINCT CAST(('0x' || substr(md5('0:' || g), 1, 15)) AS BIGINT) AS h
-  FROM (
-    SELECT unnest(list_distinct(list_transform(range(len(t) - 7), i -> $g8))) AS g
-    FROM (SELECT string_split_regex(trim(text), '\\s+') AS t
-          FROM s3 WHERE doc_id % 29 = 0))
-), dcont AS (
-  SELECT DISTINCT doc_id FROM (
-    SELECT doc_id,
-      unnest(list_distinct(list_transform(range(len(t) - 7), i ->
-        CAST(('0x' || substr(md5('0:' || $g8), 1, 15)) AS BIGINT)))) AS h
-    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-          FROM s4 WHERE doc_id % 29 <> 0))
-  WHERE h IN (SELECT h FROM dbh)
-), s5 AS MATERIALIZED (
-  SELECT * FROM s4
-  WHERE doc_id % 29 <> 0 AND doc_id NOT IN (SELECT doc_id FROM dcont)
-), dbg AS (
-  SELECT doc_id, (source IN ('src0', 'src2', 'src4')) AS tgt,
-    unnest(list_transform(range(1, length(text)),
-      i -> substr(text, i, 2))) AS b
-  FROM s5 WHERE length(text) >= 2
-), dpd AS MATERIALIZED (
-  SELECT doc_id, tgt, b, count(*) AS c FROM dbg GROUP BY 1, 2, 3
-), draw AS (
-  SELECT b, sum(c) AS rc FROM dpd GROUP BY b
-), dtg AS (
-  SELECT b, sum(c) AS tc FROM dpd WHERE tgt GROUP BY b
-), w AS (
-  SELECT p.doc_id,
-    CAST(sum(CAST(p.c AS HUGEINT) * (coalesce(t.tc, 0) + 1)) AS HUGEINT) AS tmass,
-    CAST(sum(CAST(p.c AS HUGEINT) * r.rc) AS HUGEINT) AS rmass
-  FROM dpd p JOIN draw r USING (b) LEFT JOIN dtg t USING (b)
-  GROUP BY p.doc_id
-), gtot AS (
-  SELECT CAST(sum(tmass) AS HUGEINT) AS st,
-         CAST(sum(rmass) AS HUGEINT) AS sr FROM w
-), s6 AS MATERIALIZED (
-  SELECT s5.* FROM s5 JOIN w USING (doc_id) CROSS JOIN gtot
-  WHERE w.tmass * gtot.sr >= w.rmass * gtot.st
-)"""
-  }
-
-  /** DuckDB replay of the END-TO-END curation funnel
-    * (graft.operators.Curation.funnel over plantedLineDocs): the
-    * shared [[curationStageCtes]] chain plus the packing tail and the
-    * per-stage roll-up.
-    */
-  private def curationE2eOracleSql: String = {
-    val nt = s"CAST(coalesce(sum(len(string_split_regex(trim(text), '\\s+'))), 0) AS BIGINT)"
-    def stageRow(name: String, src: String): String =
-      s"SELECT '$name' AS stage, CAST(count(*) AS BIGINT) AS n_docs, $nt AS n_tokens FROM $src"
-    s"""$curationStageCtes, pkt AS (
-  SELECT doc_id, source, doc_id % 4 AS shard,
-    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens
-  FROM s6
-), pk AS (
-  SELECT source, shard,
-    CAST(coalesce(sum(n_tokens) OVER (
-      PARTITION BY source, shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-      // 512 AS bin_id,
-    n_tokens
-  FROM pkt
-)
-SELECT stage, n_docs, n_tokens FROM (
-  ${stageRow("1_raw", "pl")}
-  UNION ALL ${stageRow("2_quality", "s2")}
-  UNION ALL ${stageRow("3_line_dedup", "s3")}
-  UNION ALL ${stageRow("4_near_dedup", "s4")}
-  UNION ALL ${stageRow("5_decontam", "s5")}
-  UNION ALL ${stageRow("6_dsir_sample", "s6")}
-  UNION ALL SELECT '7_packed',
-    CAST((SELECT count(*) FROM
-      (SELECT DISTINCT source, shard, bin_id FROM pk)) AS BIGINT),
-    CAST(coalesce((SELECT sum(n_tokens) FROM pk), 0) AS BIGINT)
-) ORDER BY stage"""
-  }
-
-  /** DuckDB replay of the per-doc rejection attribution
-    * (graft.operators.Curation.rejectReasons): same
-    * [[curationStageCtes]] chain; the final select left-joins each
-    * stage's id set and names the first stage a doc is absent from.
-    */
-  private def curationRejectOracleSql: String =
-    s"""$curationStageCtes
-SELECT pl.doc_id, pl.source,
-  CASE WHEN q2.doc_id IS NULL THEN '2_quality'
-       WHEN q3.doc_id IS NULL THEN '3_line_dedup'
-       WHEN q4.doc_id IS NULL THEN '4_near_dedup'
-       WHEN q5.doc_id IS NULL THEN '5_decontam'
-       WHEN q6.doc_id IS NULL THEN '6_dsir_sample'
-       ELSE 'kept' END AS rejected_at
-FROM pl
-LEFT JOIN (SELECT doc_id FROM s2) q2 USING (doc_id)
-LEFT JOIN (SELECT doc_id FROM s3) q3 USING (doc_id)
-LEFT JOIN (SELECT doc_id FROM s4) q4 USING (doc_id)
-LEFT JOIN (SELECT doc_id FROM s5) q5 USING (doc_id)
-LEFT JOIN (SELECT doc_id FROM s6) q6 USING (doc_id)
-ORDER BY pl.doc_id"""
-
-  /** DuckDB replica of TextOps.langGuess over precomputed sub-exprs —
-    * single-sourced so the three oracles that need language ID cannot
-    * drift from each other.
-    */
-  private def langCaseSql(cjk: String, stop2: String, ntok: String): String =
-    s"""CASE WHEN $cjk > 0 THEN 'zh'
-       WHEN CAST($stop2 AS DOUBLE) / greatest($ntok, 1) >= 0.04 THEN 'en'
-       ELSE 'other' END"""
-
-  /** Portable-simhash sketch CTE chain (Dedup.simhashPortable): token
-    * explode → md5-family 60-bit hashes → per-bit votes → sketch in
-    * `sk(doc_id, simhash)`. Shared by the sketch dump and the
-    * Hamming-band near-dup oracles.
-    */
-  private val SimhashSketchCtes: String = {
-    val voteCols = (0 until 60).map { i =>
-      s"sum(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n    ")
-    val sketch = (0 until 60).map { i =>
-      s"(CASE WHEN v$i >= 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString("(", "\n  + ", ")")
-    s"""ex AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\\s+'))) AS t
-  FROM documents
-), h AS (
-  SELECT doc_id, CAST(('0x' || substr(md5('0:' || t), 1, 15)) AS BIGINT) AS h
-  FROM ex
-), v AS (
-  SELECT doc_id,
-    $voteCols
-  FROM h GROUP BY doc_id
-), sk AS (
-  SELECT doc_id, CAST($sketch AS BIGINT) AS simhash FROM v
-)"""
-  }
-
-  /** Hamming-band blocking over the portable sketch
-    * (Dedup.simhashNearDups): 4 blocks of 15 bits; hamming ≤ 3 forces
-    * an identical block (pigeonhole). `pairs` holds candidates with
-    * exact Hamming distance.
-    */
-  private val SimhashPairsCtes: String = s"""$SimhashSketchCtes,
-banded AS (
-  SELECT doc_id, simhash, t.band, (simhash >> (t.band * 15)) & 32767 AS bv
-  FROM sk, range(4) t(band)
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-)"""
-
-  /** Prefix filtering (Dedup.jaccardCandidates) over md5-hashed
-    * shingles: rarest-first global order, prefix length
-    * n − ⌈3n/10⌉ + 1, size filter, and the PPJoin positional filter
-    * (overlap ≤ min(na − ia, nb − ib) vs α = ⌈3(na+nb)/13⌉) — all in
-    * exact integer arithmetic; every filter is lossless and the
-    * verification in `pairs` makes the answer exact.
-    */
-  private val JaccardPairsCtes: String =
-    s"""jtok AS MATERIALIZED (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM $ScopedDocsSql sdocs
-), shs AS MATERIALIZED (
-  SELECT doc_id,
-    list_distinct(list_transform(range(len(toks) - 2),
-      i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3])) AS shs
-  FROM jtok
-), sh AS (
-  SELECT doc_id, list_distinct(list_transform(shs, s ->
-    CAST(('0x' || substr(md5('0:' || s), 1, 15)) AS BIGINT))) AS sh
-  FROM shs
-), szd AS (
-  SELECT doc_id, sh, len(sh) AS nsh,
-    greatest(len(sh) - ((3 * len(sh) + 9) // 10) + 1, 0) AS plen
-  FROM sh
-), tok AS (
-  SELECT doc_id, unnest(sh) AS h FROM sh
-), dfq AS (
-  SELECT h, count(*) AS df FROM tok GROUP BY h
-), osh AS (
-  SELECT doc_id, list(h ORDER BY df, h) AS osh
-  FROM tok JOIN dfq USING (h) GROUP BY doc_id
-), pre AS (
-  SELECT o.doc_id, z.nsh,
-    unnest(o.osh[1:z.plen]) AS h,
-    generate_subscripts(o.osh[1:z.plen], 1) - 1 AS pos
-  FROM osh o JOIN szd z USING (doc_id)
-), cand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    any_value(a.nsh) AS na, any_value(b.nsh) AS nb,
-    min(a.pos) AS ia, min(b.pos) AS ib
-  FROM pre a JOIN pre b ON a.h = b.h AND a.doc_id < b.doc_id
-  WHERE greatest(a.nsh, b.nsh) * 3 <= least(a.nsh, b.nsh) * 10
-  GROUP BY a.doc_id, b.doc_id
-), pruned AS (
-  SELECT doc_a, doc_b FROM cand
-  WHERE least(na - ia, nb - ib) >= (3 * (na + nb) + 12) // 13
-), pairs AS (
-  SELECT p.doc_a, p.doc_b,
-    round(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE) /
-      greatest(CAST(len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)) AS DOUBLE), 1.0), 4) AS jaccard
-  FROM pruned p JOIN szd x ON x.doc_id = p.doc_a JOIN szd y ON y.doc_id = p.doc_b
-)"""
-
-  /** Connected components over a (doc_a, doc_b) pair relation — the
-    * DuckDB replica of Dedup.clusterMembership, as UNROLLED min-label
-    * propagation + pointer jumping (`rounds` rounds — the same
-    * algorithm the Spark side iterates). A full-reachability recursive
-    * CTE is exact but quadratic in component size (a 3.5k-doc template
-    * component at sf0.1 costs ~10^10 join tuples — measured ~28 min);
-    * each unrolled round here is linear in edges, and `rounds` = 9
-    * covers diameters far beyond any observed similarity cluster.
-    * Exactness is guarded, not assumed: the final round must equal the
-    * previous one (fixpoint ⟹ labels constant per component ⟹ the
-    * component min), else the guard emits ZERO rows and the parity
-    * gate fails loudly rather than passing an unconverged labeling.
-    * Ends with `ccm(id, comp)` — the converged membership CTE.
-    */
-  private def clusterCtesSql(pairSel: String,
-                             rounds: Int = 9): String = {
-    // every CTE is MATERIALIZED: DuckDB inlines CTEs by default, so an
-    // un-materialized ccedges would re-expand the whole pair pipeline
-    // (including the parquet scan) once per reference across the
-    // unrolled rounds
-    val sb = new StringBuilder
-    sb.append(s""", fpx AS MATERIALIZED (
-  $pairSel
-), ccedges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM fpx
-  UNION ALL
-  SELECT doc_b, doc_a FROM fpx
-), j0 AS MATERIALIZED (
-  SELECT src AS id, least(src, min(dst)) AS comp FROM ccedges GROUP BY src
-)""")
-    for (k <- 1 to rounds) {
-      sb.append(s""", p$k AS MATERIALIZED (
-  SELECT l.id, least(l.comp, coalesce(m.mn, l.comp)) AS comp
-  FROM j${k - 1} l LEFT JOIN (
-    SELECT e.dst AS id, min(l2.comp) AS mn
-    FROM ccedges e JOIN j${k - 1} l2 ON l2.id = e.src
-    GROUP BY e.dst) m USING (id)
-), j$k AS MATERIALIZED (
-  SELECT l.id, least(l.comp, coalesce(c.comp, l.comp)) AS comp
-  FROM p$k l LEFT JOIN p$k c ON c.id = l.comp
-)""")
-    }
-    sb.append(s""", ccm AS (
-  SELECT id, comp FROM j$rounds
-  WHERE NOT EXISTS (
-    SELECT 1 FROM j${rounds - 1} a JOIN j$rounds b USING (id)
-    WHERE a.comp <> b.comp)
-), ccconv AS (
-  SELECT 1 AS ok WHERE NOT EXISTS (
-    SELECT 1 FROM j${rounds - 1} a JOIN j$rounds b USING (id)
-    WHERE a.comp <> b.comp)
-)""")
-    sb.toString
-  }
-
-  /** DuckDB replay of the INCREMENTAL curation funnel
-    * (Curation.incrementalFunnel over the doc_id % 7 corpus/batch
-    * split of plantedLineDocs): every incremental stage re-stated in
-    * SQL — corpus-only line counts feed the corpus text layer (the
-    * state), merged counts gate the batch lines, ONE minhash chain
-    * over cs3 ∪ b3 serves both the cross (corpus-seniority) drop and
-    * the intra-batch clusters (signatures are per-doc, so subset
-    * pair sets are pair-set restrictions), the merged gram set
-    * decontaminates, and the batch's DSIR masses under the MERGED
-    * bigram dim are judged against the CORPUS aggregate ratio.
-    */
-  private def curationNovelOracleSql: String = {
-    val nt = s"CAST(coalesce(sum(len(string_split_regex(trim(text), '\\s+'))), 0) AS BIGINT)"
-    def stageRow(name: String, src: String): String =
-      s"SELECT '$name' AS stage, CAST(count(*) AS BIGINT) AS n_docs, $nt AS n_tokens FROM $src"
-    s"""$curationNovelCtes
-SELECT stage, n_docs, n_tokens FROM (
-  ${stageRow("1_raw", "plb")}
-  UNION ALL ${stageRow("2_quality", "bs2")}
-  UNION ALL ${stageRow("3_line_dedup", "b3")}
-  UNION ALL ${stageRow("4_near_dedup", "b4")}
-  UNION ALL ${stageRow("5_decontam", "b5")}
-  UNION ALL ${stageRow("6_dsir_sample", "b6")}
-  UNION ALL SELECT '7_packed',
-    CAST((SELECT count(*) FROM
-      (SELECT DISTINCT source, shard, bin_id FROM pk)) AS BIGINT),
-    CAST(coalesce((SELECT sum(n_tokens) FROM pk), 0) AS BIGINT)
-) ORDER BY stage"""
-  }
-
-  /** The composed nightly job's BATCH FACE (round-8 verdict #5's
-    * oracle row): the curated batch product (the `b6` layer + its
-    * packing coordinates) joined to its hash-embed featurization
-    * profile — exactly what `startCorpusMaintenance` derives from one
-    * micro-batch before the index append (the append itself is a
-    * filesystem transaction, locked by the crash-replay spec, not
-    * SQL-replayable). Shares every CTE with the funnel oracle so the
-    * two rows cannot drift.
-    */
-  private def maintainBatchOracleSql: String =
-    s"""${curationNovelCtes(2)}, mt AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM b6
-), mc AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 64 AS bucket,
-    count(*) AS cnt
-  FROM mt GROUP BY doc_id, bucket
-), ms AS (
-  SELECT doc_id, count(*) AS nnz, CAST(sum(cnt * cnt) AS BIGINT) AS norm_sq
-  FROM mc GROUP BY doc_id
-), mtop AS (
-  SELECT doc_id, bucket AS top_bucket, cnt AS top_count,
-    row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bucket) AS rn
-  FROM mc
-)
-SELECT b.doc_id, pk.shard, pk.bin_id,
-  CAST(len(string_split_regex(trim(b.text), '\\s+')) AS BIGINT) AS n_tokens,
-  ms.nnz, ms.norm_sq, t2.top_bucket, t2.top_count
-FROM b6 b
-JOIN pk ON pk.doc_id = b.doc_id
-JOIN ms ON ms.doc_id = b.doc_id
-JOIN mtop t2 ON t2.doc_id = b.doc_id AND t2.rn = 1
-ORDER BY b.doc_id"""
-
-  /** Shared CTE chain of the incremental-curation oracles: raw %7
-    * split → quality → line dedup under the merged dim →
-    * corpus-seniority near-dup → decontam under merged grams → DSIR
-    * vs the corpus aggregate → packing (`pk`, doc_id retained).
-    */
-  private def curationNovelCtes: String = curationNovelCtes(0)
-
-  private def curationNovelCtes(batchRem: Int): String = {
-    val g8 = (1 to 8).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-    def linesOf(src: String, out: String): String =
-      s"""$out AS MATERIALIZED (
-  SELECT doc_id, u.pos AS pos, u.line AS line FROM (
-    SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-      i -> {'pos': i, 'line': ls[i]})) AS u
-    FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM $src))
-)"""
-    s"""WITH pl AS MATERIALIZED (
-  SELECT doc_id, source,
-    'NAV MENU HOME' || chr(10) || text || chr(10) ||
-    '(c) site ' || source || chr(10) ||
-    CASE WHEN doc_id % 3 = 0 THEN 'subscribe now'
-         ELSE 'u' || CAST(doc_id AS VARCHAR) END AS text
-  FROM documents WHERE doc_id < 300
-), plc AS MATERIALIZED (
-  SELECT * FROM pl WHERE doc_id % 7 <> $batchRem
-), plb AS MATERIALIZED (
-  SELECT * FROM pl WHERE doc_id % 7 = $batchRem
-), ${gopherCtesSql("plc", "cg")},
-cs2 AS MATERIALIZED (
-  SELECT p.doc_id, p.source, p.text
-  FROM plc p JOIN cg USING (doc_id) WHERE cg.gopher_pass
-), ${gopherCtesSql("plb", "bg")},
-bs2 AS MATERIALIZED (
-  SELECT p.doc_id, p.source, p.text
-  FROM plb p JOIN bg USING (doc_id) WHERE bg.gopher_pass
-), ${linesOf("cs2", "clr")}, ${linesOf("bs2", "blr")},
-chot AS (
-  SELECT line FROM clr GROUP BY line HAVING count(*) >= 5
-), mhot AS (
-  SELECT line FROM (
-    SELECT line FROM clr UNION ALL SELECT line FROM blr)
-  GROUP BY line HAVING count(*) >= 5
-), ckt AS (
-  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-  FROM clr WHERE line NOT IN (SELECT line FROM chot) GROUP BY doc_id
-), cs3 AS MATERIALIZED (
-  SELECT c.doc_id, c.source, k.text FROM cs2 c JOIN ckt k USING (doc_id)
-), bkt AS (
-  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-  FROM blr WHERE line NOT IN (SELECT line FROM mhot) GROUP BY doc_id
-), b3 AS MATERIALIZED (
-  SELECT c.doc_id, c.source, k.text FROM bs2 c JOIN bkt k USING (doc_id)
-), m3 AS MATERIALIZED (
-  SELECT doc_id, text FROM cs3 UNION ALL SELECT doc_id, text FROM b3
-), ${minhashPairsCtes("m3")},
-bxl AS (
-  SELECT DISTINCT CASE WHEN doc_a % 7 = $batchRem THEN doc_a ELSE doc_b END AS doc_id
-  FROM j WHERE jaccard >= 0.3 AND ((doc_a % 7 = $batchRem) <> (doc_b % 7 = $batchRem))
-), bsv AS MATERIALIZED (
-  SELECT * FROM b3 WHERE doc_id NOT IN (SELECT doc_id FROM bxl)
-)${clusterCtesSql(
-      s"""SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.3
-    AND doc_a % 7 = $batchRem AND doc_b % 7 = $batchRem
-    AND doc_a IN (SELECT doc_id FROM bsv)
-    AND doc_b IN (SELECT doc_id FROM bsv)""")},
-${gopherCtesSql("b3", "bq2")},
-cbest AS (
-  SELECT cluster_id, doc_id AS best_doc FROM (
-    SELECT c.comp AS cluster_id, c.id AS doc_id,
-      row_number() OVER (PARTITION BY c.comp
-        ORDER BY q.gopher_pass DESC, q.n_words DESC, c.id) AS rn
-    FROM ccm c JOIN bq2 q ON q.doc_id = c.id
-  ) WHERE rn = 1
-), b4 AS MATERIALIZED (
-  SELECT bsv.* FROM bsv WHERE doc_id NOT IN (
-    SELECT c.id FROM ccm c JOIN cbest b ON b.cluster_id = c.comp
-    WHERE c.id <> b.best_doc)
-), dbh AS (
-  SELECT DISTINCT CAST(('0x' || substr(md5('0:' || g), 1, 15)) AS BIGINT) AS h
-  FROM (
-    SELECT unnest(list_distinct(list_transform(range(len(t) - 7), i -> $g8))) AS g
-    FROM (SELECT string_split_regex(trim(text), '\\s+') AS t
-          FROM (SELECT text FROM cs3 WHERE doc_id % 29 = 0
-                UNION ALL SELECT text FROM b3 WHERE doc_id % 29 = 0)))
-), dcont AS (
-  SELECT DISTINCT doc_id FROM (
-    SELECT doc_id,
-      unnest(list_distinct(list_transform(range(len(t) - 7), i ->
-        CAST(('0x' || substr(md5('0:' || $g8), 1, 15)) AS BIGINT)))) AS h
-    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-          FROM b4 WHERE doc_id % 29 <> 0))
-  WHERE h IN (SELECT h FROM dbh)
-), b5 AS MATERIALIZED (
-  SELECT * FROM b4
-  WHERE doc_id % 29 <> 0 AND doc_id NOT IN (SELECT doc_id FROM dcont)
-), cbg AS (
-  SELECT doc_id, (source IN ('src0', 'src2', 'src4')) AS tgt,
-    unnest(list_transform(range(1, length(text)),
-      i -> substr(text, i, 2))) AS b
-  FROM cs3 WHERE length(text) >= 2
-), cpd AS MATERIALIZED (
-  SELECT doc_id, tgt, b, count(*) AS c FROM cbg GROUP BY 1, 2, 3
-), craw AS (
-  SELECT b, sum(c) AS rc FROM cpd GROUP BY b
-), ctg AS (
-  SELECT b, sum(c) AS tc FROM cpd WHERE tgt GROUP BY b
-), cw AS (
-  SELECT p.doc_id,
-    CAST(sum(CAST(p.c AS HUGEINT) * (coalesce(t.tc, 0) + 1)) AS HUGEINT) AS tmass,
-    CAST(sum(CAST(p.c AS HUGEINT) * r.rc) AS HUGEINT) AS rmass
-  FROM cpd p JOIN craw r USING (b) LEFT JOIN ctg t USING (b)
-  GROUP BY p.doc_id
-), cglob AS (
-  SELECT CAST(sum(tmass) AS HUGEINT) AS st,
-         CAST(sum(rmass) AS HUGEINT) AS sr FROM cw
-), bbg AS (
-  SELECT doc_id, (source IN ('src0', 'src2', 'src4')) AS tgt,
-    unnest(list_transform(range(1, length(text)),
-      i -> substr(text, i, 2))) AS b
-  FROM b5 WHERE length(text) >= 2
-), bpd AS MATERIALIZED (
-  SELECT doc_id, tgt, b, count(*) AS c FROM bbg GROUP BY 1, 2, 3
-), mrw AS (
-  SELECT b, sum(c) AS rc FROM (
-    SELECT b, c FROM cpd UNION ALL SELECT b, c FROM bpd) GROUP BY b
-), mtg AS (
-  SELECT b, sum(c) AS tc FROM (
-    SELECT b, c FROM cpd WHERE tgt
-    UNION ALL SELECT b, c FROM bpd WHERE tgt) GROUP BY b
-), bw AS (
-  SELECT p.doc_id,
-    CAST(sum(CAST(p.c AS HUGEINT) * (coalesce(t.tc, 0) + 1)) AS HUGEINT) AS tmass,
-    CAST(sum(CAST(p.c AS HUGEINT) * r.rc) AS HUGEINT) AS rmass
-  FROM bpd p JOIN mrw r USING (b) LEFT JOIN mtg t USING (b)
-  GROUP BY p.doc_id
-), b6 AS MATERIALIZED (
-  SELECT b5.* FROM b5 JOIN bw USING (doc_id) CROSS JOIN cglob
-  WHERE bw.tmass * cglob.sr >= bw.rmass * cglob.st
-), pkt AS (
-  SELECT doc_id, source, doc_id % 4 AS shard,
-    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens
-  FROM b6
-), pk AS (
-  SELECT doc_id, source, shard,
-    CAST(coalesce(sum(n_tokens) OVER (
-      PARTITION BY source, shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-      // 512 AS bin_id,
-    n_tokens
-  FROM pkt
-)"""
-  }
-
-  /** [[clusterCtesSql]] + the membership projection — the oracle for
-    * the `doc_*_clusters` queries.
-    */
-  private def clusterMembershipSql(pairSel: String,
-                                   rounds: Int = 9): String =
-    clusterCtesSql(pairSel, rounds) + """
-SELECT id AS doc_id, comp AS cluster_id,
-  count(*) OVER (PARTITION BY comp) AS cluster_size
-FROM ccm ORDER BY doc_id"""
-
-  /** Per-doc Gopher signal CTEs over source relation `src` — the
-    * DuckDB replica of TextOps.gopherQuality's counting layer. Ends
-    * with `gq_m` (the integer signal table: n_words, sum_word_len,
-    * n_alpha_words, n_symbols, n_lines, n_bullet_lines,
-    * n_ellipsis_lines, n_ngrams, n_distinct_ngrams) and `gq`
-    * (doc_id, n_words, gopher_pass — the integer-exact pass rule).
-    * Shared by the doc_quality_gopher oracle and the cluster-best
-    * survivor replay so the pass rule cannot diverge between rows.
-    */
-  private def gopherCtesSql(src: String, p: String = "gq"): String =
-    s"""${p}_t AS MATERIALIZED (
-  SELECT doc_id,
-    string_split_regex(trim(text), '\\s+') AS toks,
-    string_split(text, chr(10)) AS lns,
-    CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
-      + CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT)
-      + CAST(length(text) - length(replace(text, '…', '')) AS BIGINT) AS n_symbols
-  FROM $src
-), ${p}_g AS (
-  SELECT doc_id, toks, lns, n_symbols,
-    list_transform(range(len(toks) - 2),
-      i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3]) AS gs
-  FROM ${p}_t
-), ${p}_m AS (
-  SELECT doc_id,
-    CAST(len(toks) AS BIGINT) AS n_words,
-    CAST(COALESCE(list_sum(list_transform(toks, t -> length(t))), 0) AS BIGINT) AS sum_word_len,
-    CAST(len(list_filter(toks, t -> regexp_matches(t, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-    n_symbols,
-    CAST(len(lns) AS BIGINT) AS n_lines,
-    CAST(len(list_filter(lns, l -> regexp_matches(l, '^\\s*[-*•]'))) AS BIGINT) AS n_bullet_lines,
-    CAST(len(list_filter(lns, l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$$'))) AS BIGINT) AS n_ellipsis_lines,
-    CAST(len(gs) AS BIGINT) AS n_ngrams,
-    CAST(len(list_distinct(gs)) AS BIGINT) AS n_distinct_ngrams
-  FROM ${p}_g
-), $p AS (
-  SELECT doc_id, n_words,
-    (n_words >= 50 AND n_words <= 100000
-      AND 3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words
-      AND 10 * n_symbols <= n_words
-      AND 10 * n_bullet_lines <= 9 * n_lines
-      AND 10 * n_ellipsis_lines <= 3 * n_lines
-      AND 5 * n_alpha_words >= 4 * n_words) AS gopher_pass
-  FROM ${p}_m
-)"""
-
-  /** DuckDB replica of Detect.complianceFindings over source relation
-    * `src` — generated from the same table-set constants as the Spark
-    * side (reference app.py:477-485: GDPR = sensitive table ∧ falsy
-    * user_id; SOX = accounts/financial/transactions UPDATE/DELETE with
-    * rows_affected truthiness; PCI_DSS = payments/credit_cards).
-    */
-  private def complianceFindingsSql(src: String): String = {
-    val sensTables = Detect.SensitiveTables.map(t => s"'$t'").mkString(", ")
-    val soxTables = Detect.SoxTables.map(t => s"'$t'").mkString(", ")
-    val pciTables = Detect.PciTables.map(t => s"'$t'").mkString(", ")
-    s"""SELECT activity_id, username, 'GDPR' AS standard,
-    'Personal data access without user identification' AS finding,
-    'Non-compliant' AS status
-  FROM $src WHERE table_name IN ($sensTables)
-    AND (user_id IS NULL OR CAST(user_id AS VARCHAR) = '0')
-  UNION ALL
-  SELECT activity_id, username, 'SOX', 'Financial data modification',
-    CASE WHEN rows_affected IS NOT NULL AND rows_affected <> 0
-         THEN 'Compliant' ELSE 'Review needed' END
-  FROM $src WHERE table_name IN ($soxTables)
-    AND operation_type IN ('UPDATE', 'DELETE')
-  UNION ALL
-  SELECT activity_id, username, 'PCI_DSS', 'Cardholder data access detected',
-    'Monitored'
-  FROM $src WHERE table_name IN ($pciTables)"""
-  }
-
-  /** Period-windowed compliance report oracle (Detect.complianceReport):
-    * `cond` filters activity against the max-timestamp anchor `m`.
-    */
-  private def complianceReportSql(cond: String): String = act(
-    s""", mx AS (SELECT max(access_timestamp) AS m FROM activity),
-win AS (SELECT a.* FROM activity a, mx WHERE $cond)
-SELECT standard, status, count(*) AS n, count(DISTINCT username) AS distinct_users
-FROM (
-  ${complianceFindingsSql("win")}
-) GROUP BY 1, 2 ORDER BY 1, 2""")
-
-  // ---------------------------------------------------------------- //
-  // Spark-side helpers                                               //
-  // ---------------------------------------------------------------- //
-
-  private def classified(s: SparkSession, d: String): DataFrame =
-    Tables.classifiedActivity(s, d)
-
-  /** Parity-budget scope for the quadratic pair-fixture families
-    * (jaccard/minhash pairs, clusters, dedup-apply): the FULL corpus
-    * at the sf0.01 correctness gate, every [[ScopeMod]]-th doc once
-    * the corpus exceeds [[ScopeThreshold]]. Candidate/pair volume on
-    * the template-heavy fixture grows ~quadratically with corpus
-    * size, and these five oracles dominated the sf0.1 parity wall
-    * (~250 of 345 DuckDB seconds, round-4 verdict #9); the operators
-    * are corpus-agnostic and keep identical sf0.01 gate coverage.
-    * [[ScopedDocsSql]] encodes the same rule for the oracle via a
-    * corpus-count CASE, so the two sides cannot diverge on scope.
-    */
-  // defs, not vals: the oracle CTE builders earlier in the object read
-  // these during THEIR val initialization — a later val would still be
-  // null/0 at that point
-  private def ScopeThreshold = 1000L
-  private def ScopeMod = 4
-
-  // corpus size memoized per canonical dir: five scoped queries ×
-  // several bench runs would otherwise re-scan the corpus to re-learn
-  // the same constant. Keyed on the path only (no SparkSession in the
-  // key — a session reference would be strongly retained for the
-  // process lifetime) and bounded LRU. Fixture dirs are immutable for
-  // the life of a process by contract (TESTDATA.md corpora are
-  // driver-generated once); a rewrite straddling ScopeThreshold within
-  // one process would require dropping the cache.
-  private val docsCountCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, java.lang.Long](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-          size() > 64
-      })
-
-  /** Planted multi-line corpus for the line-dedup fixture (the
-    * documents table is single-line, TESTDATA.md): corpus-wide nav
-    * chrome on every doc, a per-source footer, a banner on every
-    * third doc, and the unique body + tail line. Built with column
-    * expressions only, so the oracle replays the identical
-    * construction in SQL — the planted-truth pattern the media legs
-    * use. Bounded to doc_id < 300 at every scale factor.
-    */
-  /** The doc_line_dedup replay (raw line STRINGS as the dedup key —
-    * the engine blocks on 64-bit hashes, so the instrument cannot
-    * self-confirm), with an optional final restriction: the
-    * incremental row replays the full recompute restricted to the
-    * batch docs.
-    */
-  private def lineDedupOracleSql(finalWhere: String): String =
-    s"""WITH pl AS (
-  SELECT doc_id,
-    'NAV MENU HOME' || chr(10) || text || chr(10) ||
-    '(c) site ' || source || chr(10) ||
-    CASE WHEN doc_id % 3 = 0 THEN 'subscribe now'
-         ELSE 'u' || CAST(doc_id AS VARCHAR) END AS text
-  FROM documents WHERE doc_id < 300
-), lr AS MATERIALIZED (
-  SELECT doc_id, u.pos AS pos, u.line AS line FROM (
-    SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-      i -> {'pos': i, 'line': ls[i]})) AS u
-    FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM pl))
-), hot AS (
-  SELECT line FROM lr GROUP BY line HAVING count(*) >= 5
-), kept AS (
-  SELECT doc_id, pos, line FROM lr
-  WHERE line NOT IN (SELECT line FROM hot)
-), stats AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines FROM lr GROUP BY doc_id
-), kt AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-    string_agg(line, chr(10) ORDER BY pos) AS text_deduped
-  FROM kept GROUP BY doc_id
-)
-SELECT s.doc_id, s.n_lines,
-  CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
-  coalesce(k.text_deduped, '') AS text_deduped
-FROM stats s LEFT JOIN kt k USING (doc_id) $finalWhere ORDER BY doc_id"""
-
-  private[graft] def plantedLineDocs(docs: DataFrame): DataFrame =
-    docs.filter(col("doc_id") < 300)
-      .select(col("doc_id"), col("source"), concat_ws("\n",
-        lit("NAV MENU HOME"),
-        col("text"),
-        concat(lit("(c) site "), col("source")),
-        when(col("doc_id") % 3 === 0, lit("subscribe now"))
-          .otherwise(concat(lit("u"), col("doc_id").cast("string"))))
-        .as("text"))
-
-  /** Planted multilingual corpus for the language-ID oracle: three
-    * pseudo-languages derived from the documents text by token
-    * suffixing (doc_id % 3: 0 → 'von'-suffixed "de", 1 → unchanged
-    * "en", 2 → 'le'-suffixed "fr") — disjoint vocabularies, so the
-    * true label is pure id arithmetic while the classifier earns it
-    * through real hashing + per-class frequency dims + the exact
-    * rational argmax. doc_id < 60 is the labeled training split.
-    */
-  private[graft] def plantedLangDocs(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    def sfx(suffix: String): Column =
-      array_join(transform(toks, t => concat(t, lit(suffix))), " ")
-    docs.select(col("doc_id"),
-      when(col("doc_id") % 3 === 0, sfx("von"))
-        .when(col("doc_id") % 3 === 1, col("text"))
-        .otherwise(sfx("le")).as("text"))
-  }
-
-  private def scopedDocs(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val key = new java.io.File(d).getCanonicalPath
-    val n = docsCountCache.computeIfAbsent(key, _ => docs.count())
-    if (n > ScopeThreshold)
-      docs.filter(col("doc_id") % ScopeMod === 0)
-    else docs
-  }
-
-  private def ScopedDocsSql: String =
-    s"""(SELECT * FROM documents
-  WHERE doc_id % (CASE WHEN (SELECT count(*) FROM documents) > $ScopeThreshold
-                       THEN $ScopeMod ELSE 1 END) = 0)"""
-
-  private val fmtTs = (c: Column) => date_format(c, "yyyy-MM-dd HH:mm:ss")
-
-  /** Planted-near-dup embedding corpus for the emb_near_dups /
-    * emb_near_dup_recall fixtures: the synthetic embeddings are random
-    * noise with NO true near-duplicates (max natural pair cosine
-    * ≈ 0.51), so the fixture plants them — every 25th vector gets a
-    * clone at id + [[PlantedIdBase]] mixed 4:1 with its successor
-    * (cosine ≈ 0.97, exactly replayable: double arithmetic then one
-    * float32 round, identical IEEE ops in both engines). The corpus is
-    * subset to every 5th vector (+ clones) to keep the DuckDB replay
-    * of the candidate stage within the parity budget; the operator
-    * itself is corpus-size-agnostic.
-    */
-  private def plantedClones(base: DataFrame): DataFrame = {
-    val nxt = base.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-    base
-      .filter(col("vec_id") % 25 === 0)
-      .join(nxt, col("vec_id") + 1 === col("nid"))
-      .select((col("vec_id") + lit(PlantedIdBase)).as("vec_id"),
-        zip_with(col("embedding"), col("ne"), (x, y) =>
-          (x.cast("double") + lit(0.25) * y.cast("double")).cast("float"))
-          .as("embedding"))
-  }
-
-  private[graft] def plantedEmbeddings(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d)
-    base.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("embedding"))
-      .unionByName(plantedClones(base))
-  }
-
-  /** Clustered-embedding fixture (round-12 verdict #2): the synthetic
-    * embeddings are uniform noise, so every recall row priced on them
-    * measures the WORST case — this derives a deterministic
-    * mixture-of-tight-clusters corpus FROM the base table (the
-    * planted-clone discipline, replayed exactly by the oracle):
-    * vector i = center(i mod 8) + 0.25·eᵢ, centers = the base vectors
-    * at vec_id ∈ {0, 50, …, 350}. Within-cluster cosines land in the
-    * near-dup regime the ANN dials are designed for (≈0.94–0.97),
-    * cross-cluster at the noise ceiling (≈0.5), so the clustered
-    * recall rows price the dials at their DESIGN POINT beside the
-    * noise worst case. Same (vec_id, label, embedding) schema as the
-    * base table.
-    */
-  private[graft] def clusteredEmbeddings(s: SparkSession,
-                                         d: String): DataFrame = {
-    val base = Tables.embeddings(s, d)
-    val centers = base
-      .filter(col("vec_id") % 50 === 0 && col("vec_id") < 400)
-      .select((col("vec_id") / 50).cast("int").as("ck"),
-        col("embedding").as("cvec"))
-    base
-      .select(col("vec_id"), col("label"), col("embedding"),
-        (col("vec_id") % 8).cast("int").as("ck"))
-      .join(broadcast(centers), Seq("ck"))
-      .select(col("vec_id"), col("label"),
-        zip_with(col("cvec"), col("embedding"), (c, e) =>
-          (c.cast("double") + lit(0.25) * e.cast("double")).cast("float"))
-          .as("embedding"))
-  }
-
-  /** Incremental-ingest embedding fixture (emb_novel): the corpus is
-    * the planted base (every 5th vector); the batch is the planted
-    * clones — true corpus near-dups the operator must drop — plus the
-    * vec_id % 5 = 1 noise vectors, novel by construction (max natural
-    * pair cosine ≈ 0.51, far under the 0.9 threshold).
-    */
-  private def novelEmbeddingSplit(s: SparkSession,
-                                  d: String): (DataFrame, DataFrame) = {
-    val base = Tables.embeddings(s, d)
-    val ref = base.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("embedding"))
-    val batch = plantedClones(base).unionByName(
-      base.filter(col("vec_id") % 5 === 1)
-        .select(col("vec_id"), col("embedding")))
-    (batch, ref)
-  }
-
   /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational / warehouse surface ----
-    "q1_pricing_summary" -> ((s, d) => Relational.pricingSummary(s, d)),
-    "q3_top_orders" -> ((s, d) => Relational.topRevenueOrders(s, d)
-      .select(col("l_orderkey"), fmtTs(col("o_orderdate")).as("o_orderdate"),
-        col("o_orderpriority"), col("revenue"))),
-    "q5_region_revenue" -> ((s, d) => Relational.regionRevenue(s, d)),
-    "q_events_by_segment" -> ((s, d) => Relational.eventsBySegment(s, d)),
-    "q_user_coverage" -> ((s, d) => Relational.userCoverage(s, d)),
-    "q_events_pivot" -> ((s, d) => Relational.eventsPivot(s, d)),
-
-    // ---- DAM classification pipelines (C1-C3, P9, S5) ----
-    "dam_classify" -> ((s, d) => Tables.activity(s, d)
-      .select(col("activity_id"), col("user_id"), col("username"), col("role"),
-        col("operation_type"), col("table_name"), col("operation_status"),
-        col("ip_address"), col("rows_affected"), col("query_hash"))
-      .orderBy(col("activity_id"))),
-
-    // ---- DAM analytics (A1-A9, W1-W2, P4) ----
-    "dam_stats" -> ((s, d) => Analytics.stats(Tables.activity(s, d))),
-    "dam_ops_by_type" -> ((s, d) => Analytics.opsByType(Tables.activity(s, d))),
-    "dam_top_users" -> ((s, d) => Analytics.topUsers(Tables.activity(s, d))),
-    "dam_timeline_hourly" -> ((s, d) =>
-      Analytics.timelineHourly(Tables.activity(s, d))),
-    "dam_behavior_profile" -> ((s, d) =>
-      Analytics.behaviorProfile(Tables.activity(s, d))),
-    "dam_user_baseline" -> ((s, d) =>
-      Analytics.userBaseline(Tables.activity(s, d))),
-    "dam_rate_per_minute" -> ((s, d) =>
-      Analytics.ratePerMinute(Tables.activity(s, d))),
-    "dam_anomaly_zscore" -> ((s, d) =>
-      Analytics.anomalyZScore(Tables.activity(s, d))),
-    "dam_anomaly_mad" -> ((s, d) =>
-      Analytics.madAnomalies(Tables.activity(s, d))),
-    "dam_timeline_dense" -> ((s, d) =>
-      Analytics.timelineDense(Tables.activity(s, d))),
-    "dam_ip_switches" -> ((s, d) => Analytics.ipSwitches(Tables.activity(s, d))),
-    "dam_latest_failed" -> ((s, d) =>
-      Analytics.latest(Tables.activity(s, d), 50, status = Some("Failed"))
-        .select(col("activity_id"), col("username"), col("operation_type"),
-          col("table_name"), col("ip_address"),
-          fmtTs(col("access_timestamp")).as("access_ts"))
-        .orderBy(col("activity_id"))),
-    // the CSV export frame (S8, app.py:626-636 + 1215-1226): latest
-    // 1000 activities, ISO-8601 timestamps — the exact rows
-    // TableRegistry.exportCsv serializes
-    "dam_export_csv" -> ((s, d) =>
-      Analytics.latest(Tables.activity(s, d), 1000)
-        .select(col("activity_id"), col("username"), col("operation_type"),
-          col("table_name"), col("operation_status"), col("ip_address"),
-          date_format(col("access_timestamp"), "yyyy-MM-dd'T'HH:mm:ss")
-            .as("access_timestamp"))
-        .orderBy(col("activity_id"))),
-
-    // ---- DAM detection engines (C4-C6, J3, J4+W3) ----
-    "dam_severity" -> ((s, d) => classified(s, d)
-      .select(col("activity_id"), col("operation_type"), col("table_name"),
-        col("role"), col("severity_ord"), col("severity_level"),
-        col("is_suspicious"), col("suspicious_reasons"))
-      .orderBy(col("activity_id"))),
-    "dam_alerts" -> ((s, d) => Detect.deriveAlerts(classified(s, d))
-      .select(col("activity_id"), col("username"), col("alert_type"),
-        col("severity_level"), col("alert_status"))
-      .orderBy(col("activity_id"))),
-    "dam_compliance" -> ((s, d) =>
-      Detect.complianceFindings(Tables.activity(s, d))
-        .orderBy(col("activity_id"), col("standard"))),
-    "dam_compliance_summary" -> ((s, d) =>
-      Detect.complianceFindings(Tables.activity(s, d))
-        .groupBy(col("standard"), col("status"))
-        .agg(count(lit(1)).as("n"),
-          count_distinct(col("username")).as("distinct_users"))
-        .orderBy(col("standard"), col("status"))),
-    // ---- period-windowed compliance reports (app.py:489-495) ----
-    "dam_compliance_daily" -> ((s, d) =>
-      Detect.complianceReport(Tables.activity(s, d), "daily")),
-    "dam_compliance_weekly" -> ((s, d) =>
-      Detect.complianceReport(Tables.activity(s, d), "weekly")),
-    "dam_compliance_monthly" -> ((s, d) =>
-      Detect.complianceReport(Tables.activity(s, d), "monthly")),
-    // the generate_report statistics envelope (app.py:497-509):
-    // total_activities / non_compliant_count / standards_covered
-    "dam_compliance_envelope" -> ((s, d) =>
-      Detect.complianceEnvelope(Tables.activity(s, d), "monthly")),
-
-    // ---- failed-login lockouts + hourly failure feed ----
-    // maxAttempts/threshold tightened vs the reference defaults (5 /
-    // 10) so the synthetic activity stream actually exercises them
-    "dam_lockouts" -> ((s, d) =>
-      Detect.lockouts(Tables.activity(s, d), maxAttempts = 3)
-        .select(col("username"), col("activity_id"),
-          fmtTs(col("locked_at")).as("locked_at"), col("failed_attempts"),
-          fmtTs(col("locked_until")).as("locked_until"))
-        .orderBy(col("username"), col("activity_id"))),
-    "dam_failed_hourly" -> ((s, d) =>
-      Detect.failedHourly(Tables.activity(s, d), threshold = 1)
-        .select(col("username"),
-          date_format(col("hour_bucket"), "yyyy-MM-dd HH:00").as("hour_bucket"),
-          col("n_failed"))
-        .orderBy(col("username"), col("hour_bucket"))),
-
-    // ---- recent-threats feed (E2 payload, app.py:305) ----
-    "dam_threat_feed" -> ((s, d) => classified(s, d)
-      .filter(col("is_suspicious"))
-      .orderBy(col("access_timestamp").desc, col("activity_id").desc)
-      .limit(10)
-      .select(col("activity_id"), col("username"), col("severity_level"),
-        col("suspicious_reasons"), fmtTs(col("access_timestamp")).as("access_ts"))
-      .orderBy(col("activity_id"))),
-
-    "dam_firewall" -> ((s, d) => Detect.firewallMatch(
-      Tables.activity(s, d), Detect.firewallRules(s))
-      .select(col("activity_id"), col("username"), col("ip_address"),
-        col("rule_id"), col("description"), col("action"), col("priority"),
-        col("query_snippet"))
-      .orderBy(col("activity_id"))),
-    // the firewall_blocks table feed (app.py:845-848, DDL
-    // app.py:1489-1497): every first-match hit is recorded, whatever
-    // its action — only action='block' additionally suppresses the log
-    // row (the E1 wiring in Ingest.start)
-    "dam_firewall_blocks" -> ((s, d) => Detect.firewallMatch(
-      Tables.activity(s, d), Detect.firewallRules(s))
-      .select(col("activity_id"), col("rule_id"), col("description"),
-        col("username"), col("ip_address"), col("query_snippet"),
-        fmtTs(col("matched_at")).as("blocked_at"))
-      .orderBy(col("activity_id"))),
-    // the rules-listing endpoint (GET /api/v2/firewall/rules,
-    // app.py:1311-1315: ORDER BY priority ASC)
-    "dam_firewall_rules" -> ((s, d) => Detect.firewallRules(s)
-      .orderBy(col("priority"), col("rule_id"))),
-    // the same endpoint over the PRODUCTION profile: the reference's 7
-    // verbatim regex seeds (app.py:1531-1539) a fresh warehouse ships
-    "dam_firewall_rules_reference" -> ((s, d) =>
-      Detect.firewallRules(s, "reference")
-        .orderBy(col("priority"), col("rule_id"))),
-    // first-match over the production seeds — exercises the regex-only
-    // battery (e.g. `union.*select` catches UNION ALL SELECT, which the
-    // fixture's contains-rule misses)
-    "dam_firewall_reference" -> ((s, d) => Detect.firewallMatch(
-      Tables.activity(s, d), Detect.firewallRules(s, "reference"))
-      .select(col("activity_id"), col("username"), col("ip_address"),
-        col("rule_id"), col("description"), col("action"), col("priority"),
-        col("query_snippet"))
-      .orderBy(col("activity_id"))),
-    // the blocks feed (GET /api/v2/firewall/blocks, app.py:1337-1341:
-    // ORDER BY blocked_at DESC LIMIT 100)
-    "dam_blocks_feed" -> ((s, d) => Detect.firewallMatch(
-      Tables.activity(s, d), Detect.firewallRules(s))
-      .orderBy(col("matched_at").desc, col("activity_id").desc)
-      .limit(100)
-      .select(col("activity_id"), col("rule_id"), col("username"),
-        col("ip_address"), col("query_snippet"),
-        fmtTs(col("matched_at")).as("blocked_at"))
-      .orderBy(col("activity_id"))),
-    "dam_blacklist_hits" -> ((s, d) => Tables.activity(s, d)
-      .join(broadcast(Detect.activeBlacklist(Tables.activity(s, d),
-        Detect.ipBlacklist(s)).select("ip_address")),
-        Seq("ip_address"), "left_semi")
-      .select(col("activity_id"), col("username"), col("ip_address"))
-      .orderBy(col("activity_id"))),
-
-    // ---- enrichment / set ops / sessions (A10, J5, S4, windows) ----
-    "dam_geo_top" -> ((s, d) =>
-      Analytics.geoTopCountries(Tables.activity(s, d))),
-    // CIDR range-table geo enrichment: the range join runs as a
-    // broadcast EQUI-join on /24 blocks (dim exploded across the
-    // blocks each range spans) with the lo<=ip<=hi residual — no
-    // nested loop, no fact shuffle; uncovered tail -> 'unknown'
-    "dam_geo_range" -> ((s, d) =>
-      Analytics.geoRangeLookup(Tables.activity(s, d),
-          Analytics.geoRangeDim(s), prefixBits = 24)
-        .groupBy(coalesce(col("country"), lit("unknown")).as("country"))
-        .agg(count(lit(1)).as("hits"),
-          count_distinct(col("user_id")).as("users"))
-        .orderBy(col("country"))),
-    "dam_orphans" -> ((s, d) => Analytics.orphanActivity(
-      Tables.activity(s, d),
-      Tables.customer(s, d).select("c_custkey"), "c_custkey")),
-    "dam_union_feed" -> ((s, d) => {
-      // single severity pass: both feed branches derived with one
-      // generator instead of unioning two copies of the classify plan
-      val cls = classified(s, d)
-        .join(broadcast(Detect.activeBlacklist(Tables.activity(s, d),
-          Detect.ipBlacklist(s)).select(col("ip_address"),
-          lit(true).as("is_black"))), Seq("ip_address"), "left")
-      cls.select(col("activity_id"), explode(array_compact(array(
-          when(col("severity_ord") >= 2, "alert"),
-          when(coalesce(col("is_black"), lit(false)), "blacklist"))))
-        .as("src"))
-        .orderBy(col("activity_id"), col("src"))
-    }),
-    "ev_sessions" -> ((s, d) => Analytics.sessionize(Tables.events(s, d))),
-    // the native session_window aggregation in batch mode — the same
-    // expression sessionizes the live stream (IngestSpec); gap rule
-    // identical to ev_sessions, end = last event + gap
-    "ev_session_windows" -> ((s, d) =>
-      graft.streaming.Ingest.sessionWindows(Tables.events(s, d))
-        .select(col("user_id"),
-          date_format(col("start_ts"), "yyyy-MM-dd HH:mm:ss").as("start_ts"),
-          date_format(col("end_ts"), "yyyy-MM-dd HH:mm:ss").as("end_ts"),
-          col("n_events"))
-        .orderBy(col("user_id"), col("start_ts"))),
-    // Ingest.streamDedup's batch face over a simulated at-least-once
-    // feed (every 10th event redelivered verbatim); the streaming face
-    // (dropDuplicatesWithinWatermark, cross-micro-batch) is spec-driven
-    "ev_stream_dedup" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      graft.streaming.Ingest.streamDedup(
-          ev.unionAll(ev.filter(col("event_id") % 10 === 0)))
-        .select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-          col("user_id"), col("event_type"),
-          round(col("value"), 4).as("value"))
-        .orderBy(col("event_id"))
-    }),
-    // Ingest.intervalJoin in batch mode — the same expression is the
-    // watermark-bounded stream-stream join (spec-driven); purchases
-    // attributed to same-user clicks in the trailing 30 minutes
-    "ev_stream_join" -> ((s, d) =>
-      graft.streaming.Ingest.intervalJoin(Tables.events(s, d))
-        .select(col("purchase_id"), col("user_id"),
-          date_format(col("purchase_ts"), "yyyy-MM-dd HH:mm:ss")
-            .as("purchase_ts"),
-          col("click_id"),
-          date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss")
-            .as("click_ts"),
-          round(col("value"), 4).as("value"))
-        .orderBy(col("purchase_id"), col("click_id"))),
-    // Z-order layout key (Layout.zkey): Morton-interleaved (user_id,
-    // epoch-second) buckets — the clustering key writeZOrdered sorts
-    // files by. The row checks the full 32-bit key algebra per event
-    // (grouped to 256 coarse cells so the output stays bounded); the
-    // file-skipping payoff itself is LayoutSpec's measured audit.
-    "ev_zorder" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("tsec"))
-      val b = ev.agg(min("user_id").as("umn"), max("user_id").as("umx"),
-        min("tsec").as("tmn"), max("tsec").as("tmx"))
-      ev.crossJoin(broadcast(b))
-        .withColumn("zkey", Layout.zkey(
-          col("user_id"), col("umn"), col("umx"),
-          col("tsec"), col("tmn"), col("tmx")))
-        .groupBy(shiftright(col("zkey"), 24).as("zcell"))
-        .agg(count(lit(1)).as("n"), min("zkey").as("key_min"),
-          max("zkey").as("key_max"))
-        .orderBy(col("zcell"))
-    }),
-    // CDC snapshot maintenance: latest-event-per-user snapshot kept
-    // incrementally — compact the delta, MERGE it into the base
-    // snapshot (Mutations.mergeUpsert, one anti-join). The spec
-    // asserts the merged snapshot ≡ full recompute; the oracle states
-    // the incremental form itself.
-    "ev_snapshot_merge" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val cut = lit("2024-01-20").cast("timestamp_ntz")
-      graft.sources.Mutations.mergeUpsert(
-          eventSnapshot(ev.filter(col("ts") < cut)),
-          eventSnapshot(ev.filter(col("ts") >= cut)), Seq("user_id"))
-        .orderBy(col("user_id"))
-    }),
-    // op-coded CDC apply: the delta batch carries upserts AND deletes
-    // (users whose latest event is an 'error' are retired) — lakehouse
-    // MERGE semantics in one anti-join (Mutations.applyCdc)
-    "ev_cdc_apply" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val cut = lit("2024-01-20").cast("timestamp_ntz")
-      val changes = eventSnapshot(ev.filter(col("ts") >= cut))
-        .withColumn("op",
-          when(col("last_type") === "error", "D").otherwise("U"))
-      graft.sources.Mutations.applyCdc(
-          eventSnapshot(ev.filter(col("ts") < cut)), changes,
-          Seq("user_id"), "op")
-        .orderBy(col("user_id"))
-    }),
-    "ev_funnel" -> ((s, d) =>
-      Analytics.funnel(Tables.events(s, d), "signup", "purchase")),
-    "ev_retention" -> ((s, d) =>
-      Analytics.retentionCohorts(Tables.events(s, d))),
-    // SCD-2 dimension build: per-user validity intervals of the
-    // tracked attribute — one user-keyed shuffle, three shared-window
-    // passes (the effective-dated shape the as-of join consumes)
-    "ev_scd2" -> ((s, d) => Analytics.scd2(Tables.events(s, d))),
-    // incremental SCD-2 maintenance: scd2 runs on the BATCH only and
-    // merges into the persisted dim (continuations fold into the open
-    // interval, versions renumber) — the ORACLE is the full recompute,
-    // so incremental ≡ full is hash-proven, not just spec'd
-    "ev_scd2_merge" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val cut = lit("2024-01-20").cast("timestamp_ntz")
-      Analytics.scd2Merge(Analytics.scd2(ev.filter(col("ts") < cut)),
-        ev.filter(col("ts") >= cut))
-    }),
-    "doc_tfidf_top_terms" -> ((s, d) =>
-      TextOps.tfidfTopTerms(Tables.documents(s, d))),
-    // BM25 lexical top-k retrieval (sparse sibling of doc_embed_knn):
-    // docs 0..2 as queries, query terms broadcast, one corpus scan,
-    // exact-decimal score sum rounded before the CollectTopK tail
-    "doc_bm25_topk" -> ((s, d) =>
-      TextOps.bm25TopK(Tables.documents(s, d), Seq(0L, 1L, 2L))),
-    // the durable lexical index: build-once postings/df/stats under a
-    // source fingerprint; the probe feeds the stored counts into the
-    // SAME rank tail, so it must equal the one-shot ranking (and the
-    // oracle is literally the same SQL)
-    "doc_bm25_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val idx = TextOps.ensureBm25Index(s, s"$d/documents.parquet", docs)
-      TextOps.bm25SearchIndexed(s, idx,
-        docs.filter(col("doc_id").isin(0L, 1L, 2L))
-          .select(col("doc_id").as("query_id"), col("text")))
-    }),
-    // the production retrieval stack at rest: BM25 postings + IVF
-    // over the hashed embeddings, fused by integer-ppb RRF; at
-    // nprobe = nlist the probe is exact, so the one-shot oracle
-    // string locks the whole stack
-    "doc_hybrid_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val bmIdx = TextOps.ensureBm25Index(s, s"$d/documents.parquet", docs)
-      val annIdx = Similarity.ensureIvfIndex(s, s"$d/documents.parquet",
-        TextOps.hashEmbedVectors(docs)
-          .select(col("vec_id"), col("embedding")))
-      TextOps.hybridRrfIndexed(s, bmIdx, annIdx,
-        docs.filter(col("doc_id").isin(0L, 1L, 2L))
-          .select(col("doc_id").as("query_id"), col("text")),
-        nprobe = 16)
-    }),
-    // recall pricing of the PRODUCTION configuration: the indexed
-    // hybrid stack at its default nprobe = 2 vs the exact one-shot
-    // fusion — the speed/recall trade the nprobe dial buys, priced
-    // instead of only bounded by the nprobe = nlist exactness row
-    "doc_hybrid_indexed_recall" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val bmIdx = TextOps.ensureBm25Index(s, s"$d/documents.parquet", docs)
-      val annIdx = Similarity.ensureIvfIndex(s, s"$d/documents.parquet",
-        TextOps.hashEmbedVectors(docs)
-          .select(col("vec_id"), col("embedding")))
-      Similarity.recallAtK(
-        TextOps.hybridRrfIndexed(s, bmIdx, annIdx,
-          docs.filter(col("doc_id").isin(0L, 1L, 2L))
-            .select(col("doc_id").as("query_id"), col("text")))
-          .select(col("query_id"), col("doc_id").as("vec_id")),
-        TextOps.hybridRrfTopK(docs, Seq(0L, 1L, 2L))
-          .select(col("query_id"), col("doc_id").as("vec_id")))
-    }),
-    // token-run collapse (stutter cleanup): scan-local array
-    // expressions, no explode/shuffle; md5 of the collapsed text
-    // makes the repair byte-checkable without hauling bodies
-    "doc_run_collapse" -> ((s, d) =>
-      TextOps.collapseTokenRuns(Tables.documents(s, d))),
-    // hybrid retrieval: RRF fusion of the BM25 lexical top-5 and the
-    // hashed-embedding cosine top-5 — integer parts-per-billion RRF
-    // terms, so the fused score is an exact BIGINT on both engines
-    "doc_hybrid_rrf" -> ((s, d) =>
-      TextOps.hybridRrfTopK(Tables.documents(s, d), Seq(0L, 1L, 2L))),
-    // hashed-unigram document embedding (feature-hashing seam for an
-    // external encoder): integer-exact per-doc profile
-    "doc_hash_embed" -> ((s, d) =>
-      TextOps.hashEmbedProfile(Tables.documents(s, d))),
-    // text→vector→ANN bridge: cosine top-5 neighbors of 3 query docs
-    // over the hashed embeddings (bag-of-words cosine), through the
-    // same bounded brute-force path as emb_knn_brute
-    "doc_embed_knn" -> ((s, d) => {
-      val emb = TextOps.hashEmbed(Tables.documents(s, d))
-        .select(col("doc_id").as("vec_id"), col("source").as("label"),
-          transform(col("counts"), _.cast("float")).as("embedding"))
-      Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L), k = 5)
-    }),
-    // document clustering (topic-discovery shape): deterministic
-    // k-means over the hashed embeddings; docs never shuffle —
-    // assignment is scan-local, the shuffle carries (cid, source)
-    "doc_clusters" -> ((s, d) =>
-      TextOps.docClusters(Tables.documents(s, d), nlist = 4, iters = 2)),
-    "ev_percentiles" -> ((s, d) => Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(
-        round(expr("percentile(value, 0.5)"), 4).as("p50"),
-        round(expr("percentile(value, 0.9)"), 4).as("p90"),
-        round(expr("percentile(value, 0.99)"), 4).as("p99"),
-        count(lit(1)).as("n"))
-      .orderBy(col("event_type"))),
-    "ev_user_reach" -> ((s, d) => Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(count_distinct(col("user_id")).as("exact_users"),
-        count(lit(1)).as("n"))
-      .orderBy(col("event_type"))),
-    // approx sketch (HLL++): the raw estimate is engine-specific, so
-    // the checkable surface is the CONTRACT — the estimate must land
-    // within 3×rsd of the exact count (HLL standard error = rsd;
-    // typical observed error ≪ rsd). The oracle replays the exact
-    // counts with within_bound ≡ TRUE: an estimate drifting past the
-    // bound flips the flag and fails the hash gate.
-    // mergeable reach state: corpus + batch sketches unioned vs the
-    // single-pass sketch of the whole feed — the merge must be
-    // LOSSLESS (estimate equality, not just epsilon agreement) and
-    // the estimate must stay within the HLL bound of the exact count
-    "ev_reach_merge" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val corpus = ev.filter(col("event_id") % 5 =!= 0)
-      val batch = ev.filter(col("event_id") % 5 === 0)
-      val merged = Analytics.reachEstimates(Analytics.mergeReach(
-          Analytics.reachSketches(corpus), Analytics.reachSketches(batch)))
-        .withColumnRenamed("est_users", "merged_est")
-      val full = Analytics.reachEstimates(Analytics.reachSketches(ev))
-        .withColumnRenamed("est_users", "full_est")
-      ev.groupBy(col("event_type"))
-        .agg(count_distinct(col("user_id")).as("exact_users"))
-        .join(merged, Seq("event_type"))
-        .join(full, Seq("event_type"))
-        .select(col("event_type"), col("exact_users"),
-          (col("merged_est") === col("full_est")).as("merge_equals_full"),
-          (abs(col("merged_est") - col("exact_users")).cast("double") /
-            greatest(col("exact_users").cast("double"), lit(1.0)) <= 0.05)
-            .as("within_bound"))
-        .orderBy(col("event_type"))
-    }),
-    "ev_user_reach_approx" -> ((s, d) => Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(count_distinct(col("user_id")).as("exact_users"),
-        approx_count_distinct(col("user_id"), 0.05).as("approx"))
-      .select(col("event_type"), col("exact_users"),
-        (abs(col("approx") - col("exact_users")).cast("double") /
-          greatest(col("exact_users").cast("double"), lit(1.0)) <= 0.15)
-          .as("within_bound"))
-      .orderBy(col("event_type"))),
-    // Count-Min frequency sketch (Cormode & Muthukrishnan 2005), the
-    // point-query dual of the HLL row above — see [[cmsCounts]] for
-    // the contract (one-sided + 2ε slack) and the executable
-    // bounded-enum guard; the oracle replays exact counts with both
-    // flags ≡ TRUE.
-    // quantile-sketch contract row (the third sketch family beside
-    // HLL and CMS): approx_percentile's bound is on RANK, not value —
-    // the estimate's rank among the group's values must land within
-    // n/accuracy (+1 slack for ties and the ceil) of the target rank.
-    // Checked with one extra broadcast join + count pass; the oracle
-    // replays exact group counts with the flag ≡ TRUE.
-    "ev_pctile_sketch" -> ((s, d) => {
-      val acc = 1000
-      val p = 0.9
-      val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-      val est = ev.groupBy(col("event_type"))
-        .agg(expr(s"approx_percentile(value, $p, $acc)").as("est"))
-      ev.join(broadcast(est), Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("value") <= col("est"), 1L).otherwise(0L))
-            .as("rank_le"),
-          sum(when(col("value") < col("est"), 1L).otherwise(0L))
-            .as("rank_lt"))
-        .select(col("event_type"), col("n"),
-          ((col("rank_le") >= ceil(col("n") * lit(p)) -
-              (col("n") / lit(acc)).cast("long") - lit(1)) &&
-            (col("rank_lt") <= ceil(col("n") * lit(p)) +
-              (col("n") / lit(acc)).cast("long") + lit(1)))
-            .as("within_rank_bound"))
-        .orderBy(col("event_type"))
-    }),
-    "ev_cms_counts" -> ((s, d) => cmsCounts(Tables.events(s, d))),
-    // mergeable-CMS contract: persisted-sketch state folded batch-wise
-    // must answer per-key frequencies BIT-IDENTICALLY to a full
-    // recompute (see cmsMergeContract)
-    "ev_cms_merge" -> ((s, d) => cmsMergeContract(Tables.events(s, d))),
-    "doc_top_per_source" -> ((s, d) =>
-      // top-1-per-group as a map-side-combinable min_by — source has
-      // FEW distinct values, so a window over it would funnel the
-      // whole corpus into one task per source (the anti-pattern fixed
-      // for the firewall matcher); ordering key (-n_chars, doc_id)
-      // picks longest-then-lowest-id like the previous row_number
-      Tables.documents(s, d)
-        .groupBy(col("source"))
-        .agg(min_by(struct(col("doc_id"), col("n_chars")),
-          struct((-col("n_chars")).as("k1"), col("doc_id").as("k2"))).as("m"))
-        .select(col("source"), col("m.doc_id").as("doc_id"),
-          col("m.n_chars").as("n_chars"))
-        .orderBy(col("source"))),
-
-    // ---- agent parse pipeline end-to-end (S1, C1-C3, P9, P10) ----
-    "dam_agent_parse" -> ((s, d) => {
-      graft.streaming.Ingest.parseGeneralLog(Tables.generalLogFeed(s, d))
-        .select(col("username"), col("operation_type"), col("table_name"),
-          col("operation_status"), col("operation_details"),
-          col("ip_address"), col("query_hash"),
-          fmtTs(col("access_timestamp")).as("event_ts"))
-        .orderBy(col("event_ts"), col("query_hash"))
-    }),
-
-    // ---- E1 ingest pipeline END-TO-END as a checked row (round-4
-    //      verdict #2): the deterministic general_log feed (same
-    //      synthesis as dam_agent_parse) is written to a spool, run
-    //      through the REAL streaming pipeline (Ingest.start: watermark
-    //      dedup → parse → role enrichment → firewall gate → classify →
-    //      logs/alerts/blocks sinks) to completion, and the three sink
-    //      tables are read back as one normalized union that the oracle
-    //      replays with batch SQL. One micro-batch (single spool file +
-    //      AvailableNow-equivalent processAllAvailable), so the
-    //      per-batch rate window and blacklist anchor equal their batch
-    //      formulations. Cross-engine content only: the xxhash64
-    //      activity_id is engine-internal, so the oracle dedups on the
-    //      raw (event_time, user_host, argument) triple — equivalent by
-    //      construction (the id is a function of the triple) — and
-    //      sentinel values ('' / -1 / false) stand in for
-    //      sink-inapplicable columns to keep dtypes NULL-free.
-    "dam_stream_replay" -> ((s, d) => streamReplayRun(s, d, batched = false)),
-
-    // the MULTI-batch variant (round-5 verdict #3): the spool splits
-    // into three files consumed one per micro-batch
-    // (maxFilesPerTrigger = 1, modification-time ordered), with
-    // planted LATE arrivals (every 101st row from an earlier tertile
-    // rides in the last batch and must be dropped by the watermark)
-    // and planted CROSS-BATCH DUPLICATES (every 97th tertile-0 row
-    // repeats in batch 1 and must be dropped by
-    // dropDuplicatesWithinWatermark) — so cross-batch watermark
-    // eviction, duplicate drops across batches, and per-batch rate
-    // windows / blacklist anchors are all hash-checked against the
-    // batch-parameterized oracle
-    "dam_stream_replay_batched" -> ((s, d) =>
-      streamReplayRun(s, d, batched = true)),
-
-    // ---- E3 charts: severity histogram with integer-exact shares ----
-    "dam_rollup" -> ((s, d) => classified(s, d)
-      .rollup(col("operation_type"), col("severity_level"))
-      .agg(count(lit(1)).as("n"))
-      .select(coalesce(col("operation_type"), lit("ALL")).as("operation_type"),
-        coalesce(col("severity_level"), lit("ALL")).as("severity_level"),
-        col("n"))
-      .orderBy(col("operation_type"), col("severity_level"))),
-    "dam_severity_histogram" -> ((s, d) => {
-      // grand total via 1-row broadcast cross-join (same idiom as the
-      // TF-IDF corpus count) instead of an empty-partition window,
-      // which funnels into a single task; the two branches share the
-      // groupBy exchange (ReusedExchange), so classify runs once
-      val counts = classified(s, d)
-        .groupBy(col("severity_level")).agg(count(lit(1)).as("n"))
-      val total = counts.agg(sum(col("n")).as("total"))
-      counts.crossJoin(broadcast(total))
-        .withColumn("pct",
-          expr("(n * 10000) div total").cast("double") / lit(100.0))
-        .select(col("severity_level"), col("n"), col("pct"))
-        .orderBy(col("severity_level"))
-    }),
-
-    // ---- skew-safe two-phase top-k (salting pattern) ----
-    "dam_top_users_salted" -> ((s, d) =>
-      Analytics.topUsersSalted(Tables.activity(s, d))),
-
-    // ---- as-of (point-in-time) join ----
-    "ev_asof_order" -> ((s, d) => {
-      import graft.operators.AsOf
-      AsOf.asofJoin(
-        Tables.events(s, d).select("event_id", "user_id", "ts"),
-        "user_id", "ts",
-        Tables.orders(s, d), "o_custkey", "o_orderdate", "o_orderkey",
-        Seq("o_orderkey", "o_orderdate", "o_totalprice"))
-        .select(col("event_id"), col("user_id"),
-          col("__asof.o_orderkey").as("last_orderkey"),
-          fmtTs(col("__asof.o_orderdate")).as("last_orderdate"),
-          col("__asof.o_totalprice").as("last_totalprice"))
-        .orderBy(col("event_id"))
-    }),
-    // forward as-of with a 30-day tolerance: the next order AT OR
-    // AFTER each event — the backward algorithm on reversed time,
-    // still one shuffle (second window over the same union)
-    "ev_asof_forward" -> ((s, d) => {
-      import graft.operators.AsOf
-      AsOf.asofJoinDirected(
-        Tables.events(s, d).select("event_id", "user_id", "ts"),
-        "user_id", "ts",
-        Tables.orders(s, d), "o_custkey", "o_orderdate", "o_orderkey",
-        Seq("o_orderkey", "o_totalprice"),
-        direction = "forward", toleranceSec = Some(30L * 86400L))
-        .select(col("event_id"), col("user_id"),
-          col("__asof.o_orderkey").as("next_orderkey"),
-          fmtTs(col("__asof_ts")).as("next_orderdate"),
-          col("__asof.o_totalprice").as("next_totalprice"))
-        .orderBy(col("event_id"))
-    }),
-    // nearest as-of (tie -> backward): whichever order is closer in
-    // time on either side of the event
-    "ev_asof_nearest" -> ((s, d) => {
-      import graft.operators.AsOf
-      AsOf.asofJoinDirected(
-        Tables.events(s, d).select("event_id", "user_id", "ts"),
-        "user_id", "ts",
-        Tables.orders(s, d), "o_custkey", "o_orderdate", "o_orderkey",
-        Seq("o_orderkey"),
-        direction = "nearest")
-        .select(col("event_id"), col("user_id"),
-          col("__asof.o_orderkey").as("near_orderkey"),
-          fmtTs(col("__asof_ts")).as("near_orderdate"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ---- text analysis / fingerprinting ----
-    "doc_profile" -> ((s, d) => TextOps.profile(Tables.documents(s, d))),
-    "doc_dedup_exact" -> ((s, d) =>
-      Dedup.exactDupGroups(Tables.documents(s, d))),
-    "doc_dedup_fingerprint" -> ((s, d) =>
-      Dedup.fingerprintDupGroups(Tables.documents(s, d))),
-    // scopedDocs: parity-budget corpus scope (full at sf0.01 gate)
-    "doc_jaccard_pairs" -> ((s, d) =>
-      Dedup.jaccardNearDups(scopedDocs(s, d),
-        hashFn = Dedup.md5Seeded)),
-    // cluster-representative mode (the 100 TB answer to pair-output
-    // density): doc→canonical membership, one row per clustered doc
-    "doc_jaccard_clusters" -> ((s, d) =>
-      Dedup.jaccardClusters(scopedDocs(s, d),
-        hashFn = Dedup.md5Seeded)),
-
-    // ---- training-data curation (redaction, funnel, budgeting) ----
-    "dam_redacted" -> ((s, d) => Tables.activity(s, d)
-      .select(col("activity_id"),
-        TextOps.redactPii(col("operation_details")).as("redacted"),
-        (TextOps.redactPii(col("operation_details")) =!=
-          col("operation_details")).as("was_redacted"))
-      .orderBy(col("activity_id"))),
-    "doc_curation_funnel" -> ((s, d) => {
-      // the curation pipeline as stage counts: corpus → language
-      // filter → quality filter → near-dup canonicalization
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("fingerprint"))
-      val en = col("lang_guess") === "en"
-      val q = col("quality_score") >= 0.75
-      TextOps.profile(Tables.documents(s, d))
-        .withColumn("is_canonical",
-          col("doc_id") === min(col("doc_id")).over(w))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(en, 1)).as("n_lang"),
-          count(when(en && q, 1)).as("n_quality"),
-          count(when(en && q && col("is_canonical"), 1)).as("n_kept"))
-    }),
-    // benchmark decontamination: training docs sharing any 8-gram with
-    // the (broadcast) eval slice — doc_id % 29 plays the benchmark set
-    // (wide enough that template near-dups cross the split)
-    "doc_decontam" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextOps.contamination(
-        docs.filter(col("doc_id") % 29 =!= 0),
-        docs.filter(col("doc_id") % 29 === 0),
-        n = 8, hashFn = Dedup.md5Seeded)
-    }),
-    // the whole eval battery in ONE corpus pass: every suite's gram
-    // set tags its rows, the union dim broadcasts, the corpus
-    // shingles once — K suites no longer cost K corpus scans
-    "doc_decontam_matrix" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextOps.contaminationMatrix(
-        docs.filter(col("doc_id") % 29 =!= 0 && col("doc_id") % 31 =!= 0),
-        Seq(
-          "b29" -> docs.filter(col("doc_id") % 29 === 0),
-          "b31" -> docs.filter(col("doc_id") % 31 === 0)),
-        n = 8, hashFn = Dedup.md5Seeded)
-    }),
-    // the GPT-3 App. C form: the 13-gram overlap filter over
-    // lowercased, punctuation-stripped text (normalizeForOverlap on
-    // BOTH sides) — typography cannot hide a leak
-    "doc_decontam_normalized" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .withColumn("text", TextOps.normalizeForOverlap(col("text")))
-      TextOps.contamination(
-        docs.filter(col("doc_id") % 29 =!= 0),
-        docs.filter(col("doc_id") % 29 === 0),
-        n = 13, hashFn = Dedup.md5Seeded)
-    }),
-    // the durable gram index: the train split's (doc, gram-hash)
-    // postings at rest; a NEW benchmark screens with no corpus
-    // re-shingle — probe ≡ one-shot by construction, so the
-    // doc_decontam oracle string locks the index end-to-end
-    "doc_decontam_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val idx = TextOps.ensureGramIndex(s, s"$d/documents.parquet",
-        docs.filter(col("doc_id") % 29 =!= 0), n = 8,
-        hashFn = Dedup.md5Seeded, kind = "gram-train29")
-      TextOps.contaminationIndexed(s, idx,
-        docs.filter(col("doc_id") % 29 === 0))
-    }),
-    // the whole eval battery against the same at-rest postings:
-    // suite dims union, buckets prune, one probe
-    "doc_decontam_matrix_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val idx = TextOps.ensureGramIndex(s, s"$d/documents.parquet",
-        docs.filter(col("doc_id") % 29 =!= 0 && col("doc_id") % 31 =!= 0),
-        n = 8, hashFn = Dedup.md5Seeded, kind = "gram-train29x31")
-      TextOps.contaminationMatrixIndexed(s, idx,
-        Seq(
-          "b29" -> docs.filter(col("doc_id") % 29 === 0),
-          "b31" -> docs.filter(col("doc_id") % 31 === 0)))
-    }),
-    // exact-phrase forensics over the same at-rest postings: the
-    // phrase's windows prune candidates index-only, then ONLY
-    // candidate docs are read for the exact token-window verify —
-    // "which stored docs contain this span" with no corpus scan.
-    // The probe phrase is doc 0's own leading 10 tokens (derived,
-    // not hard-coded, so every SF is non-degenerate). The derivation
-    // is guarded: the oracle hard-codes 10-gram windows, so a fixture
-    // with no doc 0 or a doc 0 shorter than 10 tokens must fail with
-    // a NAMED error, not throw NoSuchElementException / silently
-    // diverge from the oracle's window width.
-    "doc_phrase_lookup" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val idx = TextOps.ensureGramIndex(s, s"$d/documents.parquet",
-        docs, n = 8, hashFn = Dedup.md5Seeded, kind = "gram-full")
-      val head = docs.filter(col("doc_id") === 0L)
-        .select(col("text")).limit(1).collect()
-      require(head.nonEmpty,
-        "doc_phrase_lookup fixture: no doc_id=0 row in documents at " +
-          s"$d — the probe phrase derives from doc 0's leading tokens")
-      val toks = head(0).getString(0).trim.split("\\s+")
-        .filter(_.nonEmpty).take(10)
-      require(toks.length == 10,
-        s"doc_phrase_lookup fixture: doc 0 has only ${toks.length} " +
-          "tokens but the oracle probes exact 10-token windows — " +
-          "the fixture needs a >=10-token doc 0")
-      TextOps.phraseLookupIndexed(s, idx, docs, toks.mkString(" "))
-    }),
-    // Gopher-style within-doc n-gram repetition (quality filter)
-    "doc_repetition" -> ((s, d) =>
-      TextOps.repetitionSignals(Tables.documents(s, d))),
-    // exact duplicated-substring mass (Lee et al. 2021 ExactSubstr):
-    // 10-token windows occurring >= 2 times corpus-wide, counted per
-    // position per doc — the removal-mass dial, linear in tokens
-    "doc_substring_dupes" -> ((s, d) =>
-      TextOps.duplicateSpans(Tables.documents(s, d), n = 10,
-        hashFn = Dedup.md5Seeded)),
-    // the APPLY step of the same pipeline: tokens covered by a
-    // corpus-duplicated 10-token window are cut and the survivors
-    // reassemble in order; md5 of the rewritten text crosses the
-    // compare, not the text
-    "doc_remove_dup_spans" -> ((s, d) =>
-      TextOps.removeDuplicateSpans(Tables.documents(s, d), n = 10,
-        hashFn = Dedup.md5Seeded)),
-    // incremental span cut: the corpus contributes through its
-    // persisted mergeable window dim; only the batch is scanned, and
-    // the merged dim makes the rewrite equal the full recompute
-    // restricted to the batch
-    "doc_remove_spans_novel" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val corpus = docs.filter(col("doc_id") % 7 =!= 0)
-      val batch = docs.filter(col("doc_id") % 7 === 0)
-      val merged = TextOps.mergeDim(
-        TextOps.windowDim(corpus, n = 10, hashFn = Dedup.md5Seeded),
-        TextOps.windowDim(batch, n = 10, hashFn = Dedup.md5Seeded),
-        key = "h")
-      TextOps.removeDuplicateSpansWithDim(batch, merged, n = 10,
-        hashFn = Dedup.md5Seeded)
-    }),
-    // train/holdout split-leakage audit: 10-token windows of val/test
-    // docs contained in the train window-hash set (5%/5% splits so
-    // the holdout is non-degenerate at sf0.01)
-    "doc_split_leakage" -> ((s, d) =>
-      TextOps.splitLeakage(Tables.documents(s, d), n = 10,
-        valFrac = 0.05, testFrac = 0.05, hashFn = Dedup.md5Seeded)),
-    // the 100 TB form of the same audit: holdout window hashes bloom,
-    // the train side prunes at the scan on might_contain, the exact
-    // semi-join runs over survivors only — equal by construction, so
-    // it shares the exact form's oracle
-    "doc_split_leakage_bloom" -> ((s, d) =>
-      TextOps.splitLeakageBloom(Tables.documents(s, d), n = 10,
-        valFrac = 0.05, testFrac = 0.05, hashFn = Dedup.md5Seeded)),
-    // corpus-familiarity score (CCNet-style head/tail dial as an
-    // integer-exact frequency proxy — avg corpus-wide occurrence
-    // count of each doc's character bigrams, one division at the end)
-    "doc_familiarity" -> ((s, d) =>
-      TextOps.bigramFamiliarity(Tables.documents(s, d))),
-    // DSIR-style importance weight (Xie et al. 2023): target-vs-raw
-    // bigram-mass ratio, integer-exact with one division — the
-    // target domain here is a source subset (the "Wikipedia-like
-    // target corpus" role), Laplace +1 on target counts
-    "doc_dsir_weight" -> ((s, d) =>
-      TextOps.dsirWeights(Tables.documents(s, d),
-        col("source").isin("src0", "src2", "src4"))),
-    // GPT-style sequence packing: concat-and-chunk window assignment
-    // per sharded pack stream (integer running sum + div/mod)
-    "doc_pack_bins" -> ((s, d) =>
-      TextOps.packSequences(Tables.documents(s, d), budget = 512,
-        shards = 4)),
-    // line-level boilerplate dedup (RefinedWeb): the fixture corpus
-    // has no newlines, so — the media-leg pattern — a planted
-    // multi-line corpus is built deterministically from the documents
-    // table (corpus-wide nav chrome, per-source footers, a periodic
-    // banner, unique body/tail lines) and run through the REAL
-    // operator; the oracle replays the same construction with raw
-    // line strings, so the engine's hash blocking is instrument-
-    // independent of the check
-    "doc_line_dedup" -> ((s, d) =>
-      TextOps.dedupLines(plantedLineDocs(Tables.documents(s, d)),
-        minDf = 5)),
-    // incremental line dedup (round-7 verdict #4): the corpus
-    // contributes through its PERSISTED mergeable line-df dim; only
-    // the batch is scanned, and the merged dim makes the result equal
-    // the full recompute restricted to the batch
-    "doc_line_dedup_novel" -> ((s, d) => {
-      val pl = plantedLineDocs(Tables.documents(s, d))
-      val corpus = pl.filter(col("doc_id") % 7 =!= 0)
-      val batch = pl.filter(col("doc_id") % 7 === 0)
-      val merged = TextOps.mergeDim(TextOps.lineDfDim(corpus),
-        TextOps.lineDfDim(batch), key = "h")
-      TextOps.dedupLinesWithDim(batch, merged, minDf = 5)
-    }),
-    // END-TO-END curation funnel (round-6 verdict #6): quality gate →
-    // line dedup → minhash best-in-cluster dedup → decontamination →
-    // DSIR-weighted sampling → packing composed as ONE query over the
-    // planted multi-line corpus; emits the per-stage (n_docs,
-    // n_tokens) funnel a pipeline owner monitors. Proves the operator
-    // battery COMPOSES (lineage, column contracts), not only runs solo.
-    "doc_curation_e2e" -> ((s, d) =>
-      graft.operators.Curation.funnel(
-        plantedLineDocs(Tables.documents(s, d)))),
-    // the funnel's drill-down: per raw doc, the FIRST curation stage
-    // that dropped it (or 'kept') — the audit table a pipeline owner
-    // opens when a source's yield drops; attribution rides slim
-    // id-only left joins over the shared stage lineage
-    "doc_reject_reason" -> ((s, d) =>
-      graft.operators.Curation.rejectReasons(
-        plantedLineDocs(Tables.documents(s, d)))),
-    // the DAILY-RUN form (round-7 verdict #6): a batch (doc_id % 7)
-    // curated against persisted corpus state — merged line/bigram
-    // dims, corpus-seniority cross dedup via the minhash novel leg,
-    // merged decontam grams, DSIR vs the corpus aggregate ratio
-    "doc_curation_novel" -> ((s, d) => {
-      val pl = plantedLineDocs(Tables.documents(s, d))
-      val corpus = pl.filter(col("doc_id") % 7 =!= 0)
-      val batch = pl.filter(col("doc_id") % 7 === 0)
-      graft.operators.Curation.incrementalFunnel(batch,
-        graft.operators.Curation.stateOf(corpus))
-    }),
-    // multi-class hashed-feature language ID (the fastText-shaped
-    // model langGuess stubs heuristically): per-class bucket
-    // frequency dims trained on the labeled split, broadcast; exact
-    // rational argmax (cross-multiplied, no float log-likelihood) —
-    // the planted pseudo-language truth is recovered by real hashing
-    // + frequency arithmetic, and the oracle replays every step
-    "doc_lang_id" -> ((s, d) => {
-      val pd = plantedLangDocs(Tables.documents(s, d))
-      val labeled = pd.filter(col("doc_id") < 60)
-        .select(when(col("doc_id") % 3 === 0, "de")
-          .when(col("doc_id") % 3 === 1, "en")
-          .otherwise("fr").as("lang"), col("text"))
-      TextOps.langIdLinear(pd.filter(col("doc_id") >= 60), labeled)
-    }),
-    // the composed nightly job's BATCH FACE (curate → featurize —
-    // what Curation.startCorpusMaintenance derives per micro-batch
-    // before its transactional index append): the curated product's
-    // identity + packing coordinates joined to its hash-embed
-    // integer profile. Same oracle CTE chain as doc_curation_novel
-    // (parameterized batch remainder), so the two rows cannot drift;
-    // remainder 2 because that batch slice survives the DSIR stage
-    // NON-degenerately at BOTH sf0.01 (19 docs) and sf0.1 (31) —
-    // slice 0's sf0.1 batch is entirely DSIR-dropped, a valid funnel
-    // value but a vacuous batch face
-    "doc_maintain_batch" -> ((s, d) => {
-      val pl = plantedLineDocs(Tables.documents(s, d))
-      val corpus = pl.filter(col("doc_id") % 7 =!= 2)
-      val batch = pl.filter(col("doc_id") % 7 === 2)
-      val product = graft.operators.Curation.curateIncremental(batch,
-        graft.operators.Curation.stateOf(corpus))
-      product.select(col("doc_id"), col("shard"), col("bin_id"))
-        .join(TextOps.hashEmbedProfile(product), Seq("doc_id"))
-        .select(col("doc_id"), col("shard"), col("bin_id"),
-          col("n_tokens"), col("nnz"), col("norm_sq"),
-          col("top_bucket"), col("top_count"))
-        .orderBy(col("doc_id"))
-    }),
-    // incremental-ingest dedup: bloom the "new batch" (doc_id % 5 = 0),
-    // scan the reference corpus with the codegen'd might_contain
-    // predicate, exact-verify survivors with an anti-join — result is
-    // exactly the anti-join (the oracle), the sketch only prunes
-    "doc_bloom_novel" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.bloomNovel(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0))
-        .select(col("doc_id"), col("source")).orderBy(col("doc_id"))
-    }),
-    // incremental NEAR-dup ingest (round-6 verdict #4): batch = every
-    // 5th scoped doc, corpus = the rest; same minhash+LSH semantics
-    // as doc_minhash_neardups (portable md5 family, jaccard verify),
-    // but the corpus is only ever scanned — band keys scan-local
-    // (native MinHashBandKeys), bloom-of-batch-keys prune, broadcast
-    // equi-join band check, exact verify — no corpus-side shuffle
-    "doc_minhash_novel" -> ((s, d) => {
-      val docs = scopedDocs(s, d)
-      Dedup.minhashNovel(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0),
-        threshold = 0.3)
-        .select(col("doc_id"), col("source")).orderBy(col("doc_id"))
-    }),
-    // the simhash leg of incremental ingest: same split, Hamming-band
-    // semantics (portable md5 sketch via the scan-local native
-    // Md5SimHash60, collision-free composite band keys, bloom prune,
-    // exact Hamming verify) — runs over the FULL documents table like
-    // doc_simhash_neardups (banding is linear, no quadratic fixture)
-    "doc_simhash_novel" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.simhashNovel(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0))
-        .select(col("doc_id"), col("source")).orderBy(col("doc_id"))
-    }),
-    // the full Gopher rule battery (word/symbol/line/alpha signals +
-    // integer-exact pass flag) rounding out the repetition signal
-    "doc_quality_gopher" -> ((s, d) =>
-      TextOps.gopherQuality(Tables.documents(s, d))),
-    // per-source vocabulary: exact distinct-token counts beside the
-    // HLL sketch's error-contract flag (the ev_user_reach_approx
-    // pattern on the corpus surface) — round-6 advice #1 (unwired)
-    "doc_source_vocab" -> ((s, d) =>
-      TextOps.sourceVocab(Tables.documents(s, d))),
-    // cross-source contamination matrix: distinct normalized
-    // fingerprints shared per source pair, pairs generated from the
-    // per-fingerprint source array (no fp-keyed self-join on the
-    // engine side) — round-6 advice #2 (unwired). The fixture corpus
-    // has no natural cross-source recrawls, so every 31st doc is
-    // planted again under a mirrored source label (the planted-truth
-    // pattern the media legs use)
-    "doc_source_overlap" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"), col("source"))
-      val planted = docs.filter(col("doc_id") % 31 === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"),
-          concat(lit("mirror_"), col("source")).as("source"))
-      Dedup.sourceOverlap(docs.unionByName(planted))
-    }),
-    // multimodal → dedup loop as a checked row (round-4 verdict #8):
-    // planted PNG/BMP images whose dHash is a replication code of
-    // id % 40 (intra-group Hamming 0, inter-group ≥ 9) run the REAL
-    // pipeline — encode → codec decode → dHash over pixels → banded
-    // Hamming pairs → connected components — and must reproduce the
-    // arithmetic cluster structure the oracle states in SQL
-    "media_phash_clusters" -> ((s, d) => {
-      import graft.operators.Multimodal
-      Multimodal.phashClusters(Multimodal.plantedImageAssets(
-        Tables.documents(s, d).select(col("doc_id"))
-          .filter(col("doc_id") < 200)))
-    }),
-    // the WAV leg of the same loop: real RIFF/PCM decode → RMS-delta
-    // hash → banded Hamming → CC, against an arithmetic planted truth
-    "media_ahash_clusters" -> ((s, d) => {
-      import graft.operators.Multimodal
-      Multimodal.audioHashClusters(Multimodal.plantedAudioAssets(
-        Tables.documents(s, d).select(col("doc_id"))
-          .filter(col("doc_id") < 200)))
-    }),
-    // and the video leg: motion-PNG container split → per-frame PNG
-    // decode → frame dHash → frame-set Jaccard → CC, same arithmetic
-    // planted truth (6-frame windows over a per-group 8-frame pool)
-    "media_video_clusters" -> ((s, d) => {
-      import graft.operators.Multimodal
-      Multimodal.videoClusters(Multimodal.plantedVideoAssets(
-        Tables.documents(s, d).select(col("doc_id"))
-          .filter(col("doc_id") < 120)))
-    }),
-    // measured recall of the image dedup leg on a PERTURBED corpus
-    // (round-5 verdict #4): every 4th asset gets a clone whose last
-    // grid column is reflected in 3 rows — Hamming EXACTLY 3, the
-    // advertised maxHamming — so the pigeonhole blocking must recover
-    // every planted pair through the real decode→dHash→band path; the
-    // truth set is pure id arithmetic, replayed by the oracle
-    "media_phash_recall" -> ((s, d) => {
-      import graft.operators.{Dedup, Multimodal}
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") < 200)
-      val cloneIds = ids.filter(col("doc_id") % 4 === 0)
-        .select((col("doc_id") + MediaPerturbIdBase).as("doc_id"))
-      val corpus = Multimodal.plantedImageAssets(ids)
-        .unionByName(Multimodal.plantedImageAssets(cloneIds, flipRows = 3))
-      val found = Dedup.bandedHammingPairs(
-        Multimodal.phashes(corpus).toDF()
-          .select(col("asset_id").as("doc_id"), col("phash")),
-        "phash", maxHamming = 3, bands = 4, bits = 64)
-      val members = ids.unionByName(cloneIds).select(col("doc_id").as("id"))
-      val truth = members.alias("x").join(members.alias("y"),
-          col("x.id") % 40 === col("y.id") % 40 &&
-            col("x.id") < col("y.id"))
-        .filter(col("x.id") >= MediaPerturbIdBase ||
-          col("y.id") >= MediaPerturbIdBase)
-        .select(col("x.id").as("a"), col("y.id").as("b"))
-      mediaPairRecall(truth, found)
-    }),
-    // the WAV leg: clones ride a 10% gain boost (hash-invariant by
-    // construction — the measured proof of the invariance contract)
-    // plus a tail-segment reflection (Hamming exactly 1)
-    "media_ahash_recall" -> ((s, d) => {
-      import graft.operators.{Dedup, Multimodal}
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") < 200)
-      val cloneIds = ids.filter(col("doc_id") % 4 === 0)
-        .select((col("doc_id") + MediaPerturbIdBase).as("doc_id"))
-      val corpus = Multimodal.plantedAudioAssets(ids)
-        .unionByName(Multimodal.plantedAudioAssets(cloneIds, perturb = true))
-      val found = Dedup.bandedHammingPairs(
-        Multimodal.audioHashes(corpus).toDF()
-          .select(col("asset_id").as("doc_id"), col("ahash")),
-        "ahash", maxHamming = 3, bands = 4, bits = 64)
-      val members = ids.unionByName(cloneIds).select(col("doc_id").as("id"))
-      val truth = members.alias("x").join(members.alias("y"),
-          col("x.id") % 40 === col("y.id") % 40 &&
-            col("x.id") < col("y.id"))
-        .filter(col("x.id") >= MediaPerturbIdBase ||
-          col("y.id") >= MediaPerturbIdBase)
-        .select(col("x.id").as("a"), col("y.id").as("b"))
-      mediaPairRecall(truth, found)
-    }),
-    // the video leg: clones drop their window's first frame, so every
-    // frame set is an integer INTERVAL and the truth-pair Jaccard is
-    // exact interval arithmetic on both engines — the engine must
-    // still earn its side through container split → per-frame decode
-    // → dHash → set Jaccard
-    "media_video_recall" -> ((s, d) => {
-      import graft.operators.Multimodal
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .filter(col("doc_id") < 120)
-      val cloneIds = ids.filter(col("doc_id") % 4 === 0)
-        .select((col("doc_id") + VideoPerturbIdBase).as("doc_id"))
-      val corpus = Multimodal.plantedVideoAssets(ids)
-        .unionByName(Multimodal.plantedVideoAssets(cloneIds, dropFirst = 1))
-      val found = Multimodal.videoNearDups(corpus)
-        .select(col("vid_a").as("doc_a"), col("vid_b").as("doc_b"))
-      val members = ids.unionByName(cloneIds).select(col("doc_id").as("id"))
-      def winS(c: Column) = (c % 3) +
-        when(c >= VideoPerturbIdBase, lit(1L)).otherwise(lit(0L))
-      def winLen(c: Column) =
-        when(c >= VideoPerturbIdBase, lit(5L)).otherwise(lit(6L))
-      val w = members.select(col("id"), (col("id") % 16).as("grp"),
-        winS(col("id")).as("s"), winLen(col("id")).as("len"))
-      val ov = greatest(lit(0L),
-        least(col("x.s") + col("x.len"), col("y.s") + col("y.len")) -
-          greatest(col("x.s"), col("y.s")))
-      val truth = w.alias("x").join(w.alias("y"),
-          col("x.grp") === col("y.grp") && col("x.id") < col("y.id"))
-        .filter(col("x.id") >= VideoPerturbIdBase ||
-          col("y.id") >= VideoPerturbIdBase)
-        .filter(ov * 100 >= (col("x.len") + col("y.len") - ov) * 45)
-        .select(col("x.id").as("a"), col("y.id").as("b"))
-      mediaPairRecall(truth, found)
-    }),
-    // deterministic hash-threshold splits / mixture sampling — the
-    // same rows every run, any partitioning, replayed by the oracle
-    "doc_split_assign" -> ((s, d) =>
-      Sampling.withSplit(Tables.documents(s, d), "doc_id")
-        .select(col("doc_id"), col("source"), col("split"))
-        .orderBy(col("doc_id"))),
-    "doc_sample_mix" -> ((s, d) =>
-      Sampling.stratifiedSample(Tables.documents(s, d), "source",
-        "doc_id", SampleRates)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))),
-    // mixture weights in TOKEN space: per-source token budgets cut by
-    // sharded integer running sums (unlisted sources drop out)
-    "doc_budget_mix" -> ((s, d) =>
-      Sampling.budgetSample(Tables.documents(s, d), TokenBudgets)),
-    // exactly-k-per-source draw: smallest k seeded hashes per stratum
-    // via ONE bounded-heap CollectTopK — no window over a stratum
-    "doc_stratified_k" -> ((s, d) =>
-      Sampling.stratifiedK(Tables.documents(s, d), "source", "doc_id",
-        k = 7)),
-    // epoch-mix materialization (the training-recipe data-mixing
-    // table): floor(w) full copies per doc + a deterministic
-    // hash-threshold pick of the fractional epoch; unlisted sources
-    // drop
-    "doc_epoch_mix" -> ((s, d) =>
-      Sampling.epochMix(Tables.documents(s, d), EpochRecipe)),
-    "doc_token_budget" -> ((s, d) => Tables.documents(s, d)
-      .select(col("source"), TextOps.langGuess(col("text")).as("lang_guess"),
-        TextOps.tokenCount(col("text")).as("nt"),
-        TextOps.bpeishTokenCount(col("text")).as("bp"))
-      .groupBy(col("source"), col("lang_guess"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"),
-        sum(col("bp")).as("bpeish_tokens"))
-      .orderBy(col("source"), col("lang_guess"))),
-    // fixed-stride sliding-window chunking (context-window / RAG
-    // passage cut): scan-local sequence+posexplode, zero shuffle
-    "doc_chunks" -> ((s, d) =>
-      TextOps.chunkWindows(Tables.documents(s, d))),
-
-    // temperature-based mixture sampling (alpha = 1/2, Pile/GPT-3
-    // style): per-source keep rate ∝ sqrt(size)/size, expected total
-    // = 200 docs; thresholds derive from a fixed IEEE op sequence so
-    // both engines compute identical integer cut points
-    "doc_temp_mix" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val kept = Sampling.temperatureSample(docs, budgetDocs = 200L)
-        .groupBy(col("source")).agg(count(lit(1)).as("kept"))
-      docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .join(kept, Seq("source"), "left")
-        .select(col("source"), col("n"),
-          coalesce(col("kept"), lit(0L)).as("kept"))
-        .orderBy(col("source"))
-    }),
-
-    // per-source quantile-calibrated keep rule (CCNet-style
-    // per-domain thresholding): exact discrete q=1/5 token-count
-    // quantile per source, computed on the (source, score) count dim
-    // with a cross-multiplied rational rank test — no float
-    // interpolation; threshold dim broadcast back for the flags
-    "doc_quality_quantile" -> ((s, d) =>
-      Sampling.quantileCalibrate(Tables.documents(s, d),
-        TextOps.tokenCount(col("text")), qNum = 1, qDen = 5)),
-
-    // hashed-feature linear quality scorer (fastText-shaped, NB
-    // centroid weights, decimal-exact): target = the DSIR target
-    // sources — "how target-like is each doc's hashed profile"
-    "doc_quality_linear" -> ((s, d) =>
-      TextOps.linearQuality(Tables.documents(s, d),
-        col("source").isin("src0", "src2", "src4"))),
-
-    // BPE tokenizer training (Sennrich et al. 2016): 8 merge rules
-    // learned from the corpus — one corpus pass builds the weighted
-    // word-vocab dim, each iteration is a map-side-combinable pair
-    // count over the KB-scale vocab + a scan-local greedy rewrite
-    "doc_bpe_merges" -> ((s, d) =>
-      TextOps.trainBpe(Tables.documents(s, d), merges = 8)),
-
-    // APPLY the trained tokenizer: per-doc word/subword counts under
-    // the 8 learned rules — segmentation is a function of the word,
-    // so docs join the KB-scale post-training vocab (broadcast)
-    "doc_bpe_tokens" -> ((s, d) =>
-      TextOps.bpeTokenCounts(Tables.documents(s, d), merges = 8)),
-
-    // MATERIALIZE the training token stream: per-doc subword-ID
-    // sequences (ids = binary-order rank of the post-training symbol
-    // set); the sequence crosses the compare as an md5
-    "doc_bpe_ids" -> ((s, d) =>
-      TextOps.bpeEncodeIds(Tables.documents(s, d), merges = 8)),
-
-    // the PACKED training batches: per (source, shard) pack stream,
-    // doc id-sequences concat in doc order and chunk at exact
-    // 512-id boundaries (docs split across bins — GPT concat-and-
-    // chunk); one row per bin, the id stream crossed as an md5
-    "doc_pack_ids" -> ((s, d) =>
-      TextOps.packTokenStream(Tables.documents(s, d), merges = 8,
-        budget = 512, shards = 4)),
-
-    // ---- similarity search ----
-    "emb_knn_brute" -> ((s, d) =>
-      Similarity.bruteForceTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-
-    // md5-seeded hash family so the full minhash+LSH+verify pipeline
-    // is oracle-replayable (Dedup.md5Seeded; xxSeeded is the
-    // engine-only fast path)
-    "doc_minhash_neardups" -> ((s, d) =>
-      Dedup.minhashNearDups(scopedDocs(s, d), threshold = 0.3,
-        hashFn = Dedup.md5Seeded)),
-    "doc_minhash_clusters" -> ((s, d) =>
-      Dedup.minhashClusters(scopedDocs(s, d), threshold = 0.3,
-        hashFn = Dedup.md5Seeded)),
-    // quality-aware survivor per minhash cluster: keep the member the
-    // Gopher battery likes best (pass flag, then word count, then min
-    // doc_id) — the keep-the-best-copy policy production dedup runs,
-    // vs dedupByClusters' arbitrary min-id canonical
-    "doc_cluster_best" -> ((s, d) => {
-      val docs = scopedDocs(s, d)
-      Dedup.bestInCluster(docs,
-        Dedup.minhashClusters(docs, threshold = 0.3,
-          hashFn = Dedup.md5Seeded))
-    }),
-    // the applied dedup: canonical-by-fingerprint minus minhash losers
-    "doc_dedup_apply" -> ((s, d) =>
-      Dedup.dedupedCorpus(scopedDocs(s, d), threshold = 0.3,
-        hashFn = Dedup.md5Seeded)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    // ---- Spark-native sketch: the xxhash64-family SimHash64
-    //      expression can't be replayed in DuckDB, so the checkable
-    //      surface is the AGREEMENT between the native expression and
-    //      the independent in-Spark compositional formulation — the
-    //      oracle pins n_agree = n_docs = count(*), so any native/
-    //      composed drift flips the hash gate (round-4 verdict #4) ----
-    "doc_simhash" -> ((s, d) => Tables.documents(s, d)
-      .select((Dedup.simhash(col("text")) ===
-        Dedup.simhashComposed(col("text"))).as("agree"))
-      .agg(count(lit(1)).as("n_docs"),
-        count(when(col("agree"), 1)).as("n_agree"))),
-    // oracle-replayable variant over the md5-seeded 60-bit family
-    "doc_simhash_portable" -> ((s, d) =>
-      Dedup.simhashPortable(Tables.documents(s, d))),
-    // Hamming-band near-dup pairs over the portable sketch (Manku-style
-    // blocking — lossless for hamming <= 3 with 4 bands)
-    "doc_simhash_neardups" -> ((s, d) =>
-      Dedup.simhashNearDups(Tables.documents(s, d))),
-    "doc_simhash_clusters" -> ((s, d) =>
-      Dedup.simhashClusters(Tables.documents(s, d))),
-    // the cluster-mode apply step: one canonical survivor per simhash
-    // component, unclustered docs untouched
-    "doc_cluster_dedup" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.dedupByClusters(docs, Dedup.simhashClustersRaw(docs))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-    "emb_lsh_ann" -> ((s, d) =>
-      Similarity.lshTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-    // ANN quality dial: recall@10 of the LSH result vs brute force
-    "emb_lsh_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.lshTopK(emb, Seq(0L, 1L, 2L)),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // cold path: per-call training (index-build cost made visible)
-    "emb_ivf_ann" -> ((s, d) =>
-      Similarity.ivfTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-    // FILTERED vector search: metadata predicate restricts the corpus
-    // side inside the pruned-list scan (a pushed parquet filter on
-    // the durable layout) — one shared index serves every filter;
-    // wider probes keep recall under the thinner lists
-    "emb_ivf_filtered" -> ((s, d) =>
-      Similarity.ivfTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L),
-        nprobe = 4, pred = Some(col("label").isin(3, 7)))),
-    // quality dial for nprobe: recall@10 of the pruned probe vs exact
-    "emb_ivf_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.ivfTopK(emb, Seq(0L, 1L, 2L)),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // what sample-training costs in recall: the same nprobe dial with
-    // the quantizer trained on the vec_id % 4 sample — prices the
-    // 100 TB build recipe's quality side next to its build-cost side
-    "emb_ivf_sampled_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensureIvfSampledIndex(s,
-        s"$d/embeddings.parquet", emb, sampleMod = 4)
-      import s.implicits._
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.recallAtK(
-        Similarity.ivfSearchIndexed(s, idx, qvecs),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // ...and the same sampled quantizer at the DESIGN POINT: on the
-    // clustered fixture a 1-in-4 sample still sees every cluster's
-    // mass, so most of the full-trained recall survives (measured
-    // 0.87 vs 1.0 at sf0.1; the noise row above is the worst case)
-    "emb_ivf_sampled_clustered_recall" -> ((s, d) => {
-      val ce = clusteredEmbeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.ivfTopK(ce, Seq(0L, 1L, 2L),
-          trainOn = Some(ce.filter(col("vec_id") % 4 === 0))),
-        Similarity.bruteForceTopK(ce, Seq(0L, 1L, 2L)))
-    }),
-    // the same nprobe dial at the DESIGN POINT: clustered fixture,
-    // identical dials (nlist=16, nprobe=2) — k-means carves the true
-    // clusters, so the pruned probe should hold near-exact recall
-    // where the noise row above pays the worst case
-    "emb_ivf_clustered_recall" -> ((s, d) => {
-      val ce = clusteredEmbeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.ivfTopK(ce, Seq(0L, 1L, 2L)),
-        Similarity.bruteForceTopK(ce, Seq(0L, 1L, 2L)))
-    }),
-    // production read path: durable fingerprint-guarded index (built
-    // once per source version), probed with caller-supplied query
-    // vectors — here fetched from the BASE table (3 rows, pushed-down
-    // id filter), never by scanning the index lists
-    "emb_ivf_indexed" -> ((s, d) => {
-      val idx = Similarity.ensureIvfIndex(s, s"$d/embeddings.parquet",
-        Tables.embeddings(s, d))
-      import s.implicits._
-      val qvecs = Tables.embeddings(s, d)
-        .filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.ivfSearchIndexed(s, idx, qvecs)
-    }),
-    // the 100 TB build recipe made first-class: the coarse quantizer
-    // trains on the deterministic vec_id % 4 sample (bounding Lloyd's
-    // per-iteration pass), the full corpus pays only the assignment
-    // scan + partitioned write; the probe is the standard pruned read
-    "emb_ivf_sampled_indexed" -> ((s, d) => {
-      val idx = Similarity.ensureIvfSampledIndex(s,
-        s"$d/embeddings.parquet", Tables.embeddings(s, d), sampleMod = 4)
-      import s.implicits._
-      val qvecs = Tables.embeddings(s, d)
-        .filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.ivfSearchIndexed(s, idx, qvecs)
-    }),
-    // product-quantization ADC search (4 subspaces × 16 codewords =
-    // 4-byte codes) with exact re-rank of the top-50 candidates —
-    // the FAISS IVF-PQ probe path's PQ half
-    "emb_pq_ann" -> ((s, d) =>
-      Similarity.pqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-    // SQ8 rung of the compression ladder: int8 codes + per-vector
-    // scale, approximate cosine against the dequantized corpus, exact
-    // re-rank of the top candidates
-    "emb_sq8_ann" -> ((s, d) =>
-      Similarity.sq8TopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-    // durable SQ8 sidecar: quantized once at write time, probe scans
-    // the stored codes — must equal the one-shot emb_sq8_ann exactly
-    "emb_sq8_indexed" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensureSq8Index(s, s"$d/embeddings.parquet", emb)
-      import s.implicits._
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.sq8SearchIndexed(s, idx, emb, qvecs)
-    }),
-    // quality dial for 8-bit codes: recall@10 vs brute force (expected
-    // ≫ PQ's 4-byte codes, ≤ 1.0)
-    "emb_sq8_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.sq8TopK(emb, Seq(0L, 1L, 2L)),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // binary (sign-bit) quantization: 1 bit/dim packed into longs,
-    // XOR+popcount Hamming scan, exact re-rank — the cheapest rung of
-    // the compression ladder
-    "emb_bq_ann" -> ((s, d) =>
-      Similarity.bqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-    // durable bq sidecar: fingerprint-guarded build-once, probe over
-    // the stored packed words, floats fetched only for the re-rank —
-    // must equal the one-shot emb_bq_ann exactly
-    "emb_bq_indexed" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensureBqIndex(s, s"$d/embeddings.parquet", emb)
-      import s.implicits._
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.bqSearchIndexed(s, idx, emb, qvecs)
-    }),
-    // quality dial for 1-bit codes: recall@10 vs brute force (below
-    // SQ8, in PQ's neighborhood — the rescoring stage earns its keep)
-    "emb_bq_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.bqTopK(emb, Seq(0L, 1L, 2L)),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // the full IVF-PQ probe path: coarse quantizer restricts ADC to
-    // nprobe lists, exact re-rank of the survivors
-    "emb_ivfpq_ann" -> ((s, d) =>
-      Similarity.ivfPqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L))),
-    // the DURABLE form of the same probe: stored lists/codes/books
-    // probed with caller-supplied query vectors (ADC reads codes
-    // only, floats touched just for the cand survivors) — probe ≡
-    // one-shot, so the emb_ivfpq_ann oracle string locks the at-rest
-    // layout end-to-end; training amortized under the fingerprint
-    "emb_ivfpq_indexed" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensureIvfPqIndex(s, s"$d/embeddings.parquet",
-        emb)
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.ivfPqSearchIndexed(s, idx, qvecs)
-    }),
-    // true IVFADC: PQ codes encode residuals x − c(x) (FAISS default);
-    // same probe cost, strictly tighter quantization cells
-    "emb_ivfpq_res_ann" -> ((s, d) =>
-      Similarity.ivfPqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L),
-        residual = true)),
-    // quality dial: residual coding's recall@10 vs brute force
-    "emb_ivfpq_res_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.ivfPqTopK(emb, Seq(0L, 1L, 2L), residual = true),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // quality dial for the PQ code budget: recall@10 vs brute force
-    "emb_pq_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.pqTopK(emb, Seq(0L, 1L, 2L)),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // matryoshka prefix ranking: cosine over the first 16 of 64 dims
-    // (the truncate-then-rerank ladder's cheap first pass)
-    "emb_prefix_ann" -> ((s, d) =>
-      Similarity.prefixTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L),
-        prefixDim = 16)),
-    // recall@10 of the 16-dim prefix ranking vs the full-dim truth —
-    // the dial that says whether a prefix is servable
-    "emb_prefix_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.prefixTopK(emb, Seq(0L, 1L, 2L), prefixDim = 16),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // per-label distribution drift between the base corpus and the
-    // vec_id % 10 == 0 "append" slice (the monitoring row behind the
-    // index drift guard's single global ratio)
-    "emb_drift" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.embeddingDrift(
-        emb.filter(col("vec_id") % 10 =!= 0),
-        emb.filter(col("vec_id") % 10 === 0))
-    }),
-    // the full truncate-then-rerank funnel: 16-dim prefix cuts 50
-    // candidates, full-dim exact rerank ranks the top 10
-    "emb_prefix_rerank" -> ((s, d) =>
-      Similarity.prefixRerankTopK(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L), prefixDim = 16, cand = 50)),
-    // the DURABLE matryoshka layout: prefix stored as its own column
-    // (the at-rest byte win the one-shot's scaladoc prices), probed
-    // with caller-supplied query vectors — probe ≡ one-shot, so the
-    // emb_prefix_rerank oracle string locks the layout end-to-end
-    "emb_prefix_indexed" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensurePrefixIndex(s, s"$d/embeddings.parquet",
-        emb, prefixDim = 16)
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.prefixSearchIndexed(s, idx, qvecs, cand = 50)
-    }),
-    // the SUB-LINEAR matryoshka serving path: centroids trained on
-    // the stored prefix, coarse pass reads only nprobe of nlist
-    // prefix lists (partition-pruned), full-dim rerank of the
-    // survivors — the pruned probe is oracle-replayed through the
-    // k-means CTE chain trained on the sliced source
-    "emb_prefix_ivf_indexed" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensurePrefixIvfIndex(s,
-        s"$d/embeddings.parquet", emb, prefixDim = 16, nlist = 16)
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.prefixIvfSearchIndexed(s, idx, qvecs, nprobe = 4,
-        cand = 50)
-    }),
-    // table-vs-index kNN JOIN over the pruned matryoshka layout:
-    // every 97th vector is a query ROW (never a driver-side list),
-    // prefix assignment scan-local, coarse join on the list id,
-    // full-dim rerank of the cand survivors
-    "emb_prefix_ivf_knn_join" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensurePrefixIvfIndex(s,
-        s"$d/embeddings.parquet", emb, prefixDim = 16, nlist = 16)
-      Similarity.prefixIvfKnnJoin(s, idx,
-        emb.filter(col("vec_id") % 97 === 0)
-          .select(col("vec_id"), col("embedding")),
-        k = 10, nprobe = 4, cand = 50)
-    }),
-    // FILTERED search on the pruned matryoshka layout: the label
-    // predicate rides the pruned coarse scan as a pushed parquet
-    // filter (the layout carries the column — columnar at rest, so
-    // unfiltered probes never read it), filtered rows never eat
-    // candidate slots
-    "emb_prefix_ivf_filtered" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensurePrefixIvfIndex(s,
-        s"$d/embeddings.parquet", emb, prefixDim = 16, nlist = 16,
-        carryCols = Seq("label"))
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.prefixIvfSearchIndexed(s, idx, qvecs, nprobe = 4,
-        cand = 50, pred = Some(col("label").isin(3, 7)))
-    }),
-    // recall@10 of the PRUNED matryoshka funnel vs brute force — the
-    // dial that prices what nprobe/nlist list pruning costs on top of
-    // the truncation (compare against emb_prefix_rerank_recall, the
-    // unpruned funnel's dial)
-    "emb_prefix_ivf_recall" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensurePrefixIvfIndex(s,
-        s"$d/embeddings.parquet", emb, prefixDim = 16, nlist = 16)
-      val qvecs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.recallAtK(
-        Similarity.prefixIvfSearchIndexed(s, idx, qvecs, nprobe = 4,
-          cand = 50),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // the pruned matryoshka funnel at the DESIGN POINT: same dials
-    // over the clustered fixture. The durable index is keyed under a
-    // separate indexRoot — the fixture derives from the same source
-    // parquet, so the fingerprint guard still rebuilds on source
-    // change, but the noise corpus's index dir is never aliased
-    "emb_prefix_ivf_clustered_recall" -> ((s, d) => {
-      import s.implicits._
-      val ce = clusteredEmbeddings(s, d)
-      val idx = Similarity.ensurePrefixIvfIndex(s,
-        s"$d/embeddings.parquet", ce, prefixDim = 16, nlist = 16,
-        indexRoot = Some(s"${s.conf.get("spark.sql.warehouse.dir")}" +
-          "/graft-clustered-index"))
-      val qvecs = ce.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect().toSeq.sortBy(_._1)
-      Similarity.recallAtK(
-        Similarity.prefixIvfSearchIndexed(s, idx, qvecs, nprobe = 4,
-          cand = 50),
-        Similarity.bruteForceTopK(ce, Seq(0L, 1L, 2L)))
-    }),
-    // recall of the rerank funnel vs brute force — the dial that says
-    // how much candidate width buys back from the truncation
-    "emb_prefix_rerank_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.recallAtK(
-        Similarity.prefixRerankTopK(emb, Seq(0L, 1L, 2L),
-          prefixDim = 16, cand = 50),
-        Similarity.bruteForceTopK(emb, Seq(0L, 1L, 2L)))
-    }),
-    // text-side snapshot drift per source: L1 distance between
-    // char-bigram frequency distributions (exact rational terms).
-    // batch slice = doc_id % 7 (coprime with the synthetic source
-    // cycle, so every source has mass on BOTH sides — % 10 would
-    // alias the source assignment and leave every distance NULL)
-    "doc_bigram_drift" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextOps.bigramDrift(docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0))
-    }),
-    // banded OR-amplified near-dup blocking over a PLANTED corpus: the
-    // synthetic embeddings are random noise (max natural pair cosine
-    // ≈ 0.51 — no true near-dups exist to find), so the query plants
-    // deterministic clones (x + 0.25·next(x), replayed exactly by the
-    // oracle) and runs the operator at a real near-dup threshold
-    "emb_near_dups" -> ((s, d) =>
-      Similarity.embeddingNearDups(plantedEmbeddings(s, d), minCos = 0.9)),
-    // ANN as a table-vs-table JOIN (hard-negative mining / retrieval
-    // shape): every 97th vector as the query TABLE, top-10 corpus
-    // neighbors among banded sign-LSH candidates, neither side
-    // broadcast — the form that runs when the query side is a corpus
-    "emb_knn_join" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.knnJoin(emb.filter(col("vec_id") % 97 === 0), emb)
-    }),
-    // quality dial for the joinful form: per-query recall@10 of the
-    // banded candidate funnel vs exact brute force over the same
-    // query table
-    "emb_knn_join_recall" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") % 97 === 0)
-      import s.implicits._
-      val qids = q.select(col("vec_id")).as[Long].collect().sorted.toSeq
-      Similarity.recallAtK(
-        Similarity.knnJoin(q, emb),
-        Similarity.bruteForceTopK(emb, qids))
-    }),
-    // the same dial at the DESIGN POINT (round-12 verdict #2): the
-    // clustered fixture, where band collisions concentrate inside
-    // true clusters — noise row above is the worst case, this row is
-    // the regime the near-dup model actually serves
-    "emb_knn_join_clustered_recall" -> ((s, d) => {
-      val ce = clusteredEmbeddings(s, d)
-      val q = ce.filter(col("vec_id") % 97 === 0)
-      import s.implicits._
-      val qids = q.select(col("vec_id")).as[Long].collect().sorted.toSeq
-      Similarity.recallAtK(
-        Similarity.knnJoin(q, ce),
-        Similarity.bruteForceTopK(ce, qids))
-    }),
-    // hot-band occupancy accounting (the pre-flight read for choosing
-    // maxBandDf): bucket count, hot-bucket count and blocking mass
-    // above the cap, and the worst single-bucket skew — over the same
-    // planted corpus and auto-selected geometry as the near-dup rows
-    "emb_band_stats" -> ((s, d) =>
-      Similarity.hotBandStats(plantedEmbeddings(s, d), maxBandDf = 16)),
-    // table-vs-index kNN join: every query ROW (a DataFrame side, no
-    // driver-side list) assigned its nprobe nearest STORED centroids
-    // scan-locally, equi-joined against the durable index's cid
-    // partitions, exact cosine + bounded top-k — the production
-    // retrieval join (no per-call training, recall dialed by
-    // nprobe/nlist instead of band width)
-    "emb_knn_join_indexed" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val idx = Similarity.ensureIvfIndex(s, s"$d/embeddings.parquet", emb)
-      Similarity.knnJoinIndexed(s, idx,
-        emb.filter(col("vec_id") % 97 === 0), k = 5, nprobe = 2)
-    }),
-    // incremental ingest, embedding leg: a new batch (planted corpus
-    // clones + novel noise vectors) deduped against the corpus with
-    // the corpus only scanned — bloom of the batch's band keys prunes
-    // the scan, exact cosine verifies (Similarity.embeddingNovel)
-    "emb_novel" -> ((s, d) => {
-      val (batch, ref) = novelEmbeddingSplit(s, d)
-      Similarity.embeddingNovel(batch, ref, minCos = 0.9)
-        .select(col("vec_id")).orderBy(col("vec_id"))
-    }),
-    // hard-negative triplet mining for contrastive training: anchors
-    // = the planted clones (each has its base at cos >= 0.9); among
-    // each anchor's banded top-k, positive = best candidate >= 0.9,
-    // hard negative = best candidate < 0.7
-    "emb_triplets" -> ((s, d) => {
-      val pe = plantedEmbeddings(s, d)
-      Similarity.mineTriplets(
-        pe.filter(col("vec_id") >= PlantedIdBase), pe,
-        posMin = 0.9, negMax = 0.7)
-    }),
-    // measured pair recall of the banded blocker vs exact brute force
-    // (anchored on the planted clones — the truth set is linear): the
-    // round-4 lossy-blocking finding's answer, as a checked row
-    "emb_near_dup_recall" -> ((s, d) =>
-      Similarity.nearDupPairRecall(plantedEmbeddings(s, d),
-        col("vec_id") >= PlantedIdBase, minCos = 0.9)),
-    // cluster-representative mode over the banded pair graph — the
-    // O(corpus)-output answer for embedding dedup at scale
-    "emb_near_dup_clusters" -> ((s, d) =>
-      Similarity.embeddingNearDupClusters(plantedEmbeddings(s, d))),
-    // SemDeDup (Abbas et al. 2023): k-means cluster then prune
-    // within-cluster cosine near-dups — the clustered Σ|c|² bound on
-    // the pair stage; planted clones are the semantic duplicates.
-    // nlist AUTO-SIZED from the corpus count (semDedupNlist rung:
-    // 120 → 2 at sf0.01, 480 → 8 at sf0.1) and replayed
-    // data-dependently by the oracle — the emb_near_dups rung-replay
-    // pattern. Round-14 (r13 verdict #1): Lloyd trains on the
-    // deterministic vec_id % 4 sample (semDedupSampled), so the full
-    // corpus pays ONE assignment scan instead of iters+1 training
-    // passes; the oracle replays the same train-on-sample/assign-all
-    // split (trainSrc CTE), rung still from the full corpus count
-    "emb_semdedup" -> ((s, d) =>
-      Similarity.semDedupSampled(plantedEmbeddings(s, d), sampleMod = 4,
-        iters = 3, minCos = 0.9)),
-    // int8 scalar quantization error profile (embedding compression
-    // for storage/ANN at scale: s = max|x|/127, q = round(x/s))
-    "emb_quant_error" -> ((s, d) =>
-      Similarity.quantizationError(Tables.embeddings(s, d))),
-    // per-label exact centroid + medoid (representative-example
-    // primitive): one decimal-sum groupBy, broadcast centroid dim,
-    // packed-struct min medoid — no window
-    "emb_prototypes" -> ((s, d) =>
-      Similarity.classPrototypes(Tables.embeddings(s, d))),
-    // cluster-balanced coverage sample: per k-means cell, the 10
-    // members closest to the centroid via bounded CollectTopK — every
-    // region represented regardless of cluster population skew
-    "emb_coverage_sample" -> ((s, d) =>
-      Similarity.coverageSample(Tables.embeddings(s, d),
-        nlist = 8, iters = 3, perCell = 10)),
-    // the same sample over the DURABLE IVF index: training/assignment
-    // amortized in the index build — re-sampling costs one list scan
-    "emb_coverage_indexed" -> ((s, d) => {
-      val idx = Similarity.ensureIvfIndex(s, s"$d/embeddings.parquet",
-        Tables.embeddings(s, d))
-      Similarity.coverageSampleIndexed(s, idx, perCell = 5)
-    }),
-    // SEMANTIC DECONTAMINATION: drop corpus docs whose embedding sits
-    // at cosine >= 0.9 to ANY eval-benchmark embedding — the eval set
-    // (every 95th base vector, so exact leaks AND their planted
-    // near-clones exist in the corpus) rides as broadcast literals;
-    // the corpus is scanned once with a scan-local max-cos projection
-    "emb_decontam" -> ((s, d) =>
-      Similarity.semanticDecontam(
-        plantedEmbeddings(s, d),
-        Tables.embeddings(s, d).filter(col("vec_id") % 95 === 0),
-        minCos = 0.9)))
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for the hash/LSH sketch ops →
-    * driver records a weaker rows-only check.
+    * the same parquet tables. Every row has one.
     */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-  round(CAST(sum(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE), 2) AS sum_qty,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE), 2) AS sum_base_price,
-  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,10))) AS DOUBLE), 2) AS sum_disc_price,
-  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(30,10))) AS DOUBLE), 2) AS sum_charge,
-  round(CAST(sum(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) / count(*), 4) AS avg_qty,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE) / count(*), 4) AS avg_price,
-  round(CAST(sum(CAST(l_discount AS DECIMAL(30,10))) AS DOUBLE) / count(*), 4) AS avg_disc,
-  count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-
-    "q3_top_orders" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate, o_orderpriority,
-  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,10))) AS DOUBLE), 2) AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-
-    "q5_region_revenue" ->
-      """SELECT n_name,
-  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,10))) AS DOUBLE), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY n_name ORDER BY revenue DESC, n_name""",
-
-    "q_events_by_segment" ->
-      """SELECT COALESCE(c_mktsegment, 'UNKNOWN') AS segment, event_type,
-  count(*) AS n,
-  round(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE), 2) AS value_sum
-FROM events LEFT JOIN customer ON user_id = c_custkey
-GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q_user_coverage" ->
-      """WITH ev AS (SELECT DISTINCT user_id FROM events)
-SELECT
-  count(CASE WHEN ev.user_id IS NOT NULL AND c.c_custkey IS NOT NULL THEN 1 END) AS matched,
-  count(CASE WHEN ev.user_id IS NOT NULL AND c.c_custkey IS NULL THEN 1 END) AS event_only,
-  count(CASE WHEN ev.user_id IS NULL AND c.c_custkey IS NOT NULL THEN 1 END) AS customer_only
-FROM ev FULL OUTER JOIN customer c ON ev.user_id = c.c_custkey""",
-
-    "q_events_pivot" ->
-      """SELECT COALESCE(c_mktsegment, 'UNKNOWN') AS segment,
-  count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-  count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-  count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-  count(CASE WHEN event_type = 'view' THEN 1 END) AS "view"
-FROM events LEFT JOIN customer ON user_id = c_custkey
-GROUP BY 1 ORDER BY 1""",
-
-    "dam_classify" -> act(
-      """SELECT activity_id, user_id, username, role, operation_type, table_name,
-  operation_status, ip_address, rows_affected, query_hash
-FROM activity ORDER BY activity_id"""),
-
-    "dam_stats" -> act(
-      """SELECT count(*) AS total_activities,
-  count(CASE WHEN operation_status = 'Failed' THEN 1 END) AS failed_activities,
-  count(CASE WHEN operation_type = 'SELECT' THEN 1 END) AS select_count,
-  count(CASE WHEN operation_type = 'INSERT' THEN 1 END) AS insert_count,
-  count(CASE WHEN operation_type = 'UPDATE' THEN 1 END) AS update_count,
-  count(CASE WHEN operation_type = 'DELETE' THEN 1 END) AS delete_count,
-  count(DISTINCT user_id) AS distinct_users,
-  CAST(sum(COALESCE(rows_affected, 0)) AS BIGINT) AS total_rows_affected
-FROM activity"""),
-
-    "dam_ops_by_type" -> act(
-      """SELECT operation_type, count(*) AS n,
-  CAST(sum(COALESCE(rows_affected, 0)) AS BIGINT) AS rows_total
-FROM activity GROUP BY operation_type ORDER BY operation_type"""),
-
-    "dam_top_users" -> act(
-      """SELECT username, count(*) AS n FROM activity
-GROUP BY username ORDER BY n DESC, username LIMIT 5"""),
-
-    "dam_timeline_hourly" -> act(
-      """SELECT strftime(date_trunc('hour', access_timestamp), '%Y-%m-%d %H:00') AS bucket,
-  count(*) AS n,
-  count(CASE WHEN operation_status = 'Failed' THEN 1 END) AS n_failed,
-  CAST(sum(COALESCE(rows_affected, 0)) AS BIGINT) AS rows_total
-FROM activity GROUP BY 1 ORDER BY 1"""),
-
-    "dam_behavior_profile" -> act(
-      """SELECT hour(access_timestamp) AS hr, operation_type, count(*) AS n
-FROM activity GROUP BY 1, 2 ORDER BY 1, 2"""),
-
-    "dam_user_baseline" -> act(
-      """, hourly AS (
-  SELECT user_id, CAST(access_timestamp AS DATE) AS d,
-    hour(access_timestamp) AS h, count(*) AS cnt
-  FROM activity GROUP BY 1, 2, 3
-), agg AS (
-  SELECT user_id, count(*) AS n, CAST(sum(cnt) AS BIGINT) AS s,
-    CAST(sum(cnt * cnt) AS BIGINT) AS s2
-  FROM hourly GROUP BY user_id
-)
-SELECT user_id,
-  round(CAST(s AS DOUBLE) / n, 4) AS avg_per_hour,
-  round(sqrt((CAST(n AS DOUBLE) * s2 - CAST(s AS DOUBLE) * s) / (CAST(n AS DOUBLE) * n)), 4) AS std_per_hour,
-  n AS active_hours
-FROM agg ORDER BY user_id"""),
-
-    "dam_rate_per_minute" -> act(
-      """SELECT user_id,
-  strftime(date_trunc('minute', access_timestamp), '%Y-%m-%d %H:%M') AS minute,
-  count(*) AS n, (count(*) > 100) AS over_limit
-FROM activity GROUP BY 1, 2 ORDER BY user_id, minute"""),
-
-    "dam_anomaly_zscore" -> act(
-      """, mx AS (SELECT max(access_timestamp) AS m FROM activity),
-recent AS (
-  SELECT user_id, count(*) AS recent_cnt FROM activity, mx
-  WHERE access_timestamp >= m - INTERVAL 1 HOUR GROUP BY user_id
-), hourly AS (
-  SELECT user_id, CAST(access_timestamp AS DATE) AS d,
-    hour(access_timestamp) AS h, count(*) AS cnt
-  FROM activity GROUP BY 1, 2, 3
-), base AS (
-  SELECT user_id, count(*) AS n, CAST(sum(cnt) AS BIGINT) AS s,
-    CAST(sum(cnt * cnt) AS BIGINT) AS s2
-  FROM hourly GROUP BY user_id
-)
-SELECT r.user_id, r.recent_cnt,
-  round(CAST(s AS DOUBLE) / n, 4) AS avg_cnt,
-  round(sqrt((CAST(n AS DOUBLE) * s2 - CAST(s AS DOUBLE) * s) / (CAST(n AS DOUBLE) * n)), 4) AS std_cnt,
-  (r.recent_cnt > CAST(s AS DOUBLE) / n + 3 * sqrt((CAST(n AS DOUBLE) * s2 - CAST(s AS DOUBLE) * s) / (CAST(n AS DOUBLE) * n))) AS is_anomalous
-FROM recent r JOIN base b ON r.user_id = b.user_id ORDER BY r.user_id"""),
-
-    "dam_anomaly_mad" -> act(
-      """, hourly AS (
-  SELECT user_id, CAST(access_timestamp AS DATE) AS d,
-    hour(access_timestamp) AS h, count(*) AS cnt
-  FROM activity GROUP BY 1, 2, 3
-), med AS (
-  SELECT user_id, quantile_cont(cnt, 0.5) AS med FROM hourly GROUP BY user_id
-), mad AS (
-  SELECT h.user_id, quantile_cont(abs(h.cnt - m.med), 0.5) AS mad, any_value(m.med) AS med
-  FROM hourly h JOIN med m USING (user_id) GROUP BY h.user_id
-)
-SELECT h.user_id, strftime(h.d, '%Y-%m-%d') AS day,
-  CAST(h.h AS BIGINT) AS hr, h.cnt,
-  round(x.med, 4) AS med, round(x.mad, 4) AS mad
-FROM hourly h JOIN mad x USING (user_id)
-WHERE abs(h.cnt - x.med) > 3.0 * greatest(x.mad, 0.5)
-ORDER BY h.user_id, day, hr"""),
-
-    "dam_timeline_dense" -> act(
-      """, bounds AS (
-  SELECT date_trunc('hour', min(access_timestamp)) AS t0,
-    date_trunc('hour', max(access_timestamp)) AS t1
-  FROM activity
-), spine AS (
-  SELECT strftime(unnest(generate_series(t0, t1, INTERVAL 1 HOUR)), '%Y-%m-%d %H:00') AS bucket
-  FROM bounds
-), counts AS (
-  SELECT strftime(date_trunc('hour', access_timestamp), '%Y-%m-%d %H:00') AS bucket,
-    count(*) AS n
-  FROM activity GROUP BY 1
-)
-SELECT s.bucket, COALESCE(c.n, 0) AS n
-FROM spine s LEFT JOIN counts c USING (bucket)
-ORDER BY s.bucket"""),
-
-    "dam_ip_switches" -> act(
-      """, w AS (
-  SELECT username, activity_id, ip_address, access_timestamp,
-    lag(ip_address) OVER (PARTITION BY username ORDER BY access_timestamp, activity_id) AS prev_ip,
-    lag(access_timestamp) OVER (PARTITION BY username ORDER BY access_timestamp, activity_id) AS prev_ts
-  FROM activity
-)
-SELECT username, activity_id, ip_address, prev_ip,
-  CAST(floor(epoch(access_timestamp)) - floor(epoch(prev_ts)) AS BIGINT) AS gap_seconds
-FROM w
-WHERE prev_ip IS NOT NULL AND prev_ip <> ip_address
-  AND access_timestamp <= prev_ts + INTERVAL 1 HOUR
-ORDER BY username, activity_id"""),
-
-    "dam_latest_failed" -> act(
-      """SELECT activity_id, username, operation_type, table_name, ip_address,
-  strftime(access_timestamp, '%Y-%m-%d %H:%M:%S') AS access_ts
-FROM (
-  SELECT * FROM activity WHERE operation_status = 'Failed'
-  ORDER BY access_timestamp DESC, activity_id DESC LIMIT 50
-) ORDER BY activity_id"""),
-
-    "dam_export_csv" -> act(
-      """SELECT activity_id, username, operation_type, table_name,
-  operation_status, ip_address,
-  strftime(access_timestamp, '%Y-%m-%dT%H:%M:%S') AS access_timestamp
-FROM (
-  SELECT * FROM activity
-  ORDER BY access_timestamp DESC, activity_id DESC LIMIT 1000
-) ORDER BY activity_id"""),
-
-    "dam_severity" -> sev(
-      """SELECT activity_id, operation_type, table_name, role, severity_ord,
-  severity_level, is_suspicious, suspicious_reasons
-FROM classified ORDER BY activity_id"""),
-
-    "dam_alerts" -> sev(
-      """SELECT activity_id, username,
-  CASE WHEN contains(suspicious_reasons, 'SQL Injection') THEN 'SQL Injection'
-       WHEN contains(suspicious_reasons, 'sensitive') THEN 'Data Leakage'
-       WHEN contains(suspicious_reasons, 'rate limit') THEN 'DoS Attempt'
-       ELSE 'Security Violation' END AS alert_type,
-  severity_level, 'New' AS alert_status
-FROM classified WHERE severity_ord >= 2 ORDER BY activity_id"""),
-
-    "dam_compliance" -> act(
-      s"""SELECT activity_id, username, standard, finding, status FROM (
-  ${complianceFindingsSql("activity")}
-) ORDER BY activity_id, standard"""),
-
-    "dam_compliance_summary" -> act(
-      s"""SELECT standard, status, count(*) AS n,
-  count(DISTINCT username) AS distinct_users
-FROM (
-  ${complianceFindingsSql("activity")}
-) GROUP BY 1, 2 ORDER BY 1, 2"""),
-
-    "dam_compliance_daily" -> complianceReportSql(
-      "CAST(access_timestamp AS DATE) = CAST(m AS DATE)"),
-    "dam_compliance_weekly" -> complianceReportSql(
-      "access_timestamp >= m - INTERVAL 7 DAY"),
-    "dam_compliance_monthly" -> complianceReportSql(
-      "access_timestamp >= m - INTERVAL 30 DAY"),
-    "dam_compliance_envelope" -> act(
-      s""", mx AS (SELECT max(access_timestamp) AS m FROM activity),
-win AS (SELECT a.* FROM activity a, mx WHERE access_timestamp >= m - INTERVAL 30 DAY),
-f AS (
-  ${complianceFindingsSql("win")}
-)
-SELECT 'monthly' AS report_type,
-  (SELECT count(*) FROM win) AS total_activities,
-  (SELECT count(*) FROM f) AS non_compliant_count,
-  '${Detect.ComplianceStandards.mkString(",")}' AS standards_covered"""),
-
-    "dam_lockouts" -> act(
-      """, w1 AS (
-  SELECT username, activity_id, operation_status, access_timestamp,
-    sum(CASE WHEN operation_status = 'Failed' THEN 1 ELSE 0 END) OVER
-      (PARTITION BY username ORDER BY access_timestamp, activity_id
-       ROWS UNBOUNDED PRECEDING) AS run_failed
-  FROM activity
-), w2 AS (
-  SELECT *, last_value(CASE WHEN operation_status = 'Success' THEN run_failed END IGNORE NULLS) OVER
-      (PARTITION BY username ORDER BY access_timestamp, activity_id
-       ROWS UNBOUNDED PRECEDING) AS at_success
-  FROM w1
-)
-SELECT username, activity_id,
-  strftime(access_timestamp, '%Y-%m-%d %H:%M:%S') AS locked_at,
-  CAST(run_failed - COALESCE(at_success, 0) AS BIGINT) AS failed_attempts,
-  strftime(access_timestamp + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS locked_until
-FROM w2
-WHERE operation_status = 'Failed' AND run_failed - COALESCE(at_success, 0) = 3
-ORDER BY username, activity_id"""),
-
-    "dam_failed_hourly" -> act(
-      """SELECT username,
-  strftime(date_trunc('hour', access_timestamp), '%Y-%m-%d %H:00') AS hour_bucket,
-  count(*) AS n_failed
-FROM activity WHERE operation_status = 'Failed'
-GROUP BY username, date_trunc('hour', access_timestamp)
-HAVING count(*) > 1
-ORDER BY username, hour_bucket"""),
-
-    "dam_threat_feed" -> sev(
-      """SELECT activity_id, username, severity_level, suspicious_reasons,
-  strftime(access_timestamp, '%Y-%m-%d %H:%M:%S') AS access_ts
-FROM (
-  SELECT * FROM classified WHERE is_suspicious
-  ORDER BY access_timestamp DESC, activity_id DESC LIMIT 10
-) ORDER BY activity_id"""),
-
-    "dam_firewall" -> act(FirewallMatchedCte +
-      """
-SELECT activity_id, username, ip_address, rule_id, description, action,
-  priority, query_snippet
-FROM fw ORDER BY activity_id"""),
-
-    "dam_firewall_blocks" -> act(FirewallMatchedCte +
-      """
-SELECT activity_id, rule_id, description, username, ip_address,
-  query_snippet, strftime(matched_at, '%Y-%m-%d %H:%M:%S') AS blocked_at
-FROM fw ORDER BY activity_id"""),
-
-    "dam_firewall_rules" -> (s"WITH $FirewallRulesCte\n" +
-      """SELECT rule_id, pattern, description, match_type, action, priority,
-  applies_to_user, applies_to_ip, is_active
-FROM rules ORDER BY priority, rule_id"""),
-
-    "dam_firewall_rules_reference" -> (s"WITH $ReferenceRulesCte\n" +
-      """SELECT rule_id, pattern, description, match_type, action, priority,
-  applies_to_user, applies_to_ip, is_active
-FROM rules ORDER BY priority, rule_id"""),
-
-    "dam_firewall_reference" -> act(ReferenceMatchedCte +
-      """
-SELECT activity_id, username, ip_address, rule_id, description, action,
-  priority, query_snippet
-FROM fw ORDER BY activity_id"""),
-
-    "dam_blocks_feed" -> act(FirewallMatchedCte +
-      """
-SELECT activity_id, rule_id, username, ip_address, query_snippet,
-  strftime(matched_at, '%Y-%m-%d %H:%M:%S') AS blocked_at
-FROM (
-  SELECT * FROM fw ORDER BY matched_at DESC, activity_id DESC LIMIT 100
-) ORDER BY activity_id"""),
-
-    "dam_blacklist_hits" -> act(BlacklistCtes +
-      """
-SELECT activity_id, username, ip_address FROM activity
-WHERE ip_address IN (SELECT ip_address FROM abl) ORDER BY activity_id"""),
-
-    "dam_geo_top" -> act(
-      """, geo AS (
-  SELECT o AS octet,
-    CASE o % 5 WHEN 0 THEN 'US' WHEN 1 THEN 'IN' WHEN 2 THEN 'DE'
-               WHEN 3 THEN 'BR' ELSE 'JP' END AS country
-  FROM range(50) t(o)
-)
-SELECT country, count(*) AS n
-FROM activity a JOIN geo g
-  ON CAST(string_split(a.ip_address, '.')[3] AS BIGINT) = g.octet
-GROUP BY country ORDER BY n DESC, country LIMIT 10"""),
-
-    // range-table enrichment: DuckDB states the range join directly
-    // (its IEJoin handles BETWEEN natively); the engine's prefix
-    // blocking is a physical strategy, not a semantic one
-    "dam_geo_range" -> act(
-      s""", geod(lo_s, hi_s, country) AS (VALUES
-  ${Analytics.GeoRangeSeed.map { case (lo, hi, c) =>
-        s"('$lo', '$hi', '$c')" }.mkString(",\n  ")}
-), g AS (
-  SELECT ${ipIntSql("lo_s")} AS lo, ${ipIntSql("hi_s")} AS hi, country
-  FROM geod
-), a2 AS (
-  SELECT user_id, ${ipIntSql("ip_address")} AS ip_int FROM activity
-)
-SELECT COALESCE(g.country, 'unknown') AS country,
-  count(*) AS hits, count(DISTINCT user_id) AS users
-FROM a2 LEFT JOIN g ON a2.ip_int BETWEEN g.lo AND g.hi
-GROUP BY 1 ORDER BY 1"""),
-
-    "dam_orphans" -> act(
-      """SELECT user_id, count(*) AS n FROM activity
-WHERE user_id NOT IN (SELECT c_custkey FROM customer)
-GROUP BY user_id ORDER BY user_id"""),
-
-    "dam_union_feed" -> sev(
-      s"""SELECT activity_id, src FROM (
-  SELECT activity_id, 'alert' AS src FROM classified WHERE severity_ord >= 2
-  UNION ALL
-  SELECT activity_id, 'blacklist' AS src FROM classified
-  WHERE ip_address IN (SELECT ip_address FROM abl)
-) ORDER BY activity_id, src"""),
-
-    "ev_funnel" ->
-      """WITH f AS (
-  SELECT user_id,
-    min(CASE WHEN event_type = 'signup' THEN ts END) AS first_from,
-    max(CASE WHEN event_type = 'purchase' THEN ts END) AS last_to
-  FROM events GROUP BY user_id
-)
-SELECT count(CASE WHEN first_from IS NOT NULL THEN 1 END) AS entered,
-  count(CASE WHEN first_from IS NOT NULL AND last_to > first_from THEN 1 END) AS converted,
-  CAST(count(CASE WHEN first_from IS NOT NULL AND last_to > first_from THEN 1 END) * 10000 AS DOUBLE)
-    / greatest(count(CASE WHEN first_from IS NOT NULL THEN 1 END), 1) AS conv_bp
-FROM f""",
-
-    "ev_retention" ->
-      """WITH fs AS (
-  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-  FROM events GROUP BY user_id
-)
-SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort,
-  CAST((floor(epoch(date_trunc('week', e.ts))) - floor(epoch(cohort_week))) // 604800 AS BIGINT) AS week_offset,
-  count(DISTINCT e.user_id) AS active_users
-FROM events e JOIN fs USING (user_id)
-GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "doc_tfidf_top_terms" ->
-      """WITH terms AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2
-), dfq AS (
-  SELECT term, count(*) AS df
-  FROM (SELECT DISTINCT doc_id, term FROM terms) GROUP BY term
-), n AS (SELECT count(*) AS total FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-    round(tf.tf * ln(CAST(total AS DOUBLE) / dfq.df), 4) AS score
-  FROM tf JOIN dfq USING (term), n
-)
-SELECT doc_id,
-  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rank,
-  term, tf, df, score
-FROM scored
-QUALIFY rank <= 3 ORDER BY doc_id, rank""",
-
-    // BM25: identical expression tree (Lucene-shaped idf, k1=1.2,
-    // b=0.75 as explicit double casts), per-term doubles summed in
-    // exact DECIMAL(30,10), rounded to 4 dp BEFORE ranking
-    "doc_bm25_topk" -> bm25TopkOracleSql,
-    "doc_bm25_indexed" -> bm25TopkOracleSql,
-
-    // hybrid RRF: the BM25 chain (l-prefixed) and the hashed-embed
-    // cosine chain (e-prefixed) each ranked to top-5, full-outer
-    // fused on (query_id, doc_id); RRF terms are integer
-    // parts-per-billion (1e9 // (60+rank)) so the fused score is an
-    // exact BIGINT sum — no float summation anywhere in the fusion
-    "doc_hybrid_rrf" -> hybridRrfOracleSql,
-    "doc_hybrid_indexed" -> hybridRrfOracleSql,
-    "doc_hybrid_indexed_recall" -> hybridRecallOracleSql,
-
-    // token-run collapse: lag-window replay of the engine's
-    // predecessor-element array filter; md5 over the space-rejoined
-    // kept tokens is byte-exact on both engines
-    "doc_run_collapse" ->
-      """WITH d AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS l FROM documents
-), u AS (
-  SELECT doc_id, len(l) AS n_tokens, unnest(l) AS w,
-    unnest(generate_series(1, len(l))) AS i
-  FROM d
-), m AS (
-  SELECT doc_id, n_tokens, i, w,
-    lag(w) OVER (PARTITION BY doc_id ORDER BY i) AS p
-  FROM u
-), k AS (SELECT doc_id, n_tokens, i, w FROM m WHERE p IS NULL OR w <> p)
-SELECT doc_id, CAST(max(n_tokens) AS BIGINT) AS n_tokens,
-  CAST(count(*) AS BIGINT) AS n_kept,
-  md5(string_agg(w, ' ' ORDER BY i)) AS collapsed_md5
-FROM k GROUP BY doc_id ORDER BY doc_id""",
-
-    "ev_percentiles" ->
-      """SELECT event_type,
-  round(quantile_cont(value, 0.5), 4) AS p50,
-  round(quantile_cont(value, 0.9), 4) AS p90,
-  round(quantile_cont(value, 0.99), 4) AS p99,
-  count(*) AS n
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "ev_user_reach" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-  count(*) AS n
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    // sketch contract row (like ev_user_reach_approx / ev_cms_counts):
-    // the oracle replays the exact counts and asserts the engine-side
-    // contract flags are TRUE — a lossy merge or an out-of-bound
-    // estimate flips a flag and fails the hash gate
-    "ev_reach_merge" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-  true AS merge_equals_full, true AS within_bound
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "ev_user_reach_approx" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-  TRUE AS within_bound
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    // the CMS contract row: the oracle states the exact counts and
-    // that both sketch guarantees (one-sided overestimate, ε·N slack)
-    // hold — an estimate drifting past either flips a flag and fails
-    // the hash gate
-    "ev_cms_counts" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS exact_count,
-  TRUE AS one_sided, TRUE AS within_eps
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    // mergeable-CMS contract: exact counts + the three engine flags
-    // all TRUE — a lossy merge (merged ≠ full recompute, per-key and
-    // bit-exact), a lost one-sided guarantee, or a blown ε bound each
-    // flips a flag and fails the hash gate
-    "ev_cms_merge" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS exact_count,
-  TRUE AS merge_equals_full, TRUE AS one_sided, TRUE AS within_eps
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    // rank-error contract of the quantile sketch, same shape: exact
-    // counts + flag ≡ TRUE
-    "ev_pctile_sketch" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-  TRUE AS within_rank_bound
-FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "ev_sessions" ->
-      """WITH x AS (
-  SELECT user_id, event_id, ts,
-    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), y AS (
-  SELECT user_id, ts,
-    CASE WHEN prev_ts IS NULL OR ts > prev_ts + INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS new_session, event_id
-  FROM x
-), z AS (
-  SELECT user_id, ts,
-    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM y
-)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-  count(*) AS n_events,
-  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS start_ts,
-  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS end_ts
-FROM z GROUP BY 1, 2 ORDER BY user_id, session_id""",
-
-    // Ingest.sessionWindows in batch mode: the ev_sessions gap rule
-    // (new session iff ts strictly exceeds prev + gap — touching
-    // intervals merge), end reported as last event + gap
-    "ev_session_windows" ->
-      """WITH x AS (
-  SELECT user_id, event_id, ts,
-    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), y AS (
-  SELECT user_id, ts,
-    CASE WHEN prev_ts IS NULL OR ts > prev_ts + INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS new_session, event_id
-  FROM x
-), z AS (
-  SELECT user_id, ts,
-    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM y
-)
-SELECT user_id,
-  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS start_ts,
-  strftime(max(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS end_ts,
-  count(*) AS n_events
-FROM z GROUP BY user_id, session_id ORDER BY user_id, start_ts""",
-
-    // streamDedup's batch face: exact-copy redeliveries collapse to
-    // the original feed (DISTINCT replays dropDuplicates because the
-    // duplicated rows are verbatim copies)
-    "ev_stream_dedup" ->
-      """WITH feed AS (
-  SELECT event_id, ts, user_id, event_type, value FROM events
-  UNION ALL
-  SELECT event_id, ts, user_id, event_type, value FROM events
-  WHERE event_id % 10 = 0
-), d AS (SELECT DISTINCT event_id, ts, user_id, event_type, value FROM feed)
-SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, user_id,
-  event_type, round(value, 4) AS value
-FROM d ORDER BY event_id""",
-
-    // intervalJoin in batch mode: plain equi+range join
-    "ev_stream_join" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-  c.event_id AS click_id,
-  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
-  round(p.value, 4) AS value
-FROM events p JOIN events c ON c.user_id = p.user_id
-WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-  AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
-ORDER BY purchase_id, click_id""",
-
-    // Morton key replay: identical IEEE double bucket scaling, then
-    // the 4 magic spreading steps per dimension as chained CTEs
-    "ev_zorder" ->
-      """WITH b AS (
-  SELECT min(user_id) AS umn, max(user_id) AS umx,
-    CAST(floor(epoch(min(ts))) AS BIGINT) AS tmn,
-    CAST(floor(epoch(max(ts))) AS BIGINT) AS tmx
-  FROM events
-), k0 AS (
-  SELECT event_id,
-    CASE WHEN umx <= umn THEN 0
-         ELSE CAST(floor((user_id - umn) * 65535.0 / (umx - umn)) AS BIGINT)
-    END AS ub,
-    CASE WHEN tmx <= tmn THEN 0
-         ELSE CAST(floor((CAST(floor(epoch(ts)) AS BIGINT) - tmn) * 65535.0
-                         / (tmx - tmn)) AS BIGINT)
-    END AS tb
-  FROM events, b
-), k1 AS (
-  SELECT event_id, ((ub | (ub << 8)) & 16711935) AS u,
-    ((tb | (tb << 8)) & 16711935) AS t FROM k0
-), k2 AS (
-  SELECT event_id, ((u | (u << 4)) & 252645135) AS u,
-    ((t | (t << 4)) & 252645135) AS t FROM k1
-), k3 AS (
-  SELECT event_id, ((u | (u << 2)) & 858993459) AS u,
-    ((t | (t << 2)) & 858993459) AS t FROM k2
-), k4 AS (
-  SELECT event_id, ((u | (u << 1)) & 1431655765) AS u,
-    ((t | (t << 1)) & 1431655765) AS t FROM k3
-), z AS (
-  SELECT event_id, (u | (t << 1)) AS zkey FROM k4
-)
-SELECT zkey >> 24 AS zcell, count(*) AS n,
-  min(zkey) AS key_min, max(zkey) AS key_max
-FROM z GROUP BY zcell ORDER BY zcell""",
-
-    // SCD-2: change rows survive, lead() closes each interval
-    "ev_scd2" -> Scd2FullSql,
-    // incremental SCD-2: the oracle IS the full recompute — the merge
-    // leg must hash-match it exactly
-    "ev_scd2_merge" -> Scd2FullSql,
-
-    // incremental snapshot MERGE: anti-join + union replay
-    "ev_snapshot_merge" ->
-      s"""WITH base AS (
-  ${snapshotSql("ts < TIMESTAMP '2024-01-20'")}
-), delta AS (
-  ${snapshotSql("ts >= TIMESTAMP '2024-01-20'")}
-)
-SELECT user_id, last_event_id, last_ts, last_type, last_value FROM (
-  SELECT * FROM base WHERE user_id NOT IN (SELECT user_id FROM delta)
-  UNION ALL SELECT * FROM delta
-) ORDER BY user_id""",
-
-    // op-coded CDC: every change key leaves the base; non-deletes
-    // union back
-    "ev_cdc_apply" ->
-      s"""WITH base AS (
-  ${snapshotSql("ts < TIMESTAMP '2024-01-20'")}
-), delta AS (
-  ${snapshotSql("ts >= TIMESTAMP '2024-01-20'")}
-)
-SELECT user_id, last_event_id, last_ts, last_type, last_value FROM (
-  SELECT * FROM base WHERE user_id NOT IN (SELECT user_id FROM delta)
-  UNION ALL SELECT * FROM delta WHERE last_type <> 'error'
-) ORDER BY user_id""",
-
-    "doc_top_per_source" ->
-      """SELECT source, doc_id, n_chars FROM (
-  SELECT source, doc_id, n_chars,
-    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
-  FROM documents
-) WHERE rn = 1 ORDER BY source""",
-
-    "dam_agent_parse" -> {
-      val skipRe = sqlRe(graft.functions.Classify.SkipPattern)
-      s"""WITH ev AS (
-  SELECT *, $SqlTextCaseSql AS sql_text
-  FROM events
-), raw AS (
-  SELECT ts AS event_time,
-    'user_' || user_id || '[user_' || user_id || '] @ 10.0.' || (user_id % 50) || '.99 []' AS user_host,
-    CASE WHEN event_id % 7 = 0 THEN 'SET GLOBAL slow_query_log = 1'
-         WHEN event_id % 5 = 0 THEN '0x' || hex(sql_text)
-         ELSE sql_text END AS argument
-  FROM ev
-), kept AS (
-  SELECT * FROM raw
-  WHERE argument IS NOT NULL AND NOT regexp_matches(argument, '$skipRe')
-), decoded AS (
-  SELECT event_time, user_host,
-    substr(CASE WHEN regexp_matches(argument, '^0x(?:[0-9a-fA-F]{2})+$$')
-                THEN decode(unhex(substr(argument, 3)))
-                ELSE argument END, 1, 1000) AS operation_details
-  FROM kept
-)
-SELECT
-  ${usernameSql("user_host")} AS username,
-  ${opCaseSql("operation_details")} AS operation_type,
-  ${tblExtractSql("operation_details")} AS table_name,
-  CASE WHEN contains(lower(operation_details), 'error')
-         OR contains(lower(operation_details), 'failed')
-       THEN 'Failed' ELSE 'Success' END AS operation_status,
-  operation_details,
-  COALESCE(NULLIF(regexp_extract(user_host, '@\\s*([0-9a-fA-F:.]+)', 1), ''), '127.0.0.1') AS ip_address,
-  md5(operation_details) AS query_hash,
-  strftime(event_time, '%Y-%m-%d %H:%M:%S') AS event_ts
-FROM decoded ORDER BY event_ts, query_hash"""
-    },
-
-    "dam_stream_replay" -> StreamReplayOracle,
-    "dam_stream_replay_batched" -> StreamReplayBatchedOracle,
-
-    "dam_rollup" -> sev(
-      """SELECT COALESCE(operation_type, 'ALL') AS operation_type,
-  COALESCE(severity_level, 'ALL') AS severity_level, count(*) AS n
-FROM classified GROUP BY ROLLUP (operation_type, severity_level)
-ORDER BY operation_type, severity_level"""),
-
-    "dam_severity_histogram" -> sev(
-      """SELECT severity_level, count(*) AS n,
-  CAST((count(*) * 10000) // (SELECT count(*) FROM classified) AS DOUBLE) / 100.0 AS pct
-FROM classified GROUP BY 1 ORDER BY 1"""),
-
-    "dam_top_users_salted" -> act(
-      """SELECT username, count(*) AS n FROM activity
-GROUP BY username ORDER BY n DESC, username LIMIT 5"""),
-
-    "ev_asof_order" ->
-      """SELECT event_id, user_id, last_orderkey,
-  strftime(last_orderdate, '%Y-%m-%d %H:%M:%S') AS last_orderdate,
-  last_totalprice
-FROM (
-  SELECT e.event_id, e.user_id, o.o_orderkey AS last_orderkey,
-    o.o_orderdate AS last_orderdate, o.o_totalprice AS last_totalprice,
-    row_number() OVER (PARTITION BY e.event_id
-      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-  FROM events e LEFT JOIN orders o
-    ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-) WHERE rn = 1 ORDER BY event_id""",
-
-    // forward as-of, 30-day tolerance: first order at/after the event
-    "ev_asof_forward" ->
-      """SELECT event_id, user_id, next_orderkey,
-  strftime(next_orderdate, '%Y-%m-%d %H:%M:%S') AS next_orderdate,
-  next_totalprice
-FROM (
-  SELECT e.event_id, e.user_id, o.o_orderkey AS next_orderkey,
-    o.o_orderdate AS next_orderdate, o.o_totalprice AS next_totalprice,
-    row_number() OVER (PARTITION BY e.event_id
-      ORDER BY o.o_orderdate ASC, o.o_orderkey DESC) AS rn
-  FROM events e LEFT JOIN orders o
-    ON o.o_custkey = e.user_id AND o.o_orderdate >= e.ts
-    AND date_diff('microsecond', e.ts, o.o_orderdate) <= 2592000000000
-) WHERE rn = 1 ORDER BY event_id""",
-
-    // nearest as-of: the closer of the backward/forward candidates,
-    // ties to backward — stated as the two rn=1 candidates joined back
-    "ev_asof_nearest" ->
-      """WITH b AS (
-  SELECT event_id, bk, bts FROM (
-    SELECT e.event_id, o.o_orderkey AS bk, o.o_orderdate AS bts,
-      row_number() OVER (PARTITION BY e.event_id
-        ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-    FROM events e JOIN orders o
-      ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-  ) WHERE rn = 1
-), f AS (
-  SELECT event_id, fk, fts FROM (
-    SELECT e.event_id, o.o_orderkey AS fk, o.o_orderdate AS fts,
-      row_number() OVER (PARTITION BY e.event_id
-        ORDER BY o.o_orderdate ASC, o.o_orderkey DESC) AS rn
-    FROM events e JOIN orders o
-      ON o.o_custkey = e.user_id AND o.o_orderdate >= e.ts
-  ) WHERE rn = 1
-)
-SELECT e.event_id, e.user_id,
-  CASE WHEN f.fk IS NULL THEN b.bk
-       WHEN b.bk IS NOT NULL
-         AND date_diff('microsecond', b.bts, e.ts)
-           <= date_diff('microsecond', e.ts, f.fts) THEN b.bk
-       ELSE f.fk END AS near_orderkey,
-  strftime(
-    CASE WHEN f.fk IS NULL THEN b.bts
-         WHEN b.bk IS NOT NULL
-           AND date_diff('microsecond', b.bts, e.ts)
-             <= date_diff('microsecond', e.ts, f.fts) THEN b.bts
-         ELSE f.fts END,
-    '%Y-%m-%d %H:%M:%S') AS near_orderdate
-FROM events e
-LEFT JOIN b ON b.event_id = e.event_id
-LEFT JOIN f ON f.event_id = e.event_id
-ORDER BY e.event_id""",
-
-    "doc_profile" -> ("WITH x AS (SELECT 1)" + DocProfileCte +
-      """
-SELECT doc_id, lang, n_chars, CAST(ntok_i AS BIGINT) AS n_tokens,
-  CAST(bpeish_tokens AS BIGINT) AS bpeish_tokens,
-  round((CAST(chars_i AS DOUBLE) - ntok_i + 1.0) / ntok_i, 4) AS avg_token_len,
-  round(CAST(stop_i AS DOUBLE) / ntok_i, 4) AS stopword_ratio,
-  round(CAST(punct_i AS DOUBLE) / greatest(chars_i, 1), 4) AS punct_ratio,
-  CAST(q_t1 * 5 + q_t2 * 3 + q_t3 * 2 AS DOUBLE) / 100000.0 AS quality_score,
-  CASE WHEN cjk > 0 THEN 'zh'
-       WHEN CAST(stop2_i AS DOUBLE) / greatest(ntok_i, 1) >= 0.04 THEN 'en'
-       ELSE 'other' END AS lang_guess,
-  fingerprint
-FROM profq ORDER BY doc_id"""),
-
-    "doc_dedup_exact" ->
-      """SELECT doc_id, md5(text) AS digest,
-  count(*) OVER (PARTITION BY md5(text)) AS dup_count,
-  min(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
-  (doc_id = min(doc_id) OVER (PARTITION BY md5(text))) AS is_canonical
-FROM documents ORDER BY doc_id""",
-
-    "doc_dedup_fingerprint" ->
-      """WITH f AS (
-  SELECT doc_id,
-    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
-  FROM documents
-)
-SELECT doc_id, fp,
-  count(*) OVER (PARTITION BY fp) AS dup_count,
-  min(doc_id) OVER (PARTITION BY fp) AS canonical_id
-FROM f ORDER BY doc_id""",
-
-    "doc_jaccard_pairs" -> (s"WITH $JaccardPairsCtes\n" +
-      """SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.3
-ORDER BY doc_a, doc_b"""),
-
-    // cluster-representative mode: connected components of the pair
-    // graph (Dedup.clusterMembership) — output one membership row per
-    // clustered doc, not O(m²) pairs
-    "doc_jaccard_clusters" -> (s"WITH $JaccardPairsCtes" +
-      clusterMembershipSql(
-        "SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.3")),
-
-    "dam_redacted" -> {
-      // same fold order as TextOps.redactPii; DuckDB needs the 'g'
-      // flag (Java regexp_replace is global by default)
-      val chain = TextOps.PiiPatterns.foldLeft("operation_details") {
-        case (expr, (p, tag)) =>
-          s"regexp_replace($expr, '${sqlRe(p)}', '$tag', 'g')"
-      }
-      act(s"""SELECT activity_id, $chain AS redacted,
-  ($chain <> operation_details) AS was_redacted
-FROM activity ORDER BY activity_id""")
-    },
-
-    "doc_curation_funnel" -> ("WITH x AS (SELECT 1)" + DocProfileCte +
-      s"""
-, lg AS (
-  SELECT doc_id, fingerprint,
-    CAST(q_t1 * 5 + q_t2 * 3 + q_t3 * 2 AS DOUBLE) / 100000.0 AS quality,
-    ${langCaseSql("cjk", "stop2_i", "ntok_i")} AS lang_guess,
-    (doc_id = min(doc_id) OVER (PARTITION BY fingerprint)) AS canon
-  FROM profq
-)
-SELECT count(*) AS n_total,
-  count(CASE WHEN lang_guess = 'en' THEN 1 END) AS n_lang,
-  count(CASE WHEN lang_guess = 'en' AND quality >= 0.75 THEN 1 END) AS n_quality,
-  count(CASE WHEN lang_guess = 'en' AND quality >= 0.75 AND canon THEN 1 END) AS n_kept
-FROM lg"""),
-
-    "doc_decontam" -> decontamOracleSql,
-    "doc_decontam_normalized" -> decontamNormalizedOracleSql,
-
-    // exact-phrase lookup: the phrase is doc 0's leading 10 tokens;
-    // occurrences = token positions where the full phrase starts
-    "doc_phrase_lookup" -> {
-      val g10 = (1 to 10).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-      s"""WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-), p AS (
-  SELECT array_to_string(t[1:10], ' ') AS phrase FROM tok WHERE doc_id = 0
-), occ AS (
-  SELECT doc_id,
-    len(list_filter(list_transform(range(len(t) - 9), i -> $g10),
-      g -> g = phrase)) AS occurrences
-  FROM tok, p WHERE len(t) >= 10
-)
-SELECT doc_id, CAST(occurrences AS BIGINT) AS occurrences
-FROM occ WHERE occurrences > 0 ORDER BY doc_id"""
-    },
-    // the durable gram index probes replay the one-shot semantics
-    // exactly, so the same oracle strings lock them
-    "doc_decontam_indexed" -> decontamOracleSql,
-    "doc_decontam_matrix_indexed" -> decontamMatrixOracleSql,
-
-    // the K-suite matrix: suite-tagged gram dims unioned, the corpus
-    // gram stream shingled once and inner-joined
-    "doc_decontam_matrix" -> decontamMatrixOracleSql,
-
-    "doc_substring_dupes" -> {
-      val g10 = (1 to 10).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-      s"""WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-), pos AS MATERIALIZED (
-  SELECT doc_id, len(t) - 9 AS n_windows,
-    unnest(list_transform(range(len(t) - 9), i ->
-      CAST(('0x' || substr(md5('0:' || $g10), 1, 15)) AS BIGINT))) AS h
-  FROM tok WHERE len(t) >= 10
-), bdh AS MATERIALIZED (
-  SELECT doc_id, h, count(*) AS c, min(n_windows) AS n_windows
-  FROM pos GROUP BY doc_id, h
-), dup AS (
-  SELECT h FROM bdh GROUP BY h HAVING sum(c) >= 2
-), dupc AS (
-  SELECT doc_id, sum(c) AS dup_windows
-  FROM bdh WHERE h IN (SELECT h FROM dup) GROUP BY doc_id
-), perdoc AS (
-  SELECT doc_id, min(n_windows) AS n_windows FROM bdh GROUP BY doc_id
-)
-SELECT p.doc_id,
-  CAST(coalesce(d.dup_windows, 0) AS BIGINT) AS dup_windows,
-  CAST(p.n_windows AS BIGINT) AS n_windows,
-  round(coalesce(d.dup_windows, 0) / CAST(p.n_windows AS DOUBLE), 4)
-    AS dup_fraction
-FROM perdoc p LEFT JOIN dupc d USING (doc_id) ORDER BY p.doc_id"""
-    },
-
-    // the APPLY step: 0-based duplicated window starts i cover
-    // 1-based token positions i+1..i+10; uncovered tokens reassemble
-    // in order and the md5 crosses the compare. Docs shorter than a
-    // window (and fully-covered docs) surface via the LEFT JOIN. The
-    // incremental (merged-dim) form equals the full recompute
-    // restricted to the batch, so its oracle is the same chain with
-    // the batch predicate on the final select only — window counts
-    // stay corpus-wide.
-    "doc_remove_dup_spans" -> removeDupSpansOracle(""),
-    "doc_remove_spans_novel" ->
-      removeDupSpansOracle("WHERE t0.doc_id % 7 = 0 "),
-  ) ++ oracleSqlMid
-
-  private val decontamOracleSql: String = {
-    val g8 = (1 to 8).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-    s"""WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-), grams AS (
-  SELECT doc_id,
-    list_distinct(list_transform(range(len(t) - 7), i -> $g8)) AS gs
-  FROM tok
-), hashed AS (
-  SELECT doc_id, list_distinct(list_transform(gs, g ->
-    CAST(('0x' || substr(md5('0:' || g), 1, 15)) AS BIGINT))) AS hs
-  FROM grams
-), bench AS (
-  SELECT DISTINCT unnest(hs) AS h FROM hashed WHERE doc_id % 29 = 0
-), train AS (
-  SELECT doc_id, len(hs) AS n_ngrams, unnest(hs) AS h
-  FROM hashed WHERE doc_id % 29 <> 0
-)
-SELECT doc_id, count(*) AS matched_ngrams,
-  CAST(min(n_ngrams) AS BIGINT) AS n_ngrams,
-  round(CAST(count(*) AS DOUBLE) / greatest(min(n_ngrams), 1), 4)
-    AS contamination_rate
-FROM train WHERE h IN (SELECT h FROM bench)
-GROUP BY doc_id ORDER BY doc_id"""
-  }
-
-  private val decontamNormalizedOracleSql: String = {
-    val g13 = (1 to 13).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-    s"""WITH tok AS (
-  SELECT doc_id, string_split_regex(
-    trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-    '\\s+') AS t FROM documents
-), grams AS (
-  SELECT doc_id,
-    list_distinct(list_transform(range(len(t) - 12), i -> $g13)) AS gs
-  FROM tok
-), hashed AS (
-  SELECT doc_id, list_distinct(list_transform(gs, g ->
-    CAST(('0x' || substr(md5('0:' || g), 1, 15)) AS BIGINT))) AS hs
-  FROM grams
-), bench AS (
-  SELECT DISTINCT unnest(hs) AS h FROM hashed WHERE doc_id % 29 = 0
-), train AS (
-  SELECT doc_id, len(hs) AS n_ngrams, unnest(hs) AS h
-  FROM hashed WHERE doc_id % 29 <> 0
-)
-SELECT doc_id, count(*) AS matched_ngrams,
-  CAST(min(n_ngrams) AS BIGINT) AS n_ngrams,
-  round(CAST(count(*) AS DOUBLE) / greatest(min(n_ngrams), 1), 4)
-    AS contamination_rate
-FROM train WHERE h IN (SELECT h FROM bench)
-GROUP BY doc_id ORDER BY doc_id"""
-  }
-
-  private val decontamMatrixOracleSql: String = {
-    val g8 = (1 to 8).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-    s"""WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-), grams AS (
-  SELECT doc_id,
-    list_distinct(list_transform(range(len(t) - 7), i -> $g8)) AS gs
-  FROM tok
-), hashed AS MATERIALIZED (
-  SELECT doc_id, list_distinct(list_transform(gs, g ->
-    CAST(('0x' || substr(md5('0:' || g), 1, 15)) AS BIGINT))) AS hs
-  FROM grams
-), bdim AS (
-  SELECT DISTINCT 'b29' AS bench, unnest(hs) AS h FROM hashed
-  WHERE doc_id % 29 = 0
-  UNION ALL
-  SELECT DISTINCT 'b31' AS bench, unnest(hs) AS h FROM hashed
-  WHERE doc_id % 31 = 0
-), train AS (
-  SELECT doc_id, len(hs) AS n_ngrams, unnest(hs) AS h
-  FROM hashed WHERE doc_id % 29 <> 0 AND doc_id % 31 <> 0
-)
-SELECT t.doc_id, b.bench, count(*) AS matched_ngrams,
-  CAST(min(t.n_ngrams) AS BIGINT) AS n_ngrams,
-  round(CAST(count(*) AS DOUBLE) / greatest(min(t.n_ngrams), 1), 4)
-    AS contamination_rate
-FROM train t JOIN bdim b USING (h)
-GROUP BY t.doc_id, b.bench ORDER BY t.doc_id, b.bench"""
-  }
-
-  private def removeDupSpansOracle(finalFilter: String): String = {
-      val g10 = (1 to 10).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-      s"""WITH tok AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-), pos AS MATERIALIZED (
-  SELECT doc_id,
-    unnest(range(len(t) - 9)) AS i,
-    unnest(list_transform(range(len(t) - 9), i ->
-      CAST(('0x' || substr(md5('0:' || $g10), 1, 15)) AS BIGINT))) AS h
-  FROM tok WHERE len(t) >= 10
-), dup AS (
-  SELECT h FROM pos GROUP BY h HAVING count(*) >= 2
-), ds AS MATERIALIZED (
-  SELECT doc_id, i FROM pos WHERE h IN (SELECT h FROM dup)
-), u AS (
-  SELECT doc_id, unnest(t) AS w,
-    unnest(generate_series(1, len(t))) AS j
-  FROM tok
-), kept AS (
-  SELECT u.doc_id, u.j, u.w FROM u
-  WHERE NOT EXISTS (SELECT 1 FROM ds
-    WHERE ds.doc_id = u.doc_id AND ds.i + 1 <= u.j AND u.j <= ds.i + 10)
-), agg AS (
-  SELECT doc_id, count(*) AS n_kept,
-    string_agg(w, ' ' ORDER BY j) AS txt
-  FROM kept GROUP BY doc_id
-)
-SELECT t0.doc_id, CAST(t0.n_tokens AS BIGINT) AS n_tokens,
-  CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-  md5(coalesce(a.txt, '')) AS deduped_md5
-FROM (SELECT doc_id, len(t) AS n_tokens FROM tok) t0
-LEFT JOIN agg a USING (doc_id)
-${finalFilter}ORDER BY t0.doc_id"""
-  }
-
-  private lazy val oracleSqlMid: Map[String, String] = Map(
-    // split-leakage: the substring-window CTE chain with a split
-    // CASE up front; holdout windows semi-checked against the
-    // distinct train window-hash set. The bloom form is exactly
-    // equal (the sketch only prunes the train scan), so both keys
-    // share one oracle
-    "doc_split_leakage_bloom" -> splitLeakageOracle,
-    "doc_split_leakage" -> splitLeakageOracle,
-  ) ++ oracleSqlRest
-
-  private lazy val splitLeakageOracle: String = {
-      val g10 = (1 to 10).map(j => s"t[i + $j]").mkString(" || ' ' || ")
-      val hKey = "CAST(('0x' || substr(md5('0:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-      val tVal = Sampling.thresholdFor(0.05)
-      val tTest = tVal + Sampling.thresholdFor(0.05)
-      s"""WITH sp AS (
-  SELECT doc_id, text,
-    CASE WHEN $hKey < $tVal THEN 'val'
-         WHEN $hKey < $tTest THEN 'test'
-         ELSE 'train' END AS split
-  FROM documents
-), tok AS (
-  SELECT doc_id, split, string_split_regex(trim(text), '\\s+') AS t
-  FROM sp
-), pos AS MATERIALIZED (
-  SELECT doc_id, split, len(t) - 9 AS n_windows,
-    unnest(list_transform(range(len(t) - 9), i ->
-      CAST(('0x' || substr(md5('0:' || $g10), 1, 15)) AS BIGINT))) AS h
-  FROM tok WHERE len(t) >= 10
-), bdh AS MATERIALIZED (
-  SELECT doc_id, split, h, count(*) AS c, min(n_windows) AS n_windows
-  FROM pos GROUP BY doc_id, split, h
-), trainh AS (
-  SELECT DISTINCT h FROM bdh WHERE split = 'train'
-), hold AS (
-  SELECT * FROM bdh WHERE split <> 'train'
-), leak AS (
-  SELECT doc_id, sum(c) AS lw
-  FROM hold WHERE h IN (SELECT h FROM trainh) GROUP BY doc_id
-), perdoc AS (
-  SELECT doc_id, split, min(n_windows) AS n_windows
-  FROM hold GROUP BY doc_id, split
-)
-SELECT p.doc_id, p.split,
-  CAST(coalesce(l.lw, 0) AS BIGINT) AS leaked_windows,
-  CAST(p.n_windows AS BIGINT) AS n_windows,
-  round(coalesce(l.lw, 0) / CAST(p.n_windows AS DOUBLE), 4)
-    AS leak_fraction
-FROM perdoc p LEFT JOIN leak l USING (doc_id) ORDER BY p.doc_id"""
-  }
-
-  private lazy val oracleSqlRest: Map[String, String] = Map(
-    "doc_repetition" ->
-      """WITH rt AS MATERIALIZED (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id,
-    list_transform(range(len(toks) - 2),
-      i -> toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3]) AS gs
-  FROM rt
-)
-SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_ngrams,
-  CAST(len(list_distinct(gs)) AS BIGINT) AS distinct_ngrams,
-  CASE WHEN len(gs) = 0 THEN 0.0
-       ELSE round(1.0 - CAST(len(list_distinct(gs)) AS DOUBLE) / len(gs), 4)
-  END AS repetition_ratio
-FROM g ORDER BY doc_id""",
-
-    // the planted truth set is arithmetic BY CONSTRUCTION (replication
-    // code: distinct groups sit ≥ 9 Hamming bits apart, members 0),
-    // so the oracle derives clusters from id arithmetic while the
-    // Spark side must earn them through the codec/hash/banding/CC
-    // pipeline — any pixel, hash, or clustering bug breaks the match
-    "media_phash_clusters" ->
-      """WITH a AS (
-  SELECT doc_id AS asset_id, doc_id % 40 AS grp
-  FROM documents WHERE doc_id < 200
-), g AS (
-  SELECT grp, min(asset_id) AS cluster_id,
-    CAST(count(*) AS BIGINT) AS cluster_size
-  FROM a GROUP BY grp
-)
-SELECT a.asset_id, g.cluster_id, g.cluster_size
-FROM a JOIN g USING (grp)
-WHERE g.cluster_size > 1
-ORDER BY asset_id""",
-
-    // same arithmetic planted truth as media_phash_clusters, earned
-    // through the WAV codec / RMS-delta hash instead of the image path
-    "media_ahash_clusters" ->
-      """WITH a AS (
-  SELECT doc_id AS asset_id, doc_id % 40 AS grp
-  FROM documents WHERE doc_id < 200
-), g AS (
-  SELECT grp, min(asset_id) AS cluster_id,
-    CAST(count(*) AS BIGINT) AS cluster_size
-  FROM a GROUP BY grp
-)
-SELECT a.asset_id, g.cluster_id, g.cluster_size
-FROM a JOIN g USING (grp)
-WHERE g.cluster_size > 1
-ORDER BY asset_id""",
-
-    // arithmetic planted truth again: group pools of 8 frames, member
-    // windows overlap >= 0.5 within a group and 0 across
-    "media_video_clusters" ->
-      """WITH a AS (
-  SELECT doc_id AS asset_id, doc_id % 16 AS grp
-  FROM documents WHERE doc_id < 120
-), g AS (
-  SELECT grp, min(asset_id) AS cluster_id,
-    CAST(count(*) AS BIGINT) AS cluster_size
-  FROM a GROUP BY grp
-)
-SELECT a.asset_id, g.cluster_id, g.cluster_size
-FROM a JOIN g USING (grp)
-WHERE g.cluster_size > 1
-ORDER BY asset_id""",
-
-    // the perturbation-recall contracts: the truth sets are planted
-    // at known distances (image Hamming 3 = the advertised radius,
-    // audio gain-boost + 1 bit, video 5-of-6 frame overlap), all
-    // within the operators' thresholds BY CONSTRUCTION, so the oracle
-    // states hits = expected via id arithmetic and the engine must
-    // MEASURE the same 1.0 through the real codec/hash/band pipeline —
-    // a missed planted pair hash-fails the row
-    "media_phash_recall" -> mediaRecallOracleSql(200, 40),
-    "media_ahash_recall" -> mediaRecallOracleSql(200, 40),
-    "media_video_recall" ->
-      s"""WITH m AS (
-  SELECT doc_id AS id FROM documents WHERE doc_id < 120
-  UNION ALL
-  SELECT doc_id + $VideoPerturbIdBase AS id FROM documents
-  WHERE doc_id < 120 AND doc_id % 4 = 0
-), w AS (
-  SELECT id, id % 16 AS grp,
-    id % 3 + CASE WHEN id >= $VideoPerturbIdBase THEN 1 ELSE 0 END AS s,
-    CASE WHEN id >= $VideoPerturbIdBase THEN 5 ELSE 6 END AS len
-  FROM m
-), t AS (
-  SELECT greatest(0, least(x.s + x.len, y.s + y.len)
-           - greatest(x.s, y.s)) AS ov,
-    x.len + y.len AS tot
-  FROM w x JOIN w y ON x.grp = y.grp AND x.id < y.id
-  WHERE x.id >= $VideoPerturbIdBase OR y.id >= $VideoPerturbIdBase
-)
-SELECT CAST(count(*) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  CAST(1.0 AS DOUBLE) AS recall
-FROM t WHERE ov * 100 >= (tot - ov) * 45""",
-
-    "doc_quality_gopher" ->
-      (s"WITH ${gopherCtesSql("documents")}" + """
-SELECT doc_id, n_words,
-  round(CAST(sum_word_len AS DOUBLE) / n_words, 4) AS mean_word_len,
-  round(CAST(n_symbols AS DOUBLE) / n_words, 4) AS symbol_word_ratio,
-  round(CAST(n_bullet_lines AS DOUBLE) / n_lines, 4) AS bullet_line_frac,
-  round(CAST(n_ellipsis_lines AS DOUBLE) / n_lines, 4) AS ellipsis_line_frac,
-  round(CAST(n_alpha_words AS DOUBLE) / n_words, 4) AS alpha_word_frac,
-  CASE WHEN n_ngrams = 0 THEN 0.0
-       ELSE round(1.0 - CAST(n_distinct_ngrams AS DOUBLE) / n_ngrams, 4)
-  END AS repetition_ratio,
-  (n_words >= 50 AND n_words <= 100000
-    AND 3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words
-    AND 10 * n_symbols <= n_words
-    AND 10 * n_bullet_lines <= 9 * n_lines
-    AND 10 * n_ellipsis_lines <= 3 * n_lines
-    AND 5 * n_alpha_words >= 4 * n_words) AS gopher_pass
-FROM gq_m ORDER BY doc_id"""),
-
-    // minhash cluster membership replay + Gopher pass replay, arg-max
-    // by (pass DESC, n_words DESC, doc_id) within each component —
-    // the same CTE builders as doc_minhash_clusters and
-    // doc_quality_gopher, so neither the clustering nor the pass rule
-    // can diverge between rows
-    "doc_cluster_best" ->
-      (s"WITH ${minhashPairsCtes(s"$ScopedDocsSql sdocs")}" +
-        clusterCtesSql("SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.3") +
-        s", ${gopherCtesSql(s"$ScopedDocsSql sdocs2")}" + """
-SELECT cluster_id, doc_id AS best_doc, n_members, n_pass FROM (
-  SELECT c.comp AS cluster_id, c.id AS doc_id,
-    row_number() OVER (PARTITION BY c.comp
-      ORDER BY q.gopher_pass DESC, q.n_words DESC, c.id) AS rn,
-    CAST(count(*) OVER (PARTITION BY c.comp) AS BIGINT) AS n_members,
-    CAST(sum(CASE WHEN q.gopher_pass THEN 1 ELSE 0 END)
-      OVER (PARTITION BY c.comp) AS BIGINT) AS n_pass
-  FROM ccm c JOIN gq q ON q.doc_id = c.id
-) WHERE rn = 1 ORDER BY cluster_id"""),
-
-    "doc_split_assign" -> {
-      val h = "CAST(('0x' || substr(md5('0:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-      val tVal = Sampling.thresholdFor(0.01)
-      val tTest = tVal + Sampling.thresholdFor(0.01)
-      s"""SELECT doc_id, source,
-  CASE WHEN $h < $tVal THEN 'val'
-       WHEN $h < $tTest THEN 'test'
-       ELSE 'train' END AS split
-FROM documents ORDER BY doc_id"""
-    },
-
-    // exactly-k-per-source: row_number over the seeded-hash order
-    // replays the bounded-heap pick (ties by doc_id, as the struct
-    // lexicographic order breaks them)
-    "doc_stratified_k" -> {
-      val h = "CAST(('0x' || substr(md5('0:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-      s"""WITH r AS (
-  SELECT source, doc_id,
-    row_number() OVER (PARTITION BY source ORDER BY $h, doc_id)
-      AS pick_rank
-  FROM documents
-)
-SELECT source, CAST(pick_rank AS BIGINT) AS pick_rank, doc_id
-FROM r WHERE pick_rank <= 7 ORDER BY source, pick_rank"""
-    },
-
-    "doc_sample_mix" -> {
-      val h = "CAST(('0x' || substr(md5('0:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-      val keep = SampleRates.toSeq.sortBy(_._1).map { case (src, p) =>
-        s"(source = '$src' AND $h < ${Sampling.thresholdFor(p)})"
-      }.mkString("\n   OR ")
-      s"""SELECT doc_id, source FROM documents
-WHERE $keep
-ORDER BY doc_id"""
-    },
-
-    // epoch mix: the recipe dim as VALUES (source, floor, fractional
-    // threshold), generate_series for the full copies, the seed-1
-    // hash threshold for the fractional epoch
-    "doc_epoch_mix" -> {
-      val h1 = "CAST(('0x' || substr(md5('1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-      val vals = EpochRecipe.toSeq.sortBy(_._1).map { case (src, w) =>
-        val full = math.floor(w).toInt
-        s"('$src', $full, ${Sampling.thresholdFor(w - full)})"
-      }.mkString(", ")
-      s"""WITH w(source, nfull, thr) AS (VALUES $vals),
-c AS MATERIALIZED (
-  SELECT d.source, d.doc_id, w.nfull, w.thr,
-    unnest(generate_series(0, w.nfull)) AS epoch
-  FROM documents d JOIN w USING (source)
-)
-SELECT source, doc_id, CAST(epoch AS BIGINT) AS epoch
-FROM c
-WHERE epoch < nfull OR $h1 < thr
-ORDER BY source, doc_id, epoch"""
-    },
-
-    // Sampling.budgetSample(TokenBudgets, shards = 4): per-(source,
-    // shard) integer running sum in doc_id order, keep while the
-    // inclusive cumulative token count fits the per-shard quota
-    "doc_budget_mix" -> {
-      val quota = TokenBudgets.toSeq.sortBy(_._1).map { case (src, b) =>
-        s"WHEN source = '$src' THEN ${b / 4}"
-      }.mkString(" ")
-      s"""WITH x AS (
-  SELECT doc_id, source, doc_id % 4 AS shard,
-    len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-    CASE $quota END AS quota
-  FROM documents
-), c AS (
-  SELECT doc_id, source, n_tokens, quota,
-    COALESCE(sum(n_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-  FROM x WHERE quota IS NOT NULL
-)
-SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens
-FROM c WHERE before + n_tokens <= quota ORDER BY doc_id"""
-    },
-
-    "doc_token_budget" ->
-      s"""WITH x AS (
-  SELECT source,
-    ${langCaseSql(
-        """length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g'))""",
-        """len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ('the','a')))""",
-        """len(string_split_regex(trim(text), '\s+'))""")} AS lang_guess,
-    len(string_split_regex(trim(text), '\\s+')) AS nt,
-    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bp
-  FROM documents
-)
-SELECT source, lang_guess, count(*) AS n_docs,
-  CAST(sum(nt) AS BIGINT) AS n_tokens,
-  CAST(sum(bp) AS BIGINT) AS bpeish_tokens
-FROM x GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // TextOps.chunkWindows(width = 32, stride = 16): chunk i covers
-    // tokens [16i, 16i + 32); starts enumerate 0, 16, … while
-    // < n_tokens, tails run short, and the hash is over the re-joined
-    // chunk text (md5 of UTF-8 bytes in both engines)
-    "doc_chunks" ->
-      s"""WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), s AS (
-  SELECT doc_id, toks, unnest(range(0, len(toks), 16)) AS start_tok FROM t
-)
-SELECT doc_id, CAST(start_tok // 16 AS BIGINT) AS chunk_idx,
-  CAST(start_tok AS BIGINT) AS start_tok,
-  CAST(len(array_slice(toks, start_tok + 1, start_tok + 32)) AS BIGINT) AS chunk_len,
-  md5(array_to_string(array_slice(toks, start_tok + 1, start_tok + 32), ' ')) AS chunk_hash
-FROM s ORDER BY doc_id, chunk_idx""",
-
-    "doc_bpe_merges" -> bpeOracleSql(8),
-
-    "doc_bpe_tokens" -> bpeApplyOracleSql(8),
-    "doc_bpe_ids" -> bpeEncodeOracleSql(8),
-    "doc_pack_ids" -> bpePackOracleSql(8, 512L, 4),
-
-    // temperature sampling: the threshold replay is the IDENTICAL
-    // IEEE op sequence (sqrt fold over name-sorted sources, the same
-    // multiply/divide chain, floor * 2^60) — sqrt is correctly
-    // rounded per IEEE 754, so the integer thresholds agree
-    // bit-for-bit across engines
-    "doc_temp_mix" ->
-      """WITH cnt AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n FROM documents
-  GROUP BY source
-), ss AS (
-  SELECT list_reduce(list_prepend(0.0, list_transform(
-    (SELECT list(n ORDER BY source) FROM cnt),
-    x -> sqrt(CAST(x AS DOUBLE)))), (a, b) -> a + b) AS ssum
-), thr AS (
-  SELECT source, n,
-    CAST(floor(least(CAST(200 AS DOUBLE) * sqrt(CAST(n AS DOUBLE))
-      / ss.ssum / CAST(n AS DOUBLE), 1.0)
-      * 1152921504606846976.0) AS BIGINT) AS t
-  FROM cnt, ss
-)
-SELECT t.source, t.n,
-  CAST(coalesce(sum(CASE
-    WHEN CAST(('0x' || substr(md5('7:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
-      AS BIGINT) < t.t THEN 1 ELSE 0 END), 0) AS BIGINT) AS kept
-FROM thr t LEFT JOIN documents d ON d.source = t.source
-GROUP BY t.source, t.n ORDER BY t.source""",
-
-    // per-source discrete quantile: cumulative counts over the
-    // (source, score) dim, rank test cross-multiplied (cum·5 ≥ n·1),
-    // threshold = min qualifying score — all integer arithmetic
-    "doc_quality_quantile" ->
-      """WITH sc AS (
-  SELECT doc_id, source,
-    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS score
-  FROM documents
-), cnt AS (
-  SELECT source, score, count(*) AS c FROM sc GROUP BY 1, 2
-), cum AS (
-  SELECT source, score,
-    sum(c) OVER (PARTITION BY source ORDER BY score) AS cum,
-    sum(c) OVER (PARTITION BY source) AS n
-  FROM cnt
-), thr AS (
-  SELECT source, CAST(min(score) AS BIGINT) AS thr
-  FROM cum WHERE cum * 5 >= n * 1 GROUP BY source
-)
-SELECT sc.doc_id, sc.source, sc.score, t.thr, sc.score >= t.thr AS keep
-FROM sc JOIN thr t USING (source) ORDER BY sc.doc_id""",
-
-    // hashed-feature linear scorer: HUGEINT replay of the decimal
-    // NB-centroid weights and per-doc scores
-    "doc_quality_linear" ->
-      s"""WITH tf AS MATERIALIZED (
-  SELECT doc_id, tgt,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 4096 AS b,
-    count(*) AS tf
-  FROM (
-    SELECT doc_id, source IN ('src0', 'src2', 'src4') AS tgt,
-      unnest(string_split_regex(trim(text), '\\s+')) AS w
-    FROM documents) x
-  WHERE len(w) > 0 GROUP BY 1, 2, 3
-), dim AS (
-  SELECT b, sum(CASE WHEN tgt THEN tf ELSE 0 END) AS tft,
-    sum(tf) AS tfr
-  FROM tf GROUP BY b
-), tot AS (SELECT sum(tft) AS nt, sum(tfr) AS nr FROM dim),
-wt AS (
-  SELECT b, CAST(tft AS HUGEINT) * nr - CAST(tfr AS HUGEINT) * nt AS wt
-  FROM dim, tot
-)
-SELECT t.doc_id,
-  CAST(sum(CAST(t.tf AS HUGEINT) * w.wt) AS BIGINT) AS score,
-  sum(CAST(t.tf AS HUGEINT) * w.wt) >= 0 AS keep
-FROM tf t JOIN wt w USING (b) GROUP BY t.doc_id ORDER BY t.doc_id""",
-
-    "doc_minhash_neardups" -> (s"WITH ${minhashPairsCtes(s"$ScopedDocsSql sdocs")}\n" +
-      """SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.3
-ORDER BY doc_a, doc_b"""),
-
-    "doc_minhash_clusters" ->
-      (s"WITH ${minhashPairsCtes(s"$ScopedDocsSql sdocs")}" +
-        clusterMembershipSql(
-          "SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.3")),
-
-    // the minhash loser pass runs over the post-fingerprint SURVIVORS
-    // (Dedup.dedupedCorpus): a doc must not lose to a near-dup the
-    // fingerprint stage already removed
-    "doc_dedup_apply" -> (s"""WITH fp AS (
-  SELECT doc_id, source, n_chars, text,
-    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS f
-  FROM $ScopedDocsSql sdocs
-), canon AS (
-  SELECT doc_id, source, n_chars, text FROM (
-    SELECT *, min(doc_id) OVER (PARTITION BY f) AS m FROM fp
-  ) WHERE doc_id = m
-), """ + minhashPairsCtes("canon") + """,
-losers AS (
-  SELECT DISTINCT doc_b AS doc_id FROM j WHERE jaccard >= 0.3
-)
-SELECT c.doc_id, c.source, c.n_chars FROM canon c
-WHERE c.doc_id NOT IN (SELECT doc_id FROM losers)
-ORDER BY c.doc_id"""),
-
-    "emb_lsh_ann" -> {
-      s"""WITH b AS (
-  SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bucket,
-    ${normSql("embedding")} AS norm
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm, bucket
-  FROM b WHERE vec_id IN (0, 1, 2)
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-    round(${dotSql("e.embedding", "q.qe")} / (e.norm * q.qnorm), 4) AS cos_sim
-  FROM b e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id
-)
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""
-    },
-
-    // recall@10 — the LSH and brute-force top-10 CTEs replayed with
-    // the same scoring/ranking as their own oracles, intersected
-    "emb_lsh_recall" -> {
-      s"""WITH b AS (
-  SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bucket,
-    ${normSql("embedding")} AS norm
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm, bucket
-  FROM b WHERE vec_id IN (0, 1, 2)
-), lsh AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM (
-      SELECT q.query_id, e.vec_id,
-        round(${dotSql("e.embedding", "q.qe")} / (e.norm * q.qnorm), 4) AS cos_sim
-      FROM b e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id
-    ) WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= 10
-), brute AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM (
-      SELECT q.query_id, e.vec_id,
-        round(${dotSql("e.embedding", "q.qe")} / (e.norm * q.qnorm), 4) AS cos_sim
-      FROM b e, q WHERE e.vec_id <> q.query_id
-    ) WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= 10
-)
-SELECT x.query_id,
-  CAST(count(l.vec_id) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  round(CAST(count(l.vec_id) AS DOUBLE) / count(*), 4) AS recall
-FROM brute x LEFT JOIN lsh l
-  ON l.query_id = x.query_id AND l.vec_id = x.vec_id
-GROUP BY x.query_id ORDER BY x.query_id"""
-    },
-
-    "emb_near_dups" -> {
-      s"""WITH $PlantedNearDupCtes
-SELECT vec_a, vec_b, cos_sim FROM banded
-WHERE cos_sim >= 0.9 AND NOT isnan(cos_sim)
-ORDER BY vec_a, vec_b"""
-    },
-
-    // kNN join: the banded-signature replay over the FULL corpus
-    // (geometry data-dependent on its count, like the engine), query
-    // side restricted to every 97th vector, exact cosine per
-    // candidate, top-10 per query
-    "emb_knn_join" -> {
-      s"""WITH pe AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-), $BandSigCtes, cand AS (
-  SELECT DISTINCT x.vec_id AS query_id, y.vec_id
-  FROM bvt x JOIN bvt y ON x.band = y.band AND x.bv = y.bv
-  WHERE x.vec_id % 97 = 0 AND x.vec_id <> y.vec_id
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("eb.embedding", "ea.embedding")} / (eb.norm * ea.norm), 4) AS cos_sim
-  FROM cand c JOIN nn ea ON ea.vec_id = c.query_id
-  JOIN nn eb ON eb.vec_id = c.vec_id
-)
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""
-    },
-
-    // triplet mining: the knnJoin funnel over the planted corpus with
-    // clone anchors, then the two per-anchor argmax selections
-    // (highest cos, ties to smallest id) replayed as rn = 1 windows
-    "emb_triplets" -> {
-      s"""WITH $PlantedCorpusCte, $BandSigCtes, cand AS (
-  SELECT DISTINCT x.vec_id AS query_id, y.vec_id
-  FROM bvt x JOIN bvt y ON x.band = y.band AND x.bv = y.bv
-  WHERE x.vec_id >= $PlantedIdBase AND x.vec_id <> y.vec_id
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-    round(${dotSql("eb.embedding", "ea.embedding")} / (eb.norm * ea.norm), 4) AS cos_sim
-  FROM cand c JOIN nn ea ON ea.vec_id = c.query_id
-  JOIN nn eb ON eb.vec_id = c.vec_id
-), topk AS (
-  SELECT query_id, vec_id, cos_sim FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-      ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM scored WHERE NOT isnan(cos_sim)) WHERE rank <= 10
-), pos AS (
-  SELECT query_id, vec_id AS pos_id, cos_sim AS pos_cos FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-      ORDER BY cos_sim DESC, vec_id) AS rn
-    FROM topk WHERE cos_sim >= 0.9) WHERE rn = 1
-), neg AS (
-  SELECT query_id, vec_id AS neg_id, cos_sim AS neg_cos FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-      ORDER BY cos_sim DESC, vec_id) AS rn
-    FROM topk WHERE cos_sim < 0.7) WHERE rn = 1
-)
-SELECT p.query_id AS anchor_id, p.pos_id, p.pos_cos, n.neg_id, n.neg_cos
-FROM pos p JOIN neg n USING (query_id)
-ORDER BY anchor_id"""
-    },
-
-    // recall@10 of the joinful candidate funnel vs brute force over
-    // the same query table (the shared recall tail; q carries the
-    // exact norms nn already computed)
-    "emb_knn_join_recall" ->
-      knnJoinRecallOracleSql("SELECT vec_id, embedding FROM embeddings"),
-
-    // the same joinful-ANN recall dial priced at the DESIGN POINT —
-    // the clustered fixture, where band collisions concentrate inside
-    // true clusters (compare against emb_knn_join_recall's noise
-    // worst case; SCALE.md carries the pair)
-    "emb_knn_join_clustered_recall" ->
-      knnJoinRecallOracleSql("SELECT vec_id, embedding FROM ce",
-        prelude = s"$ClusteredCorpusCte, "),
-
-    "emb_near_dup_clusters" -> (s"WITH $PlantedNearDupCtes" +
-      clusterCtesSql("SELECT vec_a AS doc_a, vec_b AS doc_b FROM banded " +
-        "WHERE cos_sim >= 0.9 AND NOT isnan(cos_sim)") + """
-SELECT id AS vec_id, comp AS cluster_id,
-  count(*) OVER (PARTITION BY comp) AS cluster_size
-FROM ccm ORDER BY vec_id"""),
-
-    // pair recall of the banded blocker vs exact brute force anchored
-    // on the planted clones — both rankings fully replayed, so the
-    // recall VALUE (not just the blocking) is cross-engine checked
-    "emb_near_dup_recall" -> {
-      s"""WITH $PlantedNearDupCtes, apx AS (
-  SELECT vec_a, vec_b FROM banded
-  WHERE cos_sim >= 0.9 AND NOT isnan(cos_sim)
-), anch AS (
-  SELECT vec_id, embedding, norm FROM nn WHERE vec_id >= $PlantedIdBase
-), exact AS (
-  SELECT DISTINCT least(e.vec_id, q.vec_id) AS vec_a,
-    greatest(e.vec_id, q.vec_id) AS vec_b,
-    round(${dotSql("e.embedding", "q.embedding")} / (e.norm * q.norm), 4) AS cos_sim
-  FROM nn e CROSS JOIN anch q WHERE e.vec_id <> q.vec_id
-), ef AS (
-  SELECT vec_a, vec_b FROM exact
-  WHERE cos_sim >= 0.9 AND NOT isnan(cos_sim)
-)
-SELECT CAST(count(a.vec_a) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  round(CAST(count(a.vec_a) AS DOUBLE) / greatest(count(*), 1), 4) AS recall
-FROM ef x LEFT JOIN apx a ON a.vec_a = x.vec_a AND a.vec_b = x.vec_b"""
-    },
-
-    // incremental embedding ingest: replay the banded signatures over
-    // batch ∪ corpus (the SAME rung the engine selects from the union
-    // count), restrict candidates to cross pairs, verify exact cosine,
-    // and anti-join the losers — the batch formulation of emb_novel
-    "emb_novel" -> {
-      val cos = s"""round(${dotSql("a.embedding", "x.embedding")} / (a.norm * x.norm), 4)"""
-      s"""WITH refc AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0
-), batchc AS MATERIALIZED (
-  SELECT a.vec_id + $PlantedIdBase AS vec_id,
-    list_transform(list_zip(a.embedding, b.embedding),
-      s -> CAST(CAST(s[1] AS DOUBLE) + 0.25 * CAST(s[2] AS DOUBLE) AS FLOAT)) AS embedding
-  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-  WHERE a.vec_id % 25 = 0
-  UNION ALL
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 1
-), pe AS MATERIALIZED (
-  SELECT * FROM refc UNION ALL SELECT * FROM batchc
-), $BandSigCtes, cand AS (
-  SELECT DISTINCT r.vec_id AS ref_id, b.vec_id AS batch_id
-  FROM bvt r JOIN bvt b ON r.band = b.band AND r.bv = b.bv
-  WHERE r.vec_id IN (SELECT vec_id FROM refc)
-    AND b.vec_id IN (SELECT vec_id FROM batchc)
-), losers AS (
-  SELECT DISTINCT c.batch_id
-  FROM cand c
-  JOIN nn a ON a.vec_id = c.ref_id
-  JOIN nn x ON x.vec_id = c.batch_id
-  WHERE $cos >= 0.9 AND NOT isnan($cos)
-)
-SELECT CAST(b.vec_id AS BIGINT) AS vec_id FROM batchc b
-WHERE b.vec_id NOT IN (SELECT batch_id FROM losers)
-ORDER BY vec_id"""
-    },
-
-    // native-vs-composed agreement: both sides are Spark-computed, the
-    // oracle pins the contract (every sketch agrees) — a checked row
-    // without a DuckDB xxhash64 replay
-    "doc_simhash" ->
-      "SELECT count(*) AS n_docs, count(*) AS n_agree FROM documents",
-
-    "doc_simhash_portable" -> (s"WITH $SimhashSketchCtes\n" +
-      "SELECT doc_id, simhash FROM sk ORDER BY doc_id"),
-
-    // Hamming-band blocking (Dedup.simhashNearDups): 4 blocks of 15
-    // bits; hamming ≤ 3 forces an identical block (pigeonhole), so
-    // candidates join on (band, block value) and verify exactly
-    "doc_simhash_neardups" -> (s"WITH $SimhashPairsCtes\n" +
-      """SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
-ORDER BY doc_a, doc_b"""),
-
-    "doc_simhash_clusters" -> (s"WITH $SimhashPairsCtes" +
-      clusterMembershipSql(
-        "SELECT doc_a, doc_b FROM pairs WHERE hamming <= 3")),
-
-    // CROSS JOIN ccconv: an unconverged CC labeling empties ccm, and a
-    // bare NOT IN over an empty set would return the FULL corpus — a
-    // plausible-looking wrong answer. The 0-or-1-row convergence
-    // sentinel makes that case emit zero rows, as loudly as the
-    // membership oracle's own guard (round-4 advisor).
-    "doc_cluster_dedup" -> (s"WITH $SimhashPairsCtes" +
-      clusterCtesSql("SELECT doc_a, doc_b FROM pairs WHERE hamming <= 3") +
-      """
-SELECT d.doc_id, d.source, d.n_chars FROM documents d CROSS JOIN ccconv
-WHERE d.doc_id NOT IN (SELECT id FROM ccm WHERE id <> comp)
-ORDER BY d.doc_id"""),
-
-    "emb_ivf_ann" -> ivfOracleSql(nlist = 16, nprobe = 2, iters = 3,
-      k = 10, dim = 64, queryIds = Seq(0L, 1L, 2L)),
-
-    // filtered search: identical replay with the label predicate on
-    // the corpus side of the scoring stage
-    "emb_ivf_filtered" -> ivfOracleSql(nlist = 16, nprobe = 4, iters = 3,
-      k = 10, dim = 64, queryIds = Seq(0L, 1L, 2L),
-      corpusFilter = Some("nn.label IN (3, 7)")),
-
-    // identical replay: the indexed path changes the physical layout
-    // (durable lists + pruned probe), not the answer
-    "emb_ivf_indexed" -> ivfOracleSql(nlist = 16, nprobe = 2, iters = 3,
-      k = 10, dim = 64, queryIds = Seq(0L, 1L, 2L)),
-
-    // sampled-training build (the 100 TB recipe): the Lloyd chain
-    // trains on the deterministic vec_id % 4 sample, the FULL corpus
-    // is assigned to those centroids — prelude CTE + trainSrc split
-    // the replay exactly as writeIvfIndexSampled splits the build
-    "emb_ivf_sampled_indexed" -> ivfOracleSql(nlist = 16, nprobe = 2,
-      iters = 3, k = 10, dim = 64, queryIds = Seq(0L, 1L, 2L),
-      prelude =
-        "samp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 0),\n",
-      trainSrc = Some("samp")),
-
-    // the table-vs-index join: same Lloyd replay, query side a
-    // predicate over the table instead of an enumerated id list
-    "emb_knn_join_indexed" -> ivfOracleSql(nlist = 16, nprobe = 2,
-      iters = 3, k = 5, dim = 64, queryIds = Nil,
-      queryPred = Some("q.vec_id % 97 = 0")),
-
-    // band-occupancy accounting over the shared banded-signature
-    // replay: per-(band, bv) df, then the four accounting aggregates
-    "emb_band_stats" ->
-      s"""WITH $PlantedCorpusCte, $BandSigCtes,
-bdf AS (SELECT band, bv, count(*) AS df FROM bvt GROUP BY 1, 2)
-SELECT CAST(count(*) AS BIGINT) AS buckets,
-  CAST(coalesce(sum(CASE WHEN df > 16 THEN 1 ELSE 0 END), 0) AS BIGINT) AS hot_buckets,
-  CAST(coalesce(sum(CASE WHEN df > 16 THEN df ELSE 0 END), 0) AS BIGINT) AS rows_in_hot_buckets,
-  CAST(max(df) AS BIGINT) AS max_df
-FROM bdf""",
-
-    // PQ-ADC search: codebooks, codes, ADC ranking, candidate cut and
-    // exact re-rank all replayed (Similarity.pqTopK is deterministic
-    // end-to-end, so nothing about PQ stays engine-specific)
-    "emb_pq_ann" -> (pqScoredCtes(m = 4, ksub = 16, iters = 2, dim = 64,
-      cand = 50, queryIds = Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // SQ8 asymmetric search: quantize → reconstruct → approximate
-    // cosine → candidate cut → exact re-rank, all replayed
-    "emb_sq8_ann" -> (sq8ScoredCtes(cand = 50,
-      queryIds = Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // recall@10 of the SQ8 funnel vs exact brute force
-    "emb_sq8_recall" -> (sq8ScoredCtes(cand = 50,
-      queryIds = Seq(0L, 1L, 2L)) + recallTailSql("sqk")),
-
-    // the durable-sidecar probe replays the SAME funnel — stored
-    // codes are a pure function of the vectors
-    "emb_sq8_indexed" -> (sq8ScoredCtes(cand = 50,
-      queryIds = Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // binary quantization: sign bits → Hamming (sign-mismatch count)
-    // → candidate cut → exact re-rank, all replayed
-    "emb_bq_ann" -> (bqScoredCtes(cand = 50,
-      queryIds = Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // recall@10 of the 1-bit funnel vs exact brute force
-    "emb_bq_recall" -> (bqScoredCtes(cand = 50,
-      queryIds = Seq(0L, 1L, 2L)) + recallTailSql("bqk")),
-
-    // the durable-sidecar probe replays the SAME funnel — stored bits
-    // are a pure function of the vectors, so index and one-shot agree
-    "emb_bq_indexed" -> (bqScoredCtes(cand = 50,
-      queryIds = Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // IVF-PQ: the PQ replay with a coarse-quantizer Lloyd chain and
-    // the probe restriction applied to the ADC scan
-    "emb_ivfpq_ann" -> (pqScoredCtes(m = 4, ksub = 16, iters = 2,
-      dim = 64, cand = 50, queryIds = Seq(0L, 1L, 2L),
-      ivf = Some((16, 4, 3))) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // the durable IVF-PQ probe is proven ≡ the one-shot, so it
-    // shares the emb_ivfpq_ann oracle string verbatim (the
-    // *_indexed convention)
-    "emb_ivfpq_indexed" -> (pqScoredCtes(m = 4, ksub = 16, iters = 2,
-      dim = 64, cand = 50, queryIds = Seq(0L, 1L, 2L),
-      ivf = Some((16, 4, 3))) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // residual IVF-PQ (true IVFADC): the Lloyd chains train on the
-    // residual frame, ADC carries the q·c and cross-norm terms
-    "emb_ivfpq_res_ann" -> (pqScoredCtes(m = 4, ksub = 16, iters = 2,
-      dim = 64, cand = 50, queryIds = Seq(0L, 1L, 2L),
-      ivf = Some((16, 4, 3)), residual = true) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10 ORDER BY query_id, rank"""),
-
-    // recall@10 of the residual-ADC funnel vs exact brute force
-    "emb_ivfpq_res_recall" -> (pqScoredCtes(m = 4, ksub = 16, iters = 2,
-      dim = 64, cand = 50, queryIds = Seq(0L, 1L, 2L),
-      ivf = Some((16, 4, 3)), residual = true) + recallTailSql("rpqk")),
-
-    // recall@10 of the PQ-ADC candidate funnel vs exact brute force
-    "emb_pq_recall" -> (pqScoredCtes(m = 4, ksub = 16, iters = 2,
-      dim = 64, cand = 50, queryIds = Seq(0L, 1L, 2L)) + recallTailSql("pqk")),
-
-    // matryoshka prefix ranking: the brute-force chain over the
-    // 16-component list slices
-    "emb_prefix_ann" -> s"""WITH nn AS (
-  SELECT vec_id, embedding[1:16] AS embedding,
-    ${normSql("embedding[1:16]")} AS norm
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding[1:16] AS embedding,
-    ${normSql("embedding[1:16]")} AS qnorm
-  FROM embeddings WHERE vec_id IN (0, 1, 2)
-), scored AS (
-  SELECT q.query_id, nn.vec_id,
-    round(${dotSql("nn.embedding", "q.embedding")} / (nn.norm * q.qnorm), 4)
-      AS cos_sim
-  FROM nn, q WHERE nn.vec_id <> q.query_id
-)
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10
-ORDER BY query_id, rank""",
-
-    // prefix recall@10: approx side scores on the 16-dim slices, the
-    // shared recall tail bruteforces the full dims off the same nn/q
-    "emb_prefix_recall" -> (s"""WITH nn AS (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS norm
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding, ${normSql("embedding")} AS qnorm
-  FROM embeddings WHERE vec_id IN (0, 1, 2)
-), scored AS (
-  SELECT q.query_id, nn.vec_id,
-    round(${dotSql("nn.embedding[1:16]", "q.embedding[1:16]")} /
-      (${normSql("nn.embedding[1:16]")} * ${normSql("q.embedding[1:16]")}), 4)
-      AS cos_sim
-  FROM nn, q WHERE nn.vec_id <> q.query_id
-)""" + recallTailSql("pfx")),
-
-    // truncate-then-rerank: prefix candidate cut + exact full-dim
-    // re-rank, the shared two-phase funnel shape
-    "emb_prefix_rerank" -> (prefixRerankCtes(50, Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10
-ORDER BY query_id, rank"""),
-
-    // the durable layout probe is proven ≡ the one-shot funnel, so it
-    // shares the oracle string verbatim (the *_indexed convention)
-    "emb_prefix_indexed" -> (prefixRerankCtes(50, Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10
-ORDER BY query_id, rank"""),
-
-    // the pruned probe replayed end-to-end: prefix-trained k-means,
-    // nprobe-list coarse pass, full-dim rerank
-    "emb_prefix_ivf_indexed" -> (prefixIvfCtes(prefixDim = 16,
-      nlist = 16, nprobe = 4, iters = 3, cand = 50,
-      Seq(0L, 1L, 2L)) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10
-ORDER BY query_id, rank"""),
-
-    // table-vs-index replay: same pruned CTE chain with the query
-    // side as a predicate over the table
-    "emb_prefix_ivf_knn_join" -> (prefixIvfCtes(prefixDim = 16,
-      nlist = 16, nprobe = 4, iters = 3, cand = 50, Seq(),
-      queryPred = Some("(vec_id % 97) = 0")) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10
-ORDER BY query_id, rank"""),
-
-    // filtered search: identical pruned replay with the label
-    // predicate on the corpus side of the coarse stage
-    "emb_prefix_ivf_filtered" -> (prefixIvfCtes(prefixDim = 16,
-      nlist = 16, nprobe = 4, iters = 3, cand = 50, Seq(0L, 1L, 2L),
-      corpusFilter = Some("nn.label IN (3, 7)")) + s"""
-SELECT query_id, vec_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-FROM scored WHERE NOT isnan(cos_sim) QUALIFY rank <= 10
-ORDER BY query_id, rank"""),
-
-    // recall dial of the pruned funnel: the shared recall tail over
-    // the pruned-probe CTE chain (scored = its reranked survivors)
-    "emb_prefix_ivf_recall" -> (prefixIvfCtes(prefixDim = 16,
-      nlist = 16, nprobe = 4, iters = 3, cand = 50,
-      Seq(0L, 1L, 2L)) + recallTailSql("pivf")),
-
-    // the pruned matryoshka funnel priced at the DESIGN POINT: same
-    // dials, clustered fixture (emb_prefix_ivf_recall is the noise
-    // worst case)
-    "emb_prefix_ivf_clustered_recall" -> (prefixIvfCtes(prefixDim = 16,
-      nlist = 16, nprobe = 4, iters = 3, cand = 50,
-      Seq(0L, 1L, 2L), src = "ce",
-      prelude = s"$ClusteredCorpusCte,\n") + recallTailSql("pivf")),
-
-    // recall@10 of the rerank funnel vs exact brute force
-    "emb_prefix_rerank_recall" ->
-      (prefixRerankCtes(50, Seq(0L, 1L, 2L)) + recallTailSql("rrk")),
-
-    // per-label drift: decimal centroid sums + decimal mean norms per
-    // slice, exact-decimal centroid cosine, full outer on label
-    "emb_drift" -> {
-      val sums = (1 to 64).map(i =>
-        s"CAST(sum(CAST(CAST(embedding[$i] AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) / count(*)")
-        .mkString(",\n    ")
-      def side(name: String, pred: String) = s"""$name AS (
-  SELECT label, count(*) AS n, [$sums] AS c,
-    CAST(sum(CAST(${normSql("embedding")} AS DECIMAL(30,15))) AS DOUBLE)
-      / count(*) AS mn
-  FROM embeddings WHERE $pred GROUP BY label
-)"""
-      s"""WITH ${side("b", "vec_id % 10 <> 0")},
-${side("t", "vec_id % 10 = 0")}
-SELECT coalesce(b.label, t.label) AS label,
-  CAST(coalesce(b.n, 0) AS BIGINT) AS n_base,
-  CAST(coalesce(t.n, 0) AS BIGINT) AS n_batch,
-  round(${dotSql("b.c", "t.c")} / (${normSql("b.c")} * ${normSql("t.c")}), 6)
-    AS centroid_cos,
-  round(b.mn, 6) AS mean_norm_base,
-  round(t.mn, 6) AS mean_norm_batch
-FROM b FULL OUTER JOIN t ON b.label = t.label ORDER BY 1"""
-    },
-
-    // recall@10 of the pruned IVF probe vs exact brute force — the
-    // brute side reuses the same nn norms, so the only difference
-    // under measurement is the nprobe pruning
-    "emb_ivf_recall" -> (ivfScoredCtes(nlist = 16, nprobe = 2, iters = 3,
-      dim = 64, queryIds = Seq(0L, 1L, 2L)) + s"""
-, ivfk AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM scored WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= 10
-), bq AS (
-  SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm
-  FROM nn WHERE vec_id IN (0, 1, 2)
-), bscored AS (
-  SELECT bq.query_id, nn.vec_id,
-    round(${dotSql("nn.embedding", "bq.qe")} / (nn.norm * bq.qnorm), 4) AS cos_sim
-  FROM nn, bq WHERE nn.vec_id <> bq.query_id
-), brute AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM bscored WHERE NOT isnan(cos_sim)
-  ) WHERE rank <= 10
-)
-SELECT x.query_id,
-  CAST(count(l.vec_id) AS BIGINT) AS hits,
-  CAST(count(*) AS BIGINT) AS expected,
-  round(CAST(count(l.vec_id) AS DOUBLE) / count(*), 4) AS recall
-FROM brute x LEFT JOIN ivfk l
-  ON l.query_id = x.query_id AND l.vec_id = x.vec_id
-GROUP BY x.query_id ORDER BY x.query_id"""),
-
-    // the sampled-training quantizer's recall dial: the Lloyd chain
-    // trains on the vec_id % 4 sample (trainSrc), the probe and the
-    // brute side are the standard replay
-    "emb_ivf_sampled_recall" -> (ivfScoredCtes(nlist = 16, nprobe = 2,
-      iters = 3, dim = 64, queryIds = Seq(0L, 1L, 2L),
-      prelude =
-        "samp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 0),\n",
-      trainSrc = Some("samp")) + s"""
-, q AS (
-  SELECT vec_id AS query_id, embedding, norm AS qnorm
-  FROM nn WHERE vec_id IN (0, 1, 2)
-)""" + recallTailSql("ivfsk")),
-
-    // the sampled quantizer at the design point: Lloyd trains on the
-    // 1-in-4 sample OF THE CLUSTERED fixture, probe + brute over the
-    // full clustered corpus
-    "emb_ivf_sampled_clustered_recall" -> (ivfScoredCtes(nlist = 16,
-      nprobe = 2, iters = 3, dim = 64, queryIds = Seq(0L, 1L, 2L),
-      src = "ce",
-      prelude = s"$ClusteredCorpusCte,\n" +
-        "samp AS (SELECT vec_id, embedding FROM ce WHERE vec_id % 4 = 0),\n",
-      trainSrc = Some("samp")) + s"""
-, q AS (
-  SELECT vec_id AS query_id, embedding, norm AS qnorm
-  FROM nn WHERE vec_id IN (0, 1, 2)
-)""" + recallTailSql("ivfsck")),
-
-    // the pruned IVF probe priced at the DESIGN POINT: identical
-    // dials over the clustered fixture — recallTailSql over a q CTE
-    // drawn from the clustered nn
-    "emb_ivf_clustered_recall" -> (ivfScoredCtes(nlist = 16, nprobe = 2,
-      iters = 3, dim = 64, queryIds = Seq(0L, 1L, 2L), src = "ce",
-      prelude = s"$ClusteredCorpusCte,\n") + s"""
-, q AS (
-  SELECT vec_id AS query_id, embedding, norm AS qnorm
-  FROM nn WHERE vec_id IN (0, 1, 2)
-)""" + recallTailSql("ivfck")),
-
-    "doc_familiarity" ->
-      """WITH bg AS (
-  SELECT doc_id, unnest(list_transform(range(1, length(text)),
-    i -> substr(text, i, 2))) AS b
-  FROM documents WHERE length(text) >= 2
-), pd AS MATERIALIZED (
-  SELECT doc_id, b, count(*) AS c FROM bg GROUP BY doc_id, b
-), tr AS (
-  SELECT b, sum(c) AS tc FROM pd GROUP BY b
-)
-SELECT p.doc_id, CAST(sum(p.c) AS BIGINT) AS n_bigrams,
-  round(CAST(sum(p.c * t.tc) AS DOUBLE) / sum(p.c), 4) AS familiarity
-FROM pd p JOIN tr t USING (b)
-GROUP BY p.doc_id ORDER BY p.doc_id""",
-
-    // text-side snapshot drift: per-source bigram count dims for both
-    // slices, cross-multiplied integer L1 numerators (decimal-exact),
-    // one double division; one-sided sources report NULL
-    "doc_bigram_drift" -> {
-      val bg = "unnest(list_transform(range(1, length(text)), i -> substr(text, i, 2)))"
-      s"""WITH db AS (
-  SELECT source, $bg AS b
-  FROM documents WHERE length(text) >= 2 AND doc_id % 7 <> 0
-), dt AS (
-  SELECT source, $bg AS b
-  FROM documents WHERE length(text) >= 2 AND doc_id % 7 = 0
-), cb AS (SELECT source, b, count(*) AS c FROM db GROUP BY 1, 2),
-ct AS (SELECT source, b, count(*) AS c FROM dt GROUP BY 1, 2),
-j AS (
-  SELECT coalesce(cb.source, ct.source) AS source,
-    coalesce(cb.c, 0) AS cb, coalesce(ct.c, 0) AS ct
-  FROM cb FULL OUTER JOIN ct ON cb.source = ct.source AND cb.b = ct.b
-), tot AS (
-  SELECT source, CAST(sum(cb) AS BIGINT) AS nb, CAST(sum(ct) AS BIGINT) AS nt
-  FROM j GROUP BY source
-)
-SELECT j.source, t.nb AS n_base, t.nt AS n_batch,
-  CASE WHEN t.nb = 0 OR t.nt = 0 THEN NULL ELSE
-    round(CAST(sum(abs(CAST(j.cb AS DECIMAL(19,0)) * t.nt -
-                       CAST(j.ct AS DECIMAL(19,0)) * t.nb)) AS DOUBLE) /
-          (CAST(t.nb AS DOUBLE) * CAST(t.nt AS DOUBLE)), 6)
-  END AS l1_dist
-FROM j JOIN tot t USING (source)
-GROUP BY j.source, t.nb, t.nt
-ORDER BY j.source"""
-    },
-
-    // raw line STRINGS are the oracle's dedup key — the engine blocks
-    // on 64-bit hashes, so the instrument cannot self-confirm
-    "doc_line_dedup" -> lineDedupOracleSql(""),
-
-    // the incremental form replayed as the FULL recompute restricted
-    // to the batch docs — the mergeDim contract (dim(a ∪ b) =
-    // merge(dim(a), dim(b)), exactly) is what makes them equal
-    "doc_line_dedup_novel" -> lineDedupOracleSql("WHERE s.doc_id % 7 = 0"),
-
-    // the end-to-end curation funnel, stage by stage over the planted
-    // multi-line corpus (see curationE2eOracleSql)
-    "doc_curation_e2e" -> curationE2eOracleSql,
-    "doc_reject_reason" -> curationRejectOracleSql,
-
-    // the incremental (daily-run) funnel, stage by stage against the
-    // corpus-state replay (see curationNovelOracleSql)
-    "doc_curation_novel" -> curationNovelOracleSql,
-    "doc_maintain_batch" -> maintainBatchOracleSql,
-
-    // multi-class language ID: the planted suffix transform, the
-    // per-class bucket dims over the doc_id < 60 training split, and
-    // the exact rational argmax (HUGEINT cross-products; ties to the
-    // lexicographically smallest class; zero-overlap docs → 'und')
-    "doc_lang_id" ->
-      s"""WITH tl AS MATERIALIZED (
-  SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'),
-    t -> t || CASE WHEN doc_id % 3 = 0 THEN 'von'
-                   WHEN doc_id % 3 = 2 THEN 'le' ELSE '' END) AS toks
-  FROM documents
-), ltf AS MATERIALIZED (
-  SELECT CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'de'
-              WHEN 1 THEN 'en' ELSE 'fr' END AS lang,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 4096 AS b,
-    count(*) AS ctf
-  FROM (SELECT doc_id, unnest(toks) AS w FROM tl WHERE doc_id < 60)
-  WHERE length(w) > 0 GROUP BY 1, 2
-), tot AS (
-  SELECT lang, CAST(sum(ctf) AS HUGEINT) AS n FROM ltf GROUP BY lang
-), dtf AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 4096 AS b,
-    count(*) AS tf
-  FROM (SELECT doc_id, unnest(toks) AS w FROM tl WHERE doc_id >= 60)
-  WHERE length(w) > 0 GROUP BY 1, 2
-), scn AS MATERIALIZED (
-  SELECT s.doc_id, s.lang, s.num, t.n FROM (
-    SELECT d.doc_id, l.lang,
-      CAST(sum(CAST(d.tf AS HUGEINT) * l.ctf) AS HUGEINT) AS num
-    FROM dtf d JOIN ltf l USING (b) GROUP BY 1, 2) s
-  JOIN tot t USING (lang)
-), win AS (
-  SELECT doc_id, lang, num FROM scn s1
-  WHERE NOT EXISTS (
-    SELECT 1 FROM scn s2 WHERE s2.doc_id = s1.doc_id AND (
-      s2.num * s1.n > s1.num * s2.n OR
-      (s2.num * s1.n = s1.num * s2.n AND s2.lang < s1.lang)))
-)
-SELECT d.doc_id,
-  CASE WHEN w.lang IS NULL OR w.num = 0 THEN 'und' ELSE w.lang END AS lang
-FROM (SELECT DISTINCT doc_id FROM tl WHERE doc_id >= 60) d
-LEFT JOIN win w USING (doc_id)
-ORDER BY d.doc_id""",
-
-    // the HLL flag is the sketch contract (replayed TRUE), exactly
-    // like ev_user_reach_approx
-    "doc_source_vocab" ->
-      """WITH tok AS (
-  SELECT source, unnest(string_split_regex(trim(text), '\s+')) AS tok
-  FROM documents
-)
-SELECT source, CAST(count(DISTINCT tok) AS BIGINT) AS exact_vocab,
-  CAST(count(*) AS BIGINT) AS total_tokens, TRUE AS within_bound
-FROM tok GROUP BY source ORDER BY source""",
-
-    // the engine generates pairs from the per-fingerprint source
-    // array; the oracle may state the same relation as a plain
-    // self-join over the DISTINCT (fp, source) pairs
-    "doc_source_overlap" ->
-      """WITH corpus AS (
-  SELECT doc_id, text, source FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text, 'mirror_' || source
-  FROM documents WHERE doc_id % 31 = 0
-), f AS (
-  SELECT DISTINCT
-    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp,
-    source
-  FROM corpus
-)
-SELECT a.source AS source_a, b.source AS source_b,
-  CAST(count(*) AS BIGINT) AS shared_fps
-FROM f a JOIN f b ON a.fp = b.fp AND a.source < b.source
-GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // the Bloom sketch is pruning-only: the checked semantics are the
-    // plain exact anti-join, which the oracle states directly
-    "doc_bloom_novel" ->
-      """SELECT b.doc_id, b.source FROM documents b
-WHERE b.doc_id % 5 = 0 AND NOT EXISTS (
-  SELECT 1 FROM documents r
-  WHERE r.doc_id % 5 <> 0 AND r.text = b.text)
-ORDER BY doc_id""",
-
-    // incremental minhash near-dup ingest: the engine's bloom prune +
-    // broadcast band join is candidate generation only — the checked
-    // semantics are "batch docs with no band-colliding corpus doc at
-    // jaccard ≥ 0.3", stated here as the cross-pair restriction of
-    // the SAME banded pipeline the doc_minhash_neardups oracle replays
-    "doc_minhash_novel" ->
-      (s"WITH ${minhashPairsCtes(s"$ScopedDocsSql sdocs")}\n" +
-        s"""SELECT b.doc_id, b.source FROM $ScopedDocsSql b
-WHERE b.doc_id % 5 = 0 AND NOT EXISTS (
-  SELECT 1 FROM j
-  WHERE j.jaccard >= 0.3 AND (
-    (j.doc_a = b.doc_id AND j.doc_b % 5 <> 0) OR
-    (j.doc_b = b.doc_id AND j.doc_a % 5 <> 0)))
-ORDER BY doc_id"""),
-
-    // simhash incremental ingest: cross-pair restriction of the SAME
-    // banded Hamming pipeline doc_simhash_neardups replays
-    "doc_simhash_novel" -> (s"WITH $SimhashPairsCtes\n" +
-      """SELECT b.doc_id, b.source FROM documents b
-WHERE b.doc_id % 5 = 0 AND NOT EXISTS (
-  SELECT 1 FROM pairs p
-  WHERE p.hamming <= 3 AND (
-    (p.doc_a = b.doc_id AND p.doc_b % 5 <> 0) OR
-    (p.doc_b = b.doc_id AND p.doc_a % 5 <> 0)))
-ORDER BY doc_id"""),
-
-    "doc_dsir_weight" ->
-      """WITH dbg AS (
-  SELECT doc_id, (source IN ('src0', 'src2', 'src4')) AS tgt,
-    unnest(list_transform(range(1, length(text)),
-      i -> substr(text, i, 2))) AS b
-  FROM documents WHERE length(text) >= 2
-), dpd AS MATERIALIZED (
-  SELECT doc_id, tgt, b, count(*) AS c FROM dbg GROUP BY 1, 2, 3
-), draw AS (
-  SELECT b, sum(c) AS rc FROM dpd GROUP BY b
-), dtg AS (
-  SELECT b, sum(c) AS tc FROM dpd WHERE tgt GROUP BY b
-)
-SELECT p.doc_id, CAST(sum(p.c) AS BIGINT) AS n_bigrams,
-  round(CAST(sum(CAST(p.c AS HUGEINT) * (coalesce(t.tc, 0) + 1)) AS DOUBLE) /
-    CAST(sum(CAST(p.c AS HUGEINT) * r.rc) AS DOUBLE), 6) AS dsir_weight
-FROM dpd p JOIN draw r USING (b) LEFT JOIN dtg t USING (b)
-GROUP BY p.doc_id ORDER BY p.doc_id""",
-
-    "doc_pack_bins" ->
-      """WITH t AS (
-  SELECT doc_id, source, doc_id % 4 AS shard,
-    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
-  FROM documents
-), c AS (
-  SELECT doc_id, source, shard, n_tokens,
-    CAST(coalesce(sum(n_tokens) OVER (
-      PARTITION BY source, shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-      AS before
-  FROM t
-)
-SELECT doc_id, source, CAST(shard AS BIGINT) AS shard, n_tokens,
-  before // 512 AS bin_id, before % 512 AS bin_offset
-FROM c ORDER BY doc_id""",
-
-    "emb_semdedup" ->
-      semDedupOracleSql(iters = 3, dim = 64, minCos = 0.9),
-
-    // semantic decontamination: max rounded cosine of each planted-
-    // corpus vector against the eval set (every 95th base vector),
-    // tie → smallest eval id; keep iff max < 0.9. NaN pairs (zero
-    // norms) are skipped on both engines; a row with no valid pair
-    // keeps nulls + keep = true.
-    "emb_decontam" ->
-      s"""WITH $PlantedCorpusCte,
-ev AS (
-  SELECT * FROM (
-    SELECT vec_id AS eid, embedding, ${normSql("embedding")} AS nrm
-    FROM embeddings WHERE vec_id % 95 = 0) WHERE nrm > 0
-), cn AS MATERIALIZED (
-  SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM pe
-), pairs AS (
-  SELECT c.vec_id, e.eid,
-    round(${dotSql("c.embedding", "e.embedding")} / (c.nrm * e.nrm), 4) AS c4
-  FROM cn c CROSS JOIN ev e
-), valid AS (SELECT * FROM pairs WHERE NOT isnan(c4)),
-best AS (SELECT vec_id, max(c4) AS mc FROM valid GROUP BY vec_id),
-hit AS (
-  SELECT v.vec_id, min(v.eid) AS hid
-  FROM valid v JOIN best b ON v.vec_id = b.vec_id AND v.c4 = b.mc
-  GROUP BY v.vec_id
-)
-SELECT c.vec_id, b.mc AS max_cos, h.hid AS hit_id,
-  NOT COALESCE(b.mc >= 0.9, FALSE) AS keep
-FROM cn c LEFT JOIN best b USING (vec_id) LEFT JOIN hit h USING (vec_id)
-ORDER BY c.vec_id""",
-
-    "emb_quant_error" ->
-      """WITH q AS (
-  SELECT vec_id, embedding,
-    list_reduce(list_prepend(0.0, list_transform(embedding,
-      x -> abs(CAST(x AS DOUBLE)))), (a, b) -> greatest(a, b)) / 127.0 AS scale
-  FROM embeddings
-), c AS (
-  SELECT vec_id, scale, embedding,
-    list_transform(embedding, x ->
-      CASE WHEN scale = 0.0 THEN 0
-           ELSE CAST(round(CAST(x AS DOUBLE) / scale, 0) AS INTEGER) END) AS codes
-  FROM q
-), e AS (
-  SELECT vec_id, scale, len(embedding) AS dim,
-    list_transform(list_zip(embedding, codes),
-      s -> CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE) * scale) AS err
-  FROM c
-)
-SELECT vec_id, round(scale, 6) AS scale,
-  round(list_reduce(list_prepend(0.0, list_transform(err, x -> abs(x))),
-    (a, b) -> greatest(a, b)), 6) AS max_abs_err,
-  round(CAST(list_sum(list_transform(err,
-    x -> CAST(x * x AS DECIMAL(30,15)))) AS DOUBLE) / dim, 9) AS mse
-FROM e ORDER BY vec_id""",
-
-    // class prototypes: decimal-exact per-dimension sums → identical
-    // IEEE centroid divide and distance fold on both engines, so the
-    // medoid argmin replay needs no tolerance
-    "emb_prototypes" -> {
-      val sums = (1 to 64).map(i =>
-        s"CAST(sum(CAST(CAST(embedding[$i] AS DOUBLE) AS DECIMAL(30,15))) AS DOUBLE) / count(*)")
-        .mkString(",\n    ")
-      s"""WITH s AS (
-  SELECT label, count(*) AS n, [$sums] AS centroid
-  FROM embeddings GROUP BY label
-), d AS (
-  SELECT e.vec_id, e.label, s.n, s.centroid,
-    list_reduce(list_prepend(0.0, list_transform(list_zip(e.embedding, s.centroid),
-      x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2]))),
-      (a, b) -> a + b) AS dist
-  FROM embeddings e JOIN s USING (label)
-), m AS (
-  SELECT *, row_number() OVER (PARTITION BY label ORDER BY dist, vec_id) AS rn
-  FROM d
-)
-SELECT label, n,
-  round(sqrt(list_reduce(list_prepend(0.0, list_transform(centroid, x -> x * x)),
-    (a, b) -> a + b)), 6) AS centroid_norm,
-  vec_id AS medoid_id, round(dist, 6) AS medoid_dist
-FROM m WHERE rn = 1 ORDER BY label"""
-    },
-
-    // coverage sample: the shared Lloyd replay, then per-cell
-    // nearest-first ranking capped at 10
-    "emb_coverage_sample" ->
-      s"""WITH ${kmeansAssignCtes("embeddings", 8, 3, 64)},
-dd AS (
-  SELECT a.vec_id, a.cid, ${sqDistSql("e.embedding", "c.cent")} AS dist
-  FROM af a JOIN embeddings e USING (vec_id) JOIN c3 c ON c.cid = a.cid
-), r AS (
-  SELECT cid, vec_id, dist,
-    row_number() OVER (PARTITION BY cid ORDER BY dist, vec_id) AS rank
-  FROM dd
-)
-SELECT CAST(cid AS BIGINT) AS cluster_id, vec_id, round(dist, 6) AS dist,
-  CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 10 ORDER BY cluster_id, rank""",
-
-    // indexed coverage sample: the ensureIvfIndex defaults (nlist 16,
-    // 3 iters) replayed through the same Lloyd CTEs
-    "emb_coverage_indexed" ->
-      s"""WITH ${kmeansAssignCtes("embeddings", 16, 3, 64)},
-dd AS (
-  SELECT a.vec_id, a.cid, ${sqDistSql("e.embedding", "c.cent")} AS dist
-  FROM af a JOIN embeddings e USING (vec_id) JOIN c3 c ON c.cid = a.cid
-), r AS (
-  SELECT cid, vec_id, dist,
-    row_number() OVER (PARTITION BY cid ORDER BY dist, vec_id) AS rank
-  FROM dd
-)
-SELECT CAST(cid AS BIGINT) AS cluster_id, vec_id, round(dist, 6) AS dist,
-  CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 5 ORDER BY cluster_id, rank""",
-
-    // hashed-unigram embedding profile: all-integer replay (counts,
-    // nnz, norm², dominant bucket) — no float tolerance anywhere
-    "doc_hash_embed" ->
-      s"""WITH t AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM documents
-), c AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 64 AS bucket,
-    count(*) AS cnt
-  FROM t GROUP BY doc_id, bucket
-), s AS (
-  SELECT doc_id, count(*) AS nnz, CAST(sum(cnt * cnt) AS BIGINT) AS norm_sq
-  FROM c GROUP BY doc_id
-), top AS (
-  SELECT doc_id, bucket AS top_bucket, cnt AS top_count,
-    row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bucket) AS rn
-  FROM c
-)
-SELECT d.doc_id,
-  CAST(len(string_split_regex(trim(d.text), '\\s+')) AS BIGINT) AS n_tokens,
-  s.nnz, s.norm_sq, t2.top_bucket, t2.top_count
-FROM documents d JOIN s USING (doc_id)
-JOIN top t2 ON t2.doc_id = d.doc_id AND t2.rn = 1
-ORDER BY doc_id""",
-
-    // text→vector→ANN: integer dot products over shared buckets, then
-    // the emb_knn_brute ranking tail
-    "doc_embed_knn" ->
-      s"""WITH t AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM documents
-), c AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 64 AS bucket,
-    count(*) AS cnt
-  FROM t GROUP BY doc_id, bucket
-), n AS (
-  SELECT doc_id, CAST(sum(cnt * cnt) AS BIGINT) AS norm_sq FROM c GROUP BY doc_id
-), q AS (
-  SELECT doc_id, bucket, cnt FROM c WHERE doc_id IN (0, 1, 2)
-), dotp AS (
-  SELECT q.doc_id AS query_id, c.doc_id AS vec_id, sum(q.cnt * c.cnt) AS dp
-  FROM q JOIN c ON c.bucket = q.bucket AND c.doc_id <> q.doc_id
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.vec_id, l.source AS label,
-    round(d.dp / (sqrt(CAST(ne.norm_sq AS DOUBLE))
-      * sqrt(CAST(nq.norm_sq AS DOUBLE))), 4) AS cos_sim
-  FROM dotp d
-  JOIN n ne ON ne.doc_id = d.vec_id
-  JOIN n nq ON nq.doc_id = d.query_id
-  JOIN documents l ON l.doc_id = d.vec_id
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-    ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-  FROM scored WHERE NOT isnan(cos_sim)
-)
-SELECT query_id, vec_id, label, cos_sim, rank FROM ranked
-WHERE rank <= 5 ORDER BY query_id, rank""",
-
-    // doc clustering: hashed count vectors densified on the bucket
-    // grid, then the shared Lloyd replay parameterized over that CTE
-    "doc_clusters" -> {
-      val vecCtes = s"""t AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-  FROM documents
-), c AS (
-  SELECT doc_id,
-    CAST(('0x' || substr(md5('0:' || w), 1, 15)) AS BIGINT) % 64 AS bucket,
-    count(*) AS cnt
-  FROM t GROUP BY doc_id, bucket
-), v AS (
-  SELECT d.doc_id AS vec_id, list(COALESCE(c.cnt, 0) ORDER BY g.i) AS embedding
-  FROM (SELECT DISTINCT doc_id FROM documents) d
-  CROSS JOIN range(64) g(i)
-  LEFT JOIN c ON c.doc_id = d.doc_id AND c.bucket = g.i
-  GROUP BY d.doc_id
-)"""
-      s"""WITH $vecCtes,
-${kmeansAssignCtes("v", 4, 2, 64)},
-agg AS (
-  SELECT a.cid, d.source, count(*) AS sn, min(a.vec_id) AS mn
-  FROM af a JOIN documents d ON d.doc_id = a.vec_id
-  GROUP BY 1, 2
-), top AS (
-  SELECT cid, source, sn,
-    row_number() OVER (PARTITION BY cid ORDER BY sn DESC, source DESC) AS rn
-  FROM agg
-)
-SELECT CAST(g.cid AS BIGINT) AS cluster_id, CAST(g.n_docs AS BIGINT) AS n_docs,
-  g.min_doc, t2.source AS top_source, t2.sn AS top_source_docs
-FROM (SELECT cid, sum(sn) AS n_docs, min(mn) AS min_doc
-      FROM agg GROUP BY cid) g
-JOIN top t2 ON t2.cid = g.cid AND t2.rn = 1
-ORDER BY cluster_id"""
-    },
-
-    "emb_knn_brute" ->
-      """WITH dotsq AS (
-  SELECT e.vec_id, e.label, q.vec_id AS query_id,
-    CAST(list_sum(list_transform(list_zip(e.embedding, q.embedding),
-      s -> CAST(CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE) AS DECIMAL(30,15)))) AS DOUBLE) AS dp,
-    sqrt(CAST(list_sum(list_transform(e.embedding,
-      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS DECIMAL(30,15)))) AS DOUBLE)) AS norm_e,
-    sqrt(CAST(list_sum(list_transform(q.embedding,
-      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS DECIMAL(30,15)))) AS DOUBLE)) AS norm_q
-  FROM embeddings e, (SELECT vec_id, embedding FROM embeddings WHERE vec_id IN (0, 1, 2)) q
-  WHERE e.vec_id <> q.vec_id
-), scored AS (
-  SELECT query_id, vec_id, label, round(dp / (norm_e * norm_q), 4) AS cos_sim
-  FROM dotsq
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rank
-  FROM scored WHERE NOT isnan(cos_sim)
-)
-SELECT query_id, vec_id, label, cos_sim, rank FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank""")
-
-  private[graft] def activityPreludeForTest: String = ActivityPrelude
+  def oracleSql: Map[String, String] = Registry.oracleSql
 }

@@ -173,18 +173,6 @@ object Dedup {
     conv(substring(md5(concat(lit(s"$seed:"), s)), 1, 15), 16, 10)
       .cast("long")
 
-  /** MinHash signature: k permutations approximated by a seeded hash
-    * family over the shingle set; each signature slot is the min hash
-    * under that seed.
-    */
-  def minhashSignature(text: Column, k: Int = 16, ngram: Int = 3,
-                       hashFn: (Int, Column) => Column = xxSeeded): Column = {
-    val sh = array_distinct(shingles(text, ngram))
-    array((0 until k).map { seed =>
-      array_min(transform(sh, s => hashFn(seed, s)))
-    }: _*)
-  }
-
   /** MinHash + LSH banding: docs → (band_id, band_hash) buckets →
     * candidate pairs within buckets → exact n-gram Jaccard on the
     * candidates only. Returns (doc_a, doc_b, jaccard) for pairs with
@@ -819,26 +807,6 @@ object Dedup {
       hashFn: (Int, Column) => Column = xxSeeded): DataFrame =
     clusterMembershipRaw(
       minhashPairsRaw(docs, threshold, k, bands, ngram, hashFn))
-
-  /** Exact n-gram Jaccard between all pairs within a caller-supplied
-    * blocking key — the verification stage after LSH candidate
-    * generation at scale.
-    */
-  def jaccardWithinBlocks(docs: DataFrame, blockCol: String,
-                          ngram: Int = 3, minJaccard: Double = 0.2): DataFrame = {
-    val withSh = docs.select(col("doc_id"), col(blockCol).as("blk"),
-      array_distinct(shingles(col("text"), ngram)).as("sh"))
-    val a = withSh.alias("a")
-    val b = withSh.alias("b")
-    a.join(b, col("a.blk") === col("b.blk") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        round(size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /
-          greatest(size(array_union(col("a.sh"), col("b.sh"))).cast("double"),
-            lit(1.0)), 4).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** Cross-source contamination matrix: for every pair of sources,
     * how many distinct normalized fingerprints they share — the

@@ -82,8 +82,8 @@ object Detect {
     * sql/02_create_tables.sql:69-77; loaded with temporal validity
     * `expires_at > NOW()` at app.py:332-337): (ip, reason,
     * expires_at), the single source for both the Spark dim and the
-    * DuckDB oracle VALUES (SparkEntry generates its SQL from this
-    * seq, so the two can never drift). Stand-in fixture rows over the
+    * DuckDB oracle VALUES (graft.rows.Prelude generates its SQL from
+    * this seq, so the two can never drift). Stand-in fixture rows over the
     * synthesized IP space of [[graft.sources.Tables.activity]]; the
     * last entry is EXPIRED and must never flag ([[activeBlacklist]]
     * filters it).
@@ -124,9 +124,9 @@ object Detect {
     * app.py:1474-1488, seeds app.py:1529-1541): (rule_id, pattern,
     * description, match_type, action, priority, applies_to_user,
     * applies_to_ip, is_active) — single source for the Spark dim AND
-    * the DuckDB oracle VALUES (SparkEntry generates its SQL from this
-    * seq). Rules 9-13 exercise the scoping / case-parity / is_active /
-    * priority-tie semantics the reference matcher honors
+    * the DuckDB oracle VALUES (graft.rows.Prelude generates its SQL
+    * from this seq). Rules 9-13 exercise the scoping / case-parity /
+    * is_active / priority-tie semantics the reference matcher honors
     * (app.py:826-841).
     */
   /** One firewall seed row: (rule_id, pattern, description, match_type,

@@ -1554,8 +1554,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("rvec"), col("qvec")) /
           (col("rnorm") * col("qnorm")), 4).as("cos_sim"))
-    exactRerank(topKPerQuery(approx, cand)
-      .select(col("query_id"), col("vec_id")), corpus, broadcast(queries), k)
+    exactRerank(broadcast(topKPerQuery(approx, cand)
+      .select(col("query_id"), col("vec_id"))), corpus, broadcast(queries), k)
   }
 
   /** Per-dimension sign bits packed into 64-bit words — the storage
@@ -1610,8 +1610,8 @@ object Similarity {
               (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
             lit(0L), (acc, x) => acc + x).cast("double") /
           lit(dim.toDouble)).as("cos_sim"))
-    exactRerank(topKPerQuery(approx, cand)
-        .select(col("query_id"), col("vec_id")),
+    exactRerank(broadcast(topKPerQuery(approx, cand)
+        .select(col("query_id"), col("vec_id"))),
       corpus, broadcast(exactQueries(spark, queries)), k)
   }
 
@@ -2030,7 +2030,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
-    exactRerank(topKPerQuery(adc, cand).select(col("query_id"), col("vec_id")),
+    exactRerank(
+      broadcast(topKPerQuery(adc, cand).select(col("query_id"), col("vec_id"))),
       embeddings, broadcast(exactQueries(spark, qrows)), k)
   }
 
@@ -2104,8 +2105,8 @@ object Similarity {
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"),
             round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
-        exactRerank(
-          topKPerQuery(adc, cand).select(col("query_id"), col("vec_id")),
+        exactRerank(broadcast(
+          topKPerQuery(adc, cand).select(col("query_id"), col("vec_id"))),
           pinned, broadcast(exactQueries(spark, qrows)), k)
       }
     }

@@ -1845,7 +1845,8 @@ object TextOps {
     * incoming one is `r`. Equivalent to positional greedy because the
     * fused symbol `l+r` can never equal `l` (r is non-empty), so a
     * fresh merge never re-triggers within the same pass; the
-    * BpeSpec brute-forces this equivalence against a reference
+    * DedupSimilaritySpec test "BPE: greedy fold merge ≡ reference
+    * greedy" checks this equivalence against a reference
     * implementation. O(|word|²) array copies per word — words are
     * short and the vocab is small, so this never touches the corpus.
     */
@@ -1911,7 +1912,8 @@ object TextOps {
     * sequentially in any order: occurrences of distinct pairs cannot
     * overlap without sharing a symbol, and a fresh fusion can never
     * complete another chosen pair when its string is not one of their
-    * tokens (BpeSpec brute-forces this equivalence).
+    * tokens (the DedupSimilaritySpec "batched BPE" test brute-forces
+    * this equivalence).
     */
   private[graft] def bpeMergePairs(toks: Column,
                                    pairs: Seq[(String, String)]): Column = {
@@ -1942,7 +1944,8 @@ object TextOps {
     *
     * Fidelity, stated honestly: WITHIN an iteration the batch is
     * provably identical to applying its pairs sequentially (the
-    * independence conditions — BpeSpec). ACROSS iterations this is
+    * independence conditions, brute-forced by the DedupSimilaritySpec
+    * "batched BPE" test). ACROSS iterations this is
     * the standard batched-BPE approximation: sequential BPE would
     * recount after every merge, so a pair CREATED by an earlier merge
     * in the batch can outrank a later batch pick; batched defers such

@@ -86,11 +86,6 @@ object TableRegistry {
       .write.mode(SaveMode.Append).partitionBy("event_date").parquet(dir)
   }
 
-  /** S6/S7 — generic date-partitioned append for alert-shaped frames. */
-  def appendPartitioned(df: DataFrame, tsCol: String, dir: String): Unit =
-    df.withColumn("event_date", to_date(col(tsCol)))
-      .write.mode(SaveMode.Append).partitionBy("event_date").parquet(dir)
-
   /** Insert-if-absent append (reference INSERT IGNORE seeds,
     * app.py:1522-1526): left_anti against the existing keys before
     * appending — J5 referential hygiene as an anti-join.

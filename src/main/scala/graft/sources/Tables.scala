@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * `events` table stands in for the activity stream at volume, and
   * [[Tables.activity]] derives a deterministic activity_logs-shaped
   * view from it so every reference analytic has a faithful analog
-  * that a DuckDB oracle can replay (see SparkEntry.ActivityPrelude).
+  * that a DuckDB oracle can replay (see graft.rows.Prelude.ActivityPrelude).
   *
   * Scale notes (100 TB design): all loaders are plain parquet scans —
   * Catalyst pushes filters/projections into the scan; nothing here
@@ -233,15 +233,6 @@ object Tables {
         activity(s, d), graft.operators.Detect.ipBlacklist(s))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
-
-  /** Explicit cache-lifecycle hook: unpersist + drop one (session, dir)
-    * entry — call after a dir's data is rewritten (Mutations) or when a
-    * long-lived session is done with a dataset.
-    */
-  def invalidateActivity(s: SparkSession, d: String): Unit = {
-    Option(activityCache.remove((s, d))).foreach(_.unpersist())
-    Option(classifiedCache.remove((s, d))).foreach(_.unpersist())
-  }
 
   /** Session-end eviction so stopped sessions don't pin cache entries
     * (and their SparkSession objects) forever in the static map.

@@ -216,7 +216,7 @@ object Scale1Prof {
           println(f"[semdedup-decomp] $tag%-34s $t%8.2f s"); t
         }
         for (dir <- Seq(sf01, sf1, sf10)) {
-          val emb = graft.SparkEntry.plantedEmbeddings(spark, dir)
+          val emb = graft.rows.EmbRows.plantedEmbeddings(spark, dir)
           // warm the lineage once so stage 1 isn't also paying scan JIT
           emb.write.format("noop").mode("overwrite").save()
           println(s"[semdedup-decomp] --- $dir ---")
@@ -274,7 +274,7 @@ object Scale1Prof {
           def once(): Double = {
             val t0 = System.nanoTime()
             Similarity.semanticDecontam(
-                graft.SparkEntry.plantedEmbeddings(spark, dir), ev,
+                graft.rows.EmbRows.plantedEmbeddings(spark, dir), ev,
                 minCos = 0.9)
               .write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Analytics
+import graft.rows.EvRows
 
 /** A1-A9 / W1-W2 analytics unit tests (SURVEY §2.4-§2.5). */
 class AnalyticsSpec extends SparkSpecBase {
@@ -128,13 +129,13 @@ class AnalyticsSpec extends SparkSpecBase {
     val wide = (0 until 500)
       .map(i => (s"type_$i", 1.0)).toDF("event_type", "value")
     val e = intercept[IllegalArgumentException] {
-      SparkEntry.cmsCounts(wide, maxEnum = 64)
+      EvRows.cmsCounts(wide, maxEnum = 64)
     }
     assert(e.getMessage.contains("bounded-enum"))
     // a bounded domain still passes both contract flags
     val narrow = (0 until 200)
       .map(i => (s"type_${i % 5}", 1.0)).toDF("event_type", "value")
-    val rows = SparkEntry.cmsCounts(narrow, maxEnum = 64).collect()
+    val rows = EvRows.cmsCounts(narrow, maxEnum = 64).collect()
     assert(rows.length == 5)
     assert(rows.forall(r => r.getAs[Boolean]("one_sided") &&
       r.getAs[Boolean]("within_eps")))
@@ -198,7 +199,7 @@ class AnalyticsSpec extends SparkSpecBase {
     // the batch-only key k3 is visible through the merged state
     assert(merged.estimateCount("k3") > 0L)
     // the contract row composes the same pieces end-to-end
-    val contract = SparkEntry.cmsMergeContract(corpus.unionByName(batch))
+    val contract = EvRows.cmsMergeContract(corpus.unionByName(batch))
       .collect()
     assert(contract.length == 4)
     assert(contract.forall(r => r.getAs[Boolean]("merge_equals_full") &&

@@ -71,13 +71,10 @@ def main(sfdir, outdir):
                               f"spark={g[c][i]!r} oracle={e[c][i]!r}"))
         else:
             ok.append((name, len(g)))
-    # queries without oracle: rows-only
+    # every row carries an oracle, so an output without one is a failure
     for name in sorted(os.listdir(outdir)):
-        d = os.path.join(outdir, name)
-        if os.path.isdir(d) and name not in oracle:
-            pq = glob.glob(os.path.join(d, "*.parquet"))
-            n = sum(len(pd.read_parquet(p)) for p in pq) if pq else 0
-            ok.append((name + " (rows-only)", n))
+        if os.path.isdir(os.path.join(outdir, name)) and name not in oracle:
+            bad.append((name, "NO ORACLE"))
     for name, n in ok:
         print(f"  OK   {name}: {n} rows")
     for name, msg in bad:
