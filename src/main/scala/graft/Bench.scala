@@ -263,7 +263,7 @@ object Bench {
     val minFirst3PerCalib =
       if (calibMean > 0 && totalMinFirst3 > 0) totalMinFirst3 / calibMean
       else -1.0
-    val meta = s""""sf":"$sfDir","runs_per_query":$runs,"agg":"min","calib_start_sec":${ms(calibStart)},"calib_end_sec":${ms(calibEnd)},"total_per_calib":${ms(totalPerCalib)},"total_min_first3":${ms(totalMinFirst3)},"total_min_first3_per_calib":${ms(minFirst3PerCalib)},"load_avg_start":$load0,"load_avg_end":$load1,"load_gate":"$gate","load_gate_max":$maxLoad,"cold_classify_build_sec":${ms(coldBuild)},"stream_floor":$floorsJson,"warm":"activity+classified views pre-materialized (classify-at-ingest); per-query sec = min of $runs runs; stream_floor = same streaming machinery over an empty spool (fixed cost; steady-state = row - floor)","n_queries":${results.size}"""
+    val meta = s""""sf":"$sfDir","runs_per_query":$runs,"agg":"min","calib_start_sec":${ms(calibStart)},"calib_end_sec":${ms(calibEnd)},"total_per_calib":${ms(totalPerCalib)},"total_min_first3":${ms(totalMinFirst3)},"total_min_first3_per_calib":${ms(minFirst3PerCalib)},"load_avg_start":$load0,"load_avg_end":$load1,"host_cpus":${LocalSession.hostCpus},"load_gate":"$gate","load_gate_max":$maxLoad,"cold_classify_build_sec":${ms(coldBuild)},"stream_floor":$floorsJson,"warm":"activity+classified views pre-materialized (classify-at-ingest); per-query sec = min of $runs runs; stream_floor = same streaming machinery over an empty spool (fixed cost; steady-state = row - floor)","n_queries":${results.size}"""
     // full record: every query — the committed artifact and the
     // last-run scratch file hold this
     val fullLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,$meta,"total_sec_tail":${ms(total)}}"""

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for the training-data pipeline surface:
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard verification.
@@ -630,20 +635,36 @@ object Dedup {
     * intermediate (connectivity needs the verified edges), but is
     * never collected, persisted, or emitted.
     *
-    * Algorithm: iterative min-label propagation with pointer jumping
-    * (comp := comp(comp)), the standard large-graph CC shape (cf.
-    * Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — labels are monotonically non-increasing, so the
-    * fixpoint is exact; the jump step makes convergence O(log
-    * diameter) rounds rather than O(diameter). Each round is two hash
-    * shuffles on doc ids; lineage is truncated per round
-    * (localCheckpoint) so plan size stays constant across iterations.
+    * Two regimes, one answer. The edge stream is checkpointed once
+    * (the pair lineage runs once) and its row count is observed in
+    * that same pass.
+    *  - Edges that fit the engine's broadcast budget
+    *    (`spark.sql.autoBroadcastJoinThreshold`, sized as the local
+    *    relation they would become) are collected and finished on the
+    *    driver by union-find, whose roots are the components' minimum
+    *    ids; the result is a local relation of the input id type, in
+    *    doc_id order. Past the edge checkpoint this costs one collect
+    *    job, whatever the graph's diameter.
+    *  - Larger edge sets (or a non-integral id type, or a disabled
+    *    budget) run iterative min-label propagation with pointer
+    *    jumping (comp := comp(comp)), the standard large-graph CC shape
+    *    (cf. Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC'14) — labels are monotonically non-increasing,
+    *    so the fixpoint is exact; the jump step makes convergence
+    *    O(log diameter) rounds rather than O(diameter). Each round is
+    *    two hash shuffles on doc ids; lineage is truncated per round
+    *    (localCheckpoint) so plan size stays constant across
+    *    iterations.
     */
   def clusterMembership(pairs: DataFrame, aCol: String = "doc_a",
                         bCol: String = "doc_b",
-                        maxIter: Int = 40): DataFrame =
-    clusterMembershipRaw(pairs, aCol, bCol, maxIter)
-      .orderBy(col("doc_id"))
+                        maxIter: Int = 40): DataFrame = {
+    val m = clusterMembershipRaw(pairs, aCol, bCol, maxIter)
+    // the driver regime's local relation is already in doc_id order;
+    // a Sort over it would still plan a sampling and a shuffle job
+    if (m.queryExecution.analyzed.isInstanceOf[LocalRelation]) m
+    else m.orderBy(col("doc_id"))
+  }
 
   /** [[clusterMembership]] without the presentation sort — the form
     * consumers like [[dedupByClusters]] should join against (the sort
@@ -656,10 +677,30 @@ object Dedup {
     // edges (min over repeats is the same min), and the pair operators
     // already emit deduplicated pairs — a dedup here would only add a
     // full shuffle of the edge stream
+    val spark = pairs.sparkSession
+    val edgeCount = Observation()
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+      .observe(edgeCount, count(lit(1)).as("n"))
       .localCheckpoint(true) // the pair lineage (prefix join / banding) is heavy — cut it once
     val idType = edges.schema("dst").dataType
+    val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val edgeBytes = BigInt(edgeCount.get("n").asInstanceOf[Long]) *
+      EstimationUtils.getSizePerRow(edges.queryExecution.analyzed.output)
+    val integral = idType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    if (integral && budget > 0 && edgeBytes <= budget) {
+      val local = driverComponents(spark, edges.collect(), idType)
+      edges.unpersist()
+      local
+    } else labelPropagation(edges, maxIter)
+  }
+
+  /** [[clusterMembershipRaw]]'s distributed regime over the
+    * checkpointed (src, dst) edge stream. */
+  private def labelPropagation(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nmin"))
       .select(col("id"), least(col("id"), col("nmin")).as("comp"))
@@ -726,6 +767,36 @@ object Dedup {
     labels.join(sizes, "comp")
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
         col("cluster_size"))
+  }
+
+  /** Connected components of a collected edge list (integral ids),
+    * as [[clusterMembershipRaw]] emits them: union-find over the
+    * distinct ids in ascending order, always linking the larger root
+    * under the smaller, so every root is its component's minimum id.
+    */
+  private def driverComponents(spark: SparkSession, edges: Array[Row],
+                               idType: DataType): DataFrame = {
+    val ids = edges.flatMap(e => Seq(e.get(0), e.get(1))).distinct
+      .sortBy(_.asInstanceOf[Number].longValue)
+    val index = ids.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { e =>
+      val (a, b) = (find(index(e.get(0))), find(index(e.get(1))))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val root = ids.indices.map(find)
+    val sizes = root.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val rows = ids.indices.map(i => Row(ids(i), ids(root(i)), sizes(root(i))))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", idType), StructField("cluster_id", idType),
+      StructField("cluster_size", LongType, nullable = false))))
   }
 
   /** [[simhashClusters]] membership without the presentation sort —

@@ -164,7 +164,7 @@ object Similarity {
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         l2norm(col("embedding")).as("qnorm"))
-    exactRerank(broadcast(cut), embeddings, broadcast(queries), k)
+    exactRerank(cut, embeddings, broadcast(queries), k)
   }
 
   /** Durable MATRYOSHKA PREFIX layout — the stored form that makes
@@ -298,8 +298,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("pvec"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    exactRerank(broadcast(topKPerQuery(coarse, cand)
-        .select(col("query_id"), col("vec_id"))),
+    exactRerank(topKPerQuery(coarse, cand)
+        .select(col("query_id"), col("vec_id")),
       IndexGen.sub(spark, root, "full"),
       broadcast(qfull.select(col("query_id"), col("qfull").as("qvec"),
         l2norm(col("qfull")).as("qnorm"))), k)
@@ -501,8 +501,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("pvec"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    exactRerank(broadcast(topKPerQuery(coarse, cand)
-        .select(col("query_id"), col("vec_id"))),
+    exactRerank(topKPerQuery(coarse, cand)
+        .select(col("query_id"), col("vec_id")),
       IndexGen.sub(spark, root, "full"),
       broadcast(qfull.select(col("query_id"), col("qfull").as("qvec"),
         l2norm(col("qfull")).as("qnorm"))), k)
@@ -550,13 +550,14 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("pvec"), col("qvec")) /
           (col("norm") * col("qnorm")), 4).as("cos_sim"))
-    // queries may be corpus-sized: neither rerank side is broadcast
+    // queries may be corpus-sized: so may the cut, and the query side
+    // is not broadcast
     exactRerank(topKPerQuery(coarse, cand)
         .select(col("query_id"), col("vec_id")),
       IndexGen.sub(spark, root, "full"),
       queries.select(col("vec_id").as("query_id"),
         col("embedding").as("qvec"), l2norm(col("embedding")).as("qnorm")),
-      k)
+      k, boundedCut = false)
   }
 
   /** [[serveAnnBatch]] on the matryoshka layout: one query
@@ -1554,8 +1555,8 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("rvec"), col("qvec")) /
           (col("rnorm") * col("qnorm")), 4).as("cos_sim"))
-    exactRerank(broadcast(topKPerQuery(approx, cand)
-      .select(col("query_id"), col("vec_id"))), corpus, broadcast(queries), k)
+    exactRerank(topKPerQuery(approx, cand)
+      .select(col("query_id"), col("vec_id")), corpus, broadcast(queries), k)
   }
 
   /** Per-dimension sign bits packed into 64-bit words — the storage
@@ -1610,8 +1611,8 @@ object Similarity {
               (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
             lit(0L), (acc, x) => acc + x).cast("double") /
           lit(dim.toDouble)).as("cos_sim"))
-    exactRerank(broadcast(topKPerQuery(approx, cand)
-        .select(col("query_id"), col("vec_id"))),
+    exactRerank(topKPerQuery(approx, cand)
+        .select(col("query_id"), col("vec_id")),
       corpus, broadcast(exactQueries(spark, queries)), k)
   }
 
@@ -1654,14 +1655,32 @@ object Similarity {
     * qvec, qnorm), score at exact cosine, and rank through the bounded
     * top-k. One definition serves the SQ8/BQ/PQ one-shots, the sidecar
     * probes and the prefix funnels, so the re-rank semantics cannot
-    * drift between a rung and its at-rest form. Broadcast hints are
-    * the caller's: a kNN join's query side may be corpus-sized.
+    * drift between a rung and its at-rest form.
+    *
+    * The candidate⋈corpus side is picked here: the corpus is broadcast
+    * when the optimizer's size estimate fits the broadcast budget
+    * (`spark.sql.autoBroadcastJoinThreshold`) and is no larger than the
+    * candidates' estimate, so the candidates stream and the final top-k
+    * needs no query_id exchange; otherwise a `boundedCut` (cand rows per
+    * query of a driver-side query list) is broadcast, so a large corpus
+    * is point-looked-up instead of exchanged. The query side's hint is
+    * the caller's: a kNN join's query side may be corpus-sized, and so
+    * may its cut (`boundedCut = false`).
     */
   private def exactRerank(candidates: DataFrame, corpus: DataFrame,
-                          queries: DataFrame, k: Int): DataFrame = {
+                          queries: DataFrame, k: Int,
+                          boundedCut: Boolean = true): DataFrame = {
     val nn = corpus.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("norm"))
-    val exact = candidates.join(nn, Seq("vec_id"))
+    def bytes(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val budget = corpus.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val corpusSide = budget > 0 && bytes(nn) <= budget &&
+      bytes(nn) <= bytes(candidates)
+    val pairs =
+      if (corpusSide) candidates.join(broadcast(nn), Seq("vec_id"))
+      else if (boundedCut) broadcast(candidates).join(nn, Seq("vec_id"))
+      else candidates.join(nn, Seq("vec_id"))
+    val exact = pairs
       .join(queries, Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("embedding"), col("qvec")) /
@@ -2031,7 +2050,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
     exactRerank(
-      broadcast(topKPerQuery(adc, cand).select(col("query_id"), col("vec_id"))),
+      topKPerQuery(adc, cand).select(col("query_id"), col("vec_id")),
       embeddings, broadcast(exactQueries(spark, qrows)), k)
   }
 
@@ -2105,8 +2124,8 @@ object Similarity {
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"),
             round(adcNum / (col("pqnorm") * col("qnorm")), 4).as("cos_sim"))
-        exactRerank(broadcast(
-          topKPerQuery(adc, cand).select(col("query_id"), col("vec_id"))),
+        exactRerank(
+          topKPerQuery(adc, cand).select(col("query_id"), col("vec_id")),
           pinned, broadcast(exactQueries(spark, qrows)), k)
       }
     }

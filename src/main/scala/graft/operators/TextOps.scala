@@ -1813,10 +1813,14 @@ object TextOps {
   /** The weighted word vocabulary BPE trains over: ONE corpus pass
     * (whitespace words → counts → char-symbol arrays) produces a dim
     * that is orders of magnitude smaller than the corpus (distinct
-    * words, Zipf-bounded); every subsequent merge iteration runs over
-    * THIS frame weighted by `wc` — the published algorithm's shape,
-    * and the only one that survives 100 TB (iterating over raw text k
-    * times would pay k corpus scans for identical information).
+    * words, Zipf-bounded); every merge iteration runs over THIS frame
+    * weighted by `wc`, never over raw text again (k corpus scans would
+    * buy identical information). Symbols are Spark's code-point
+    * `substr`s. Two regimes read it ([[trainBpeState]]): up to
+    * [[BpeDriverWords]] distinct words it is collected once and the
+    * merges are learned on the driver; past that, each merge is one
+    * distributed pair count over it ([[trainBpeBatched]] with
+    * `batchTopM = 1`).
     */
   def bpeVocab(docs: DataFrame): DataFrame =
     docs.select(explode(tokens(col("text"))).as("w"))
@@ -1857,50 +1861,111 @@ object TextOps {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
           .otherwise(concat(acc, array(t))))
 
-  /** Train `merges` BPE merge rules: per iteration, one distributed
-    * weighted pair count over the vocab dim, a deterministic driver
-    * argmax (count desc, then lexicographic pair — exact integer
-    * arithmetic, no float tie ambiguity), and a scan-local merge
-    * rewrite; each rewritten vocab is localCheckpoint-ed so iteration
-    * k+1 reads KB of arrays, not k nested fold lineages. Returns the
-    * merge table (step, tok_l, tok_r, pair_count) — the trained
-    * tokenizer IS this table.
+  /** Train `merges` BPE merge rules. Each step picks the most
+    * frequent adjacent pair, weighted by word count (count desc, then
+    * `tok_l`, then `tok_r` in UTF-8 byte order — exact `Long`
+    * arithmetic, no float tie ambiguity), and rewrites every word with
+    * the greedy left fold of [[bpeMergePair]]; a corpus with no pair
+    * left stops early. Returns the merge table (step, tok_l, tok_r,
+    * pair_count) — the trained tokenizer IS this table.
+    *
+    * Two regimes, one rule sequence ([[trainBpeState]]): a vocab of
+    * up to [[BpeDriverWords]] distinct words is collected once and the
+    * merges are learned on the driver, so training costs the one
+    * corpus pass of [[bpeVocab]] whatever `merges` is; a larger vocab
+    * runs one distributed pair count and one scan-local rewrite per
+    * merge ([[trainBpeBatched]] with `batchTopM = 1`).
     */
   def trainBpe(docs: DataFrame, merges: Int = 8): DataFrame = {
-    val (rules, vocab) = trainBpeState(docs, merges)
-    vocab.unpersist()
-    docs.sparkSession.createDataFrame(rules)
+    val st = trainBpeState(docs, merges)
+    st.vocab.unpersist()
+    docs.sparkSession.createDataFrame(st.rules)
       .toDF("step", "tok_l", "tok_r", "pair_count")
       .orderBy(col("step"))
   }
 
-  /** [[trainBpe]] plus the POST-TRAINING vocab (w, wc, toks) — the
-    * segmentation table [[bpeTokenCounts]] applies. The returned
-    * vocab is localCheckpoint-ed; the caller owns unpersisting it.
+  /** Distinct-word bound of driver-side BPE learning: up to this many
+    * (w, wc, toks) rows are collected once; past it training runs the
+    * distributed per-merge loop. */
+  private[graft] val BpeDriverWords: Int = 1 << 20
+
+  /** A trained tokenizer: the merge rules (step, tok_l, tok_r,
+    * pair_count) and the POST-TRAINING vocab (w, wc, toks), the
+    * segmentation table [[bpeTokenCounts]] and [[bpeEncodeIds]]
+    * apply. `words` holds the vocab's rows when the merges were
+    * learned on the driver (`vocab` is then a local relation over
+    * them); otherwise `vocab` is the localCheckpoint-ed frame of the
+    * distributed loop.
     */
-  private[graft] def trainBpeState(docs: DataFrame, merges: Int)
-      : (Seq[(Long, String, String, Long)], DataFrame) = {
-    var vocab = bpeVocab(docs).localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
+  private[graft] final case class BpeState(
+      rules: Seq[(Long, String, String, Long)], vocab: DataFrame,
+      words: Option[Seq[(String, Long, Seq[String])]])
+
+  /** [[trainBpe]]'s two regimes. The corpus pass of [[bpeVocab]] is
+    * collected with a `maxWords + 1` limit; when it fits, the merges
+    * are learned by [[learnBpeMerges]] over the collected `toks`
+    * (Spark's code-point symbols, never re-split on the driver, where
+    * `String` indexes UTF-16 units). Past `maxWords` the state comes
+    * from [[trainBpeBatchedState]] with `batchTopM = 1`, rule for rule
+    * the same learner, which runs the vocab pass again for its own
+    * checkpointed frame.
+    */
+  private[graft] def trainBpeState(docs: DataFrame, merges: Int,
+                                   maxWords: Int = BpeDriverWords): BpeState = {
+    val rows = bpeVocab(docs).limit(maxWords + 1).collect()
+    if (rows.length > maxWords) {
+      val (rules, vocab) = trainBpeBatchedState(docs, merges, batchTopM = 1)
+      BpeState(rules, vocab, None)
+    } else {
+      val toks = rows.map(_.getSeq[String](2).toArray)
+      val counts = rows.map(_.getLong(1))
+      val rules = learnBpeMerges(toks, counts, merges)
+      val words = rows.indices.map(i =>
+        (rows(i).getString(0), counts(i), toks(i).toSeq))
+      val spark = docs.sparkSession
+      import spark.implicits._
+      BpeState(rules, words.toDF("w", "wc", "toks"), Some(words))
+    }
+  }
+
+  /** Sequential BPE over a driver-resident vocab — Sennrich et al.'s
+    * learner over the word-frequency table. `toks(i)` is word i's
+    * symbol array (rewritten in place, so on return it holds the
+    * post-training segmentation) and `counts(i)` its corpus count. The
+    * same rules as one [[bpePairCounts]] job per merge: `Long` pair
+    * counts (overflow fails, as Spark's ANSI `sum` does), the argmax
+    * ordered count desc, then `tok_l`, then `tok_r` under
+    * [[utf8Order]] (Spark's string order), and the greedy left fold of
+    * [[bpeMergePair]].
+    */
+  private[graft] def learnBpeMerges(toks: Array[Array[String]],
+                                    counts: Array[Long], merges: Int)
+      : Seq[(Long, String, String, Long)] = {
+    val out =
+      scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var dry = false
-    for (step <- 1 to merges if !dry) {
-      val top = bpePairCounts(vocab)
-        .orderBy(col("c").desc, col("tok_l"), col("tok_r"))
-        .limit(1).collect()
-      if (top.isEmpty) dry = true
+    while (out.size < merges && !dry) {
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (i <- toks.indices; j <- 0 until toks(i).length - 1) {
+        val p = (toks(i)(j), toks(i)(j + 1))
+        pairs(p) = Math.addExact(pairs.getOrElse(p, 0L), counts(i))
+      }
+      if (pairs.isEmpty) dry = true
       else {
-        val (l, r, c) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += ((step.toLong, l, r, c))
-        val prev = vocab
-        vocab = vocab
-          .withColumn("toks", bpeMergePair(col("toks"), l, r))
-          .localCheckpoint()
-        prev.unpersist()
-        ()
+        val ((l, r), c) = pairs.minBy { case ((l, r), c) => (c, l, r) }(
+          Ordering.Tuple3(Ordering.Long.reverse, utf8Order, utf8Order))
+        out += ((out.size + 1L, l, r, c))
+        for (i <- toks.indices) {
+          val acc = scala.collection.mutable.ArrayBuffer.empty[String]
+          toks(i).foreach { t =>
+            if (acc.nonEmpty && acc.last == l && t == r) acc(acc.size - 1) = l + r
+            else acc += t
+          }
+          toks(i) = acc.toArray
+        }
       }
     }
-    (out.toSeq, vocab)
+    out.toSeq
   }
 
   /** One PASS applying a SET of pairwise-independent merges: the
@@ -1931,11 +1996,11 @@ object TextOps {
       })
   }
 
-  /** BPE training at PRODUCTION merge counts (round-11 verdict #6):
-    * [[trainBpe]] drives one count job + one vocab rewrite per merge
-    * — fine for 8 rules, but a real vocab needs 10⁴–10⁵ merges and
-    * that many driver-sequenced Spark jobs is job-scheduling-bound
-    * (SCALE.md records the per-merge floor). This form picks the TOP
+  /** Distributed BPE training at PRODUCTION merge counts (round-11
+    * verdict #6): one count job + one vocab rewrite per merge is fine
+    * for 8 rules, but a real vocab needs 10⁴–10⁵ merges and that many
+    * driver-sequenced Spark jobs is job-scheduling-bound (SCALE.md
+    * records the per-merge floor). This form picks the TOP
     * `batchTopM` PAIRWISE-INDEPENDENT pairs per iteration (greedy
     * down the exact (count desc, pair) order; independence = no
     * shared symbol and no fused-string collision) and applies them in
@@ -1950,7 +2015,7 @@ object TextOps {
     * recount after every merge, so a pair CREATED by an earlier merge
     * in the batch can outrank a later batch pick; batched defers such
     * pairs to the next iteration's count. `batchTopM = 1` is exactly
-    * [[trainBpe]].
+    * [[trainBpe]]: it is trainBpe's form past [[BpeDriverWords]].
     */
   def trainBpeBatched(docs: DataFrame, merges: Int = 1024,
                       batchTopM: Int = 64): DataFrame = {
@@ -2013,22 +2078,20 @@ object TextOps {
     * (broadcast) on the word — the corpus is never re-segmented
     * per-document, the same dim-reuse that makes the trainer scale.
     */
-  def bpeTokenCounts(docs: DataFrame, merges: Int = 8): DataFrame = {
-    val (_, vocab) = trainBpeState(docs, merges)
-    val segLen = vocab
+  def bpeTokenCounts(docs: DataFrame, merges: Int = 8): DataFrame =
+    subwordCounts(docs, trainBpeState(docs, merges))
+
+  /** [[bpeTokenCounts]] under a given trained state. */
+  private[graft] def subwordCounts(docs: DataFrame, st: BpeState): DataFrame = {
+    val segLen = st.vocab
       .select(col("w"), size(col("toks")).cast("long").as("n_sub"))
-    val out = docs
+    docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
       .join(broadcast(segLen), Seq("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_subwords"))
       .orderBy(col("doc_id"))
-    // the join above is the last consumer of the checkpointed vocab,
-    // but the frame is lazy — materialize before releasing the blocks
-    val pinned = out.localCheckpoint(true)
-    vocab.unpersist()
-    pinned
   }
 
   /** APPLY the trained tokenizer to MATERIALIZE the training token
@@ -2053,7 +2116,7 @@ object TextOps {
     */
   def bpeEncodeIds(docs: DataFrame, merges: Int = 8,
                    maxVocab: Int = 1 << 20): DataFrame =
-    docIdSequences(docs, merges, maxVocab)
+    docIdSequences(docs, trainBpeState(docs, merges), maxVocab)
       .select(col("doc_id"),
         size(col("ids")).cast("long").as("n_subwords"),
         md5(array_join(transform(col("ids"), _.cast("string")), " "))
@@ -2080,14 +2143,15 @@ object TextOps {
   }
 
   /** The shared (doc_id, ids) sequence frame behind [[bpeEncodeIds]]
-    * and [[packTokenStream]] — PINNED (the trained vocab's lineage
-    * runs once), one row per doc with at least one word.
+    * and [[packTokenStream]] under a trained state, one row per doc
+    * with at least one word. A driver-learned vocab gives the symbol
+    * set without a job.
     */
-  private[graft] def docIdSequences(docs: DataFrame, merges: Int,
+  private[graft] def docIdSequences(docs: DataFrame, st: BpeState,
                                     maxVocab: Int): DataFrame = {
-    val (_, vocab) = trainBpeState(docs, merges)
-    val syms = vocab.select(explode(col("toks")).as("s")).distinct()
-      .limit(maxVocab + 1).collect().map(_.getString(0))
+    val syms = st.words.map(_.flatMap(_._3).distinct.take(maxVocab + 1))
+      .getOrElse(st.vocab.select(explode(col("toks")).as("s")).distinct()
+        .limit(maxVocab + 1).collect().map(_.getString(0)).toSeq)
     require(syms.length <= maxVocab,
       s"bpeEncodeIds: > $maxVocab distinct symbols — the id table " +
         "would not stay driver-material; raise maxVocab")
@@ -2095,9 +2159,9 @@ object TextOps {
       syms.sorted(utf8Order).zipWithIndex
         .map { case (s, i) => (s, i.toLong) }.toMap
     val idMap = typedlit(idOf)
-    val wordIds = vocab.select(col("w"),
+    val wordIds = st.vocab.select(col("w"),
       transform(col("toks"), t => element_at(idMap, t)).as("ids"))
-    val out = docs
+    docs
       .select(col("doc_id"),
         posexplode(tokens(col("text"))).as(Seq("pos", "w")))
       .filter(length(col("w")) > 0)
@@ -2107,9 +2171,6 @@ object TextOps {
         .as("a"))
       .select(col("doc_id"),
         flatten(transform(col("a"), e => e.getField("ids"))).as("ids"))
-    val pinned = out.localCheckpoint(true)
-    vocab.unpersist()
-    pinned
   }
 
   /** The PACKED training batches — [[packSequences]]' assignment
@@ -2138,7 +2199,7 @@ object TextOps {
   def packTokenStream(docs: DataFrame, merges: Int = 8,
                       budget: Long = 512, shards: Int = 4,
                       maxVocab: Int = 1 << 20): DataFrame = {
-    val seqs = docIdSequences(docs, merges, maxVocab)
+    val seqs = docIdSequences(docs, trainBpeState(docs, merges), maxVocab)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"),
         pmod(col("doc_id"), lit(shards.toLong)).as("shard"),

@@ -33,7 +33,8 @@ object RowProf {
       .getOrElse { System.err.println(Usage); sys.exit(2) }
     val spark = LocalSession(extra = confs)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    println(s"[rowprof] master=${spark.sparkContext.master} sf=$d " +
+    println(s"[rowprof] master=${spark.sparkContext.master} " +
+      s"host_cpus=${LocalSession.hostCpus} sf=$d " +
       confs.map { case (k, v) => s"$k=$v" }.mkString(" "))
     val ok = rows.map { name =>
       SparkEntry.queries.get(name) match {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.functions.Classify
@@ -150,18 +151,89 @@ class PropertySpec extends SparkSpecBase {
         b <- Gen.choose(0L, n.toLong)
       } yield (math.min(a, b), math.max(a, b)))
     } yield es.filter(e => e._1 != e._2).distinct
-    samples(edgeGen, 12).filter(_.nonEmpty).foreach { edges =>
-      val expected = ufComponents(edges)
-      val sizes = expected.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-      val got = graft.operators.Dedup.clusterMembership(
-        edges.toDF("doc_a", "doc_b"))
-        .as[(Long, Long, Long)].collect()
-        .map { case (id, cid, sz) => id -> ((cid, sz)) }.toMap
-      assert(got.keySet == expected.keySet)
-      expected.foreach { case (id, root) =>
-        assert(got(id) == ((root, sizes(root))),
-          s"node $id: got ${got(id)}, want ($root, ${sizes(root)}) " +
-            s"on edges $edges")
+    // a 40-node chain, numbered so that min labels travel the whole
+    // path: many propagation rounds in the distributed regime
+    val chain = (0L until 39L).map(i => (100L - i - 1, 100L - i))
+    val graphs = samples(edgeGen, 12).filter(_.nonEmpty) :+ chain
+    // the default budget finishes these on the driver; -1 disables it
+    // and forces the distributed round loop
+    for (threshold <- Seq(None, Some("-1"))) {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      threshold.foreach(spark.conf.set(key, _))
+      try {
+        graphs.foreach { edges =>
+          val expected = ufComponents(edges)
+          val sizes = expected.groupBy(_._2).view.mapValues(_.size.toLong).toMap
+          val got = graft.operators.Dedup.clusterMembership(
+            edges.toDF("doc_a", "doc_b"))
+            .as[(Long, Long, Long)].collect()
+          assert(got.map(_._1).toSeq == got.map(_._1).sorted.toSeq,
+            s"not in doc_id order (threshold $threshold)")
+          val byId = got.map { case (id, cid, sz) => id -> ((cid, sz)) }.toMap
+          assert(byId.keySet == expected.keySet)
+          expected.foreach { case (id, root) =>
+            assert(byId(id) == ((root, sizes(root))),
+              s"node $id: got ${byId(id)}, want ($root, ${sizes(root)}) " +
+                s"on edges $edges (threshold $threshold)")
+          }
+        }
+        // no edges, no membership rows (and the observed edge count
+        // of an optimized-away plan still arrives)
+        assert(graft.operators.Dedup.clusterMembership(
+          Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).isEmpty)
+        // an Int id column stays Int, with the same components
+        val ints = graft.operators.Dedup.clusterMembership(
+          Seq((3, 1), (1, 2), (7, 8)).toDF("doc_a", "doc_b"))
+        assert(ints.schema("doc_id").dataType == IntegerType)
+        assert(ints.schema("cluster_id").dataType == IntegerType)
+        assert(ints.as[(Int, Int, Long)].collect().toSeq ==
+          Seq((1, 1, 3L), (2, 1, 3L), (3, 1, 3L), (7, 7, 2L), (8, 7, 2L)),
+          s"threshold $threshold")
+      } finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("BPE: the driver learner equals the distributed one on 200 random corpora, and so do the applied vocabs") {
+    import graft.operators.TextOps
+    // symbols from ASCII to the supplementary plane: "\uE000" and
+    // "\uFFFD" (UTF-8 ee.., ef..) sort BEFORE the emoji and the clef
+    // (f0..) in UTF-8 bytes but AFTER them in UTF-16 units (d8..), so
+    // a String.compareTo tie-break would pick other merges
+    val symbols = Vector("a", "b", "é", "中", "\uE000", "\uFFFD",
+      new String(Character.toChars(0x1F600)),
+      new String(Character.toChars(0x1D11E)))
+    for (seed <- 0L until 200L) {
+      val rng = new scala.util.Random(seed)
+      // a 2-4 symbol alphabet per corpus keeps pair counts tied often
+      val alpha = rng.shuffle(symbols).take(2 + rng.nextInt(3))
+      // every 20th corpus holds only one-symbol words: dry at step 1
+      val maxLen = if (seed % 20 == 0) 1 else 6
+      val docs = (1 to 1 + rng.nextInt(4)).map { d =>
+        (d.toLong, Seq.fill(1 + rng.nextInt(5))(
+          Seq.fill(1 + rng.nextInt(maxLen))(alpha(rng.nextInt(alpha.size)))
+            .mkString).mkString(" "))
+      }
+      val merges = rng.nextInt(7)
+      withClue(s"seed $seed, merges $merges, corpus $docs: ") {
+        val df = docs.toDF("doc_id", "text")
+        val local = TextOps.trainBpeState(df, merges)
+        val dist = TextOps.trainBpeState(df, merges, maxWords = 0)
+        assert(local.words.isDefined && dist.words.isEmpty)
+        assert(local.rules == dist.rules)
+        if (seed % 20 == 0) assert(local.rules.isEmpty)
+        val vocab = dist.vocab.as[(String, Long, Seq[String])].collect()
+        assert(local.words.get.sortBy(_._1) == vocab.toSeq.sortBy(_._1))
+        assert(TextOps.subwordCounts(df, local).collect().toSeq ==
+          TextOps.subwordCounts(df, dist).collect().toSeq)
+        assert(TextOps.docIdSequences(df, local, 1 << 20).orderBy("doc_id")
+          .collect().toSeq ==
+          TextOps.docIdSequences(df, dist, 1 << 20).orderBy("doc_id")
+            .collect().toSeq)
+        dist.vocab.unpersist()
       }
     }
   }
