@@ -43,10 +43,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
   *    matters downstream);
   *  - [[Md5WindowHashes.ModeRle]]: `array<struct<h:long,c:long>>`,
   *    distinct hashes ascending with their multiplicities (the
-  *    per-doc window histogram of `splitWindowHashes` /
-  *    `duplicateSpans`, folded scan-local instead of via a
-  *    corpus-scale `groupBy(doc, h)` exchange or an interpreted
-  *    sort/run-start HOF ladder).
+  *    per-doc window histogram of `TextOps.windowRuns`, the
+  *    `duplicateSpans` and split-leakage grain, folded scan-local
+  *    instead of via a corpus-scale `groupBy(doc, h)` exchange or
+  *    an interpreted sort/run-start HOF ladder).
   */
 @SerialVersionUID(1L)
 case class Md5WindowHashes(child: Expression, n: Int, seed: Int,

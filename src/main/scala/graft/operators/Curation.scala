@@ -66,14 +66,17 @@ object Curation {
              minJaccard: Double = 0.3, benchMod: Long = 29,
              decontamN: Int = 8,
              targetSources: Seq[String] = Seq("src0", "src2", "src4"),
-             budget: Long = 512, shards: Int = 4): DataFrame = {
-    val st = stages(docs, lineMinDf, minJaccard, benchMod, decontamN,
-      targetSources, budget, shards)
+             budget: Long = 512, shards: Int = 4): DataFrame =
+    productOf(stages(docs, lineMinDf, minJaccard, benchMod, decontamN,
+      targetSources, budget, shards))
+
+  /** The packed product of a stage chain: the sampled corpus with its
+    * pack assignment. */
+  private def productOf(st: Stages): DataFrame =
     st.sampled.join(
       st.packed.select(col("doc_id"), col("shard"), col("n_tokens"),
         col("bin_id"), col("bin_offset")),
       Seq("doc_id"))
-  }
 
   def funnel(docs: DataFrame, lineMinDf: Long = 5,
              minJaccard: Double = 0.3, benchMod: Long = 29,
@@ -111,12 +114,8 @@ object Curation {
              decontamN: Int = 8,
              targetSources: Seq[String] = Seq("src0", "src2", "src4"),
              budget: Long = 512, shards: Int = 4): Stages = {
-    val raw = docs.select(col("doc_id"), col("text"), col("source"))
-    // 2: quality gate
-    val s2 = raw.join(
-      TextOps.gopherQuality(raw).filter(col("gopher_pass"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+    val raw = rawOf(docs)
+    val s2 = qualityGate(raw)
     // 3: line-level boilerplate dedup; emptied docs leave the corpus.
     // The engine-side line hashing stays the default fast family —
     // the oracle replays this stage with raw line strings.
@@ -130,24 +129,14 @@ object Curation {
     // specialized each copy of the s4/s5 lineage (train's benchMod
     // filter pushed into a REPEATED minhash-CC + contamination
     // subtree), so exchange reuse never deduped them.
-    val s3 = s2.select(col("doc_id"), col("source"))
-      .join(TextOps.dedupLines(s2, lineMinDf)
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("text_deduped").as("text")),
-        Seq("doc_id"))
+    val s3 = textLayer(s2, TextOps.lineDfDim(s2), lineMinDf)
       .localCheckpoint(false)
     // 4: near-dup clusters, quality-aware survivor (membership via
     // the sort-free form: the presentation sort would be discarded
     // by the losers join's shuffle)
     val mem = Dedup.minhashClustersRaw(s3, threshold = minJaccard,
       hashFn = Dedup.md5Seeded).localCheckpoint(false)
-    val losers = mem.join(
-        Dedup.bestInCluster(s3, mem)
-          .select(col("cluster_id"), col("best_doc")),
-        Seq("cluster_id"))
-      .filter(col("doc_id") =!= col("best_doc"))
-      .select(col("doc_id"))
-    val s4 = s3.join(losers, Seq("doc_id"), "left_anti")
+    val s4 = s3.join(losers(s3, mem), Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
     // 5: decontamination — the benchmark split probes the survivors
     val bench = s3.filter(col("doc_id") % benchMod === 0)
@@ -168,6 +157,39 @@ object Curation {
     val packed = TextOps.packSequences(s6, budget, shards)
     Stages(raw, s2, s3, s4, s5, s6, packed)
   }
+
+  private def rawOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("text"), col("source"))
+
+  /** Stage 2, the Gopher quality gate. */
+  private def qualityGate(raw: DataFrame): DataFrame =
+    raw.join(
+      TextOps.gopherQuality(raw).filter(col("gopher_pass"))
+        .select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
+
+  /** Stage 3, the curated text layer: the quality layer's lines
+    * deduped against `lineDim` ([[TextOps.dedupLinesWithDim]]); docs
+    * whose every line was boilerplate leave. Each caller pins it as
+    * its own consumers need.
+    */
+  private def textLayer(quality: DataFrame, lineDim: DataFrame,
+                        lineMinDf: Long): DataFrame =
+    quality.select(col("doc_id"), col("source"))
+      .join(TextOps.dedupLinesWithDim(quality, lineDim, lineMinDf)
+        .filter(col("n_kept") > 0)
+        .select(col("doc_id"), col("text_deduped").as("text")),
+        Seq("doc_id"))
+
+  /** Stage 4's losers: every cluster member of `mem` but the
+    * quality-aware survivor ([[Dedup.bestInCluster]]). */
+  private def losers(docs: DataFrame, mem: DataFrame): DataFrame =
+    mem.join(
+        Dedup.bestInCluster(docs, mem)
+          .select(col("cluster_id"), col("best_doc")),
+        Seq("cluster_id"))
+      .filter(col("doc_id") =!= col("best_doc"))
+      .select(col("doc_id"))
 
   /** Per-document rejection attribution — the funnel's drill-down:
     * for every raw document, the FIRST stage that dropped it (or
@@ -273,26 +295,13 @@ object Curation {
   def stateOf(corpus: DataFrame, lineMinDf: Long = 5, benchMod: Long = 29,
               decontamN: Int = 8,
               targetSources: Seq[String] = Seq("src0", "src2", "src4")): CorpusState = {
-    val raw = corpus.select(col("doc_id"), col("text"), col("source"))
-    val c2 = raw.join(
-      TextOps.gopherQuality(raw).filter(col("gopher_pass"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+    val c2 = qualityGate(rawOf(corpus))
     val lineDim = TextOps.lineDfDim(c2)
     // the curated text layer feeds four consumers (cross-dedup scan,
     // bench grams, dsir dim, dsir glob) — pin it once
-    val c3 = c2.select(col("doc_id"), col("source"))
-      .join(TextOps.dedupLinesWithDim(c2, lineDim, lineMinDf)
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("text_deduped").as("text")),
-        Seq("doc_id"))
-      .localCheckpoint(true)
-    val tgt = col("source").isin(targetSources: _*)
-    val dim = TextOps.dsirDim(c3, tgt)
-    val d38 = "decimal(38,0)"
-    val glob = TextOps.dsirMassesWithDim(c3, dim).agg(
-      sum(col("tmass").cast(d38)).cast(d38).as("st"),
-      sum(col("rmass").cast(d38)).cast(d38).as("sr"))
+    val c3 = textLayer(c2, lineDim, lineMinDf).localCheckpoint(true)
+    val dim = TextOps.dsirDim(c3, col("source").isin(targetSources: _*))
+    val glob = massGlob(TextOps.dsirMassesWithDim(c3, dim))
     // the KB-scale state pieces stay LAZY: an eager pin per dim was
     // measured (round 12) to ADD net serial jobs —
     // each localCheckpoint costs its own AQE stage chain (stateOf
@@ -333,20 +342,34 @@ object Curation {
                         lineMinDf: Long = 5, minJaccard: Double = 0.3,
                         benchMod: Long = 29, decontamN: Int = 8,
                         targetSources: Seq[String] = Seq("src0", "src2", "src4"),
-                        budget: Long = 512, shards: Int = 4): Stages = {
-    val raw = batch.select(col("doc_id"), col("text"), col("source"))
-    val b2 = raw.join(
-      TextOps.gopherQuality(raw).filter(col("gopher_pass"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+                        budget: Long = 512, shards: Int = 4): Stages =
+    stagesAgainst(batchText(batch, state, lineMinDf), state, minJaccard,
+      benchMod, decontamN, targetSources, budget, shards)
+
+  /** Stages 1–3 of a batch against a corpus state: the raw and
+    * quality frames, the MERGED line dim (corpus ∪ the batch quality
+    * layer) and the batch's text layer, pinned — the near-dup leg,
+    * the funnel and the state advance all read it.
+    */
+  private final case class BatchText(raw: DataFrame, quality: DataFrame,
+                                     lineDim: DataFrame, text: DataFrame)
+
+  private def batchText(batch: DataFrame, state: CorpusState,
+                        lineMinDf: Long): BatchText = {
+    val raw = rawOf(batch)
+    val b2 = qualityGate(raw)
     val mergedLine = TextOps.mergeDim(state.lineDim,
       TextOps.lineDfDim(b2), key = "h")
-    val b3 = b2.select(col("doc_id"), col("source"))
-      .join(TextOps.dedupLinesWithDim(b2, mergedLine, lineMinDf)
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("text_deduped").as("text")),
-        Seq("doc_id"))
-      .localCheckpoint(true)
+    BatchText(raw, b2, mergedLine,
+      textLayer(b2, mergedLine, lineMinDf).localCheckpoint(true))
+  }
+
+  /** [[incrementalStages]] 4–7 over a built [[BatchText]]. */
+  private def stagesAgainst(bt: BatchText, state: CorpusState,
+                            minJaccard: Double, benchMod: Long,
+                            decontamN: Int, targetSources: Seq[String],
+                            budget: Long, shards: Int): Stages = {
+    val b3 = bt.text
     // 4a: corpus seniority — the cross near-dup leg scans the corpus
     val cross = Dedup.minhashNovel(b3, state.corpusText,
       threshold = minJaccard).localCheckpoint(true)
@@ -355,12 +378,6 @@ object Curation {
     // by the losers join's shuffle)
     val mem = Dedup.minhashClustersRaw(cross, threshold = minJaccard,
       hashFn = Dedup.md5Seeded).localCheckpoint(true)
-    val losers = mem.join(
-        Dedup.bestInCluster(cross, mem)
-          .select(col("cluster_id"), col("best_doc")),
-        Seq("cluster_id"))
-      .filter(col("doc_id") =!= col("best_doc"))
-      .select(col("doc_id"))
     // b4/b5/b6 feed MULTIPLE funnel branches (4/5/6/7); a LAZY
     // localCheckpoint dedupes the shared work within the one funnel
     // action without adding eager serial jobs (the eager-pin chain
@@ -371,7 +388,7 @@ object Curation {
     // unpersist would release (blocks here are RDD-lifecycle-owned,
     // reclaimed by the ContextCleaner like every other
     // localCheckpoint on this path)
-    val b4 = cross.join(losers, Seq("doc_id"), "left_anti")
+    val b4 = cross.join(losers(cross, mem), Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
     // 5: the batch bench split (from b3, pre-dedup — bench membership
     // is not forfeited by losing dedup, same as the full pipeline)
@@ -396,7 +413,7 @@ object Curation {
     val b6 = b5.join(keep, Seq("doc_id"), "left_semi")
       .localCheckpoint(false)
     val packed = TextOps.packSequences(b6, budget, shards)
-    Stages(raw, b2, b3, b4, b5, b6, packed)
+    Stages(bt.raw, bt.quality, b3, b4, b5, b6, packed)
   }
 
   /** The curated, packed BATCH — the daily run's product. */
@@ -404,14 +421,9 @@ object Curation {
                         lineMinDf: Long = 5, minJaccard: Double = 0.3,
                         benchMod: Long = 29, decontamN: Int = 8,
                         targetSources: Seq[String] = Seq("src0", "src2", "src4"),
-                        budget: Long = 512, shards: Int = 4): DataFrame = {
-    val st = incrementalStages(batch, state, lineMinDf, minJaccard,
-      benchMod, decontamN, targetSources, budget, shards)
-    st.sampled.join(
-      st.packed.select(col("doc_id"), col("shard"), col("n_tokens"),
-        col("bin_id"), col("bin_offset")),
-      Seq("doc_id"))
-  }
+                        budget: Long = 512, shards: Int = 4): DataFrame =
+    productOf(incrementalStages(batch, state, lineMinDf, minJaccard,
+      benchMod, decontamN, targetSources, budget, shards))
 
   /** The batch funnel — the monitoring row of the daily run. */
   def incrementalFunnel(batch: DataFrame, state: CorpusState,
@@ -441,11 +453,15 @@ object Curation {
     * HUGEINT (int128, ~1.7e38), which also fails loudly on overflow,
     * so cross-engine parity holds over the entire supported domain.
     */
-  private[graft] def dsirKeep(masses: DataFrame): DataFrame = {
+  private[graft] def dsirKeep(masses: DataFrame): DataFrame =
+    dsirKeepAgainst(masses, massGlob(masses))
+
+  /** The aggregate-ratio row `(st, sr)` of per-doc masses: Σtmass and
+    * Σrmass in decimal(38,0). */
+  private def massGlob(masses: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
-    dsirKeepAgainst(masses, masses.agg(
-      sum(col("tmass").cast(d38)).cast(d38).as("st"),
-      sum(col("rmass").cast(d38)).cast(d38).as("sr")))
+    masses.agg(sum(col("tmass").cast(d38)).cast(d38).as("st"),
+      sum(col("rmass").cast(d38)).cast(d38).as("sr"))
   }
 
   /** The keep rule against an EXPLICIT aggregate-ratio row `glob(st,
@@ -524,32 +540,25 @@ object Curation {
                    lineMinDf: Long = 5, benchMod: Long = 29,
                    decontamN: Int = 8,
                    targetSources: Seq[String] = Seq("src0", "src2", "src4"))
-      : CorpusState = {
-    val raw = batch.select(col("doc_id"), col("text"), col("source"))
-    val b2 = raw.join(
-      TextOps.gopherQuality(raw).filter(col("gopher_pass"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val mergedLine = TextOps.mergeDim(state.lineDim,
-      TextOps.lineDfDim(b2), key = "h")
-    val b3 = b2.select(col("doc_id"), col("source"))
-      .join(TextOps.dedupLinesWithDim(b2, mergedLine, lineMinDf)
-        .filter(col("n_kept") > 0)
-        .select(col("doc_id"), col("text_deduped").as("text")),
-        Seq("doc_id"))
-    val grownText = state.corpusText.unionByName(b3).localCheckpoint(true)
-    val tgt = col("source").isin(targetSources: _*)
+      : CorpusState =
+    advanceWith(state, batchText(batch, state, lineMinDf), benchMod,
+      decontamN, targetSources)
+
+  /** [[advanceState]] from a batch's built [[BatchText]] — the
+    * maintenance step passes the one its stages already pinned. */
+  private def advanceWith(state: CorpusState, bt: BatchText,
+                          benchMod: Long, decontamN: Int,
+                          targetSources: Seq[String]): CorpusState = {
+    val grownText = state.corpusText.unionByName(bt.text)
+      .localCheckpoint(true)
     val mergedDsir = TextOps.mergeDim(state.dsirDim,
-      TextOps.dsirDim(b3, tgt), key = "b")
-    val d38 = "decimal(38,0)"
-    val glob = TextOps.dsirMassesWithDim(grownText, mergedDsir).agg(
-      sum(col("tmass").cast(d38)).cast(d38).as("st"),
-      sum(col("rmass").cast(d38)).cast(d38).as("sr"))
-    CorpusState(grownText, mergedLine,
+      TextOps.dsirDim(bt.text, col("source").isin(targetSources: _*)),
+      key = "b")
+    CorpusState(grownText, bt.lineDim,
       state.benchGrams.unionByName(
-        TextOps.benchGrams(b3.filter(col("doc_id") % benchMod === 0),
+        TextOps.benchGrams(bt.text.filter(col("doc_id") % benchMod === 0),
           decontamN, Dedup.md5Seeded)).distinct(),
-      mergedDsir, glob)
+      mergedDsir, massGlob(TextOps.dsirMassesWithDim(grownText, mergedDsir)))
   }
 
   /** Continuous curation: each micro-batch of raw documents is
@@ -601,14 +610,15 @@ object Curation {
     val st = stateAt(spark, stateDir, v, b)
     val productPath =
       new org.apache.hadoop.fs.Path(outDir, s"batch-$id").toString
-    curateIncremental(pinned, st, lineMinDf, minJaccard, benchMod,
-        decontamN, targetSources, budget, shards)
+    val bt = batchText(pinned, st, lineMinDf)
+    productOf(stagesAgainst(bt, st, minJaccard, benchMod, decontamN,
+        targetSources, budget, shards))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(productPath)
     if (!already)
       VersionedState.publish(spark, fs, stateDir,
-        partFrames(advanceState(st, pinned, lineMinDf, benchMod, decontamN,
-          targetSources)), v + 1, id)
+        partFrames(advanceWith(st, bt, benchMod, decontamN, targetSources)),
+        v + 1, id)
     productPath
   }
 

@@ -696,11 +696,9 @@ object Multimodal {
                     bands: Int = 4): DataFrame = {
     val sk = phashes(assets).toDF()
       .select(col("asset_id").as("doc_id"), col("phash"))
-    Dedup.clusterMembershipRaw(
+    Dedup.clusterMembership(
       Dedup.bandedHammingPairs(sk, "phash", maxHamming, bands, bits = 64))
-      .select(col("doc_id").as("asset_id"), col("cluster_id"),
-        col("cluster_size"))
-      .orderBy(col("asset_id"))
+      .withColumnRenamed("doc_id", "asset_id")
   }
 
   final case class AudioHashedAsset(asset_id: Long, ahash: Long)
@@ -731,11 +729,9 @@ object Multimodal {
                         bands: Int = 4): DataFrame = {
     val sk = audioHashes(assets).toDF()
       .select(col("asset_id").as("doc_id"), col("ahash"))
-    Dedup.clusterMembershipRaw(
+    Dedup.clusterMembership(
       Dedup.bandedHammingPairs(sk, "ahash", maxHamming, bands, bits = 64))
-      .select(col("doc_id").as("asset_id"), col("cluster_id"),
-        col("cluster_size"))
-      .orderBy(col("asset_id"))
+      .withColumnRenamed("doc_id", "asset_id")
   }
 
   final case class VideoFrameHash(asset_id: Long, frame_idx: Int, phash: Long)
@@ -830,11 +826,9 @@ object Multimodal {
     */
   def videoClusters(assets: DataFrame, minJaccard: Double = 0.45,
                     maxFrameDf: Int = 64): DataFrame =
-    Dedup.clusterMembershipRaw(videoNearDups(assets, minJaccard, maxFrameDf),
+    Dedup.clusterMembership(videoNearDups(assets, minJaccard, maxFrameDf),
       aCol = "vid_a", bCol = "vid_b")
-      .select(col("doc_id").as("asset_id"), col("cluster_id"),
-        col("cluster_size"))
-      .orderBy(col("asset_id"))
+      .withColumnRenamed("doc_id", "asset_id")
 
   /** Planted motion-PNG corpus for the video dedup oracle: each group
     * (`id % groups`) owns a pool of 8 frames whose dHashes are

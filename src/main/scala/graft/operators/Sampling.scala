@@ -319,11 +319,7 @@ object Sampling {
       cur.unionByName(batch.select(col(stratumCol), col(keyCol))),
       stratumCol, keyCol, k, seed)
       .localCheckpoint(true)
-    merged.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    MicroBatches.writeBatch(merged, outDir, "batch_id", batchId)
     if (!already)
       VersionedState.publish(spark, fs, stateDir,
         Seq("" -> merged.select(col(stratumCol), col(keyCol))), v + 1,

@@ -567,12 +567,8 @@ object Similarity {
                           dir: String, batch: DataFrame, batchId: Long,
                           outDir: String, k: Int = 10, nprobe: Int = 4,
                           cand: Int = 50): Unit =
-    prefixIvfKnnJoin(spark, dir, batch, k, nprobe, cand)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    MicroBatches.writeBatch(prefixIvfKnnJoin(spark, dir, batch, k, nprobe,
+      cand), outDir, "batch_id", batchId)
 
   /** [[startAnnServing]] on the matryoshka layout — a stream of
     * full-dim query vectors served through the pruned-prefix coarse
@@ -1089,12 +1085,8 @@ object Similarity {
   def serveAnnBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
                     batch: DataFrame, batchId: Long, outDir: String,
                     k: Int = 10, nprobe: Int = 2): Unit =
-    knnJoinIndexed(spark, dir, batch, k, nprobe)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    MicroBatches.writeBatch(knnJoinIndexed(spark, dir, batch, k, nprobe),
+      outDir, "batch_id", batchId)
 
   /** STREAMING ANN query serving — the retrieval side of the index
     * lifecycle: [[startIndexMaintenance]] keeps the durable index
@@ -2509,12 +2501,10 @@ object Similarity {
   def embeddingNearDupClusters(embeddings: DataFrame, minCos: Double = 0.9,
                                planes: Int = 0, bands: Int = 0,
                                maxBandDf: Int = 0): DataFrame =
-    Dedup.clusterMembershipRaw(
+    Dedup.clusterMembership(
       embeddingNearDupsRaw(embeddings, minCos, planes, bands, maxBandDf),
       aCol = "vec_a", bCol = "vec_b")
-      .select(col("doc_id").as("vec_id"), col("cluster_id"),
-        col("cluster_size"))
-      .orderBy(col("vec_id"))
+      .withColumnRenamed("doc_id", "vec_id")
 
   /** Incremental-ingest near-dup dedup, EMBEDDING leg (round-7 verdict
     * #3): deduplicate a (comparatively small) new embedding batch

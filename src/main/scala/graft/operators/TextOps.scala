@@ -429,11 +429,38 @@ object TextOps {
     */
   def benchGrams(benchmark: DataFrame, n: Int = 8,
                  hashFn: (Int, Column) => Column = Dedup.xxSeeded): DataFrame =
-    benchmark
-      .select(explode(Dedup.windowHashes(col("text"), n, 0,
-        graft.functions.Md5WindowHashes.ModeDistinctSorted, hashFn))
-        .as("h"))
-      .distinct()
+    benchmark.select(explode(distinctGrams(n, hashFn)).as("h")).distinct()
+
+  /** The sorted distinct n-gram hashes of the `text` column — the gram
+    * domain of every decontamination form and of the gram index. */
+  private def distinctGrams(n: Int, hashFn: (Int, Column) => Column): Column =
+    Dedup.windowHashes(col("text"), n, 0,
+      graft.functions.Md5WindowHashes.ModeDistinctSorted, hashFn)
+
+  /** The corpus side of every decontamination form: one
+    * (doc_id, n_ngrams, h) row per distinct gram of each document,
+    * n_ngrams being the doc's distinct-gram count (the rate's
+    * denominator). */
+  private def docGrams(training: DataFrame, n: Int,
+                       hashFn: (Int, Column) => Column): DataFrame =
+    training.select(col("doc_id"), distinctGrams(n, hashFn).as("hs"))
+      .select(col("doc_id"), size(col("hs")).cast("long").as("n_ngrams"),
+        explode(col("hs")).as("h"))
+
+  /** The suite-tagged gram dim: (bench, h) for every suite's
+    * [[benchGrams]], unioned. */
+  private def suiteGrams(benchmarks: Seq[(String, DataFrame)], n: Int,
+                         hashFn: (Int, Column) => Column): DataFrame =
+    benchmarks.map { case (name, b) =>
+      benchGrams(b, n, hashFn).select(lit(name).as("bench"), col("h"))
+    }.reduce(_ unionByName _)
+
+  /** matched over distinct grams, rounded to 4 places — the rate
+    * column of every decontamination form. */
+  private def contaminationRate: Column =
+    round(col("matched_ngrams").cast("double") /
+      greatest(col("n_ngrams"), lit(1)).cast("double"), 4)
+      .as("contamination_rate")
 
   /** [[contamination]] against a PRE-BUILT (possibly merged) gram set
     * — the incremental form: only the training batch is scanned, the
@@ -441,24 +468,14 @@ object TextOps {
     */
   def contaminationWithGrams(training: DataFrame, bGrams: DataFrame,
                              n: Int = 8,
-                             hashFn: (Int, Column) => Column = Dedup.xxSeeded): DataFrame = {
-    val tGrams = training
-      .select(col("doc_id"),
-        Dedup.windowHashes(col("text"), n, 0,
-          graft.functions.Md5WindowHashes.ModeDistinctSorted, hashFn)
-          .as("hs"))
-      .select(col("doc_id"), size(col("hs")).cast("long").as("n_ngrams"),
-        explode(col("hs")).as("h"))
-    tGrams
+                             hashFn: (Int, Column) => Column = Dedup.xxSeeded): DataFrame =
+    docGrams(training, n, hashFn)
       .join(broadcast(bGrams), Seq("h"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("matched_ngrams"), min(col("n_ngrams")).as("n_ngrams"))
       .select(col("doc_id"), col("matched_ngrams"), col("n_ngrams"),
-        round(col("matched_ngrams").cast("double") /
-          greatest(col("n_ngrams"), lit(1)).cast("double"), 4)
-          .as("contamination_rate"))
+        contaminationRate)
       .orderBy(col("doc_id"))
-  }
 
   /** Decontamination screening against K benchmark SUITES in ONE
     * corpus pass — the production shape: a training corpus screens
@@ -479,25 +496,13 @@ object TextOps {
                           hashFn: (Int, Column) => Column =
                             Dedup.xxSeeded): DataFrame = {
     require(benchmarks.nonEmpty, "contaminationMatrix: no benchmarks")
-    val dim = benchmarks.map { case (name, b) =>
-      benchGrams(b, n, hashFn).select(lit(name).as("bench"), col("h"))
-    }.reduce(_ unionByName _)
-    val tGrams = training
-      .select(col("doc_id"),
-        Dedup.windowHashes(col("text"), n, 0,
-          graft.functions.Md5WindowHashes.ModeDistinctSorted, hashFn)
-          .as("hs"))
-      .select(col("doc_id"), size(col("hs")).cast("long").as("n_ngrams"),
-        explode(col("hs")).as("h"))
-    tGrams.join(broadcast(dim), Seq("h"))
+    docGrams(training, n, hashFn)
+      .join(broadcast(suiteGrams(benchmarks, n, hashFn)), Seq("h"))
       .groupBy(col("doc_id"), col("bench"))
       .agg(count(lit(1)).as("matched_ngrams"),
         min(col("n_ngrams")).as("n_ngrams"))
       .select(col("doc_id"), col("bench"), col("matched_ngrams"),
-        col("n_ngrams"),
-        round(col("matched_ngrams").cast("double") /
-          greatest(col("n_ngrams"), lit(1)).cast("double"), 4)
-          .as("contamination_rate"))
+        col("n_ngrams"), contaminationRate)
       .orderBy(col("doc_id"), col("bench"))
   }
 
@@ -568,9 +573,7 @@ object TextOps {
     IndexGen.buildFresh(spark, dir) { root =>
       docs
         .select(col("doc_id"),
-          explode(Dedup.windowHashes(col("text"), n, 0,
-            graft.functions.Md5WindowHashes.ModeDistinctSorted, hashFn))
-            .as("h"))
+          explode(distinctGrams(n, hashFn)).as("h"))
         .withColumn("bucket", pmod(col("h"), lit(nBuckets.toLong)))
         // one build-time shuffle buys the at-rest layout probes live
         // with forever: ONE file per bucket partition (a scan-local
@@ -658,9 +661,7 @@ object TextOps {
       val (n, nBuckets, hashFn) = gramMeta(spark, c.root)
       val posted = batch
         .select(col("doc_id"),
-          explode(Dedup.windowHashes(col("text"), n, 0,
-            graft.functions.Md5WindowHashes.ModeDistinctSorted, hashFn))
-            .as("h"))
+          explode(distinctGrams(n, hashFn)).as("h"))
         .withColumn("bucket", pmod(col("h"), lit(nBuckets)))
         .localCheckpoint(true)
       // one staged file per touched bucket (the build's layout
@@ -694,9 +695,7 @@ object TextOps {
     // docdim read ONE generation even if maintenance publishes mid-run)
     val root = IndexGen.root(spark, dir)
     val (n, nBuckets, hashFn) = gramMeta(spark, root)
-    val dim = benchmarks.map { case (name, b) =>
-      benchGrams(b, n, hashFn).select(lit(name).as("bench"), col("h"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
+    val dim = suiteGrams(benchmarks, n, hashFn).localCheckpoint(true)
     // bounded by construction: pmod lands in [0, n_buckets)
     val buckets = dim
       .select(pmod(col("h"), lit(nBuckets)).as("bucket"))
@@ -708,10 +707,7 @@ object TextOps {
       .agg(count(lit(1)).as("matched_ngrams"))
       .join(IndexGen.sub(spark, root, "docdim"), Seq("doc_id"))
       .select(col("doc_id"), col("bench"), col("matched_ngrams"),
-        col("n_ngrams"),
-        round(col("matched_ngrams").cast("double") /
-          greatest(col("n_ngrams"), lit(1)).cast("double"), 4)
-          .as("contamination_rate"))
+        col("n_ngrams"), contaminationRate)
       .orderBy(col("doc_id"), col("bench"))
   }
 
@@ -826,30 +822,7 @@ object TextOps {
     */
   def duplicateSpans(docs: DataFrame, n: Int = 10, minCount: Int = 2,
                      hashFn: (Int, Column) => Column = Dedup.xxSeeded): DataFrame = {
-    // one row per (doc, distinct window hash) with its multiplicity —
-    // the partial-aggregable granularity all three later stages
-    // consume. Pinned via localCheckpoint so the expensive lineage
-    // (shingle + hash of every position) runs ONCE, not once per
-    // consumer — the same truncation discipline as the CC edge
-    // stream; at warehouse scale this materialization is a temp
-    // table of 32-byte rows, orders of magnitude below the text.
-    // round-14: the per-(doc, hash) histogram folds INSIDE the scan
-    // (native window hashing + run-length mode) — the former
-    // `groupBy(doc_id, h)` shuffled the whole exploded window stream
-    // to aggregate keys unique per doc anyway (the splitWindowHashes
-    // finding; at 100 TB that exchange is corpus-scale). Requires
-    // unique doc_ids (both callers pass base corpora).
-    val byDocHash = docs
-      .select(col("doc_id"),
-        (size(split(trim(col("text")), "\\s+")) - (n - 1)).cast("long")
-          .as("n_windows"),
-        Dedup.windowHashes(col("text"), n, 0,
-          graft.functions.Md5WindowHashes.ModeRle, hashFn).as("hc"))
-      .filter(col("n_windows") > 0)
-      .select(col("doc_id"), col("n_windows"), explode(col("hc")).as("hc"))
-      .select(col("doc_id"), col("hc.h").as("h"), col("hc.c").as("c"),
-        col("n_windows"))
-      .localCheckpoint(true)
+    val byDocHash = windowRuns(docs, n, hashFn)
     val dupHashes = byDocHash.groupBy(col("h"))
       .agg(sum(col("c")).as("occ"))
       .filter(col("occ") >= minCount)
@@ -963,12 +936,9 @@ object TextOps {
     val cur = VersionedState.read(spark, dimDir, useV, useB)
     val merged = mergeDim(cur, windowDim(batch, n, hashFn), key = "h")
       .localCheckpoint(true)
-    removeDuplicateSpansWithDim(batch, merged, n, minCount, hashFn)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    MicroBatches.writeBatch(
+      removeDuplicateSpansWithDim(batch, merged, n, minCount, hashFn),
+      outDir, "batch_id", batchId)
     if (!already)
       VersionedState.publish(spark, fs, dimDir, Seq("" -> merged), useV + 1,
         batchId)
@@ -1060,49 +1030,55 @@ object TextOps {
   def splitLeakageWithSplits(docs: DataFrame, n: Int = 10,
                              hashFn: (Int, Column) => Column =
                                Dedup.xxSeeded): DataFrame = {
-    val byDocHash = splitWindowHashes(docs, n, hashFn)
+    val byDocHash = windowRuns(docs, n, hashFn, "split")
     val trainH = byDocHash.filter(col("split") === "train")
       .select(col("h")).distinct()
     splitLeakageTail(byDocHash, trainH)
   }
 
-  /** The per-(doc, split, window-hash) count frame both leakage forms
-    * consume — window hashing is scan-local, and so is the COUNTING:
-    * the former `groupBy(doc_id, split, h)` shuffled the whole
-    * exploded window stream to aggregate keys that are unique per doc
-    * anyway (round 14: that exchange+aggregate was ~4.5 s of the
-    * 6.8 s row at sf0.1, and at 100 TB it is a full corpus-scale
-    * shuffle whose partial aggregation buys nothing on near-unique
-    * keys). Every window of a doc lives in the doc's own row, so the
-    * per-doc histogram folds inside the scan — round-14: in ONE
-    * compiled pass ([[graft.operators.Dedup.windowHashes]] RLE mode;
-    * the round-13 sort/run-start HOF ladder interpreted four lambda
-    * layers per doc and still built the window strings first).
-    * Identical (doc_id, split, h, c, n_windows) rows, ZERO shuffles.
-    * The frame still pins ONCE (localCheckpoint) for its consumers.
+  /** The per-(doc, window-hash) run grain of [[duplicateSpans]] and
+    * the split-leakage audits: one (doc_id, carry…, h, c, n_windows)
+    * row per distinct n-token window of each doc with its
+    * multiplicity `c`, `carry` being per-doc columns that ride along
+    * (the leakage forms carry `split`). Docs shorter than n tokens have
+    * no windows and no rows.
+    *
+    * Window hashing is scan-local, and so is the COUNTING: a
+    * `groupBy(doc_id, h)` would shuffle the whole exploded window
+    * stream to aggregate keys that are unique per doc anyway (round
+    * 14: that exchange+aggregate was ~4.5 s of the 6.8 s leakage row
+    * at sf0.1, and at 100 TB it is a full corpus-scale shuffle whose
+    * partial aggregation buys nothing on near-unique keys). Every
+    * window of a doc lives in the doc's own row, so the per-doc
+    * histogram folds inside the scan, in ONE compiled pass
+    * ([[graft.operators.Dedup.windowHashes]] RLE mode). ZERO
+    * shuffles. Pinned ONCE (localCheckpoint): every consumer's
+    * roll-ups read it, so the shingle + hash of every position runs
+    * once; at warehouse scale this is a temp table of 32-byte rows,
+    * orders of magnitude below the text.
     * PRECONDITIONS: `doc_id` must be unique in `docs`. Counts fold
     * per input ROW, so two rows sharing a doc_id yield two partial
-    * counts per hash instead of one merged count, and the report's
+    * counts per hash instead of one merged count, and the reports'
     * per-doc min(n_windows) then differs from the one-row answer
-    * (both callers pass split corpora keyed by doc_id). Per-task
-    * memory is O(doc windows) for the sort (the token array already
-    * was).
+    * (every caller passes a base or split corpus keyed by doc_id).
+    * Per-task memory is O(doc windows) for the sort (the token array
+    * already was).
     */
-  private def splitWindowHashes(docs: DataFrame, n: Int,
-                                hashFn: (Int, Column) => Column)
-      : DataFrame =
+  private def windowRuns(docs: DataFrame, n: Int,
+                         hashFn: (Int, Column) => Column,
+                         carry: String*): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     docs
-      .select(col("doc_id"), col("split"),
-        (size(split(trim(col("text")), "\\s+")) - (n - 1)).cast("long")
-          .as("n_windows"),
+      .select(keys ++ Seq(
+        (size(tokens(col("text"))) - (n - 1)).cast("long").as("n_windows"),
         Dedup.windowHashes(col("text"), n, 0,
-          graft.functions.Md5WindowHashes.ModeRle, hashFn).as("hc"))
+          graft.functions.Md5WindowHashes.ModeRle, hashFn).as("hc")): _*)
       .filter(col("n_windows") > 0)
-      .select(col("doc_id"), col("split"), col("n_windows"),
-        explode(col("hc")).as("hc"))
-      .select(col("doc_id"), col("split"), col("hc.h").as("h"),
-        col("hc.c").as("c"), col("n_windows"))
+      .select(keys ++ Seq(col("n_windows"), explode(col("hc")).as("hc")): _*)
+      .select(keys ++ Seq(col("hc.h").as("h"), col("hc.c").as("c"),
+        col("n_windows")): _*)
       .localCheckpoint(true)
+  }
 
   /** The shared report tail: semi-join the holdout windows against a
     * train window-hash set (exact or bloom-pruned — the caller
@@ -1155,7 +1131,7 @@ object TextOps {
                                   expectedItems: Long = 1L << 16,
                                   fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.graftshim.BloomShim
-    val byDocHash = splitWindowHashes(docs, n, hashFn)
+    val byDocHash = windowRuns(docs, n, hashFn, "split")
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedItems, fpp)
     val bfRow = byDocHash.filter(col("split") =!= "train")
@@ -1276,12 +1252,8 @@ object TextOps {
   def serveBm25Batch(spark: org.apache.spark.sql.SparkSession,
                      dir: String, batch: DataFrame, batchId: Long,
                      outDir: String, k: Int = 5): Unit =
-    bm25SearchIndexed(spark, dir, batch, k)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    MicroBatches.writeBatch(bm25SearchIndexed(spark, dir, batch, k), outDir,
+      "batch_id", batchId)
 
   /** STREAMING BM25 query serving — the lexical mirror of
     * [[graft.operators.Similarity.startAnnServing]]: each micro-batch
@@ -1319,13 +1291,9 @@ object TextOps {
   def serveDriftBatch(spark: org.apache.spark.sql.SparkSession,
                       baselineDimPath: String, batch: DataFrame,
                       batchId: Long, outDir: String): Unit =
-    bigramDriftDims(spark.read.parquet(baselineDimPath),
-      sourceBigramDim(batch))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
+    MicroBatches.writeBatch(bigramDriftDims(
+      spark.read.parquet(baselineDimPath), sourceBigramDim(batch)),
+      outDir, "batch_id", batchId)
 
   /** STREAMING drift monitor — the ops loop around [[bigramDrift]]:
     * every micro-batch of incoming documents is compared against the
@@ -1371,24 +1339,10 @@ object TextOps {
     * never moves.
     */
   def bigramFamiliarity(docs: DataFrame): DataFrame = {
-    val bigrams = transform(
-      sequence(lit(1), length(col("text")) - 1),
-      i => col("text").substr(i, lit(2)))
     // reused by training roll-up and scoring: pin so extraction runs once
-    val perDoc = docs
-      .filter(length(col("text")) >= 2)
-      .select(col("doc_id"), explode(bigrams).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val train = perDoc.groupBy(col("b")).agg(sum(col("c")).as("tc"))
-    perDoc.join(broadcast(train), Seq("b"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c") * col("tc")).as("wsum"),
-        sum(col("c")).as("n_bigrams"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("wsum").cast("double") /
-          col("n_bigrams").cast("double"), 4).as("familiarity"))
-      .orderBy(col("doc_id"))
+    val perDoc = bigramGrain(docs).localCheckpoint(true)
+    familiarityTail(perDoc,
+      perDoc.groupBy(col("b")).agg(sum(col("c")).as("tc")))
   }
 
   /** Line-level exact dedup — the boilerplate-removal pass of
@@ -1478,6 +1432,121 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  /** Character-bigram array of the text column. */
+  private def charBigrams: Column = transform(
+    sequence(lit(1), length(col("text")) - 1),
+    i => col("text").substr(i, lit(2)))
+
+  /** The (doc_id, b, c) bigram-count grain every bigram dial scores:
+    * extraction is scan-local and the (doc, bigram) counts
+    * partial-aggregate map-side (the alphabet is tiny, so rows
+    * collapse hard). Docs under 2 chars have no bigrams and no rows.
+    */
+  private def bigramGrain(docs: DataFrame): DataFrame =
+    docs.filter(length(col("text")) >= 2)
+      .select(col("doc_id"), explode(charBigrams).as("b"))
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
+
+  /** The familiarity score of a (doc_id, b, c) grain against a
+    * (b, tc) dim: the count-weighted mean corpus count of each doc's
+    * bigrams, int64 sums with ONE division at the end. */
+  private def familiarityTail(grain: DataFrame, dim: DataFrame): DataFrame =
+    grain.join(broadcast(dim), Seq("b"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("c") * col("tc")).as("wsum"),
+        sum(col("c")).as("n_bigrams"))
+      .select(col("doc_id"), col("n_bigrams"),
+        round(col("wsum").cast("double") /
+          col("n_bigrams").cast("double"), 4).as("familiarity"))
+      .orderBy(col("doc_id"))
+
+  /** The corpus bigram-frequency dim under [[bigramFamiliarity]]:
+    * bigram → total occurrence count. Mergeable ([[mergeDim]] on "b").
+    */
+  def bigramDim(docs: DataFrame): DataFrame =
+    docs.filter(length(col("text")) >= 2)
+      .select(explode(charBigrams).as("b"))
+      .groupBy(col("b")).agg(count(lit(1)).as("tc"))
+
+  /** [[bigramFamiliarity]] against a pre-built (possibly merged)
+    * bigram dim — the incremental form: only `docs` (the batch) is
+    * scanned, the corpus contributes through the broadcast dim.
+    */
+  def bigramFamiliarityWithDim(docs: DataFrame, dim: DataFrame): DataFrame =
+    familiarityTail(bigramGrain(docs), dim)
+
+  /** The (doc, tgt, bigram, count) grain under the DSIR dials. tgt is
+    * constant per doc (a doc is in or out of the target domain), so
+    * the grain equals (doc, bigram). localCheckpointed: the corpus
+    * roll-up and the join-back both consume it.
+    */
+  private def dsirGrain(docs: DataFrame, isTarget: Column): DataFrame =
+    docs
+      .filter(length(col("text")) >= 2)
+      .select(col("doc_id"), isTarget.cast("boolean").as("tgt"),
+        explode(charBigrams).as("b"))
+      .groupBy(col("doc_id"), col("tgt"), col("b"))
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint(true)
+
+  /** A [[dsirGrain]] rolled up to the [[dsirDim]] shape (b, rc, tc):
+    * tc is 0, never null, off-target. */
+  private def dsirRollup(grain: DataFrame): DataFrame =
+    grain.groupBy(col("b"))
+      .agg(sum(col("c")).as("rc"),
+        sum(when(col("tgt"), col("c")).otherwise(lit(0L))).as("tc"))
+
+  /** The raw+target bigram dim under [[dsirWeights]]: bigram →
+    * (rc = occurrences anywhere, tc = occurrences inside the target
+    * domain; 0, never null, so the dim merges as plain sums).
+    */
+  def dsirDim(docs: DataFrame, isTarget: Column): DataFrame =
+    docs.filter(length(col("text")) >= 2)
+      .select(isTarget.cast("boolean").as("tgt"),
+        explode(charBigrams).as("b"))
+      .groupBy(col("b"))
+      .agg(count(lit(1)).as("rc"),
+        sum(when(col("tgt"), lit(1L)).otherwise(lit(0L))).as("tc"))
+
+  /** The integer layer under [[dsirWeights]]: per-doc target-weighted
+    * and raw-weighted bigram masses `(doc_id, n_bigrams, tmass,
+    * rmass)` — exposed so consumers needing EXACT comparisons (the
+    * curation pipeline's keep rule compares each doc's ratio to the
+    * corpus aggregate ratio cross-multiplied in decimal) never touch
+    * the rounded double. The corpus's own [[dsirDim]], rolled up from
+    * the pinned grain, scored through [[dsirMassesWithDim]]'s tail.
+    */
+  private[graft] def dsirMasses(docs: DataFrame, isTarget: Column): DataFrame = {
+    val perDoc = dsirGrain(docs, isTarget)
+    dsirMassTail(perDoc, dsirRollup(perDoc))
+  }
+
+  /** [[dsirMasses]] against a pre-built (possibly merged) DSIR dim —
+    * only the batch is scanned (a doc's own target flag only matters
+    * for dim CONSTRUCTION, not scoring).
+    */
+  private[graft] def dsirMassesWithDim(docs: DataFrame,
+                                       dim: DataFrame): DataFrame =
+    dsirMassTail(bigramGrain(docs), dim)
+
+  /** Per-doc masses of a bigram grain against a (b, rc, tc) dim.
+    * Masses aggregate in decimal(38,0), NOT int64: c is bounded by doc
+    * length but tc/rc are CORPUS-wide bigram totals, so c·rc wraps a
+    * long around ~1e5 ordinary docs (silently, under non-ANSI
+    * arithmetic). Each factor fits decimal(19,0) (< 2^63), so the
+    * product is exact in decimal(38,0) and the per-doc sum stays
+    * exact to 1e38 — far past any corpus this operator targets.
+    */
+  private def dsirMassTail(grain: DataFrame, dim: DataFrame): DataFrame = {
+    val d19 = "decimal(19,0)"
+    grain.join(broadcast(dim), Seq("b"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("c").cast(d19) *
+          (col("tc") + lit(1L)).cast(d19)).as("tmass"),
+        sum(col("c").cast(d19) * col("rc").cast(d19)).as("rmass"),
+        sum(col("c")).as("n_bigrams"))
+  }
+
   /** DSIR-style importance weight per document — data selection via
     * target-vs-raw n-gram frequency ratios (Xie et al. 2023, "Data
     * Selection for Language Models via Importance Resampling" score
@@ -1495,123 +1564,20 @@ object TextOps {
     *
     * Scale shape: identical to [[bigramFamiliarity]] — bigram
     * extraction scan-local, (doc, bigram) counts partial-aggregate
-    * map-side, BOTH frequency tables (target and raw) are KB-scale
-    * corpus-wide roll-ups of those counts joined back broadcast. Two
+    * map-side, the (target, raw) frequency dim is ONE KB-scale
+    * corpus-wide roll-up of those counts joined back broadcast. Two
     * shuffles (doc×bigram, then doc); text never moves.
     */
-  /** The integer layer under [[dsirWeights]]: per-doc target-weighted
-    * and raw-weighted bigram masses `(doc_id, n_bigrams, tmass,
-    * rmass)` — exposed so consumers needing EXACT comparisons (the
-    * curation pipeline's keep rule compares each doc's ratio to the
-    * corpus aggregate ratio cross-multiplied in decimal) never touch
-    * the rounded double.
-    */
-  /** Character-bigram array of the text column. */
-  private def charBigrams: Column = transform(
-    sequence(lit(1), length(col("text")) - 1),
-    i => col("text").substr(i, lit(2)))
-
-  /** The (doc, tgt, bigram, count) grain under the DSIR dials. tgt is
-    * constant per doc (a doc is in or out of the target domain), so
-    * the grain equals (doc, bigram). localCheckpointed: both corpus
-    * roll-ups and the join-back consume it.
-    */
-  private def dsirGrain(docs: DataFrame, isTarget: Column): DataFrame =
-    docs
-      .filter(length(col("text")) >= 2)
-      .select(col("doc_id"), isTarget.cast("boolean").as("tgt"),
-        explode(charBigrams).as("b"))
-      .groupBy(col("doc_id"), col("tgt"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-
-  private[graft] def dsirMasses(docs: DataFrame, isTarget: Column): DataFrame = {
-    val perDoc = dsirGrain(docs, isTarget)
-    val raw = perDoc.groupBy(col("b")).agg(sum(col("c")).as("rc"))
-    val tgt = perDoc.filter(col("tgt"))
-      .groupBy(col("b")).agg(sum(col("c")).as("tc"))
-    // Masses aggregate in decimal(38,0), NOT int64: c is bounded by doc
-    // length but tc/rc are CORPUS-wide bigram totals, so c·rc wraps a
-    // long around ~1e5 ordinary docs (silently, under non-ANSI
-    // arithmetic). Each factor fits decimal(19,0) (< 2^63), so the
-    // product is exact in decimal(38,0) and the per-doc sum stays
-    // exact to 1e38 — far past any corpus this operator targets.
-    val d19 = "decimal(19,0)"
-    perDoc.join(broadcast(raw), Seq("b"))
-      .join(broadcast(tgt), Seq("b"), "left")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c").cast(d19) *
-          (coalesce(col("tc"), lit(0L)) + lit(1L)).cast(d19)).as("tmass"),
-        sum(col("c").cast(d19) * col("rc").cast(d19)).as("rmass"),
-        sum(col("c")).as("n_bigrams"))
-  }
-
   def dsirWeights(docs: DataFrame, isTarget: Column): DataFrame =
-    dsirMasses(docs, isTarget)
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("tmass").cast("double") /
-          col("rmass").cast("double"), 6).as("dsir_weight"))
-      .orderBy(col("doc_id"))
-
-  /** The corpus bigram-frequency dim under [[bigramFamiliarity]]:
-    * bigram → total occurrence count. Mergeable ([[mergeDim]] on "b").
-    */
-  def bigramDim(docs: DataFrame): DataFrame =
-    docs.filter(length(col("text")) >= 2)
-      .select(explode(charBigrams).as("b"))
-      .groupBy(col("b")).agg(count(lit(1)).as("tc"))
-
-  /** [[bigramFamiliarity]] against a pre-built (possibly merged)
-    * bigram dim — the incremental form: only `docs` (the batch) is
-    * scanned, the corpus contributes through the broadcast dim.
-    */
-  def bigramFamiliarityWithDim(docs: DataFrame, dim: DataFrame): DataFrame =
-    docs.filter(length(col("text")) >= 2)
-      .select(col("doc_id"), explode(charBigrams).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .join(broadcast(dim), Seq("b"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c") * col("tc")).as("wsum"),
-        sum(col("c")).as("n_bigrams"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("wsum").cast("double") /
-          col("n_bigrams").cast("double"), 4).as("familiarity"))
-      .orderBy(col("doc_id"))
-
-  /** The raw+target bigram dim under [[dsirWeights]]: bigram →
-    * (rc = occurrences anywhere, tc = occurrences inside the target
-    * domain; 0, never null, so the dim merges as plain sums).
-    */
-  def dsirDim(docs: DataFrame, isTarget: Column): DataFrame =
-    docs.filter(length(col("text")) >= 2)
-      .select(isTarget.cast("boolean").as("tgt"),
-        explode(charBigrams).as("b"))
-      .groupBy(col("b"))
-      .agg(count(lit(1)).as("rc"),
-        sum(when(col("tgt"), lit(1L)).otherwise(lit(0L))).as("tc"))
-
-  /** [[dsirMasses]] against a pre-built (possibly merged) DSIR dim —
-    * only the batch is scanned (a doc's own target flag only matters
-    * for dim CONSTRUCTION, not scoring). Same decimal(38,0) mass
-    * arithmetic as the full-recompute form.
-    */
-  private[graft] def dsirMassesWithDim(docs: DataFrame,
-                                       dim: DataFrame): DataFrame = {
-    val d19 = "decimal(19,0)"
-    docs.filter(length(col("text")) >= 2)
-      .select(col("doc_id"), explode(charBigrams).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .join(broadcast(dim), Seq("b"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c").cast(d19) *
-          (col("tc") + lit(1L)).cast(d19)).as("tmass"),
-        sum(col("c").cast(d19) * col("rc").cast(d19)).as("rmass"),
-        sum(col("c")).as("n_bigrams"))
-  }
+    dsirWeightOf(dsirMasses(docs, isTarget))
 
   /** [[dsirWeights]] in incremental (batch-vs-dim) form. */
   def dsirWeightsWithDim(docs: DataFrame, dim: DataFrame): DataFrame =
-    dsirMassesWithDim(docs, dim)
+    dsirWeightOf(dsirMassesWithDim(docs, dim))
+
+  /** The rounded weight of per-doc masses: tmass / rmass, 6 places. */
+  private def dsirWeightOf(masses: DataFrame): DataFrame =
+    masses
       .select(col("doc_id"), col("n_bigrams"),
         round(col("tmass").cast("double") /
           col("rmass").cast("double"), 6).as("dsir_weight"))
@@ -1627,25 +1593,21 @@ object TextOps {
     * this path is spec-verified against driver-computed ground truth
     * with tolerance, and the integer-exact [[dsirWeights]] dial stays
     * the oracle-backed default. Same scale shape: scan-local bigrams,
-    * KB-scale broadcast frequency dims, two shuffles.
+    * KB-scale broadcast frequency dim, two shuffles.
     */
   def dsirLogWeights(docs: DataFrame, isTarget: Column): DataFrame = {
     val perDoc = dsirGrain(docs, isTarget)
-    val raw = perDoc.groupBy(col("b")).agg(sum(col("c")).as("rc"))
-    val tgt = perDoc.filter(col("tgt"))
-      .groupBy(col("b")).agg(sum(col("c")).as("tc"))
-    // model constants: raw total + vocabulary from the raw roll-up,
-    // target total from the target roll-up (0 for an empty target)
-    val consts = raw.agg(sum(col("rc")).as("rtot"),
-        count(lit(1)).as("v"))
-      .crossJoin(tgt.agg(coalesce(sum(col("tc")), lit(0L)).as("ttot")))
-    perDoc.join(broadcast(raw), Seq("b"))
-      .join(broadcast(tgt), Seq("b"), "left")
+    val dim = dsirRollup(perDoc)
+    // model constants: raw total, vocabulary and target total (0 for
+    // an empty target) of the one roll-up
+    val consts = dim.agg(sum(col("rc")).as("rtot"), count(lit(1)).as("v"),
+      coalesce(sum(col("tc")), lit(0L)).as("ttot"))
+    perDoc.join(broadcast(dim), Seq("b"))
       .crossJoin(broadcast(consts))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_bigrams"),
         sum(col("c").cast("double") *
-          (log((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double")) -
+          (log((col("tc") + lit(1L)).cast("double")) -
             log((col("ttot") + col("v")).cast("double")) -
             log((col("rc") + lit(1L)).cast("double")) +
             log((col("rtot") + col("v")).cast("double"))))
@@ -1666,9 +1628,9 @@ object TextOps {
     */
   def familiarityLogProb(docs: DataFrame): DataFrame = {
     val perDoc = dsirGrain(docs, lit(false))
-    val raw = perDoc.groupBy(col("b")).agg(sum(col("c")).as("rc"))
-    val tot = raw.agg(sum(col("rc")).as("rtot"))
-    perDoc.join(broadcast(raw), Seq("b"))
+    val dim = dsirRollup(perDoc)
+    val tot = dim.agg(sum(col("rc")).as("rtot"))
+    perDoc.join(broadcast(dim), Seq("b"))
       .crossJoin(broadcast(tot))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_bigrams"),
@@ -1881,7 +1843,6 @@ object TextOps {
     st.vocab.unpersist()
     docs.sparkSession.createDataFrame(st.rules)
       .toDF("step", "tok_l", "tok_r", "pair_count")
-      .orderBy(col("step"))
   }
 
   /** Distinct-word bound of driver-side BPE learning: up to this many
@@ -2023,7 +1984,6 @@ object TextOps {
     vocab.unpersist()
     docs.sparkSession.createDataFrame(rules)
       .toDF("step", "tok_l", "tok_r", "pair_count")
-      .orderBy(col("step"))
   }
 
   private[graft] def trainBpeBatchedState(docs: DataFrame, merges: Int,

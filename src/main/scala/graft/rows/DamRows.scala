@@ -280,10 +280,6 @@ ORDER BY sink, ts, username, detail"""
     ss.conf.set("spark.sql.shuffle.partitions",
       s.conf.getOption("spark.graft.stream.statePartitions")
         .getOrElse("8"))
-    // forward the caller's sink-file dial into the clone (newSession()
-    // starts from the context defaults, not the caller's runtime conf)
-    s.conf.getOption("spark.graft.stream.sinkFiles")
-      .foreach(v => ss.conf.set("spark.graft.stream.sinkFiles", v))
     val users = Tables.events(ss, d).select(col("user_id")).distinct()
       .select(col("user_id"),
         concat(lit("user_"), col("user_id")).as("username"),

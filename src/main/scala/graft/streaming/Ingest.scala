@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.functions.Classify
-import graft.operators.Detect
+import graft.operators.{Detect, MicroBatches}
 
 /** The E1 ingest pipeline (SURVEY §3) as Structured Streaming:
   * general_log-shaped rows → lenient hex decode → skip filter →
@@ -184,10 +184,7 @@ object Ingest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // same replay idempotence as the main sinks: overwrite only
         // this batch's partition on a post-crash replay
-        batch.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(rejectsDir)
+        MicroBatches.writeBatch(batch, rejectsDir, "ingest_batch", batchId)
         ()
       }
       .start()
@@ -381,52 +378,34 @@ object Ingest {
         // compute the first sink write used to pay serially.
         classified.write.format("noop").mode("overwrite").save()
         // sink file sizing (guide §6): a micro-batch is KB–MB scale,
-        // so each sink defaults to ONE output file per batch instead
-        // of one per shuffle partition (the logs sink's event_date
+        // so each sink writes ONE output file per batch instead of one
+        // per shuffle partition (the logs sink's event_date
         // partitioning multiplied that into dates × partitions files
-        // per trigger — commit and re-listing cost, never data). A
-        // deployment whose triggers carry GB-scale batches raises
-        // spark.graft.stream.sinkFiles with its volume (0 = keep the
-        // pipeline's native partitioning).
-        val sinkFiles = batch.sparkSession.conf
-          .getOption("spark.graft.stream.sinkFiles").map(_.toInt).getOrElse(1)
-        def sized(df: DataFrame): DataFrame =
-          if (sinkFiles > 0) df.coalesce(sinkFiles) else df
-        // effectively-once via per-batch idempotence: both sinks carry
-        // the micro-batch id as a partition and dynamically OVERWRITE
-        // only that partition, so a replay after a crash between the
-        // append and the checkpoint commit rewrites the same files
-        // instead of duplicating rows (a plain append would be
-        // at-least-once across that window)
+        // per trigger — commit and re-listing cost, never data).
+        // Effectively-once via per-batch idempotence: every sink
+        // carries the micro-batch id as a partition and dynamically
+        // OVERWRITES only that partition (MicroBatches.writeBatch)
         try {
           // firewall_blocks record shape (app.py:845-848): rule_id,
           // username, ip, 500-char snippet, blocked_at; same per-batch
           // dynamic-overwrite idempotence as the main sinks
           val writeBlocks = cfg.blocksDir.map { bd => () =>
-            sized(fw.select(col("rule_id"), col("username"),
-              col("ip_address"), col("query_snippet"),
-              col("matched_at").as("blocked_at")))
-              .withColumn("ingest_batch", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ingest_batch").parquet(bd)
+            MicroBatches.writeBatch(fw.select(col("rule_id"),
+              col("username"), col("ip_address"), col("query_snippet"),
+              col("matched_at").as("blocked_at")).coalesce(1),
+              bd, "ingest_batch", batchId)
           }
           val writeLogs = () =>
-            sized(classified).withColumn("ingest_batch", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("event_date", "ingest_batch").parquet(cfg.logsDir)
+            MicroBatches.writeBatch(classified.coalesce(1), cfg.logsDir,
+              "ingest_batch", batchId, "event_date")
           val writeAlerts = () =>
-            sized(Detect.deriveAlerts(classified)
+            MicroBatches.writeBatch(Detect.deriveAlerts(classified)
               .select(col("activity_id"), col("alert_type"),
                 col("severity_level").as("severity"),
                 col("suspicious_reasons").as("description"),
                 col("alert_status").as("status"),
-                col("access_timestamp").as("created_at")))
-              .withColumn("ingest_batch", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ingest_batch").parquet(cfg.alertsDir)
+                col("access_timestamp").as("created_at")).coalesce(1),
+              cfg.alertsDir, "ingest_batch", batchId)
           runConcurrently(writeBlocks.toSeq ++ Seq(writeLogs, writeAlerts))
           // webhook fan-out for this batch's High/Critical alerts,
           // on the executors (round-7 verdict #7); after the alert

@@ -238,6 +238,66 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
+  test("one-shot corpus statistics equal their dim forms on 100 random corpora") {
+    import graft.operators.{Dedup, TextOps}
+    import graft.functions.Md5WindowHashes
+    val symbols = Vector("a", "b", "é", "中", "\uFFFD",
+      new String(Character.toChars(0x1F600)),
+      new String(Character.toChars(0x1D11E)))
+    val (n, minCount) = (2, 2)
+    for (seed <- 0L until 100L) {
+      val rng = new scala.util.Random(seed)
+      // a 2-4 symbol alphabet and short words make repeated bigrams
+      // and repeated 2-token windows common
+      val alpha = rng.shuffle(symbols).take(2 + rng.nextInt(3))
+      def sym() = alpha(rng.nextInt(alpha.size))
+      val docs = (1 to 1 + rng.nextInt(6)).map { d =>
+        val text = rng.nextInt(5) match {
+          case 0 => ""
+          case 1 => sym()
+          case _ => Seq.fill(1 + rng.nextInt(12))(
+            Seq.fill(1 + rng.nextInt(3))(sym()).mkString).mkString(" ")
+        }
+        (d.toLong, text, s"src${rng.nextInt(3)}")
+      }
+      // every 10th corpus has no target docs, the next only target docs
+      val isTarget = seed % 10 match {
+        case 0 => lit(false)
+        case 1 => lit(true)
+        case _ => col("source") === "src0"
+      }
+      withClue(s"seed $seed, corpus $docs: ") {
+        val df = docs.toDF("doc_id", "text", "source")
+        assert(TextOps.bigramFamiliarity(df).collect().toSeq ==
+          TextOps.bigramFamiliarityWithDim(df, TextOps.bigramDim(df))
+            .collect().toSeq)
+        def masses(m: org.apache.spark.sql.DataFrame) =
+          m.select("doc_id", "n_bigrams", "tmass", "rmass").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2),
+              r.getDecimal(3))).sortBy(_._1).toSeq
+        assert(masses(TextOps.dsirMasses(df, isTarget)) ==
+          masses(TextOps.dsirMassesWithDim(df, TextOps.dsirDim(df, isTarget))))
+        val bench = df.filter(col("doc_id") % 2 === 0)
+        assert(TextOps.contamination(df, bench, n).collect().toSeq ==
+          TextOps.contaminationMatrix(df, Seq("b" -> bench), n)
+            .drop("bench").collect().toSeq)
+        // a doc's dup windows are its window positions whose hash the
+        // corpus dim counts at least minCount times
+        val dupH = TextOps.windowDim(df, n).filter(col("occ") >= minCount)
+        val viaDim = df.select(col("doc_id"), explode(Dedup.windowHashes(
+            col("text"), n, 0, Md5WindowHashes.ModeAll, Dedup.xxSeeded))
+            .as("h"))
+          .join(dupH, Seq("h"), "left_semi")
+          .groupBy("doc_id").count().as[(Long, Long)].collect().toMap
+        val spans = TextOps.duplicateSpans(df, n, minCount)
+          .select("doc_id", "dup_windows").as[(Long, Long)].collect()
+        assert(spans.map(_._2).sum == viaDim.values.sum)
+        spans.foreach { case (id, dup) =>
+          assert(dup == viaDim.getOrElse(id, 0L), s"doc $id") }
+      }
+    }
+  }
+
   test("stats invariants on real data: failed ≤ total, Σ by-type ≤ total") {
     val act = graft.sources.Tables.activity(spark, sf("sf0.001"))
     val r = graft.operators.Analytics.stats(act).collect()(0)
