@@ -488,7 +488,7 @@ object Curation {
   // ------------------------------------------------------------------
   // Persisted corpus state + STREAMING curation maintenance — the
   // daily run as a continuously running job (the curation analog of
-  // Similarity.startIndexMaintenance).
+  // streaming index maintenance through appendToIvfIndexCommitted).
   // ------------------------------------------------------------------
 
   private val StateParts =
@@ -498,11 +498,9 @@ object Curation {
     StateParts.zip(Seq(state.corpusText, state.lineDim, state.benchGrams,
       state.dsirDim, state.dsirGlob))
 
-  /** The state published as version `v` by batch `b`. */
-  private def stateAt(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, v: Int, b: Long): CorpusState = {
-    val Seq(text, line, bench, dsir, glob) =
-      StateParts.map(VersionedState.read(spark, dir, v, b, _))
+  /** The state whose named frames `read` returns. */
+  private def stateAt(read: String => DataFrame): CorpusState = {
+    val Seq(text, line, bench, dsir, glob) = StateParts.map(read)
     CorpusState(text, line, bench, dsir, glob)
   }
 
@@ -515,12 +513,8 @@ object Curation {
 
   /** The latest published state (a maintenance stream's read point). */
   def readState(spark: org.apache.spark.sql.SparkSession,
-                dir: String): CorpusState = {
-    val vs = VersionedState.versions(VersionedState.fsOf(spark, dir), dir)
-    require(vs.nonEmpty, s"curation state: $dir has no published version")
-    val (v, b) = vs.last
-    stateAt(spark, dir, v, b)
-  }
+                dir: String): CorpusState =
+    stateAt(VersionedState.latest(spark, dir))
 
   /** Advance the persisted state by one admitted batch — the
     * merge-forward of every component, at state scale (the raw corpus
@@ -561,64 +555,39 @@ object Curation {
       mergedDsir, massGlob(TextOps.dsirMassesWithDim(grownText, mergedDsir)))
   }
 
-  /** Continuous curation: each micro-batch of raw documents is
-    * curated against the persisted corpus state
-    * ([[curateIncremental]]), its packed product written under
-    * `outDir/batch-<id>`, and the state advanced one version
-    * ([[advanceState]]) — the daily run as a stream.
-    *
-    * EFFECTIVELY-ONCE across crashes: the output write is a per-batch
-    * OVERWRITE (replay rewrites the same directory), and the state
-    * version carries the producing batch id in its name — a replayed
-    * batch that already advanced the state detects itself and curates
-    * against the PREVIOUS version (the state it originally saw),
-    * skipping the second advance. Without that check, a replayed
-    * batch would cross-dedup against a corpus that already contains
-    * it and emit an empty (wrong) product.
+  /** One curation-maintenance micro-batch — the daily run as a
+    * stream step (`MicroBatches.start(source, ckpt, ms)((b, id) =>
+    * maintenanceStep(b, id, …))`, or inside
+    * [[startCorpusMaintenance]]): curate the batch against the
+    * persisted corpus state ([[curateIncremental]]), write its packed
+    * product at `outDir/batch-<id>` (overwrite), and advance the state
+    * one version ([[advanceState]]) through [[VersionedState.step]].
+    * A replayed batch curates against the version its original run
+    * saw; against the advanced one it would cross-dedup with itself
+    * and ship an empty product. Returns the product path — the
+    * composed pipeline's featurization reads the PUBLISHED bytes, so
+    * a replay derives byte-identical features.
     */
-  def startCurationMaintenance(source: DataFrame, stateDir: String,
-                               outDir: String, checkpointDir: String,
-                               lineMinDf: Long = 5,
-                               minJaccard: Double = 0.3,
-                               benchMod: Long = 29, decontamN: Int = 8,
-                               targetSources: Seq[String] =
-                                 Seq("src0", "src2", "src4"),
-                               budget: Long = 512, shards: Int = 4,
-                               triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(source, checkpointDir, triggerMs) { (batch, id) =>
-      maintenanceStep(batch, id, stateDir, outDir, lineMinDf, minJaccard,
-        benchMod, decontamN, targetSources, budget, shards)
-    }
-
-  /** One curation-maintenance micro-batch: curate against the replay-
-    * correct state version, publish the product at `outDir/batch-<id>`
-    * (overwrite — replays rewrite the same bytes), advance the state
-    * unless this batch already did. Returns the published product
-    * path — the composed pipeline's featurization reads the PUBLISHED
-    * bytes, so a replay derives byte-identical features. Shared by
-    * [[startCurationMaintenance]] and [[startCorpusMaintenance]].
-    */
-  private[graft] def maintenanceStep(batch: DataFrame, id: Long,
-      stateDir: String, outDir: String, lineMinDf: Long,
-      minJaccard: Double, benchMod: Long, decontamN: Int,
-      targetSources: Seq[String], budget: Long, shards: Int): String = {
-    val spark = batch.sparkSession
+  def maintenanceStep(batch: DataFrame, id: Long, stateDir: String,
+                      outDir: String, lineMinDf: Long = 5,
+                      minJaccard: Double = 0.3, benchMod: Long = 29,
+                      decontamN: Int = 8,
+                      targetSources: Seq[String] =
+                        Seq("src0", "src2", "src4"),
+                      budget: Long = 512, shards: Int = 4): String = {
     val pinned = batch.localCheckpoint(true)
-    val fs = VersionedState.fsOf(spark, stateDir)
-    val (v, b, already) = VersionedState.resolve(fs, stateDir, id)
-    val st = stateAt(spark, stateDir, v, b)
     val productPath =
       new org.apache.hadoop.fs.Path(outDir, s"batch-$id").toString
-    val bt = batchText(pinned, st, lineMinDf)
-    productOf(stagesAgainst(bt, st, minJaccard, benchMod, decontamN,
-        targetSources, budget, shards))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(productPath)
-    if (!already)
-      VersionedState.publish(spark, fs, stateDir,
-        partFrames(advanceWith(st, bt, benchMod, decontamN, targetSources)),
-        v + 1, id)
+    VersionedState.step(batch.sparkSession, stateDir, id) { read =>
+      val st = stateAt(read)
+      val bt = batchText(pinned, st, lineMinDf)
+      productOf(stagesAgainst(bt, st, minJaccard, benchMod, decontamN,
+          targetSources, budget, shards))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(productPath)
+      () => partFrames(advanceWith(st, bt, benchMod, decontamN,
+        targetSources))
+    }
     productPath
   }
 

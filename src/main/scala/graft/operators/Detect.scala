@@ -494,22 +494,6 @@ object Detect {
       .filter(col("n_failed") > threshold)
       .orderBy(col("username"), col("hour_bucket"))
 
-  /** J4 + W3 — firewall matcher (reference app.py:823-850): every
-    * activity matched against the ACTIVE rules (`is_active=1`,
-    * app.py:826), honoring per-rule `applies_to_user` /
-    * `applies_to_ip` guards (empty string = unscoped, matching the
-    * reference's falsy check, app.py:833-835). Matching is
-    * case-insensitive on BOTH sides: the text is lower-cased and so is
-    * the pattern for contains/starts_with (`pat.lower()`,
-    * app.py:838-840); regex match carries re.IGNORECASE (app.py:841).
-    * First match wins in (priority, rule_id) order — the reference
-    * iterates `ORDER BY priority ASC` over rows inserted in rule_id
-    * order, so ties within a priority resolve to the lowest rule_id.
-    *
-    * Broadcast nested-loop join; dedup to first match via a
-    * min_by aggregate on the unique activity_id (no window shuffle —
-    * partial aggregation collapses to one row per activity map-side).
-    */
   /** One-off interactive check (POST /api/v2/firewall/check,
     * app.py:1305-1308 → QueryFirewall.check): the same matcher over a
     * single statement, driver-side. Returns the first-match
@@ -536,9 +520,21 @@ object Detect {
     */
   private[graft] val FirewallLiteralMaxRules = 256
 
-  /** First-match firewall gate. Round-14 shape: the active rules are
-    * a bounded driver-side catalog, so the matcher COLLECTS them in
-    * (priority, rule_id) order and folds one first-match CASE
+  /** J4 + W3 — firewall matcher (reference app.py:823-850): every
+    * activity matched against the ACTIVE rules (`is_active=1`,
+    * app.py:826), honoring per-rule `applies_to_user` /
+    * `applies_to_ip` guards (empty string = unscoped, matching the
+    * reference's falsy check, app.py:833-835). Matching is
+    * case-insensitive on BOTH sides: the text is lower-cased and so is
+    * the pattern for contains/starts_with (`pat.lower()`,
+    * app.py:838-840); regex match carries re.IGNORECASE (app.py:841).
+    * First match wins in (priority, rule_id) order — the reference
+    * iterates `ORDER BY priority ASC` over rows inserted in rule_id
+    * order, so ties within a priority resolve to the lowest rule_id.
+    *
+    * Round-14 shape: the active rules are a bounded driver-side
+    * catalog, so the matcher COLLECTS them in (priority, rule_id)
+    * order and folds one first-match CASE
     * expression over the activity scan — scan-local, zero shuffle,
     * zero join, and every regex pattern is a LITERAL (compiled once
     * per task). The former broadcast nested-loop join evaluated

@@ -288,7 +288,7 @@ object Sampling {
   }
 
   /** Bootstrap the versioned picks state of
-    * [[startStratifiedSample]]: the initial corpus's [[stratifiedK]]
+    * [[stratifiedSampleBatch]]: the initial corpus's [[stratifiedK]]
     * picks publish as version 0 (an empty corpus is a legal
     * bootstrap — the stream then builds the sample from its own
     * batches).
@@ -301,53 +301,37 @@ object Sampling {
       Seq("" -> stratifiedK(df, stratumCol, keyCol, k, seed)
         .select(col(stratumCol), col(keyCol))))
 
-  /** One micro-batch of the streaming sample — the replayable unit of
-    * [[startStratifiedSample]]: the updated picks land under
-    * `batch_id=<id>` via dynamic partition overwrite, then the state
-    * advances ([[VersionedState]] — a replayed batch resolves to the
-    * version its original run saw and skips the advance).
+  /** STREAMING exact k-per-stratum sample — one micro-batch of
+    * [[stratifiedK]] at the ingest boundary
+    * (`MicroBatches.start(docs, ckpt, ms)((b, id) =>
+    * stratifiedSampleBatch(b.sparkSession, stateDir, b, id, outDir,
+    * …))`): the updated picks land under `batch_id=<id>` and the
+    * state advances through [[VersionedState.step]]. After any
+    * prefix of batches, the latest snapshot EQUALS the one-shot
+    * [[stratifiedK]] over everything seen so far (bootstrap ∪
+    * batches), because the picks are MERGEABLE: the k smallest seeded
+    * hashes of (a ∪ b) are the k smallest of (picks(a) ∪ b) — a row
+    * a's own top-k displaced can never re-enter the union's top-k
+    * (the hash order is global and fixed, and hashes recompute
+    * deterministically from the stored keys). So the state is
+    * |strata|·k slim rows, each batch costs one scan of ITSELF plus
+    * that bounded frame, and the corpus is never rescanned — the
+    * reservoir-sample economics with exact, reproducible,
+    * cross-engine-stable picks. Rate sampling only promises an
+    * EXPECTED count; this keeps eval pools and per-domain inspection
+    * sets at exactly min(k, |stratum|) forever.
     */
   def stratifiedSampleBatch(spark: org.apache.spark.sql.SparkSession,
                             stateDir: String, batch: DataFrame,
                             batchId: Long, outDir: String,
                             stratumCol: String, keyCol: String, k: Int,
-                            seed: Int = 0): Unit = {
-    val fs = VersionedState.fsOf(spark, stateDir)
-    val (v, b, already) = VersionedState.resolve(fs, stateDir, batchId)
-    val cur = VersionedState.read(spark, stateDir, v, b)
-    val merged = stratifiedK(
-      cur.unionByName(batch.select(col(stratumCol), col(keyCol))),
-      stratumCol, keyCol, k, seed)
-      .localCheckpoint(true)
-    MicroBatches.writeBatch(merged, outDir, "batch_id", batchId)
-    if (!already)
-      VersionedState.publish(spark, fs, stateDir,
-        Seq("" -> merged.select(col(stratumCol), col(keyCol))), v + 1,
-        batchId)
-  }
-
-  /** STREAMING exact k-per-stratum sample — [[stratifiedK]] at the
-    * ingest boundary: after any prefix of batches, the latest
-    * snapshot EQUALS the one-shot [[stratifiedK]] over everything
-    * seen so far (bootstrap ∪ batches), because the picks are
-    * MERGEABLE: the k smallest seeded hashes of (a ∪ b) are the k
-    * smallest of (picks(a) ∪ b) — a row a's own top-k displaced can
-    * never re-enter the union's top-k (the hash order is global and
-    * fixed, and hashes recompute deterministically from the stored
-    * keys). So the state is |strata|·k slim rows, each batch costs
-    * one scan of ITSELF plus that bounded frame, and the corpus is
-    * never rescanned — the reservoir-sample economics with exact,
-    * reproducible, cross-engine-stable picks. Rate sampling only
-    * promises an EXPECTED count; this keeps eval pools and
-    * per-domain inspection sets at exactly min(k, |stratum|) forever.
-    */
-  def startStratifiedSample(docs: DataFrame, stateDir: String,
-                            outDir: String, checkpointDir: String,
-                            stratumCol: String, keyCol: String, k: Int,
-                            seed: Int = 0, triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(docs, checkpointDir, triggerMs) { (batch, id) =>
-      stratifiedSampleBatch(batch.sparkSession, stateDir, batch, id,
-        outDir, stratumCol, keyCol, k, seed)
+                            seed: Int = 0): Unit =
+    VersionedState.step(spark, stateDir, batchId) { read =>
+      val merged = stratifiedK(
+        read("").unionByName(batch.select(col(stratumCol), col(keyCol))),
+        stratumCol, keyCol, k, seed)
+        .localCheckpoint(true)
+      MicroBatches.writeBatch(merged, outDir, "batch_id", batchId)
+      () => Seq("" -> merged.select(col(stratumCol), col(keyCol)))
     }
 }

@@ -560,33 +560,6 @@ object Similarity {
       k, boundedCut = false)
   }
 
-  /** [[serveAnnBatch]] on the matryoshka layout: one query
-    * micro-batch through [[prefixIvfKnnJoin]], results
-    * batch-partitioned with replay-idempotent overwrite. */
-  def servePrefixIvfBatch(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, batch: DataFrame, batchId: Long,
-                          outDir: String, k: Int = 10, nprobe: Int = 4,
-                          cand: Int = 50): Unit =
-    MicroBatches.writeBatch(prefixIvfKnnJoin(spark, dir, batch, k, nprobe,
-      cand), outDir, "batch_id", batchId)
-
-  /** [[startAnnServing]] on the matryoshka layout — a stream of
-    * full-dim query vectors served through the pruned-prefix coarse
-    * pass + full-dim rerank. Every batch re-resolves the index, so
-    * maintenance appends ([[appendToPrefixIvfIndexCommitted]] /
-    * the composed nightly job's `prefixIvfDir` leg) are visible to
-    * the NEXT serving batch with no restart.
-    */
-  def startPrefixIvfServing(queries: DataFrame, dir: String,
-                            outDir: String, checkpointDir: String,
-                            k: Int = 10, nprobe: Int = 4,
-                            cand: Int = 50, triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(queries, checkpointDir, triggerMs) { (batch, id) =>
-      servePrefixIvfBatch(batch.sparkSession, dir, batch, id, outDir,
-        k, nprobe, cand)
-    }
-
   /** [[ensureIvfIndex]]'s build-once contract for the IVF-pruned
     * matryoshka layout. `carryCols` is part of the layout tag: a
     * carrying index is a different at-rest shape, so a filtered
@@ -1004,6 +977,14 @@ object Similarity {
     * batch as drift — the strictest reading, documented rather than
     * special-cased. Probes read the lists directory unchanged —
     * deterministic file names are invisible to partition discovery.
+    *
+    * STREAMING index maintenance keys each micro-batch on the
+    * stream's batch id (`MicroBatches.start(vecs, ckpt, ms)((b, id)
+    * => appendToIvfIndexCommitted(b.sparkSession, dir, b, id))`): a
+    * post-crash replay of a committed batch is a marker-detected
+    * no-op, and a drifted batch THROWS and fails the stream — a feed
+    * that left the coarse quantizer should stop for a rebuild, not
+    * silently degrade probe recall.
     */
   def appendToIvfIndexCommitted(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, batch: DataFrame,
@@ -1045,78 +1026,6 @@ object Similarity {
         f.getAs[Double]("sum_sqdist") + m(1))
     }
   }
-
-  /** STREAMING index maintenance: append every micro-batch of a
-    * streaming (vec_id, embedding) source to a durable IVF / IVF-PQ
-    * index through [[appendToIvfIndexCommitted]] — the daily-ingest append
-    * automated at the stream boundary, with the same PQ-aware encode
-    * path and the same fail-fast drift guard. A drifted batch THROWS
-    * inside foreachBatch and fails the stream: a feed whose
-    * distribution has left the coarse quantizer should stop the
-    * pipeline for a rebuild, not silently degrade probe recall (the
-    * rule-TTL fallback-budget stream takes the same stance). Compose
-    * with [[graft.streaming.Ingest.streamDedup]] upstream when the
-    * feed is at-least-once.
-    *
-    * Durability: each micro-batch is keyed by the STREAM's batch id —
-    * a post-crash replay of a committed batch is a marker-detected
-    * no-op, and a half-landed batch is swept and re-moved under its
-    * deterministic file names.
-    */
-  def startIndexMaintenance(source: DataFrame, dir: String,
-                            checkpointDir: String,
-                            maxDriftRatio: Double = 4.0,
-                            triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(source, checkpointDir, triggerMs) { (batch, id) =>
-      appendToIvfIndexCommitted(batch.sparkSession, dir, batch, id,
-        maxDriftRatio)
-    }
-
-  /** Serve ONE micro-batch of ANN queries against the durable index —
-    * the replayable unit of [[startAnnServing]]: the batch runs the
-    * [[knnJoinIndexed]] retrieval join and its results land under
-    * `batch_id=<id>` via dynamic partition overwrite, so a
-    * crash-replayed batch OVERWRITES its own partition instead of
-    * double-appending result rows (the same idempotent-sink contract
-    * as the ingest streams' logs/alerts/blocks sinks). An empty batch
-    * touches no partitions and is a no-op.
-    */
-  def serveAnnBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    batch: DataFrame, batchId: Long, outDir: String,
-                    k: Int = 10, nprobe: Int = 2): Unit =
-    MicroBatches.writeBatch(knnJoinIndexed(spark, dir, batch, k, nprobe),
-      outDir, "batch_id", batchId)
-
-  /** STREAMING ANN query serving — the retrieval side of the index
-    * lifecycle: [[startIndexMaintenance]] keeps the durable index
-    * current from the ingest feed, and this serves a STREAM of query
-    * vectors against it (the production "embed the request, return
-    * its neighbors" loop — retrieval-augmented generation feeds,
-    * online near-dup triage of incoming documents, semantic alert
-    * enrichment). Each micro-batch of (vec_id, embedding) query rows
-    * runs the table-vs-index [[knnJoinIndexed]] — centroid assignment
-    * scan-local against the broadcast centroid dim, candidates pruned
-    * to nprobe lists, bounded CollectTopK per query — and results
-    * land partitioned by batch id with replay-idempotent overwrite
-    * ([[serveAnnBatch]]). Because every batch re-reads the index
-    * directory, appends landed by the maintenance stream are visible
-    * to the NEXT serving batch with no restart — the two streams
-    * compose against the same at-rest layout.
-    *
-    * Scale shape: per batch the driver touches only the KB-scale
-    * centroid dim; query rows never collect, the corpus contributes
-    * only its pruned cid partitions, and result volume is exactly
-    * |batch|·k slim rows. At 100 TB this is the same probe path the
-    * batch oracles lock, executed per trigger.
-    */
-  def startAnnServing(queries: DataFrame, dir: String, outDir: String,
-                      checkpointDir: String, k: Int = 10, nprobe: Int = 2,
-                      triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(queries, checkpointDir, triggerMs) { (batch, id) =>
-      serveAnnBatch(batch.sparkSession, dir, batch, id, outDir, k, nprobe)
-    }
 
   /** Durable IVF-PQ index — [[writeIvfIndex]]'s layout (lists
     * partitioned by coarse-list id + centroid dim + drift-guard
@@ -2291,17 +2200,6 @@ object Similarity {
     embeddingNearDupsRaw(embeddings, minCos, planes, bands, maxBandDf)
       .orderBy(col("vec_a"), col("vec_b"))
 
-  /** [[embeddingNearDups]] without the presentation sort — the form
-    * the cluster mode and the recall dial consume (a global range-sort
-    * of the pair stream ahead of the next shuffle is pure waste; same
-    * convention as [[Dedup]]'s `*PairsRaw`).
-    */
-  /** Deduped candidate pairs of the banded blocker (the stage BEFORE
-    * exact-cosine verification); planes = bands = 0 selects the
-    * [[GeometryLadder]] rung for the corpus size. Exposed separately
-    * as the candidate-volume instrument ([[nearDupCandidateCount]]
-    * sweeps it across corpus sizes).
-    */
   /** Hot-band cap: drop band buckets whose occupancy exceeds
     * `maxBandDf` from BLOCKING (`maxBandDf <= 0` disables — the
     * default). The GeometryLadder's constant-occupancy candidate
@@ -2350,6 +2248,12 @@ object Similarity {
         max(col("df")).as("max_df"))
   }
 
+  /** Deduped candidate pairs of the banded blocker (the stage BEFORE
+    * exact-cosine verification); planes = bands = 0 selects the
+    * [[GeometryLadder]] rung for the corpus size. Exposed separately
+    * as the candidate-volume instrument ([[nearDupCandidateCount]]
+    * sweeps it across corpus sizes).
+    */
   private[graft] def nearDupCandidates(embeddings: DataFrame,
       planes: Int, bands: Int, maxBandDf: Int = 0): DataFrame = {
     val (pl, bd) =
@@ -2374,6 +2278,11 @@ object Similarity {
                             bands: Int = 0, maxBandDf: Int = 0): Long =
     nearDupCandidates(embeddings, planes, bands, maxBandDf).count()
 
+  /** [[embeddingNearDups]] without the presentation sort — the form
+    * the cluster mode and the recall dial consume (a global range-sort
+    * of the pair stream ahead of the next shuffle is pure waste; same
+    * convention as [[Dedup]]'s `*PairsRaw`).
+    */
   private[graft] def embeddingNearDupsRaw(embeddings: DataFrame,
       minCos: Double, planes: Int, bands: Int,
       maxBandDf: Int = 0): DataFrame = {

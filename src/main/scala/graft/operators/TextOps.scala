@@ -891,7 +891,7 @@ object TextOps {
         graft.functions.Md5WindowHashes.ModeRle, hashFn)).as("hc"))
       .groupBy(col("hc.h").as("h")).agg(sum(col("hc.c")).as("occ"))
 
-  /** Bootstrap the versioned window-dim state [[startSpanDedup]]
+  /** Bootstrap the versioned window-dim state [[spanDedupBatch]]
     * advances: the initial corpus's [[windowDim]] publishes as
     * version 0 (producing batch -1 — no stream batch may claim it).
     * An EMPTY corpus frame is a legal bootstrap (the stream then
@@ -903,68 +903,32 @@ object TextOps {
       : Unit =
     VersionedState.init(spark, dimDir, Seq("" -> windowDim(docs, n, hashFn)))
 
-  /** Rewrite ONE micro-batch against the advancing corpus window dim
-    * — the replayable unit of [[startSpanDedup]], carrying the
-    * [[graft.operators.Curation.maintenanceStep]] replay contract on
-    * the dim state:
-    *
-    *  1. a version stamped with THIS batch id or a later one means
-    *     the advance already committed ([[VersionedState.resolve]]) —
-    *     the rewrite re-runs against the version produced before it
-    *     (the input the original run saw) and the advance is
-    *     skipped;
-    *  2. the merged dim (prior ∪ batch window counts — exact, counts
-    *     are distributive) is pinned once and feeds the rewrite AND
-    *     the publish;
-    *  3. results land under `batch_id=<id>` via dynamic partition
-    *     overwrite (the serveAnnBatch contract), THEN the dim
-    *     publishes by staged rename as version k+1 stamped with the
-    *     batch id; one prior version is retained for replay, older
-    *     ones prune.
-    *
-    * Whichever prefix of {results write, dim publish} a crash leaves,
-    * the replay recomputes from the same inputs and overwrites — the
-    * dim can never double-merge a batch's counts.
+  /** STREAMING exact-substring span cut — one micro-batch of the
+    * ingest-boundary form of [[removeDuplicateSpans]]
+    * (`MicroBatches.start(docs, ckpt, ms)((b, id) =>
+    * spanDedupBatch(b.sparkSession, dimDir, b, id, outDir))`): the
+    * batch is rewritten against the corpus-so-far's window counts
+    * (bootstrap + every prior batch + the batch itself, so
+    * within-batch duplication cuts too), its rows land under
+    * `batch_id=<id>`, and the dim advances through
+    * [[VersionedState.step]] by an exact count merge (counts are
+    * distributive) instead of a corpus rescan. The merged dim is
+    * pinned once and feeds the rewrite AND the publish. Batch i's
+    * rewrite equals the one-shot [[removeDuplicateSpans]] over
+    * (bootstrap ∪ batches ≤ i) restricted to batch i's documents.
     */
   def spanDedupBatch(spark: org.apache.spark.sql.SparkSession,
                      dimDir: String, batch: DataFrame, batchId: Long,
                      outDir: String, n: Int = 10, minCount: Int = 2,
                      hashFn: (Int, Column) => Column = Dedup.xxSeeded)
-      : Unit = {
-    val fs = VersionedState.fsOf(spark, dimDir)
-    val (useV, useB, already) = VersionedState.resolve(fs, dimDir, batchId)
-    val cur = VersionedState.read(spark, dimDir, useV, useB)
-    val merged = mergeDim(cur, windowDim(batch, n, hashFn), key = "h")
-      .localCheckpoint(true)
-    MicroBatches.writeBatch(
-      removeDuplicateSpansWithDim(batch, merged, n, minCount, hashFn),
-      outDir, "batch_id", batchId)
-    if (!already)
-      VersionedState.publish(spark, fs, dimDir, Seq("" -> merged), useV + 1,
-        batchId)
-  }
-
-  /** STREAMING exact-substring span cut — the ingest-boundary form of
-    * [[removeDuplicateSpans]]: each micro-batch of documents is
-    * rewritten against the corpus-so-far's window counts (corpus
-    * bootstrap + every prior batch + the batch itself, so
-    * within-batch duplication cuts too), and the dim advances by an
-    * exact count merge instead of a corpus rescan — the
-    * [[startDriftMonitor]] persisted-dim economics with the
-    * [[graft.operators.Curation.startCorpusMaintenance]] versioned
-    * replay story ([[spanDedupBatch]]). Batch i's rewrite equals the
-    * one-shot [[removeDuplicateSpans]] over (bootstrap ∪ batches ≤ i)
-    * restricted to batch i's documents — the spec's equality.
-    */
-  def startSpanDedup(docs: DataFrame, dimDir: String, outDir: String,
-                     checkpointDir: String, n: Int = 10,
-                     minCount: Int = 2,
-                     hashFn: (Int, Column) => Column = Dedup.xxSeeded,
-                     triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(docs, checkpointDir, triggerMs) { (batch, id) =>
-      spanDedupBatch(batch.sparkSession, dimDir, batch, id, outDir,
-        n, minCount, hashFn)
+      : Unit =
+    VersionedState.step(spark, dimDir, batchId) { read =>
+      val merged = mergeDim(read(""), windowDim(batch, n, hashFn), key = "h")
+        .localCheckpoint(true)
+      MicroBatches.writeBatch(
+        removeDuplicateSpansWithDim(batch, merged, n, minCount, hashFn),
+        outDir, "batch_id", batchId)
+      () => Seq("" -> merged)
     }
 
   /** [[removeDuplicateSpans]] against a PRE-AGGREGATED [[windowDim]]
@@ -1214,9 +1178,15 @@ object TextOps {
       .groupBy(col("source"), col("b")).agg(count(lit(1)).as("c"))
 
   /** [[bigramDrift]] over two PRE-AGGREGATED [[sourceBigramDim]]s — the
-    * form the streaming monitor runs: the baseline dim is persisted
-    * once and each batch contributes one scan; nothing rescans the
-    * base corpus.
+    * form the streaming drift monitor runs
+    * (`MicroBatches.serve(docs, ckpt, out, ms)(b =>
+    * bigramDriftDims(b.sparkSession.read.parquet(baseline),
+    * sourceBigramDim(b)))`): the baseline dim is persisted once and
+    * each batch contributes one scan; nothing rescans the base
+    * corpus. The monitor WATCHES and records; acting on drift stays a
+    * policy read off its rows, unlike the index drift GUARD, which
+    * fails its stream because an index append corrupts recall
+    * silently.
     */
   def bigramDriftDims(baseDim: DataFrame, batchDim: DataFrame): DataFrame = {
     val d19 = "decimal(19,0)"
@@ -1242,82 +1212,6 @@ object TextOps {
             6)).as("l1_dist"))
       .orderBy(col("source"))
   }
-
-  /** Serve ONE micro-batch of BM25 queries against the durable
-    * lexical index — the replayable unit of [[startBm25Serving]]:
-    * results land under `batch_id=<id>` via dynamic partition
-    * overwrite (the [[graft.operators.Similarity.serveAnnBatch]]
-    * contract — a crash-replayed batch overwrites its own partition).
-    */
-  def serveBm25Batch(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, batch: DataFrame, batchId: Long,
-                     outDir: String, k: Int = 5): Unit =
-    MicroBatches.writeBatch(bm25SearchIndexed(spark, dir, batch, k), outDir,
-      "batch_id", batchId)
-
-  /** STREAMING BM25 query serving — the lexical mirror of
-    * [[graft.operators.Similarity.startAnnServing]]: each micro-batch
-    * of (query_id, text) rows tokenizes scan-locally, prunes the
-    * postings PARTITIONS to its term buckets, and ranks through the
-    * shared [[bm25Rank]] tail; results land batch_id-partitioned and
-    * replay-idempotent. Because every batch re-reads the index
-    * directory, [[appendToBm25IndexCommitted]] appends are visible to the
-    * NEXT serving batch with no restart — maintenance and serving
-    * compose on the same at-rest layout, exactly as the dense pair
-    * does. Together the two serving streams are the production
-    * retrieval stack: sparse and dense legs over durable indexes,
-    * fused downstream by RRF when both are wanted.
-    *
-    * Maintenance composes with live serving across the board:
-    * appends only ADD files and markers; compaction publishes a whole
-    * new GENERATION behind one atomic pointer flip.
-    * A serving batch resolves the pointer once and reads a complete
-    * snapshot either way — no quiescing, no failed reads.
-    */
-  def startBm25Serving(queries: DataFrame, dir: String, outDir: String,
-                       checkpointDir: String, k: Int = 5,
-                       triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(queries, checkpointDir, triggerMs) { (batch, id) =>
-      serveBm25Batch(batch.sparkSession, dir, batch, id, outDir, k)
-    }
-
-  /** Drift rows for ONE micro-batch against the persisted baseline
-    * dim — the replayable unit of [[startDriftMonitor]]: results land
-    * under `batch_id=<id>` via dynamic partition overwrite, so a
-    * crash-replayed batch overwrites its own partition (the
-    * [[graft.operators.Similarity.serveAnnBatch]] contract).
-    */
-  def serveDriftBatch(spark: org.apache.spark.sql.SparkSession,
-                      baselineDimPath: String, batch: DataFrame,
-                      batchId: Long, outDir: String): Unit =
-    MicroBatches.writeBatch(bigramDriftDims(
-      spark.read.parquet(baselineDimPath), sourceBigramDim(batch)),
-      outDir, "batch_id", batchId)
-
-  /** STREAMING drift monitor — the ops loop around [[bigramDrift]]:
-    * every micro-batch of incoming documents is compared against the
-    * persisted baseline [[sourceBigramDim]] and its per-source L1 drift
-    * rows land partitioned by batch id (replay-idempotent). The
-    * monitor WATCHES and records; acting on drift (pausing a feed,
-    * rebuilding an index) stays a policy decision read off these
-    * rows — unlike the index drift GUARD, which fails its stream,
-    * because an index append corrupts recall silently while drifted
-    * text lands harmlessly until curation reads it.
-    *
-    * Scale shape per trigger: one batch scan into a KB-scale dim,
-    * joined against the KB-scale persisted baseline — the base
-    * corpus is never rescanned, and the baseline advances by
-    * [[sourceBigramDim]] merges on whatever cadence the owner chooses.
-    */
-  def startDriftMonitor(docs: DataFrame, baselineDimPath: String,
-                        outDir: String, checkpointDir: String,
-                        triggerMs: Long = 3000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MicroBatches.start(docs, checkpointDir, triggerMs) { (batch, id) =>
-      serveDriftBatch(batch.sparkSession, baselineDimPath, batch, id,
-        outDir)
-    }
 
   /** Corpus-familiarity score per document — the head/middle/tail
     * corpus-fit dial of CCNet-style curation (Wenzek et al. 2020
@@ -2435,7 +2329,8 @@ object TextOps {
     *     still carry the stats contributions [[readBm25Stats]] sums.
     *
     * Compaction composes with live serving: a concurrent
-    * [[startBm25Serving]] micro-batch that resolved the prior
+    * serving micro-batch ([[MicroBatches.serve]] over
+    * [[bm25SearchIndexed]]) that resolved the prior
     * generation reads it intact; the next batch reads the compacted
     * one.
     */

@@ -20,20 +20,21 @@ object DamRows {
   CAST(split_part($c, '.', 3) AS BIGINT) * 256 +
   CAST(split_part($c, '.', 4) AS BIGINT))"""
 
-  /** Batch replay of the full E1 streaming pipeline (dam_stream_replay):
-    * feed synthesis → skip filter → DISTINCT-triple dedup (≡ the
-    * stream's activity_id dedup — the id is xxhash64 of the triple) →
-    * hex decode → classifiers → user-dim enrichment → firewall
+  /** The stream-replay oracle: a batch replay of the full E1
+    * streaming pipeline (dam_stream_replay): feed synthesis → skip
+    * filter → DISTINCT-triple dedup (≡ the stream's activity_id
+    * dedup — the id is xxhash64 of the triple) → hex decode →
+    * classifiers → user-dim enrichment → firewall
     * first-match gate (fixture rules; block-action hits excluded from
     * logs/alerts, ALL hits in the blocks sink) → severity lattice
     * rate-keyed on USERNAME (Ingest.start's key) → the three sinks as
     * one normalized union. First-match needs a per-row key and
     * xxhash64 is engine-internal, so a synthesized row_number stands
     * in (never emitted).
-    */
-  /** The stream-replay oracle. `batched = false` replays the
-    * single-spool run (one micro-batch: global dedup, one rate window,
-    * one blacklist anchor). `batched = true` replays the 3-file spool
+    *
+    * `batched = false` replays the single-spool run (one micro-batch:
+    * global dedup, one rate window, one blacklist anchor).
+    * `batched = true` replays the 3-file spool
     * (dam_stream_replay_batched): the feed splits into event-time
     * tertiles (integer epoch-second arithmetic, identical in both
     * engines), every 101st row from an earlier tertile arrives LATE in
@@ -177,16 +178,6 @@ ORDER BY sink, ts, username, detail"""
 
   private val StreamReplayBatchedOracle: String = streamReplayOracleSql(true)
 
-  /** The E1 stream-replay runner behind dam_stream_replay (single
-    * micro-batch) and dam_stream_replay_batched (three micro-batches).
-    * Batched mode splits the spool into event-time tertiles (integer
-    * epoch-second arithmetic replayed by the oracle), moves every
-    * 101st earlier-tertile row into the LAST batch (a late arrival the
-    * watermark must drop), duplicates every 97th tertile-0 row into
-    * batch 1 (a cross-batch duplicate the watermark dedup must drop),
-    * and feeds the files one per micro-batch via maxFilesPerTrigger
-    * (modification times + lexicographic names force batch order).
-    */
   /** The stream rows' FIXED-COST FLOOR (round-10 verdict #6): the
     * IDENTICAL Ingest machinery — session spin-up aside, the same
     * readStream, trigger cadence, RocksDB state init, checkpoint
@@ -203,6 +194,16 @@ ORDER BY sink, ts, username, detail"""
                                        batched: Boolean): DataFrame =
     streamReplayRun(s, d, batched, floorMode = true)
 
+  /** The E1 stream-replay runner behind dam_stream_replay (single
+    * micro-batch) and dam_stream_replay_batched (three micro-batches).
+    * Batched mode splits the spool into event-time tertiles (integer
+    * epoch-second arithmetic replayed by the oracle), moves every
+    * 101st earlier-tertile row into the LAST batch (a late arrival the
+    * watermark must drop), duplicates every 97th tertile-0 row into
+    * batch 1 (a cross-batch duplicate the watermark dedup must drop),
+    * and feeds the files one per micro-batch via maxFilesPerTrigger
+    * (modification times + lexicographic names force batch order).
+    */
   private def streamReplayRun(s: SparkSession, d: String,
                               batched: Boolean,
                               floorMode: Boolean = false): DataFrame = {
@@ -272,14 +273,10 @@ ORDER BY sink, ts, username, detail"""
     // and the caller's 32 analytic shuffle partitions mean 32 state
     // stores for a ≤15k-row micro-batch. 8 keeps the same semantics
     // (dedup results are partition-count-invariant) at a quarter of
-    // the fixed cost; a 100 TB deployment raises
-    // spark.graft.stream.statePartitions with its executor count —
-    // the dial is a conf, not a constant. Cloned so the dial never
-    // leaks into the caller's session.
+    // the fixed cost. Cloned so the setting never leaks into the
+    // caller's session.
     val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.stream.statePartitions")
-        .getOrElse("8"))
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     val users = Tables.events(ss, d).select(col("user_id")).distinct()
       .select(col("user_id"),
         concat(lit("user_"), col("user_id")).as("username"),

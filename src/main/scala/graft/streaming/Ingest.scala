@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.functions.Classify
 import graft.operators.{Detect, MicroBatches}
@@ -177,33 +177,14 @@ object Ingest {
                    checkpointDir: String,
                    triggerMs: Long = 3000L): StreamingQuery = {
     withRocksDbState(source.sparkSession)
-    parseWithRejects(source)._2.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same replay idempotence as the main sinks: overwrite only
-        // this batch's partition on a post-crash replay
-        MicroBatches.writeBatch(batch, rejectsDir, "ingest_batch", batchId)
-        ()
-      }
-      .start()
+    MicroBatches.start(parseWithRejects(source)._2, checkpointDir,
+        triggerMs) { (batch, batchId) =>
+      // same replay idempotence as the main sinks: overwrite only
+      // this batch's partition on a post-crash replay
+      MicroBatches.writeBatch(batch, rejectsDir, "ingest_batch", batchId)
+    }
   }
 
-  /** Start the ingest stream. `source` is a streaming DataFrame with
-    * the general_log schema (event_time, user_host, argument); `users`
-    * is the static user dim (username, role); `rules` a fixed
-    * in-memory firewall rule dim (defaults to
-    * [[Detect.firewallRules]]) — superseded by `cfg.rulesDir`, which
-    * re-reads the warehouse rules table every micro-batch.
-    *
-    * Firewall semantics follow the reference agent-ingest endpoint
-    * (app.py:1170-1181): every parsed statement is checked first; any
-    * first-match hit is recorded in the firewall_blocks sink (whatever
-    * its action, app.py:843-848), and a hit whose action is 'block'
-    * never reaches the logs or detection — the statement is rejected
-    * before insert.
-    */
   /** Run independent sink commits concurrently (guide §2.6): each
     * micro-batch sink job is fixed-cost-bound (job scheduling + file
     * commit over cached input), so overlapping them hides all but the
@@ -230,6 +211,20 @@ object Ingest {
       } finally { pool.shutdown(); () }
     }
 
+  /** Start the ingest stream. `source` is a streaming DataFrame with
+    * the general_log schema (event_time, user_host, argument); `users`
+    * is the static user dim (username, role); `rules` a fixed
+    * in-memory firewall rule dim (defaults to
+    * [[Detect.firewallRules]]) — superseded by `cfg.rulesDir`, which
+    * re-reads the warehouse rules table every micro-batch.
+    *
+    * Firewall semantics follow the reference agent-ingest endpoint
+    * (app.py:1170-1181): every parsed statement is checked first; any
+    * first-match hit is recorded in the firewall_blocks sink (whatever
+    * its action, app.py:843-848), and a hit whose action is 'block'
+    * never reaches the logs or detection — the statement is rejected
+    * before insert.
+    */
   def start(spark: SparkSession, source: DataFrame, users: DataFrame,
             cfg: IngestConfig,
             rules: Option[DataFrame] = None,
@@ -319,11 +314,8 @@ object Ingest {
     val parsed = parseGeneralLog(source)
       .withWatermark("access_timestamp", cfg.watermarkDelay)
       .dropDuplicatesWithinWatermark("activity_id")
-    parsed.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatches.start(parsed, cfg.checkpointDir, cfg.triggerMs) {
+      (batch0, batchId) =>
         // Pin the micro-batch EAGERLY before anything probes it:
         // RocksDB state stores are exclusively owned per partition, and
         // a foreachBatch body that runs several actions — or isEmpty's
@@ -421,9 +413,7 @@ object Ingest {
         }
         }
         } finally { batch.unpersist(); () }
-        ()
-      }
-      .start()
+    }
   }
 
   /** Streaming sessionization — the watermark-closed form of

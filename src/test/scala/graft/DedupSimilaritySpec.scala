@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup, IndexGen, Similarity, TextOps}
+import graft.operators.{Curation, Dedup, IndexGen, MicroBatches, Similarity, TextOps}
 
 /** Dedup / similarity / text-op unit tests. */
 class DedupSimilaritySpec extends SparkSpecBase {
@@ -1110,9 +1110,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val ckpt = java.nio.file.Files
       .createTempDirectory("bm25-serve-ckpt").toString
     val mem = MemoryStream[(Long, String)]
-    val q = TextOps.startBm25Serving(
-      mem.toDF().toDF("query_id", "text"), dir, outDir, ckpt,
-      k = 3, triggerMs = 50L)
+    val q = MicroBatches.serve(mem.toDF().toDF("query_id", "text"), ckpt,
+        outDir, 50L)(b => TextOps.bm25SearchIndexed(b.sparkSession, dir, b, k = 3))
     try {
       mem.addData((900L, "apple banana"), (901L, "elderberry fig"))
       q.processAllAvailable()
@@ -1127,13 +1126,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
           (902L, "durian")).toDF("query_id", "text"), k = 3)
         .as[(Long, Long, Long, Long, Double)].collect().toSet
       assert(snap() == face, s"got ${snap()} vs $face")
-      // replay of a landed batch: row set unchanged
-      val b1 = spark.read.parquet(outDir)
-        .filter($"query_id" === 902L)
-        .select(max($"batch_id")).as[Long].head()
-      TextOps.serveBm25Batch(spark, dir,
-        Seq((902L, "durian")).toDF("query_id", "text"), b1, outDir, k = 3)
-      assert(snap() == face, "replayed batch must not change results")
+      // crash replay of a landed batch: MicroBatchReplaySpec
       // an appended doc is retrievable by the NEXT batch, no restart
       TextOps.appendToBm25IndexCommitted(spark, dir,
         Seq((4L, "honeydew honeydew honeydew", "s"))
@@ -1336,9 +1329,9 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val ckpt = java.nio.file.Files
       .createTempDirectory("drift-ckpt").toString
     val mem = MemoryStream[(Long, String, String)]
-    val q = TextOps.startDriftMonitor(
-      mem.toDF().toDF("doc_id", "text", "source"), dimPath, outDir, ckpt,
-      triggerMs = 50L)
+    val q = MicroBatches.serve(mem.toDF().toDF("doc_id", "text", "source"),
+        ckpt, outDir, 50L)(b => TextOps.bigramDriftDims(
+      b.sparkSession.read.parquet(dimPath), TextOps.sourceBigramDim(b)))
     try {
       mem.addData((10L, "ab", "s"))
       q.processAllAvailable()
@@ -1361,11 +1354,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
         .flatMap(_._5).contains(0.666667))
       assert(snap().find(r => r._1 == ids.last && r._2 == "s")
         .flatMap(_._5).contains(2.0))
-      // crash replay of a landed batch overwrites its own partition
-      TextOps.serveDriftBatch(spark, dimPath,
-        Seq((11L, "zz", "s")).toDF("doc_id", "text", "source"),
-        ids.last, outDir)
-      assert(snap() == expect, "replayed batch must not change rows")
+      // crash replay of a landed batch: MicroBatchReplaySpec
     } finally { if (q.isActive) q.stop() }
   }
 
@@ -1720,38 +1709,75 @@ class DedupSimilaritySpec extends SparkSpecBase {
   test("versioned state: a batch id at or below the newest version's producing batch resolves as a replay") {
     import graft.operators.VersionedState
     val dir = java.nio.file.Files.createTempDirectory("vstate").toString
-    val fs = VersionedState.fsOf(spark, dir)
     def frame(i: Int) = Seq("" -> Seq(i).toDF("x"))
+    def versions() = new java.io.File(dir).list()
+      .filter(_.startsWith("v")).sorted.toSeq
+    // one step: the value it read, and whether it forced its advance
+    def step(batchId: Long, next: Int): (Int, Boolean) = {
+      var seen = -1
+      var forced = false
+      VersionedState.step(spark, dir, batchId) { read =>
+        seen = read("").as[Int].head()
+        () => { forced = true; frame(next) }
+      }
+      (seen, forced)
+    }
+    val bare = intercept[IllegalArgumentException](step(0L, 1))
+    assert(bare.getMessage.contains("bootstrap with init first"))
     VersionedState.init(spark, dir, frame(0))
-    VersionedState.publish(spark, fs, dir, frame(1), 1, 3L)
-    VersionedState.publish(spark, fs, dir, frame(2), 2, 5L)
+    // a fresh batch reads the newest version and advances it
+    assert(step(3L, 1) == ((0, true)))
+    assert(step(5L, 2) == ((1, true)))
     // one prior version retained: v0 pruned
-    assert(VersionedState.versions(fs, dir) == Seq((1, 3L), (2, 5L)))
-    assert(VersionedState.resolve(fs, dir, 6L) == ((2, 5L, false)))
-    assert(VersionedState.resolve(fs, dir, 5L) == ((1, 3L, true)))
+    assert(versions() == Seq("v1_b3", "v2_b5"))
+    // a replay reads the version produced before it and never forces
+    // (so never publishes) its advance
+    assert(step(5L, 9) == ((1, false)))
     // older than the newest version and stamped on none: still a
     // replay, of the version produced before it
-    assert(VersionedState.resolve(fs, dir, 4L) == ((1, 3L, true)))
-    assert(VersionedState.read(spark, dir, 1, 3L).as[Int].collect().toSeq
-      == Seq(1))
-    val e = intercept[IllegalArgumentException](
-      VersionedState.resolve(fs, dir, 3L))
-    assert(e.getMessage.contains("no prior version survives"))
+    assert(step(4L, 9) == ((1, false)))
+    assert(versions() == Seq("v1_b3", "v2_b5"))
+    assert(VersionedState.latest(spark, dir)("").as[Int].collect().toSeq
+      == Seq(2))
+    // a replay with no surviving prior version fails by name
+    val e = intercept[IllegalArgumentException](step(3L, 9))
+    assert(e.getMessage.contains("no prior version survives") &&
+      e.getMessage.contains(dir), e.getMessage)
+    // a crash between the output and the publish: the re-run of the
+    // batch is not a replay, reads the same version, rewrites the
+    // same output and publishes
+    val out = s"$dir-out"
+    def outputStep(batchId: Long, crash: Boolean): Unit =
+      VersionedState.step(spark, dir, batchId) { read =>
+        val next = read("").select(($"x" + 1).as("x")).localCheckpoint(true)
+        MicroBatches.writeBatch(next, out, "batch_id", batchId)
+        () => {
+          if (crash) throw new IllegalStateException("crash before publish")
+          Seq("" -> next)
+        }
+      }
+    intercept[IllegalStateException](outputStep(6L, crash = true))
+    assert(versions() == Seq("v1_b3", "v2_b5"), "a crashed step published")
+    def outRows() = spark.read.parquet(out).as[(Int, Long)].collect().toSeq
+    val crashed = outRows()
+    assert(crashed == Seq((3, 6L)))
+    outputStep(6L, crash = false)
+    assert(outRows() == crashed)
+    assert(versions() == Seq("v2_b5", "v3_b6"))
+    assert(VersionedState.latest(spark, dir)("").as[Int].head() == 3)
     // a second init on a live dir fails by name and prunes nothing
     // (version 0 publishes with keep = 1)
     val reinit = intercept[IllegalArgumentException](
       VersionedState.init(spark, dir, frame(9)))
     assert(reinit.getMessage.contains(s"$dir already initialized"),
       reinit.getMessage)
-    assert(VersionedState.versions(fs, dir) == Seq((1, 3L), (2, 5L)))
-    assert(VersionedState.read(spark, dir, 2, 5L).as[Int].collect().toSeq
-      == Seq(2))
+    assert(versions() == Seq("v2_b5", "v3_b6"))
     // named frames land side by side under one version
     val multi = s"$dir-multi"
     VersionedState.init(spark, multi,
       Seq("a" -> Seq(7).toDF("x"), "b" -> Seq(8).toDF("x")))
-    assert(Seq("a", "b").map(n => VersionedState.read(spark, multi, 0, -1L, n)
-      .as[Int].head()) == Seq(7, 8))
+    val newest = VersionedState.latest(spark, multi)
+    assert(Seq("a", "b").map(n => newest(n).as[Int].head()) == Seq(7, 8))
   }
 
   test("streaming span dedup: batches cut against the advancing window dim; replay never double-merges the state") {
@@ -1767,10 +1793,10 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val (dimDir, outDir, ckpt) = (s"$dir/dim", s"$dir/out", s"$dir/ckpt")
     TextOps.initWindowDim(spark, dimDir, boot)
     val mem = MemoryStream[(Long, String)]
-    def start() = TextOps.startSpanDedup(
-      mem.toDF().toDF("doc_id", "text"), dimDir, outDir, ckpt,
-      triggerMs = 50L)
-    val q1 = start()
+    val q1 = MicroBatches.start(mem.toDF().toDF("doc_id", "text"), ckpt,
+        50L) { (b, id) =>
+      TextOps.spanDedupBatch(b.sparkSession, dimDir, b, id, outDir)
+    }
     // batch 0: doc 10 repeats the BOOTSTRAP-corpus window (occurrence
     // crosses the stream boundary: 1 corpus + 1 batch = 2 → cut);
     // doc 11 is corpus-unique and passes whole
@@ -1802,23 +1828,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     def versions() = new java.io.File(dimDir).list()
       .filter(_.startsWith("v")).sorted.toSeq
     assert(versions() == Seq("v1_b0", "v2_b1"), s"got ${versions()}")
-    def dimOccSum() = spark.read.parquet(s"$dimDir/v2_b1")
-      .agg(sum($"occ")).as[Long].head()
-    val occBefore = dimOccSum()
-    // crash between sink commit and checkpoint commit: batch 1
-    // replays end to end — rows unchanged, NO new version, and the
-    // batch's counts are not merged twice
-    assert(java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$ckpt/commits/1")))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$ckpt/commits/.1.crc"))
-    val q2 = start()
-    q2.processAllAvailable(); q2.stop()
-    assert(snap() == exp, "replay changed the emitted rows")
-    assert(versions() == Seq("v1_b0", "v2_b1"),
-      s"replay advanced the dim again: ${versions()}")
-    assert(dimOccSum() == occBefore,
-      "replay double-merged the batch's window counts")
+    // crash replay of batch 1 (rows and dim unchanged, no double
+    // merge): MicroBatchReplaySpec
   }
 
   test("splitLeakageWithSplitsBloom: equals the exact form; might_contain prunes the train scan; empty holdout safe") {
@@ -2985,8 +2996,10 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val ckpt = java.nio.file.Files
       .createTempDirectory("ivfpq-stream-ckpt").toString
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.startIndexMaintenance(
-      mem.toDF().toDF("vec_id", "embedding"), dir, ckpt, triggerMs = 50L)
+    val q = MicroBatches.start(mem.toDF().toDF("vec_id", "embedding"), ckpt,
+        50L) { (b, id) =>
+      Similarity.appendToIvfIndexCommitted(b.sparkSession, dir, b, id)
+    }
     try {
       // two micro-batches of in-distribution vectors
       mem.addData((100L, blobVec(0)), (101L, blobVec(1)))
@@ -3042,9 +3055,10 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val ckpt = java.nio.file.Files
       .createTempDirectory("ann-serve-ckpt").toString
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Similarity.startAnnServing(
-      mem.toDF().toDF("vec_id", "embedding"), dir, outDir, ckpt,
-      k = 3, nprobe = 2, triggerMs = 50L)
+    val q = MicroBatches.serve(mem.toDF().toDF("vec_id", "embedding"), ckpt,
+        outDir, 50L) { b =>
+      Similarity.knnJoinIndexed(b.sparkSession, dir, b, k = 3, nprobe = 2)
+    }
     try {
       val (q0, q1, q2) = (blobVec(0), blobVec(1), blobVec(0))
       mem.addData((900L, q0), (901L, q1))
@@ -3068,14 +3082,7 @@ class DedupSimilaritySpec extends SparkSpecBase {
         .agg(countDistinct($"batch_id").as("nb"))
         .filter($"nb" =!= 1L).count()
       assert(perBatch == 0L)
-      // crash replay of a landed batch overwrites its own partition —
-      // row set identical, no double-append
-      val b1 = spark.read.parquet(outDir).filter($"query_id" === 902L)
-        .select(max($"batch_id")).as[Long].head()
-      Similarity.serveAnnBatch(spark, dir,
-        Seq((902L, q2)).toDF("vec_id", "embedding"), b1, outDir,
-        k = 3, nprobe = 2)
-      assert(snap() == face, "replayed batch must not change results")
+      // crash replay of a landed batch: MicroBatchReplaySpec
       // maintenance append is visible to the NEXT serving batch with
       // no restart: serve a query identical to the appended vector
       val nv = blobVec(0)
@@ -3552,11 +3559,10 @@ class DedupSimilaritySpec extends SparkSpecBase {
       doc(1003L, body(3) + " tail", "src0"),
       doc(1100L, s"BOILER HEADER\n${body(100)}\nBOILER FOOTER", "src0"),
       doc(1101L, body(200), "src0")).mkString("\n").getBytes)
-    def startStream() = Curation.startCurationMaintenance(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(srcDir),
-      stateDir, outDir, ckpt, triggerMs = 100L)
-    val q1 = startStream()
+    val q1 = MicroBatches.start(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).json(srcDir), ckpt, 100L) {
+      (b, id) => Curation.maintenanceStep(b, id, stateDir, outDir)
+    }
     q1.processAllAvailable()
     // batch 1: a clone of BATCH-0 doc 1100 — only an ADVANCED state
     // can drop it — plus one fresh doc
@@ -3576,18 +3582,8 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val names = new java.io.File(stateDir).listFiles().map(_.getName)
       .filter(_.startsWith("v")).sorted.toSeq
     assert(names == Seq("v1_b0", "v2_b1"), s"got $names")
-    // crash between sink write and checkpoint commit: batch 1 replays
-    // against the PRIOR version and rewrites the identical product
-    // without advancing the state again
-    assert(Files.deleteIfExists(Paths.get(s"$ckpt/commits/1")))
-    Files.deleteIfExists(Paths.get(s"$ckpt/commits/.1.crc"))
-    val q2 = startStream()
-    q2.processAllAvailable(); q2.stop()
-    assert(productIds(1) == p1, "replayed product must be identical")
-    val names2 = new java.io.File(stateDir).listFiles().map(_.getName)
-      .filter(_.startsWith("v")).sorted.toSeq
-    assert(names2 == Seq("v1_b0", "v2_b1"),
-      s"replay must not double-advance: $names2")
+    // crash replay of batch 1 (against the PRIOR version: identical
+    // product, no second advance): MicroBatchReplaySpec
   }
 
   test("composed corpus maintenance: curation -> featurize -> index append; crash replay consistent across BOTH states") {
@@ -4357,9 +4353,11 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .map(i => (1000L + i, Array.fill(64)(rnd.nextGaussian().toFloat)))
     val mem = MemoryStream[(Long, Array[Float])]
     mem.addData(q1)
-    val stream = Similarity.startPrefixIvfServing(
-      mem.toDF().toDF("vec_id", "embedding"), dir, s"$tmp/out",
-      s"$tmp/ckpt", k = 3, nprobe = 4, cand = 10, triggerMs = 50L)
+    val stream = MicroBatches.serve(mem.toDF().toDF("vec_id", "embedding"),
+        s"$tmp/ckpt", s"$tmp/out", 50L) { b =>
+      Similarity.prefixIvfKnnJoin(b.sparkSession, dir, b, k = 3, nprobe = 4,
+        cand = 10)
+    }
     try {
       stream.processAllAvailable()
       val served0 = spark.read.parquet(s"$tmp/out")

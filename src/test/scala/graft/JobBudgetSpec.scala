@@ -11,7 +11,8 @@ import graft.operators.{Curation, Dedup}
   * rolls its grain up once, and a curation maintenance step builds
   * its stages once. A per-merge or per-round job loop, a re-forked
   * one-shot statistic or a second text-layer pass coming back breaks
-  * these.
+  * these. The E1 ingest stream's drain of a fixed spool is pinned the
+  * same way: its per-trigger jobs are fixed cost, not data volume.
   */
 class JobBudgetSpec extends SparkSpecBase {
   import spark.implicits._
@@ -84,6 +85,54 @@ class JobBudgetSpec extends SparkSpecBase {
     // the advance reuses the stages' pinned text layer; a second
     // quality + line-dedup pass over the batch ran 85 jobs
     assert(m.jobs <= 63, s"maintenanceStep: $m")
+  }
+
+  test("job budget: Ingest.start over a 2-file spool stays within its ceiling") {
+    import java.nio.file.{Files, Paths}
+    import graft.streaming.Ingest
+    val users = Seq(("root", "Admin", 1L), ("app", "User", 2L))
+      .toDF("username", "role", "user_id")
+    def line(sec: Int, who: String, q: String): String =
+      f"""{"event_time":"2024-01-10T12:00:$sec%02d.000Z",""" +
+        s""""user_host":"$who[$who] @ 10.0.0.5 []","argument":"$q"}"""
+    val spool = Seq(
+      Seq(line(0, "root", "SELECT * FROM orders"),
+        line(1, "app", "SELECT password FROM users UNION SELECT 1"),
+        line(2, "app", "SET GLOBAL x=1")),
+      Seq(line(5, "app", "SELECT salary FROM payments"),
+        line(6, "evil", "TRUNCATE TABLE audit_log")))
+    // start -> drain -> stop over a fresh warehouse: the users pin,
+    // every trigger's rule re-read, classify fill and three sink
+    // commits, and the watermark's no-data batches
+    def run(): QueryMetrics = {
+      val root = Files.createTempDirectory("ingest_jobs").toString
+      graft.sources.TableRegistry.initWarehouse(spark, root)
+      val src = s"$root/src"
+      new java.io.File(src).mkdirs()
+      spool.zipWithIndex.foreach { case (rows, k) =>
+        val f = Paths.get(s"$src/b$k.json")
+        Files.write(f, rows.mkString("\n").getBytes)
+        f.toFile.setLastModified(1600000000000L + k * 60000L)
+      }
+      val cfg = Ingest.IngestConfig(
+        logsDir = s"$root/logs", alertsDir = s"$root/alerts",
+        checkpointDir = s"$root/ckpt", triggerMs = 100L,
+        blocksDir = Some(s"$root/blocks"),
+        rulesDir = Some(s"$root/firewall_rules"))
+      QueryMetrics.measure(spark) {
+        val q = Ingest.start(spark,
+          spark.readStream.schema(graft.sources.Tables.GeneralLogSchema)
+            .option("maxFilesPerTrigger", 1).json(src), users, cfg)
+        try q.processAllAvailable() finally q.stop()
+      }
+    }
+    run()
+    val m = run()
+    info(m.toString)
+    // the stream thread inherits the measuring property, so every
+    // trigger's jobs count; 35 is this drain's measured count, and
+    // one more job per trigger breaks it
+    assert(m.jobs <= 35, s"Ingest.start: $m")
   }
 
   test("job budget: driver-side connected components take at most 3 jobs past the edge checkpoint") {
